@@ -107,13 +107,9 @@ class MergeOnReadTable:
         stream_id: str = "default",
         epoch_id: int | None = None,
         lineage_extra: dict[str, Any] | None = None,
-        prune_source: DataFrame | None = None,
     ) -> dict[str, Any]:
         """Append the (already LWW-deduped) change batch to the delta
-        log — O(batch), no bucket rewrite. Fenced like LakeTable.merge.
-        ``prune_source`` is accepted for LakeTable interface parity and
-        ignored: a delta append touches no buckets, so there is nothing
-        to prune."""
+        log — O(batch), no bucket rewrite. Fenced like LakeTable.merge."""
         import time as _time
 
         from pyspark.sql import Observation

@@ -79,10 +79,10 @@ class CommitConflict(Exception):
 
 
 class LakeTable:
-    # merge() consumes prune_source (probe-based bucket pruning). Sinks
-    # that accept-and-ignore it (MergeOnReadTable) leave this False so
-    # callers never attach work to a probe that will not run.
-    supports_prune_source = True
+    # merge() consumes a caller-supplied probe (bucket pruning). Sinks
+    # without buckets (MergeOnReadTable) leave this False so callers
+    # never run a probe job whose result nothing reads.
+    supports_probe = True
 
     def __init__(self, spark: SparkSession, path: str, fs=None):
         self.spark = spark
@@ -401,6 +401,57 @@ class LakeTable:
             self._write_version(m2)
         return new_payload
 
+    # ------------------------------------------------ snapshot write
+    def _write_snapshot(self, df: DataFrame, version: int, n_written: int) -> tuple[str, str]:
+        """Write ``df`` (BUCKET_COL + table columns) into a fresh
+        snapshot dir, one parquet file per bucket; returns the dir
+        (relative, absolute). ``n_written`` bounds the buckets ``df``
+        holds.
+
+        Write tasks: min(buckets, defaultParallelism). Each bucket
+        hashes to exactly one task and the partitioned writer closes one
+        file per partition value, so a task holding several buckets
+        still writes one file per bucket — only the per-task fixed cost
+        (scheduling, output committer) stops scaling with the bucket
+        count. One task per bucket made a 32-bucket commit on 4 cores
+        pay 32 task setups for ~1 % of the keys.
+
+        The dir name carries a uuid suffix for the same reason the
+        append log's segments do (append_log.py:15-17): a hard crash
+        BETWEEN this parquet write and the _write_version commit leaves
+        an orphan dir that no metadata references — the foreachBatch
+        replay of the epoch recomputes the same version (metadata never
+        advanced), and a version-derived name would collide with the
+        orphan ("path already exists") and wedge the stream until
+        someone hand-deletes it. With the uuid the replay stages a FRESH
+        dir and commits normally; expire_snapshots' liveness walk reaps
+        the orphan's files."""
+        snap_rel = os.path.join("data", f"snap-{version}-{uuid.uuid4().hex[:8]}")
+        snap_dir = os.path.join(self.path, snap_rel)
+        n_tasks = max(1, min(n_written, self.spark.sparkContext.defaultParallelism))
+        (
+            df.withColumn(PART_COL, F.col(BUCKET_COL))
+            .repartition(n_tasks, F.col(PART_COL))
+            .write.partitionBy(PART_COL)
+            .parquet(snap_dir, mode="errorifexists")
+        )
+        return snap_rel, snap_dir
+
+    def _bucket_files(self, snap_rel: str, buckets) -> dict[str, list[str]]:
+        """Table-relative parquet files per bucket id (str, the metadata
+        key) of a staged snapshot; an empty list for a bucket the write
+        left without rows."""
+        out: dict[str, list[str]] = {}
+        for b in buckets:
+            rel = os.path.join(snap_rel, f"{PART_COL}={b}")
+            bdir = os.path.join(self.path, rel)
+            out[str(b)] = (
+                [os.path.join(rel, f) for f in sorted(self.fs.listdir(bdir)) if f.endswith(".parquet")]
+                if self.fs.isdir(bdir)
+                else []
+            )
+        return out
+
     # ---------------------------------------------------------- merge
     def merge(
         self,
@@ -410,7 +461,6 @@ class LakeTable:
         stream_id: str = "default",
         epoch_id: int | None = None,
         lineage_extra: dict[str, Any] | None = None,
-        prune_source: DataFrame | None = None,
         probe: "tuple[list[int], bool] | None" = None,
         pre_commit: "Any | None" = None,
     ) -> dict[str, Any]:
@@ -433,22 +483,15 @@ class LakeTable:
         for ``stream_id`` the call is a NO-OP and returns the fence
         record instead (idempotent retry).
 
-        ``prune_source``: optional cheaper frame to compute the
-        touched-bucket set from — any frame whose key-column bucket set
-        EQUALS the batch's (the caller's pre-LWW valid slice qualifies:
-        LWW collapses rows per key, never adds or removes keys). When
-        given, the probe action runs a key-pruned scan of that frame
-        instead of executing the batch's whole aggregate chain, and the
-        batch plan itself runs exactly once — inside the snapshot write
-        job.
-
         ``probe``: precomputed probe result ``(touched_buckets,
         has_null_keys)`` from a caller that already ran the probe job
         itself (apply_batch_flagged folds it into the same job that
         builds the micro-batch cache and counts poison — one fewer
-        action per epoch). Takes precedence over ``prune_source``; the
-        written-outside-touched commit guard below still fails loudly
-        if the caller's probe diverges from the batch keys.
+        action per epoch). The batch plan then runs exactly once,
+        inside the snapshot write job; the written-outside-touched
+        commit guard below fails loudly if the caller's probe diverges
+        from the batch keys (LWW collapses rows per key, never adds or
+        removes keys, so the pre-LWW slice is a valid probe source).
 
         ``pre_commit``: zero-arg callable invoked after the snapshot
         write but BEFORE the metadata commit. The caller's barrier for
@@ -506,35 +549,6 @@ class LakeTable:
             src_has_null_keys = bool(probe[1])
             src_cached = False
             if src_has_null_keys:
-                src = src.persist()
-                src_cached = True
-        elif prune_source is not None:
-            # Cheap probe path (streaming fast path): the caller's
-            # pre-LWW cached slice has the same key set as the batch
-            # (LWW collapses per key, never adds/removes keys), and the
-            # probe plan prunes to the key columns — so this action is a
-            # light cache scan and the heavy batch plan (LWW aggregate,
-            # payload assembly) runs exactly ONCE, fused into the
-            # snapshot write job. The old shape materialized the full
-            # deduped payload for the collect and re-read it for the
-            # write — an extra round trip of every merged byte. The same
-            # probe also reports whether ANY batch key is null, so the
-            # null-branch join below can be skipped without touching the
-            # heavy plan.
-            src_cached = False
-            probe_rows = (
-                prune_source.select(
-                    bucket_expr(key_cols, n_buckets).alias(BUCKET_COL),
-                    null_key_pred.alias("__nk"),
-                )
-                .distinct()
-                .collect()
-            )
-            touched = sorted({r[0] for r in probe_rows})
-            src_has_null_keys = any(r["__nk"] for r in probe_rows)
-            if src_has_null_keys:
-                # rare: null-keyed rows present — persist so the two
-                # join branches read the aggregate once, not twice
                 src = src.persist()
                 src_cached = True
         else:
@@ -622,28 +636,12 @@ class LakeTable:
                 )
             )
 
-        # Write only the touched buckets into a fresh snapshot dir. The
-        # dir name carries a uuid suffix for the same reason the append
-        # log's segments do (append_log.py:15-17): a hard crash BETWEEN
-        # this parquet write and the _write_version commit leaves an
-        # orphan dir that no metadata references — the foreachBatch
-        # replay of the epoch recomputes the same new_version (metadata
-        # never advanced), and a version-derived name would collide with
-        # the orphan ("path already exists") and wedge the stream until
-        # someone hand-deletes it. With the uuid the replay stages a
-        # FRESH dir and commits normally; expire_snapshots' liveness
-        # walk reaps the orphan's files.
+        # Write only the touched buckets into a fresh snapshot dir
+        # (uuid-named: crash-replay safety, see _write_snapshot).
         new_version = m["version"] + 1
-        snap_rel = os.path.join("data", f"snap-{new_version}-{uuid.uuid4().hex[:8]}")
-        snap_dir = os.path.join(self.path, snap_rel)
         _t = _time.monotonic()
         try:
-            (
-                result.withColumn(PART_COL, F.col(BUCKET_COL))
-                .repartition(min(len(touched), max(1, n_buckets)), F.col(PART_COL))
-                .write.partitionBy(PART_COL)
-                .parquet(snap_dir, mode="errorifexists")
-            )
+            snap_rel, snap_dir = self._write_snapshot(result, new_version, len(touched))
         finally:
             if src_cached:
                 src.unpersist()
@@ -652,7 +650,7 @@ class LakeTable:
 
         # Contract guard: the snapshot commit only adopts buckets in
         # `touched`. If the write produced a bucket OUTSIDE that set,
-        # the prune_source's key set diverged from the batch's — those
+        # the probe's key set diverged from the batch's — those
         # rows would be silently orphaned (written but never listed),
         # i.e. lost. Fail loudly and drop the staged snapshot instead.
         written = {
@@ -665,22 +663,14 @@ class LakeTable:
             self.fs.rmtree(snap_dir)
             raise RuntimeError(
                 f"merge wrote buckets {sorted(extra)} outside the probed "
-                f"touched set {sorted(touched)} — prune_source keys diverge "
+                f"touched set {sorted(touched)} — probe keys diverge "
                 "from the batch keys; snapshot aborted, nothing committed"
             )
 
-        # collect the new file list per touched bucket
+        # the new file list per touched bucket; a bucket with no rows
+        # left (everything merged away) gets an empty list
         new_buckets: dict[str, list[str]] = dict(m["buckets"])
-        for b in touched:
-            bdir = os.path.join(snap_dir, f"{PART_COL}={b}")
-            if self.fs.isdir(bdir):
-                new_buckets[str(b)] = [
-                    os.path.join(snap_rel, f"{PART_COL}={b}", f)
-                    for f in sorted(self.fs.listdir(bdir))
-                    if f.endswith(".parquet")
-                ]
-            else:  # bucket became empty (everything merged away) — keep old? no rows
-                new_buckets[str(b)] = []
+        new_buckets.update(self._bucket_files(snap_rel, touched))
 
         timings["listing_s"] = round(_time.monotonic() - _t, 4)
         lineage = {
@@ -754,24 +744,10 @@ class LakeTable:
             (F.col(DELETED_COL) if DELETED_COL in names else F.lit(False)).alias(DELETED_COL),
         )
         new_version = m["version"] + 1
-        # uuid suffix: crash-replay safety, same hazard as merge() above
-        snap_rel = os.path.join("data", f"snap-{new_version}-{uuid.uuid4().hex[:8]}")
-        snap_dir = os.path.join(self.path, snap_rel)
-        (
-            out.withColumn(PART_COL, F.col(BUCKET_COL))
-            .repartition(n_buckets, F.col(PART_COL))
-            .write.partitionBy(PART_COL)
-            .parquet(snap_dir, mode="errorifexists")
-        )
-        buckets: dict[str, list[str]] = {}
-        for b in range(n_buckets):
-            bdir = os.path.join(snap_dir, f"{PART_COL}={b}")
-            if self.fs.isdir(bdir):
-                buckets[str(b)] = [
-                    os.path.join(snap_rel, f"{PART_COL}={b}", f)
-                    for f in sorted(self.fs.listdir(bdir))
-                    if f.endswith(".parquet")
-                ]
+        snap_rel, _ = self._write_snapshot(out, new_version, n_buckets)
+        buckets = {
+            b: files for b, files in self._bucket_files(snap_rel, range(n_buckets)).items() if files
+        }
         m2 = dict(m)
         m2["version"] = new_version
         m2["parent"] = m["version"]

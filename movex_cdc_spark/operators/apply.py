@@ -14,6 +14,7 @@ directly.
 
 from __future__ import annotations
 
+import re
 import time
 from typing import Any
 
@@ -33,6 +34,7 @@ from movex_cdc_spark.operators.filters import (
     suppress_noop_updates,
 )
 from movex_cdc_spark.operators.lww import lww_dedup, lww_dedup_maxby, lww_dedup_salted
+from movex_cdc_spark.session import inheriting_local_properties
 
 REPO_FILES_SCHEMA = T.StructType(
     [
@@ -126,8 +128,19 @@ def prepare_batch(
 POISON_FLAG = "__poison"
 
 
+def _needs_old_image(table_cfg) -> bool:
+    """Whether a config expression may read ``old_content`` (named, or
+    pulled in by a ``*``): only then does the flagged cache keep it."""
+    return table_cfg is not None and any(
+        re.search(r"old_content|\*", ex.sql, re.IGNORECASE)
+        for ex in table_cfg.expressions
+    )
+
+
 def flag_dispositions(
-    events: DataFrame, condition_sql: str | None = None
+    events: DataFrame,
+    condition_sql: str | None = None,
+    table_cfg: "object | None" = None,
 ) -> DataFrame:
     """Single-projection disposition pass for the streaming cache:
     condition filter + no-op suppression applied, poison rows FLAGGED
@@ -139,13 +152,18 @@ def flag_dispositions(
     (previously the full batch was cached old-image and all, and the
     poison split re-scanned it).
 
-    Only valid for the config-less path: table-config projection and
-    envelope assembly may reference ``old_content``, so the pipeline
-    falls back to caching the full parsed batch when either is present.
+    ``table_cfg``: its per-op conditions replace ``condition_sql`` (as
+    in prepare_batch), and ``old_content`` is kept when one of its
+    expressions may read it — apply_batch_flagged projects the valid
+    slice with the same config. The envelope sink still caches the full
+    parsed batch (its envelope carries the old image).
     """
-    df = condition_filter(events, condition_sql or default_exclude_condition())
-    df = suppress_noop_updates(df)
-    return df.withColumn(POISON_FLAG, poison_predicate()).drop("old_content")
+    if table_cfg is not None:
+        df = per_op_condition_filter(events, table_cfg.conditions)
+    else:
+        df = condition_filter(events, condition_sql or default_exclude_condition())
+    df = suppress_noop_updates(df).withColumn(POISON_FLAG, poison_predicate())
+    return df if _needs_old_image(table_cfg) else df.drop("old_content")
 
 
 def split_flagged(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -167,6 +185,34 @@ def split_flagged(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
     return valid, poison
 
 
+def _record_metrics(metrics, lineage, got, n_poison, stream_id, epoch_id, scope) -> None:
+    """One MetricsTable row per applied epoch. ``scope`` names what the
+    counters count, and is never mixed silently: the probe path counts
+    valid captured EVENTS pre-LWW (reference statistic_counter
+    semantics); the generic path counts post-LWW deduped KEYS (the rows
+    actually merged)."""
+    lineage["counter_scope"] = scope
+    if metrics is None:
+        return
+    metrics.append(
+        {
+            "stream_id": stream_id,
+            "epoch_id": epoch_id,
+            "table_version": lineage.get("version"),
+            "events": got.get("events"),
+            "n_insert": got.get("n_insert"),
+            "n_update": got.get("n_update"),
+            "n_delete": got.get("n_delete"),
+            "n_poison": n_poison,
+            "max_seq": got.get("max_seq"),
+            "buckets_touched": len(lineage.get("buckets_touched", [])),
+            "merge_latency_s": lineage["merge_latency_s"],
+            "counter_scope": scope,
+        }
+    )
+    lineage["metrics"] = got
+
+
 def apply_batch_flagged(
     table: LakeTable,
     flagged: DataFrame,
@@ -175,22 +221,25 @@ def apply_batch_flagged(
     dead_letter: "DeadLetterTable | None" = None,
     metrics: "object | None" = None,
     lww_mode: str = "maxby",
+    table_cfg: "object | None" = None,
 ) -> dict[str, Any]:
     """apply_batch over a pre-flagged (cached) micro-batch — the
-    streaming fast path; filters already ran in flag_dispositions.
+    streaming path of every keyed table; filters already ran in
+    flag_dispositions (with the same ``table_cfg``). The config's
+    projection and expressions shape the valid slice before LWW, as in
+    prepare_batch; poison rows are quarantined unprojected.
 
     ONE probe job over the cached batch carries everything the driver
     needs before the merge write: the touched-bucket set + null-key
     presence (valid rows), the A1 counters, and the poison count. The
     dead-letter append then runs ONLY when there is poison to
-    quarantine — previously every epoch paid a poison-filter scan plus
-    an EMPTY segment write and a metadata commit (r8 phase timing:
-    part of the ~2 s dl_append_s per 1M-event epoch). Skipping the
-    empty append is safe: the dead-letter fence is consulted through
-    monotone epoch ids, and an epoch that appended nothing leaves
-    nothing to fence or replay. Sinks without bucket pruning
-    (MergeOnReadTable) keep the generic flow — for them the probe job
-    would be pure extra work."""
+    quarantine, on a driver thread that overlaps the snapshot write and
+    is joined at merge's ``pre_commit`` barrier. Skipping the empty
+    append is safe: the dead-letter fence is consulted through monotone
+    epoch ids, and an epoch that appended nothing leaves nothing to
+    fence or replay. Sinks without bucket pruning (MergeOnReadTable)
+    keep the generic flow — for them the probe job would be pure extra
+    work."""
     t0 = time.monotonic()
     valid, poison = split_flagged(flagged)
     if "old_content" not in poison.columns:
@@ -202,6 +251,13 @@ def apply_batch_flagged(
         # old image was simply not retained for quarantine (documented
         # fidelity trade of the slim cache).
         poison = poison.withColumn("old_content", F.lit(None).cast("string"))
+    probe_src = flagged
+    if table_cfg is not None:
+        valid = table_cfg.apply_projection(valid)
+        # the probe buckets the PROJECTED keys (a key column a config
+        # does not log for an op is nulled); column pruning keeps the
+        # expression columns out of the probe plan
+        probe_src = table_cfg.apply_projection(flagged)
     keep = [c for c in valid.columns if c not in ("old_content", "ts", "txid", "is_noop")]
     slim = valid.select(*keep)
     dedup = lww_dedup_maxby(slim, KEY_COLS) if lww_mode == "maxby" else lww_dedup(slim, KEY_COLS)
@@ -209,7 +265,7 @@ def apply_batch_flagged(
         "content_sha",
         F.when(F.col("content").isNotNull(), sha256_builtin("content")),
     )
-    if not getattr(table, "supports_prune_source", False):
+    if not getattr(table, "supports_probe", False):
         return _apply_prepared(
             table, ready, poison, epoch_id, stream_id, dead_letter, metrics,
             evolve=True, obs_t0=t0,
@@ -246,9 +302,13 @@ def apply_batch_flagged(
     # counters are valid-only (same valid_events_pre_dedup scope as
     # before — the observation used to ride the valid slice); poison
     # rows flow through the observe node and are counted separately,
-    # then filtered before the bucket distinct
+    # then filtered before the bucket distinct. The observation rides
+    # this collect, never `ready`: `ready`'s only action is the snapshot
+    # write (AQE join + partitionBy), which does not deliver observed
+    # metrics inside a micro-batch — obs.get deadlocked the stream
+    # (reproduced twice).
     probe_rows = (
-        flagged.select(POISON_FLAG, "seq", "op", *key_cols)
+        probe_src.select(POISON_FLAG, "seq", "op", *key_cols)
         .observe(
             obs,
             F.sum(ok.cast("long")).alias("events"),
@@ -273,7 +333,6 @@ def apply_batch_flagged(
 
     n_poison = 0
     dl_wall = 0.0
-    dl_t0 = time.monotonic()
     dl_future = None
     pool = None
     if dead_letter is not None and int(got.get("n_poison_seen") or 0) > 0:
@@ -284,19 +343,24 @@ def apply_batch_flagged(
         # still durably precedes the table commit (same crash ordering
         # as the serial form — a crash between the two replays only
         # the fenced append), but its wall overlaps the snapshot write
-        # instead of adding to the epoch.
+        # instead of adding to the epoch. The thread inherits this
+        # thread's Spark local properties (the streaming batch's job
+        # group), so query.stop() cancels its jobs too.
         from concurrent.futures import ThreadPoolExecutor
+
+        def append_timed() -> tuple[int, float]:
+            _t = time.monotonic()
+            n = dead_letter.append(poison, stream_id=stream_id, epoch_id=epoch_id)
+            return n, round(time.monotonic() - _t, 4)
 
         pool = ThreadPoolExecutor(max_workers=1)
         dl_future = pool.submit(
-            dead_letter.append, poison, stream_id=stream_id, epoch_id=epoch_id
+            inheriting_local_properties(flagged.sparkSession, append_timed)
         )
 
     try:
         if not touched:
             lineage: dict[str, Any] = {"skipped": True, "reason": "empty batch"}
-            if dl_future is not None:
-                n_poison = dl_future.result()
         else:
             lineage = table.merge(
                 ready,
@@ -307,10 +371,9 @@ def apply_batch_flagged(
                 probe=(touched, has_null_keys),
                 pre_commit=dl_future.result if dl_future is not None else None,
             )
-            if dl_future is not None:
-                n_poison = dl_future.result()  # already done (pre_commit barrier)
         if dl_future is not None:
-            dl_wall = round(time.monotonic() - dl_t0, 4)
+            # already done when the merge ran (pre_commit barrier)
+            n_poison, dl_wall = dl_future.result()
     finally:
         if pool is not None:
             pool.shutdown(wait=True)
@@ -319,28 +382,13 @@ def apply_batch_flagged(
     timings = lineage.setdefault("timings", {})
     timings["probe_s"] = probe_wall  # the external probe, not merge's
     if dead_letter is not None:
-        timings["dl_append_s"] = dl_wall  # overlapped with the write
+        # the append's own wall; merge's pre_commit_wait_s is the part
+        # of it the snapshot write did not hide
+        timings["dl_append_s"] = dl_wall
     if lineage.get("skipped"):
         return lineage
-    lineage["counter_scope"] = "valid_events_pre_dedup"
-    if metrics is not None:
-        metrics.append(
-            {
-                "stream_id": stream_id,
-                "epoch_id": epoch_id,
-                "table_version": lineage.get("version"),
-                "events": got.get("events"),
-                "n_insert": got.get("n_insert"),
-                "n_update": got.get("n_update"),
-                "n_delete": got.get("n_delete"),
-                "n_poison": n_poison,
-                "max_seq": got.get("max_seq"),
-                "buckets_touched": len(lineage.get("buckets_touched", [])),
-                "merge_latency_s": lineage["merge_latency_s"],
-                "counter_scope": "valid_events_pre_dedup",
-            }
-        )
-        lineage["metrics"] = got
+    _record_metrics(metrics, lineage, got, n_poison, stream_id, epoch_id,
+                    "valid_events_pre_dedup")
     return lineage
 
 
@@ -375,7 +423,10 @@ def apply_batch(
 
 
 def _apply_prepared(table, ready, poison, epoch_id, stream_id, dead_letter, metrics,
-                    evolve, obs_t0, prune_source=None):
+                    evolve, obs_t0):
+    """The generic flow (batch replays and MergeOnReadTable): dead
+    letters first, then ``merge`` runs its own probe. The counters ride
+    the batch plan, so they count post-LWW deduped keys."""
     t0 = obs_t0
     if evolve:
         batch_payload = T.StructType(
@@ -388,39 +439,14 @@ def _apply_prepared(table, ready, poison, epoch_id, stream_id, dead_letter, metr
     # statistic_counter.rb:14-48; the partial->final combine is Spark's
     # own partial aggregation)
     obs = Observation(f"apply_{stream_id}_{epoch_id}_{time.monotonic_ns()}")
-    obs_aggs = [
+    ready = ready.observe(
+        obs,
         F.count(F.lit(1)).alias("events"),
         F.max("seq").alias("max_seq"),
         F.sum(F.when(F.col("op") == "I", 1).otherwise(0)).alias("n_insert"),
         F.sum(F.when(F.col("op") == "U", 1).otherwise(0)).alias("n_update"),
         F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_delete"),
-    ]
-    # A sink that ignores prune_source (MergeOnReadTable) never runs the
-    # probe — attaching the observation there would block obs.get
-    # forever. Only use the probe when the sink actually consumes it.
-    use_probe = prune_source is not None and getattr(
-        table, "supports_prune_source", False
     )
-    if use_probe:
-        # Probe path: the observation rides the bucket-probe COLLECT,
-        # counting valid captured events pre-LWW (exactly what the
-        # reference's per-event transfer counters count). It must NOT
-        # ride `ready` here: with the probe, `ready`'s only action is
-        # the COW snapshot write (AQE multi-branch join + partitionBy)
-        # inside the streaming micro-batch, and that specific write
-        # does not deliver observed metrics — obs.get deadlocked the
-        # stream (reproduced twice). Simple append writes DO deliver
-        # them in foreachBatch (the MoR row count and the envelope-sink
-        # reject count have ridden their append writes since round 2),
-        # so the failure is the AQE snapshot-write shape, not writes in
-        # general — but the probe collect is the safe, always-runs
-        # carrier here.
-        prune_source = prune_source.observe(obs, *obs_aggs)
-        counter_scope = "valid_events_pre_dedup"
-    else:
-        prune_source = None  # an ignored probe must carry no work
-        ready = ready.observe(obs, *obs_aggs)
-        counter_scope = "deduped_keys"
 
     n_poison = 0
     dl_wall = 0.0
@@ -442,7 +468,6 @@ def _apply_prepared(table, ready, poison, epoch_id, stream_id, dead_letter, metr
         op_col="op",
         stream_id=stream_id,
         epoch_id=epoch_id,
-        prune_source=prune_source,
     )
     lineage["merge_latency_s"] = round(time.monotonic() - t0, 4)
     lineage["n_poison"] = n_poison
@@ -457,30 +482,8 @@ def _apply_prepared(table, ready, poison, epoch_id, stream_id, dead_letter, metr
         lineage.setdefault("timings", {})["dl_append_s"] = dl_wall
     if lineage.get("skipped"):
         return lineage
-    # Counter semantics differ by attach point and are recorded, never
-    # mixed silently: the probe path counts valid captured EVENTS
-    # pre-LWW (reference statistic_counter semantics); the generic and
-    # MoR paths count post-LWW deduped KEYS (the rows actually merged).
-    lineage["counter_scope"] = counter_scope
-    if metrics is not None:
-        got = obs.get
-        metrics.append(
-            {
-                "stream_id": stream_id,
-                "epoch_id": epoch_id,
-                "table_version": lineage.get("version"),
-                "events": got.get("events"),
-                "n_insert": got.get("n_insert"),
-                "n_update": got.get("n_update"),
-                "n_delete": got.get("n_delete"),
-                "n_poison": n_poison,
-                "max_seq": got.get("max_seq"),
-                "buckets_touched": len(lineage.get("buckets_touched", [])),
-                "merge_latency_s": lineage["merge_latency_s"],
-                "counter_scope": counter_scope,
-            }
-        )
-        lineage["metrics"] = got
+    _record_metrics(metrics, lineage, obs.get if metrics is not None else {},
+                    n_poison, stream_id, epoch_id, "deduped_keys")
     return lineage
 
 

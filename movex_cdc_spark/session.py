@@ -120,3 +120,17 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def inheriting_local_properties(spark: SparkSession, fn):
+    """``fn`` wrapped to run with the calling thread's Spark local
+    properties (job group, streaming batch id) and the session's tags —
+    for callables submitted to driver thread pools. In PySpark's
+    pinned-thread mode a pool thread otherwise starts with none, so its
+    jobs escape the streaming query's job group and ``query.stop()``
+    cannot cancel them. Outside pinned-thread mode there is nothing to
+    copy and ``fn`` is returned as is."""
+    from pyspark.util import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)

@@ -31,6 +31,7 @@ from movex_cdc_spark.operators.apply import (
     apply_batch_unkeyed,
     flag_dispositions,
 )
+from movex_cdc_spark.session import inheriting_local_properties
 from movex_cdc_spark.sources.events import (
     PAYLOAD_EVENTS_SCHEMA,
     parse_payload_events,
@@ -144,18 +145,21 @@ class CdcStreamPipeline:
         # would be a no-op exactly where it is safe.
         if self.payload_format:
             batch_df = parse_payload_events(batch_df)
-        # Fast path (no envelope sink, no table config): run the whole
-        # disposition chain — condition filter, no-op suppression,
-        # poison FLAG — inside the cache-building projection and drop
-        # old_content before the persist. The JSON parse and the cache
-        # write then happen exactly once per micro-batch, the cache
-        # loses its biggest column (the old image), and the poison
-        # quarantine is a cheap flag-slice of the cache instead of a
-        # second full-parse scan. Envelope/config paths keep the full
-        # parsed cache: both may read old_content / ts / txid.
-        fast = self.envelope_sink is None and self.config is None
+        # One-probe path (every keyed table without an envelope sink):
+        # run the whole disposition chain — condition filter (or the
+        # config's per-op conditions), no-op suppression, poison FLAG —
+        # inside the cache-building projection and drop old_content
+        # before the persist unless a config expression reads it. The
+        # JSON parse and the cache write then happen exactly once per
+        # micro-batch, the cache loses its biggest column (the old
+        # image), and the poison quarantine is a cheap flag-slice of the
+        # cache instead of a second full-parse scan. The envelope and
+        # unkeyed paths keep the full parsed cache: the envelope carries
+        # the old image.
+        cfg = self._table_cfg()
+        fast = self.envelope_sink is None and (cfg is None or cfg.key_handling != "N")
         if fast:
-            batch_df = flag_dispositions(batch_df, self.condition_sql)
+            batch_df = flag_dispositions(batch_df, self.condition_sql, cfg)
         # MEMORY_AND_DISK: an oversized batch spills instead of
         # GC-thrashing (measured +15% on the 4×1M-epoch bench; a
         # MEMORY_ONLY cache of a 16M-row full backlog measured WORSE in
@@ -171,6 +175,7 @@ class CdcStreamPipeline:
                     stream_id=self.stream_id,
                     dead_letter=self.dead_letter,
                     metrics=self.metrics,
+                    table_cfg=cfg,
                 )
                 self.epochs.append(lin)
             else:
@@ -284,7 +289,7 @@ class MultiplexedCdcPipeline:
     (conditions / column flags / expressions / key handling) and its
     own sink:
 
-      key_handling != 'N'  → apply_batch MERGE into its LakeTable
+      key_handling != 'N'  → apply_batch_flagged MERGE into its LakeTable
       key_handling == 'N'  → apply_batch_unkeyed append into its log
 
     Exactly-once composes per table: each sink fences (stream_id,
@@ -495,9 +500,8 @@ class MultiplexedCdcPipeline:
                 # per-table stream id: the shared dead-letter log and
                 # metrics table fence on (stream_id, epoch_id), so N
                 # tables appending under ONE id would let the first
-                # table's append fence out every other table's poison
-                # in the same epoch (the append runs even when poison is
-                # empty, by design — see _apply_prepared)
+                # table with poison fence out every other table's
+                # poison in the same epoch
                 tbl_stream_id = f"{self.stream_id}:{name}"
                 if cfg.key_handling == "N":
                     return apply_batch_unkeyed(
@@ -508,16 +512,24 @@ class MultiplexedCdcPipeline:
                         table_cfg=cfg,
                         dead_letter=self.dead_letter,
                     )
-                return apply_batch(
-                    self.sinks[name],
-                    sub,
-                    epoch_id=epoch_id,
-                    stream_id=tbl_stream_id,
-                    salted=self.salted,
-                    dead_letter=self.dead_letter,
-                    metrics=self.metrics,
-                    table_cfg=cfg,
+                # the table's flagged slice is its micro-batch cache,
+                # exactly as in CdcStreamPipeline: one probe job builds
+                # it, and the dead-letter append runs only on poison
+                flagged = flag_dispositions(sub, table_cfg=cfg).persist(
+                    StorageLevel.MEMORY_AND_DISK
                 )
+                try:
+                    return apply_batch_flagged(
+                        self.sinks[name],
+                        flagged,
+                        epoch_id=epoch_id,
+                        stream_id=tbl_stream_id,
+                        dead_letter=self.dead_letter,
+                        metrics=self.metrics,
+                        table_cfg=cfg,
+                    )
+                finally:
+                    flagged.unpersist()
 
             todo = [(n, c) for n, c in self.config.tables.items() if n in present]
             workers = self.dispatch_parallelism or min(len(todo), 8) or 1
@@ -525,8 +537,11 @@ class MultiplexedCdcPipeline:
             if workers > 1 and len(todo) > 1:
                 from concurrent.futures import ThreadPoolExecutor
 
+                # table applies keep this batch's job group, so
+                # query.stop() cancels them
+                dispatch = inheriting_local_properties(self.spark, _dispatch_one)
                 with ThreadPoolExecutor(max_workers=workers) as pool:
-                    futures = {n: pool.submit(_dispatch_one, n, c) for n, c in todo}
+                    futures = {n: pool.submit(dispatch, n, c) for n, c in todo}
                 # deterministic config order in the lineage record; the
                 # first failure propagates and fails the epoch (replay
                 # re-runs every table; applied ones fence to no-ops)

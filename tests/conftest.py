@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from movex_cdc_spark.session import get_spark
@@ -5,7 +7,9 @@ from movex_cdc_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="movex-cdc-tests", cpus=8, shuffle_partitions=8,
+    # the suite runs at the core count the verify command sets
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark(app_name="movex-cdc-tests", cpus=cpus, shuffle_partitions=8,
                   extra_conf={"spark.ui.showConsoleProgress": "false"})
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -5,10 +5,12 @@
     (no empty segment write, no metadata commit), and still lands
     exactly-once when poison exists;
   * LakeTable.merge(probe=...) (caller-supplied probe) produces the
-    identical final state as the prune_source and generic paths, and
+    identical final state as the generic path, and
     the written-outside-touched guard still fails loudly on a lying
     probe.
 """
+
+import time
 
 import pandas as pd
 import pytest
@@ -78,8 +80,8 @@ def test_poison_epoch_quarantines_exactly_once(spark, tmp_path):
 
 
 def test_probe_path_matches_generic_merge(spark, tmp_path):
-    """Same batch through merge(probe=...), merge(prune_source=...) and
-    the generic persist path must land the identical state."""
+    """Same batch through merge(probe=...) and the generic persist path
+    must land the identical state."""
     import pandas as _pd
 
     batch_pdf = _pd.DataFrame(
@@ -93,7 +95,7 @@ def test_probe_path_matches_generic_merge(spark, tmp_path):
         columns=["repo", "path", "commit", "lang", "content", "content_sha"],
     )
     states = {}
-    for mode in ("probe", "prune", "generic"):
+    for mode in ("probe", "generic"):
         t = _mk(spark, tmp_path, f"lake-{mode}")
         t.overwrite(spark.createDataFrame(base_pdf))
         batch = spark.createDataFrame(batch_pdf).withColumn(
@@ -110,15 +112,13 @@ def test_probe_path_matches_generic_merge(spark, tmp_path):
             t.merge(batch, epoch_id=0,
                     probe=(sorted({r["b"] for r in rows}),
                            any(r["nk"] for r in rows)))
-        elif mode == "prune":
-            t.merge(batch, epoch_id=0, prune_source=batch.select(*KEY_COLS))
         else:
             t.merge(batch, epoch_id=0)
         states[mode] = {
             (r["repo"], r["path"]): (r["commit"], r["content"], r["last_seq"])
             for r in t.read().collect()
         }
-    assert states["probe"] == states["prune"] == states["generic"]
+    assert states["probe"] == states["generic"]
     assert ("r9", "p9") in states["probe"] and states["probe"][("r1", "p1")][0] == "c9"
 
 
@@ -134,3 +134,54 @@ def test_lying_probe_fails_loud(spark, tmp_path):
     wrong = [(real_bucket + 1) % 8]
     with pytest.raises(RuntimeError, match="outside the probed"):
         t.merge(batch, epoch_id=0, probe=(wrong, False))
+
+
+def _poison_epoch(spark):
+    return flag_dispositions(
+        _events(spark, [(1, "r1", "p1", "c1", "py", "x", None, "I", TS, 1),
+                        (2, "r2", "p2", "c2", "py", None, None, "I", TS, 1)])  # poison
+    )
+
+
+def test_dead_letter_thread_inherits_local_properties(spark, tmp_path, monkeypatch):
+    """The overlapped dead-letter append runs on a pool thread; its jobs
+    must carry the calling thread's Spark local properties (the
+    streaming batch's job group), or query.stop() cannot cancel them."""
+    t = _mk(spark, tmp_path, "lake")
+    dl = DeadLetterTable(spark, str(tmp_path / "dl"))
+    seen = []
+    real = DeadLetterTable.append
+
+    def spy(self, *a, **kw):
+        seen.append(spark.sparkContext.getLocalProperty("movex.test.group"))
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(DeadLetterTable, "append", spy)
+    sc = spark.sparkContext
+    sc.setLocalProperty("movex.test.group", "epoch-7")
+    try:
+        lin = apply_batch_flagged(t, _poison_epoch(spark), epoch_id=0, stream_id="s",
+                                  dead_letter=dl)
+    finally:
+        sc.setLocalProperty("movex.test.group", None)
+    assert lin["n_poison"] == 1
+    assert seen == ["epoch-7"]
+
+
+def test_dl_append_s_times_the_append_not_the_commit(spark, tmp_path, monkeypatch):
+    """dl_append_s is the append's own wall: a slow table commit (after
+    the pre_commit barrier) must not leak into it."""
+    t = _mk(spark, tmp_path, "lake")
+    dl = DeadLetterTable(spark, str(tmp_path / "dl"))
+    flagged = _poison_epoch(spark)
+    real_write = LakeTable._write_version
+
+    def slow_write(self, meta):
+        time.sleep(1.0)
+        return real_write(self, meta)
+
+    monkeypatch.setattr(LakeTable, "_write_version", slow_write)
+    lin = apply_batch_flagged(t, flagged, epoch_id=0, stream_id="s", dead_letter=dl)
+    assert lin["n_poison"] == 1
+    assert lin["merge_latency_s"] > 1.0
+    assert lin["timings"]["dl_append_s"] < 1.0

@@ -23,9 +23,10 @@ from movex_cdc_spark.lake.table import LakeTable
 from movex_cdc_spark.operators.apply import (
     KEY_COLS,
     REPO_FILES_SCHEMA,
+    apply_batch,
     apply_batch_unkeyed,
 )
-from movex_cdc_spark.sources.events import write_event_files
+from movex_cdc_spark.sources.events import read_events_batch, write_event_files
 from movex_cdc_spark.streaming.pipeline import CdcStreamPipeline
 
 
@@ -107,6 +108,49 @@ def test_config_capture_midstream_change(spark, tmp_path):
                 assert row["lang"] is None  # not logged for UPDATE anymore
             else:
                 assert row["lang"] == w.lang
+
+
+def test_config_stream_matches_batch_apply(spark, tmp_path):
+    """A keyed config table streams through the flagged one-probe path.
+    With an expression over old_content (so the flagged cache must keep
+    the old image) its final table equals the same events applied by the
+    batch apply_batch path under the same config, and its metrics count
+    valid events before LWW."""
+    from movex_cdc_spark.streaming.lineage import MetricsTable
+
+    cfg = repo_files_config()
+    t_cfg = cfg.tables["repo_files"]
+    t_cfg.expressions = [
+        ExpressionCfg(alias="old_len", sql="length(old_content)", operations=("U",))
+    ]
+    ev = generate_events(GenParams(n_events=1500, seed=29))
+    events = str(tmp_path / "events")
+    write_event_files(ev, events, n_files=3)
+    t_s = LakeTable.create(spark, str(tmp_path / "stream"), REPO_FILES_SCHEMA, KEY_COLS,
+                           n_buckets=4)
+    pipe = CdcStreamPipeline(
+        spark, t_s, events_dir=events, checkpoint_dir=str(tmp_path / "ckpt"),
+        dead_letter_dir=str(tmp_path / "dl"), metrics_dir=str(tmp_path / "metrics"),
+        config=cfg, max_files_per_trigger=1,
+    )
+    epochs = pipe.run_available_now()
+    assert len(epochs) == 3
+
+    t_b = LakeTable.create(spark, str(tmp_path / "batch"), REPO_FILES_SCHEMA, KEY_COLS,
+                           n_buckets=4)
+    apply_batch(t_b, read_events_batch(spark, events), epoch_id=0, table_cfg=t_cfg)
+
+    cols = ["repo", "path", "commit", "lang", "content", "content_sha", "old_len",
+            "last_seq"]
+    got = t_s.read().select(*cols).toPandas().sort_values(["repo", "path"])
+    want = t_b.read().select(*cols).toPandas().sort_values(["repo", "path"])
+    assert len(got) > 0 and got["old_len"].notna().any()
+    assert got.reset_index(drop=True).equals(want.reset_index(drop=True))
+
+    rows = MetricsTable(spark, str(tmp_path / "metrics")).read().collect()
+    assert len(rows) == 3
+    assert all(r["counter_scope"] == "valid_events_pre_dedup" for r in rows)
+    assert sum(r["events"] for r in rows) == len(_valid_events(ev))
 
 
 def test_per_op_condition_drops_only_matching_op(spark, tmp_path):

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from movex_cdc_spark.lake.table import CommitConflict, LakeTable
+from movex_cdc_spark.lake.table import CommitConflict, LakeTable, bucket_expr
 from movex_cdc_spark.operators.apply import KEY_COLS, REPO_FILES_SCHEMA
 
 COLS = ["seq", "repo", "path", "commit", "lang", "content", "op"]
@@ -116,7 +116,7 @@ def test_merge_with_retry_on_commit_conflict(spark, tmp_path):
     """A racing writer steals the version between plan and commit; the
     optimistic retry re-reads metadata and lands on the next version."""
     import pandas as pd
-    from movex_cdc_spark.lake.table import CommitConflict, LakeTable
+    from movex_cdc_spark.lake.table import CommitConflict, LakeTable, bucket_expr
     from movex_cdc_spark.operators.apply import KEY_COLS, REPO_FILES_SCHEMA
 
     t = LakeTable.create(spark, str(tmp_path / "lake"), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=2)
@@ -148,35 +148,72 @@ def test_merge_with_retry_on_commit_conflict(spark, tmp_path):
     assert t.read().count() == 1
 
 
-def test_merge_probe_path_and_divergence_guard(spark, tmp_lake):
-    """prune_source drives bucket pruning without persisting src; a
-    prune_source whose key set diverges from the batch must abort the
-    snapshot loudly instead of silently orphaning written buckets."""
-    import pytest
-    from pyspark.sql import functions as F
+def _probe(t, frame):
+    """(touched buckets, has null keys) of ``frame``'s keys — the shape
+    apply_batch_flagged hands to merge(probe=...)."""
+    n = t.meta()["n_buckets"]
+    rows = frame.select(
+        bucket_expr(KEY_COLS, n).alias("b"),
+        (F.col("repo").isNull() | F.col("path").isNull()).alias("nk"),
+    ).distinct().collect()
+    return sorted({r["b"] for r in rows}), any(r["nk"] for r in rows)
 
+
+def test_merge_probe_path_and_divergence_guard(spark, tmp_lake):
+    """A caller-supplied probe drives bucket pruning without persisting
+    src; a probe whose key set diverges from the batch must abort the
+    snapshot loudly instead of silently orphaning written buckets."""
     t = _table(spark, tmp_lake, n_buckets=8)
     rows = [(i, f"r{i}", f"p{i}", "c", "py", f"v{i}", "I") for i in range(40)]
     batch = _batch(spark, rows)
-    probe = batch.select("repo", "path", "seq", "op")
-    lin = t.merge(batch, epoch_id=0, prune_source=probe)
+    t.merge(batch, epoch_id=0, probe=_probe(t, batch))
     assert t.read().count() == 40
-    v_after = t.current_version()
 
     # superset probe (extra keys) is SAFE: prunes less, loses nothing
     more = _batch(spark, [(100, "rX", "pX", "c", "py", "vX", "I")])
-    sup = more.unionByName(batch.limit(5)).select("repo", "path", "seq", "op")
-    t.merge(more, epoch_id=1, prune_source=sup)
+    t.merge(more, epoch_id=1, probe=_probe(t, more.unionByName(batch.limit(5))))
     assert t.read().count() == 41
 
     # diverging probe (MISSING the batch's buckets) aborts, commits nothing
     batch2 = _batch(spark, [(200, f"rY{i}", "p", "c", "py", "y", "I") for i in range(8)])
-    wrong = batch.limit(1).select("repo", "path", "seq", "op")  # bucket of r0 only
+    wrong = _probe(t, batch.limit(1))  # bucket of r0 only
     before = t.current_version()
     with pytest.raises(RuntimeError, match="outside the probed"):
-        t.merge(batch2, epoch_id=2, prune_source=wrong)
+        t.merge(batch2, epoch_id=2, probe=wrong)
     assert t.current_version() == before
     assert t.read().count() == 41
+
+
+def test_merge_wider_than_cores_writes_one_file_per_bucket(spark, tmp_lake):
+    """Snapshot writes run min(buckets, defaultParallelism) tasks, so a
+    merge touching more buckets than there are cores packs several
+    buckets per task — each touched bucket must still get exactly one
+    parquet file, in merge and in the bulk overwrite."""
+    cores = spark.sparkContext.defaultParallelism
+    n_buckets = 2 * cores + 3
+    t = _table(spark, tmp_lake, n_buckets=n_buckets)
+    base = [(0, f"r{i}", f"p{i}", "c", "py", f"v{i}", "I") for i in range(40 * n_buckets)]
+    t.overwrite(_batch(spark, base).drop("seq", "op"))
+    assert all(len(f) == 1 for f in t.meta()["buckets"].values())
+    assert len(t.meta()["buckets"]) == n_buckets
+
+    upd = [(1, f"r{i}", f"p{i}", "c2", "py", f"w{i}", "U") for i in range(0, 40 * n_buckets, 3)]
+    lin = t.merge(_batch(spark, upd), epoch_id=0)
+    touched = lin["buckets_touched"]
+    assert len(touched) > cores
+    m = t.meta()
+    snap = os.path.join(t.path, os.path.dirname(os.path.dirname(m["buckets"][str(touched[0])][0])))
+    written = [
+        os.path.join(root, f)
+        for root, _d, files in os.walk(snap)
+        for f in files
+        if f.endswith(".parquet")
+    ]
+    assert len(written) == len(touched)
+    assert all(len(m["buckets"][str(b)]) == 1 for b in touched)
+    got = {r["path"]: r["content"] for r in t.read().collect()}
+    assert len(got) == 40 * n_buckets
+    assert got["p3"] == "w3" and got["p1"] == "v1"
 
 
 def test_crash_between_snapshot_write_and_commit_replays_clean(spark, tmp_lake):

@@ -170,11 +170,11 @@ def test_streaming_pipeline_through_mor(spark, tmp_path):
 
 def test_streaming_mor_with_metrics_does_not_deadlock(spark, tmp_path):
     """Regression: the streaming fast path attaches its counters to the
-    bucket-probe collect, but MergeOnReadTable ignores prune_source —
-    the probe never runs. With metrics enabled, an observation attached
-    to that dead probe would block obs.get forever. The sink's
-    supports_prune_source flag must route the observation back onto the
-    batch plan (which MoR's delta-append write executes and delivers)."""
+    bucket-probe collect, but MergeOnReadTable has no buckets to probe.
+    With metrics enabled, an observation attached to a probe that never
+    runs would block obs.get forever. The sink's supports_probe flag
+    must route the observation back onto the batch plan (which MoR's
+    delta-append write executes and delivers)."""
     from movex_cdc_spark.sources.events import write_event_files
     from movex_cdc_spark.streaming.pipeline import CdcStreamPipeline
 

@@ -242,6 +242,71 @@ def test_multiplexed_poison_quarantined_for_every_table(spark, tmp_path):
     assert per_stream.get("cdc-mux:repo_files_b", 0) >= 3
 
 
+def test_multiplexed_dead_letters_commit_only_for_poisoned_table(spark, tmp_path):
+    """Keyed tables append dead letters only on poison: with poison in
+    one table alone, the shared dead-letter log commits once per epoch
+    for that table and never for the clean one."""
+    cfg = repo_files_config()
+    cfg.tables["clean"] = TableCfg(**{**vars(cfg.tables["repo_files"]), "name": "clean"})
+    dirty = generate_events(GenParams(n_events=600, seed=21, p_poison=0.05))
+    clean = generate_events(GenParams(n_events=600, seed=22, p_poison=0.0))
+    d = _stage_interleaved(spark, tmp_path, {"repo_files": dirty, "clean": clean}, n_files=2)
+    sinks = {
+        n: LakeTable.create(spark, str(tmp_path / n), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=4)
+        for n in cfg.tables
+    }
+    pipe = MultiplexedCdcPipeline(
+        spark, cfg, sinks=sinks, events_dir=d, checkpoint_dir=str(tmp_path / "ck"),
+        dead_letter_dir=str(tmp_path / "dl"), max_files_per_trigger=1,
+    )
+    epochs = pipe.run_available_now()
+    assert len(epochs) == 2
+    assert all(e["tables"]["clean"]["n_poison"] == 0 for e in epochs)
+    poisoned = [e for e in epochs if e["tables"]["repo_files"]["n_poison"] > 0]
+    assert poisoned
+
+    m = UnkeyedEventLog.load(spark, str(tmp_path / "dl")).meta()
+    assert m["version"] == len(poisoned)
+    assert set(m["epochs"]) == {"cdc-mux:repo_files"}
+    n_poison = int((dirty["content"].isna() & dirty["op"].isin(["I", "U"])).sum())
+    assert UnkeyedEventLog.load(spark, str(tmp_path / "dl")).read().count() == n_poison
+
+
+def test_multiplexed_dispatch_inherits_local_properties(spark, tmp_path, monkeypatch):
+    """Table applies run on dispatch pool threads; their jobs must carry
+    the batch thread's Spark local properties (the streaming batch's job
+    group), or query.stop() cannot cancel them."""
+    from movex_cdc_spark.sources.events import MULTIPLEX_EVENTS_SCHEMA
+
+    cfg = repo_files_config()
+    cfg.tables["other"] = TableCfg(**{**vars(cfg.tables["repo_files"]), "name": "other"})
+    d = _stage_interleaved(spark, tmp_path, {
+        "repo_files": generate_events(GenParams(n_events=200, seed=31)),
+        "other": generate_events(GenParams(n_events=200, seed=32)),
+    }, n_files=1)
+    sinks = {
+        n: LakeTable.create(spark, str(tmp_path / n), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=4)
+        for n in cfg.tables
+    }
+    pipe = MultiplexedCdcPipeline(spark, cfg, sinks=sinks, events_dir=d,
+                                  checkpoint_dir=str(tmp_path / "ck"))
+    seen = []
+    real = LakeTable.merge
+
+    def spy(self, *a, **kw):
+        seen.append(spark.sparkContext.getLocalProperty("movex.test.group"))
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "merge", spy)
+    sc = spark.sparkContext
+    sc.setLocalProperty("movex.test.group", "batch-3")
+    try:
+        pipe._apply(spark.read.schema(MULTIPLEX_EVENTS_SCHEMA).parquet(d), epoch_id=0)
+    finally:
+        sc.setLocalProperty("movex.test.group", None)
+    assert seen == ["batch-3", "batch-3"]
+
+
 def test_multiplexed_null_table_tag_quarantined(spark, tmp_path):
     """Regression: a NULL table tag is reachable from the tagged Kafka
     source (a malformed wire record parses all-null). It used to either
