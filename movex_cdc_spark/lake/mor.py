@@ -199,20 +199,10 @@ class MergeOnReadTable:
         if not dmeta["files"]:
             return {"skipped": True, "reason": "empty delta"}
         dv = dmeta["version"]
-        key_cols = self.base.meta()["key_cols"]
-        delta = self.delta.read()
-        # LWW within the delta first (multiple epochs may carry the same key)
-        payload = [c for c in delta.columns if c not in key_cols and c != "__d_seq"]
-        squashed = (
-            delta.groupBy(*key_cols)
-            .agg(
-                F.max_by(F.struct(*payload), F.col("__d_seq")).alias("__w"),
-                F.max("__d_seq").alias("__d_seq"),
-            )
-            .select(*key_cols, *[F.col(f"__w.{c}").alias(c) for c in payload], "__d_seq")
-        )
+        # the raw delta: several epochs may carry the same key, and the
+        # merge resolves last-writer-wins across them itself
         lin = self.base.merge(
-            squashed,
+            self.delta.read(),
             seq_col="__d_seq",
             op_col="__d_op",
             stream_id=COMPACT_STREAM,

@@ -54,6 +54,7 @@ BUCKET_COL = "__bucket"
 PART_COL = "__bucket_part"  # duplicated for partitionBy (dir layout)
 SEQ_COL = "last_seq"
 DELETED_COL = "deleted"
+_RANK = "__rank"  # merge tie-break: stored row vs batch row of equal seq
 
 # widenings allowed without rewriting data files (Iceberg-compatible set)
 _WIDEN: dict[tuple[str, str], str] = {
@@ -402,19 +403,22 @@ class LakeTable:
         return new_payload
 
     # ------------------------------------------------ snapshot write
-    def _write_snapshot(self, df: DataFrame, version: int, n_written: int) -> tuple[str, str]:
-        """Write ``df`` (BUCKET_COL + table columns) into a fresh
-        snapshot dir, one parquet file per bucket; returns the dir
-        (relative, absolute). ``n_written`` bounds the buckets ``df``
-        holds.
+    def _write_tasks(self, n_buckets: int) -> int:
+        """Snapshot write tasks for ``n_buckets`` buckets:
+        min(buckets, defaultParallelism). Each bucket hashes to exactly
+        one task and the partitioned writer closes one file per
+        partition value, so a task holding several buckets still writes
+        one file per bucket — only the per-task fixed cost (scheduling,
+        output committer) stops scaling with the bucket count. One task
+        per bucket made a 32-bucket commit on 4 cores pay 32 task setups
+        for ~1 % of the keys."""
+        return max(1, min(n_buckets, self.spark.sparkContext.defaultParallelism))
 
-        Write tasks: min(buckets, defaultParallelism). Each bucket
-        hashes to exactly one task and the partitioned writer closes one
-        file per partition value, so a task holding several buckets
-        still writes one file per bucket — only the per-task fixed cost
-        (scheduling, output committer) stops scaling with the bucket
-        count. One task per bucket made a 32-bucket commit on 4 cores
-        pay 32 task setups for ~1 % of the keys.
+    def _write_snapshot(self, df: DataFrame, version: int) -> tuple[str, str]:
+        """Write ``df`` (BUCKET_COL + table columns, already hash-
+        partitioned on BUCKET_COL by the caller) into a fresh snapshot
+        dir, one parquet file per bucket; returns the dir (relative,
+        absolute).
 
         The dir name carries a uuid suffix for the same reason the
         append log's segments do (append_log.py:15-17): a hard crash
@@ -428,10 +432,8 @@ class LakeTable:
         the orphan's files."""
         snap_rel = os.path.join("data", f"snap-{version}-{uuid.uuid4().hex[:8]}")
         snap_dir = os.path.join(self.path, snap_rel)
-        n_tasks = max(1, min(n_written, self.spark.sparkContext.defaultParallelism))
         (
             df.withColumn(PART_COL, F.col(BUCKET_COL))
-            .repartition(n_tasks, F.col(PART_COL))
             .write.partitionBy(PART_COL)
             .parquet(snap_dir, mode="errorifexists")
         )
@@ -461,13 +463,15 @@ class LakeTable:
         stream_id: str = "default",
         epoch_id: int | None = None,
         lineage_extra: dict[str, Any] | None = None,
-        probe: "tuple[list[int], bool] | None" = None,
+        probe: "list[int] | None" = None,
         pre_commit: "Any | None" = None,
     ) -> dict[str, Any]:
         """LWW MERGE of a change batch into the table.
 
-        ``batch`` must be unique per key (run LWW dedup first) and
-        carry ``seq_col`` (monotone per key) + ``op_col`` ('I'/'U'/'D').
+        ``batch`` carries ``seq_col`` (monotone per key) + ``op_col``
+        ('I'/'U'/'D') and may hold several rows per key: the merge
+        resolves last-writer-wins within the batch and against the
+        stored row in the same aggregate.
 
         Semantics per key (the Iceberg MERGE INTO the north rule names):
           WHEN MATCHED  AND s.seq > t.last_seq AND s.op =  'D' → tombstone
@@ -478,20 +482,21 @@ class LakeTable:
         ``s.seq > t.last_seq`` guard — a later micro-batch can never
         apply an older change over a newer one, mirroring the worker
         high-water mark @max_key_event_logs_id (transfer_thread.rb:40).
+        A NULL batch seq loses to any stored row with a seq; a stored
+        row with a NULL ``last_seq`` loses to any batch row. Null key
+        columns compare equal (one key per null combination).
 
         Returns the lineage record. If ``epoch_id`` is already fenced
         for ``stream_id`` the call is a NO-OP and returns the fence
         record instead (idempotent retry).
 
-        ``probe``: precomputed probe result ``(touched_buckets,
-        has_null_keys)`` from a caller that already ran the probe job
-        itself (apply_batch_flagged folds it into the same job that
-        builds the micro-batch cache and counts poison — one fewer
-        action per epoch). The batch plan then runs exactly once,
+        ``probe``: the touched-bucket list from a caller that already
+        ran the probe job itself (apply_batch_flagged folds it into the
+        job that builds the micro-batch cache and counts poison — one
+        fewer action per epoch). The batch plan then runs exactly once,
         inside the snapshot write job; the written-outside-touched
         commit guard below fails loudly if the caller's probe diverges
-        from the batch keys (LWW collapses rows per key, never adds or
-        removes keys, so the pre-LWW slice is a valid probe source).
+        from the batch keys.
 
         ``pre_commit``: zero-arg callable invoked after the snapshot
         write but BEFORE the metadata commit. The caller's barrier for
@@ -511,25 +516,22 @@ class LakeTable:
         n_buckets = m["n_buckets"]
         payload = self.payload_schema()
         pay_names = [f.name for f in payload.fields]
+        rest = [n for n in pay_names if n not in key_cols]
 
-        src = batch.withColumn(BUCKET_COL, bucket_expr(key_cols, n_buckets))
         # align batch payload to table schema: missing cols -> null,
-        # narrower types -> cast up (schema-evolution tolerant apply)
+        # narrower types -> cast up (schema-evolution tolerant apply).
+        # _RANK orders a stored row against batch rows of the same seq.
         batch_names = set(batch.columns)
-        src = src.select(
-            F.col(BUCKET_COL),
+        src = batch.select(
+            bucket_expr(key_cols, n_buckets).alias(BUCKET_COL),
             *[
                 (F.col(f.name).cast(f.dataType) if f.name in batch_names else F.lit(None).cast(f.dataType)).alias(f.name)
                 for f in payload.fields
             ],
-            F.col(seq_col).cast("long").alias("__s_seq"),
-            F.col(op_col).alias("__s_op"),
+            F.col(seq_col).cast("long").alias(SEQ_COL),
+            (F.col(op_col) == F.lit("D")).alias(DELETED_COL),
+            F.lit(0).alias(_RANK),
         )
-
-        null_key_pred = None
-        for k in key_cols:
-            p = F.col(k).isNull()
-            null_key_pred = p if null_key_pred is None else (null_key_pred | p)
 
         import time as _time
 
@@ -540,108 +542,64 @@ class LakeTable:
         _t = _time.monotonic()
 
         # bucket pruning: which buckets does this batch touch?
+        src_cached = probe is None
         if probe is not None:
             # caller-supplied probe (see docstring): no collect here at
             # all — the heavy batch plan runs exactly once, inside the
-            # snapshot write job. With null keys present the aggregate
-            # is referenced by both join branches, so persist it.
-            touched = sorted(int(b) for b in probe[0])
-            src_has_null_keys = bool(probe[1])
-            src_cached = False
-            if src_has_null_keys:
-                src = src.persist()
-                src_cached = True
+            # snapshot write job
+            touched = sorted(int(b) for b in probe)
         else:
             # Generic path (uncached batch): persist src — otherwise the
             # whole upstream pipeline (scan/filter/LWW) would run twice,
-            # once for this collect and again for the merge join (and
-            # once more for the null-branch filter). The deduped batch
-            # is at most one row per key, so it is small.
+            # once for this collect and again for the snapshot write.
             src = src.persist()
-            src_cached = True
             touched = [r[0] for r in src.select(BUCKET_COL).distinct().collect()]
-            src_has_null_keys = True  # unknown — keep the null-safe branch
         timings["probe_s"] = round(_time.monotonic() - _t, 4)
         if not touched:
             if src_cached:
                 src.unpersist()
             return {"skipped": True, "reason": "empty batch"}
 
-        tgt = self.read_raw(buckets=touched)
-
-        t_seq = F.col(f"t.{SEQ_COL}")
-        s_seq = F.col("s.__s_seq")
-        s_wins = t_seq.isNull() | (s_seq.isNotNull() & (s_seq > t_seq))
-
-        cols = [
-            F.coalesce(F.col(f"t.{BUCKET_COL}"), F.col(f"s.{BUCKET_COL}")).alias(BUCKET_COL)
-        ]
-        for k in key_cols:
-            cols.append(F.coalesce(F.col(f"t.{k}"), F.col(f"s.{k}")).alias(k))
-        for name in pay_names:
-            if name in key_cols:
-                continue
-            cols.append(
-                F.when(s_wins, F.col(f"s.{name}")).otherwise(F.col(f"t.{name}")).alias(name)
-            )
-        cols.append(F.greatest(F.coalesce(t_seq, F.lit(-1)), F.coalesce(s_seq, F.lit(-1))).alias(SEQ_COL))
-        cols.append(
-            F.when(s_wins, F.col("s.__s_op") == F.lit("D"))
-            .otherwise(F.coalesce(F.col(f"t.{DELETED_COL}"), F.lit(False)))
-            .alias(DELETED_COL)
+        # One exchange: batch rows ∪ stored rows of the touched buckets,
+        # hash-partitioned on the bucket alone — that already clusters
+        # every (bucket, key) group, so the per-key aggregate adds no
+        # second exchange and its sorted output satisfies the
+        # partitionBy write without another sort. The winner per key is
+        # the greatest (seq, rank): a stored row (rank 1) beats a batch
+        # row of EQUAL seq (rank 0) — the s.seq > t.last_seq guard — and
+        # a stored row with a NULL last_seq (rank -1) loses to every
+        # batch row.
+        stored = self.read_raw(buckets=touched, meta=m).select(
+            BUCKET_COL,
+            *pay_names,
+            SEQ_COL,
+            F.coalesce(F.col(DELETED_COL), F.lit(False)).alias(DELETED_COL),
+            F.when(F.col(SEQ_COL).isNull(), F.lit(-1)).otherwise(F.lit(1)).alias(_RANK),
         )
-
-        # Two-branch join, split on key nullness. The main (non-null)
-        # branch joins on PLAIN equality: the LWW aggregate upstream is
-        # already hash-partitioned on the raw key columns, and a plain
-        # equi-join reuses that exchange for the batch side — an
-        # eqNullSafe join would re-shuffle the full deduped batch on
-        # coalesce(key, ...) keys (measured: 3 exchanges vs 2; the
-        # eliminated one moves every merged payload byte again). At 100×
-        # scale that saved shuffle is a full pass over every batch. The
-        # null-key rows (at most a sliver; all hash to ONE bucket) keep
-        # the original null-safe semantics in a separate tiny join. When
-        # the probe proved the batch has NO null keys (the normal case),
-        # that branch is a pure pass-through of the target's null-key
-        # rows — no join, and crucially no second reference to the
-        # un-persisted aggregate subtree (a second reference would
-        # re-execute the whole LWW plan just to filter it to nothing).
-        j_nn = (
-            tgt.filter(~null_key_pred)
-            .alias("t")
-            .join(
-                src.filter(~null_key_pred).alias("s"),
-                on=[F.col(f"t.{k}") == F.col(f"s.{k}") for k in key_cols],
-                how="full_outer",
+        result = (
+            src.unionByName(stored)
+            .repartition(self._write_tasks(len(touched)), F.col(BUCKET_COL))
+            .groupBy(BUCKET_COL, *key_cols)
+            .agg(
+                F.max_by(
+                    F.struct(*rest, DELETED_COL), F.struct(SEQ_COL, _RANK)
+                ).alias("__w"),
+                F.max(F.coalesce(F.col(SEQ_COL), F.lit(-1).cast("long"))).alias(SEQ_COL),
+            )
+            .select(
+                BUCKET_COL,
+                *[F.col(n) if n in key_cols else F.col(f"__w.{n}").alias(n) for n in pay_names],
+                SEQ_COL,
+                F.col(f"__w.{DELETED_COL}").alias(DELETED_COL),
             )
         )
-        if src_has_null_keys:
-            j_nu = (
-                tgt.filter(null_key_pred)
-                .alias("t")
-                .join(
-                    src.filter(null_key_pred).alias("s"),
-                    on=[F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in key_cols],
-                    how="full_outer",
-                )
-            )
-            result = j_nn.select(*cols).unionByName(j_nu.select(*cols))
-        else:
-            # tgt_raw rows already have the result schema (bucket +
-            # payload + last_seq + deleted): carry null-key target rows
-            # forward unchanged
-            result = j_nn.select(*cols).unionByName(
-                tgt.filter(null_key_pred).select(
-                    BUCKET_COL, *pay_names, SEQ_COL, DELETED_COL
-                )
-            )
 
         # Write only the touched buckets into a fresh snapshot dir
         # (uuid-named: crash-replay safety, see _write_snapshot).
         new_version = m["version"] + 1
         _t = _time.monotonic()
         try:
-            snap_rel, snap_dir = self._write_snapshot(result, new_version, len(touched))
+            snap_rel, snap_dir = self._write_snapshot(result, new_version)
         finally:
             if src_cached:
                 src.unpersist()
@@ -744,7 +702,9 @@ class LakeTable:
             (F.col(DELETED_COL) if DELETED_COL in names else F.lit(False)).alias(DELETED_COL),
         )
         new_version = m["version"] + 1
-        snap_rel, _ = self._write_snapshot(out, new_version, n_buckets)
+        snap_rel, _ = self._write_snapshot(
+            out.repartition(self._write_tasks(n_buckets), F.col(BUCKET_COL)), new_version
+        )
         buckets = {
             b: files for b, files in self._bucket_files(snap_rel, range(n_buckets)).items() if files
         }

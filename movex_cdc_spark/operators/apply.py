@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from movex_cdc_spark.functions.hashing import sha256_builtin, content_sha256
-from movex_cdc_spark.lake.table import LakeTable
+from movex_cdc_spark.lake.table import LakeTable, bucket_expr
 from movex_cdc_spark.operators.filters import (
     bad_op_predicate,
     condition_filter,
@@ -220,26 +220,27 @@ def apply_batch_flagged(
     stream_id: str = "default",
     dead_letter: "DeadLetterTable | None" = None,
     metrics: "object | None" = None,
-    lww_mode: str = "maxby",
     table_cfg: "object | None" = None,
 ) -> dict[str, Any]:
     """apply_batch over a pre-flagged (cached) micro-batch — the
     streaming path of every keyed table; filters already ran in
     flag_dispositions (with the same ``table_cfg``). The config's
-    projection and expressions shape the valid slice before LWW, as in
+    projection and expressions shape the valid slice, as in
     prepare_batch; poison rows are quarantined unprojected.
 
     ONE probe job over the cached batch carries everything the driver
-    needs before the merge write: the touched-bucket set + null-key
-    presence (valid rows), the A1 counters, and the poison count. The
-    dead-letter append then runs ONLY when there is poison to
-    quarantine, on a driver thread that overlaps the snapshot write and
-    is joined at merge's ``pre_commit`` barrier. Skipping the empty
-    append is safe: the dead-letter fence is consulted through monotone
-    epoch ids, and an epoch that appended nothing leaves nothing to
-    fence or replay. Sinks without bucket pruning (MergeOnReadTable)
-    keep the generic flow — for them the probe job would be pure extra
-    work."""
+    needs before the merge write: the touched-bucket set (valid rows),
+    the A1 counters, and the poison count. The valid slice then goes to
+    ``merge`` un-deduped — merge resolves last-writer-wins in the same
+    aggregate that joins it with the stored rows. The dead-letter
+    append runs ONLY when there is poison to quarantine, on a driver
+    thread that overlaps the snapshot write and is joined at merge's
+    ``pre_commit`` barrier. Skipping the empty append is safe: the
+    dead-letter fence is consulted through monotone epoch ids, and an
+    epoch that appended nothing leaves nothing to fence or replay.
+    Sinks without bucket pruning (MergeOnReadTable) keep the generic
+    flow on an LWW-deduped batch — their delta append needs one row
+    per key, and for them the probe job would be pure extra work."""
     t0 = time.monotonic()
     valid, poison = split_flagged(flagged)
     if "old_content" not in poison.columns:
@@ -260,17 +261,13 @@ def apply_batch_flagged(
         probe_src = table_cfg.apply_projection(flagged)
     keep = [c for c in valid.columns if c not in ("old_content", "ts", "txid", "is_noop")]
     slim = valid.select(*keep)
-    dedup = lww_dedup_maxby(slim, KEY_COLS) if lww_mode == "maxby" else lww_dedup(slim, KEY_COLS)
-    ready = dedup.withColumn(
-        "content_sha",
-        F.when(F.col("content").isNotNull(), sha256_builtin("content")),
-    )
+    sha = F.when(F.col("content").isNotNull(), sha256_builtin("content"))
     if not getattr(table, "supports_probe", False):
         return _apply_prepared(
-            table, ready, poison, epoch_id, stream_id, dead_letter, metrics,
-            evolve=True, obs_t0=t0,
+            table, lww_dedup_maxby(slim, KEY_COLS).withColumn("content_sha", sha),
+            poison, epoch_id, stream_id, dead_letter, metrics, evolve=True, obs_t0=t0,
         )
-    from movex_cdc_spark.lake.table import bucket_expr
+    ready = slim.withColumn("content_sha", sha)
 
     m = table.meta()
     if epoch_id is not None:
@@ -291,24 +288,18 @@ def apply_batch_flagged(
     )
     table.evolve_schema(batch_payload)
 
-    key_cols = m["key_cols"]
-    null_key_pred = None
-    for k in key_cols:
-        p = F.col(k).isNull()
-        null_key_pred = p if null_key_pred is None else (null_key_pred | p)
     ok = ~F.col(POISON_FLAG)
     obs = Observation(f"apply_{stream_id}_{epoch_id}_{time.monotonic_ns()}")
     _t = time.monotonic()
-    # counters are valid-only (same valid_events_pre_dedup scope as
-    # before — the observation used to ride the valid slice); poison
-    # rows flow through the observe node and are counted separately,
-    # then filtered before the bucket distinct. The observation rides
-    # this collect, never `ready`: `ready`'s only action is the snapshot
-    # write (AQE join + partitionBy), which does not deliver observed
-    # metrics inside a micro-batch — obs.get deadlocked the stream
-    # (reproduced twice).
-    probe_rows = (
-        probe_src.select(POISON_FLAG, "seq", "op", *key_cols)
+    # The probe is ONE job: the observation rides a noop write of the
+    # probe projection (a distinct().collect() — or a global
+    # agg().collect() — plans as 3 jobs under AQE). Counters are
+    # valid-only (valid_events_pre_dedup scope); poison rows are
+    # counted separately. Never attach the observation to `ready`: its
+    # only action is the snapshot write, which did not deliver observed
+    # metrics inside a micro-batch — obs.get deadlocked the stream.
+    (
+        probe_src.select(POISON_FLAG, "seq", "op", *m["key_cols"])
         .observe(
             obs,
             F.sum(ok.cast("long")).alias("events"),
@@ -317,19 +308,17 @@ def apply_batch_flagged(
             F.sum(F.when(ok & (F.col("op") == "U"), 1).otherwise(0)).alias("n_update"),
             F.sum(F.when(ok & (F.col("op") == "D"), 1).otherwise(0)).alias("n_delete"),
             F.sum(F.col(POISON_FLAG).cast("long")).alias("n_poison_seen"),
+            F.collect_set(
+                F.when(ok, bucket_expr(m["key_cols"], m["n_buckets"]))
+            ).alias("touched"),
         )
-        .filter(ok)
-        .select(
-            bucket_expr(key_cols, m["n_buckets"]).alias("__b"),
-            null_key_pred.alias("__nk"),
-        )
-        .distinct()
-        .collect()
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
     )
     probe_wall = round(time.monotonic() - _t, 4)
     got = obs.get
-    touched = sorted({r["__b"] for r in probe_rows})
-    has_null_keys = any(r["__nk"] for r in probe_rows)
+    touched = sorted(got.pop("touched"))
 
     n_poison = 0
     dl_wall = 0.0
@@ -337,7 +326,7 @@ def apply_batch_flagged(
     pool = None
     if dead_letter is not None and int(got.get("n_poison_seen") or 0) > 0:
         # The append reads the already-built cache and writes a small
-        # segment — independent Spark jobs from the merge's join+write,
+        # segment — independent Spark jobs from the merge's snapshot write,
         # so run it CONCURRENTLY from a driver thread (guide §2.6) and
         # join it at merge's pre_commit barrier: the poison commit
         # still durably precedes the table commit (same crash ordering
@@ -368,7 +357,7 @@ def apply_batch_flagged(
                 op_col="op",
                 stream_id=stream_id,
                 epoch_id=epoch_id,
-                probe=(touched, has_null_keys),
+                probe=touched,
                 pre_commit=dl_future.result if dl_future is not None else None,
             )
         if dl_future is not None:

@@ -94,17 +94,26 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # Allow shuffled-hash join where its size conditions hold
-        # (guide §3.1): the merge's full-outer join (deduped batch vs
-        # touched-bucket target) cannot broadcast, and SMJ pays two
-        # per-partition sorts every epoch. Build-side partitions are
-        # bounded by the shuffle partition count + AQE skew splitting,
-        # so the hash-build OOM risk the default guards against does
-        # not apply at this row width. Measured on the 1M-event epoch
-        # merge shape: never slower, up to ~25% faster (r8).
+        # (guide §3.1). Build-side partitions are bounded by the shuffle
+        # partition count + AQE skew splitting, so the hash-build OOM
+        # risk the default guards against does not apply at this row
+        # width. It was measured (r8: never slower, up to ~25% faster)
+        # on the merge's old full-outer join, which the one-exchange
+        # merge aggregate replaced; no remaining plan was measured with
+        # it, so it stays session-wide until it is re-measured or
+        # scoped (ROADMAP item 3).
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark otherwise captures the Python call site on every
+        # wrapped DataFrame/Column call (a stack walk, extra py4j round
+        # trips and an IPython import attempt each): one 200-event
+        # streaming apply made 2,093 py4j round trips with it, 813
+        # without (cProfile of CdcStreamPipeline._apply). The
+        # trade-off: analysis errors no longer carry the Python
+        # call-site fragment, only the JVM-side message.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             STATE_STORE_PROVIDERS[DEFAULT_STATE_STORE],

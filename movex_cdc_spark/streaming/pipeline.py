@@ -16,10 +16,11 @@ checkpoint's offset log (ST11).
 
 from __future__ import annotations
 
+import time
 from collections import deque
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from movex_cdc_spark.lake.table import LakeTable
@@ -454,17 +455,29 @@ class MultiplexedCdcPipeline:
 
         batch = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            # bounded probe: distinct tags ≤ configured tables + strays
-            # (the collect also builds the cache the dispatch slices)
-            present = {
-                r["table_name"] for r in batch.select("table_name").distinct().collect()
-            }
+            # bounded probe: distinct tags ≤ configured tables + strays,
+            # observed on a noop write — ONE job, which also builds the
+            # cache the dispatch slices (a distinct().collect() is 3)
+            obs = Observation(f"tags_{self.stream_id}_{epoch_id}_{time.monotonic_ns()}")
+            (
+                batch.select("table_name")
+                .observe(
+                    obs,
+                    F.collect_set("table_name").alias("tags"),
+                    F.max(F.col("table_name").isNull()).alias("null_tag"),
+                )
+                .write.format("noop")
+                .mode("overwrite")
+                .save()
+            )
+            got = obs.get
+            present = set(got["tags"])
             # a NULL tag is reachable from the tagged Kafka source (a
             # malformed wire record parses all-null): it can't be in
             # sorted() (None < str raises) and isin([None]) is NULL —
             # matching nothing — so it gets its own predicate branch.
-            has_null_tag = None in present
-            strays = sorted(present - set(self.config.tables) - {None})
+            has_null_tag = bool(got["null_tag"])
+            strays = sorted(present - set(self.config.tables))
             stray_pred = (
                 F.col("table_name").isin(strays) if strays else F.lit(False)
             )

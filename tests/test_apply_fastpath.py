@@ -104,14 +104,10 @@ def test_probe_path_matches_generic_merge(spark, tmp_path):
         if mode == "probe":
             m = t.meta()
             rows = (
-                batch.select(
-                    bucket_expr(KEY_COLS, m["n_buckets"]).alias("b"),
-                    (F.col("repo").isNull() | F.col("path").isNull()).alias("nk"),
-                ).distinct().collect()
+                batch.select(bucket_expr(KEY_COLS, m["n_buckets"]).alias("b"))
+                .distinct().collect()
             )
-            t.merge(batch, epoch_id=0,
-                    probe=(sorted({r["b"] for r in rows}),
-                           any(r["nk"] for r in rows)))
+            t.merge(batch, epoch_id=0, probe=sorted(r["b"] for r in rows))
         else:
             t.merge(batch, epoch_id=0)
         states[mode] = {
@@ -133,7 +129,7 @@ def test_lying_probe_fails_loud(spark, tmp_path):
     ).first()["b"]
     wrong = [(real_bucket + 1) % 8]
     with pytest.raises(RuntimeError, match="outside the probed"):
-        t.merge(batch, epoch_id=0, probe=(wrong, False))
+        t.merge(batch, epoch_id=0, probe=wrong)
 
 
 def _poison_epoch(spark):

@@ -105,7 +105,7 @@ def test_empty_and_null_key_batch(spark, tmp_lake):
     t = _table(spark, tmp_lake, n_buckets=2)
     empty = spark.createDataFrame([], _batch(spark, [(1, "r", "p", "c", "py", "x", "I")]).schema)
     assert t.merge(empty, epoch_id=0).get("skipped")
-    # null key column routes deterministically (eqNullSafe join), no crash
+    # null key column routes deterministically (nulls group as equal), no crash
     t.merge(_batch(spark, [(1, None, "p", "c", "py", "x", "I")]), epoch_id=1)
     t.merge(_batch(spark, [(2, None, "p", "c", "py", "y", "U")]), epoch_id=2)
     rows = t.read().collect()
@@ -149,14 +149,11 @@ def test_merge_with_retry_on_commit_conflict(spark, tmp_path):
 
 
 def _probe(t, frame):
-    """(touched buckets, has null keys) of ``frame``'s keys — the shape
+    """Touched buckets of ``frame``'s keys — the list
     apply_batch_flagged hands to merge(probe=...)."""
     n = t.meta()["n_buckets"]
-    rows = frame.select(
-        bucket_expr(KEY_COLS, n).alias("b"),
-        (F.col("repo").isNull() | F.col("path").isNull()).alias("nk"),
-    ).distinct().collect()
-    return sorted({r["b"] for r in rows}), any(r["nk"] for r in rows)
+    rows = frame.select(bucket_expr(KEY_COLS, n).alias("b")).distinct().collect()
+    return sorted(r["b"] for r in rows)
 
 
 def test_merge_probe_path_and_divergence_guard(spark, tmp_lake):
@@ -675,3 +672,107 @@ def test_expire_reaps_zero_parquet_orphan_dir(spark, tmp_lake):
     assert os.path.exists(in_flight)      # staged-beyond-head survives
     got = {r["path"] for r in t.read().collect()}
     assert got == {"p0", "p1", "p2", "p3"}
+
+
+# ------------------------------------------------ merge semantics table
+# Each case: the stored rows (key, commit, lang, content, last_seq,
+# deleted) and one batch (seq, key, commit, lang, content, op), checked
+# against a pure-Python LWW oracle. ``drop`` names batch columns the
+# batch lacks (schema-evolution tolerant apply: they merge as NULL).
+_SEM_CASES = {
+    "equal_seq_stored_wins": (
+        [("r1", "p1", "c", "py", "old", 5, False)],
+        [(5, "r1", "p1", "c2", "py", "new", "U")],
+        (),
+    ),
+    "null_source_seq": (
+        [("r1", "p1", "c", "py", "old", 5, False)],
+        [(None, "r1", "p1", "c2", "py", "new", "U"),
+         (None, "r2", "p2", "c", "py", "ins", "I")],
+        (),
+    ),
+    "null_stored_last_seq": (
+        [("r1", "p1", "c", "py", "old", None, False),
+         ("r2", "p2", "c", "py", "kept", None, False)],
+        [(None, "r1", "p1", "c2", "py", "new", "U")],
+        (),
+    ),
+    "tombstone_then_late_lower_insert": (
+        [("r1", "p1", "c", "py", None, 10, True)],
+        [(5, "r1", "p1", "c", "py", "zombie", "I")],
+        (),
+    ),
+    "tombstone_then_higher_insert": (
+        [("r1", "p1", "c", "py", None, 10, True)],
+        [(12, "r1", "p1", "c", "py", "back", "I")],
+        (),
+    ),
+    "several_rows_per_key": (
+        [("r1", "p1", "c", "py", "old", 4, False)],
+        [(3, "r1", "p1", "c", "py", "a", "U"),
+         (7, "r1", "p1", "c", "py", "c", "U"),
+         (5, "r1", "p1", "c", "py", "b", "U"),
+         (1, "r2", "p2", "c", "py", "x", "I"),
+         (2, "r2", "p2", "c", "py", None, "D")],
+        (),
+    ),
+    "null_keys": (
+        [(None, "p", "c", "py", "old", 1, False)],
+        [(2, None, "p", "c", "py", "new", "U"),
+         (3, None, None, "c", "py", "both", "I"),
+         (4, None, None, "c", "py", "both2", "U")],
+        (),
+    ),
+    "batch_lacks_payload_column": (
+        [("r1", "p1", "c", "py", "old", 1, False),
+         ("r2", "p2", "c", "go", "keep", 9, False)],
+        [(2, "r1", "p1", "c2", None, "new", "U"),
+         (3, "r2", "p2", "c2", None, "stale", "U")],
+        ("lang",),
+    ),
+}
+
+_STORED_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType()) for c in ("repo", "path", "commit", "lang", "content")]
+    + [T.StructField("last_seq", T.LongType()), T.StructField("deleted", T.BooleanType())]
+)
+_BATCH_SCHEMA = T.StructType(
+    [T.StructField("seq", T.LongType())]
+    + [T.StructField(c, T.StringType()) for c in ("repo", "path", "commit", "lang", "content", "op")]
+)
+
+
+def _lww_oracle(stored, batch):
+    """Per key, the candidate with the greatest (seq, rank) wins, NULL
+    seq ordering lowest: stored rows rank 1 (−1 with a NULL last_seq),
+    batch rows rank 0. last_seq = max(coalesce(seq, -1)) over all of
+    the key's candidates."""
+    cands: dict[tuple, list] = {}
+    for repo, path, commit, lang, content, seq, deleted in stored:
+        rank = -1 if seq is None else 1
+        cands.setdefault((repo, path), []).append(
+            (seq, rank, (commit, lang, content, bool(deleted)))
+        )
+    for seq, repo, path, commit, lang, content, op in batch:
+        cands.setdefault((repo, path), []).append(
+            (seq, 0, (commit, lang, content, op == "D"))
+        )
+    out = {}
+    for k, cs in cands.items():
+        win = max(cs, key=lambda c: (c[0] is not None, c[0] or 0, c[1]))
+        out[k] = win[2] + (max(-1 if c[0] is None else c[0] for c in cs),)
+    return out
+
+
+@pytest.mark.parametrize("case", sorted(_SEM_CASES))
+def test_merge_semantics_match_lww_oracle(spark, tmp_lake, case):
+    stored, batch, drop = _SEM_CASES[case]
+    # one bucket: every stored row shares the batch's touched bucket
+    t = _table(spark, tmp_lake, n_buckets=1)
+    t.overwrite(spark.createDataFrame(stored, _STORED_SCHEMA))
+    t.merge(spark.createDataFrame(batch, _BATCH_SCHEMA).drop(*drop), epoch_id=0)
+    got = {
+        (r["repo"], r["path"]): (r["commit"], r["lang"], r["content"], r["deleted"], r["last_seq"])
+        for r in t.read(include_deleted=True).collect()
+    }
+    assert got == _lww_oracle(stored, batch)

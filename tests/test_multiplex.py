@@ -123,6 +123,16 @@ def test_multiplexed_dispatch_matches_per_table_oracles(spark, tmp_path):
     )
     epochs = pipe.run_available_now()
     assert len(epochs) == 3  # one per queue file
+    # the tag probe's and each keyed table's probe observations were
+    # read inside the micro-batch, with the tables dispatched
+    # concurrently: every keyed table-epoch merged the buckets its
+    # observation collected
+    keyed = [
+        e["tables"][n] for e in epochs for n in ("repo_files", "repo_files_b")
+        if n in e["tables"]
+    ]
+    assert keyed and all(lin["buckets_touched"] for lin in keyed)
+    assert sum(e["n_strays"] for e in epochs) == len(stray)
 
     # table A: standard config -> the standard replay oracle
     base_a = pd.DataFrame(columns=["repo", "path", "commit", "lang", "content",

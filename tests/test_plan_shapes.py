@@ -117,3 +117,52 @@ def test_ivf_probe_shape_and_recall_floor(spark):
     p = buf.getvalue()
     assert "CartesianProduct" not in p
     assert "BroadcastHashJoin" in p
+
+
+def _executed_plans(spark, action):
+    """Final physical plans (AQE-resolved) of the SQL executions that
+    ``action`` runs, read from the session's SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    seen = {e.executionId() for e in executions()}
+    action()
+    return [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() not in seen
+    ]
+
+
+def test_merge_write_is_one_exchange(spark, tmp_path):
+    """The COW merge write runs as batch ∪ stored rows → ONE exchange
+    on the bucket → per-key max_by aggregate → partitioned write: no
+    join, and the touched buckets are scanned once."""
+    import pandas as pd
+
+    from movex_cdc_spark.lake.table import LakeTable
+    from movex_cdc_spark.operators.apply import KEY_COLS, REPO_FILES_SCHEMA
+
+    cols = ["repo", "path", "commit", "lang", "content"]
+    t = LakeTable.create(spark, str(tmp_path / "lake"), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=8)
+    t.overwrite(spark.createDataFrame(
+        pd.DataFrame([(f"r{i}", f"p{i}", "c", "py", "v") for i in range(64)], columns=cols)
+    ))
+    batch = spark.createDataFrame(pd.DataFrame(
+        [(i, f"r{i}", f"p{i}", "c2", "py", "w", "U") for i in range(0, 64, 5)]
+        + [(100, "r1", "p1", "c3", "py", "w2", "U")],  # two rows for one key
+        columns=["seq"] + cols + ["op"],
+    ))
+    plans = _executed_plans(spark, lambda: t.merge(batch, epoch_id=0))
+    writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(writes) == 1
+    final = writes[0].split("== Initial Plan ==")[0].split("\n\n")[0]
+    assert final.count("Exchange (") == 1, final
+    assert final.count("Scan parquet") == 1, final
+    assert "Join" not in final, final
+    assert {r["path"]: r["content"] for r in t.read().collect()}["p1"] == "w2"
