@@ -850,16 +850,19 @@ def run_mux_ab(spark, workdir: str, n_tables: int = 8,
     return out
 
 
-def run_cow_vs_mor(spark, workdir: str, n_events: int = 200_000, n_epochs: int = 20) -> dict:
-    """Write-amplification bench: the SAME stream applied as many tiny
-    epochs through (a) eager COW merge — every epoch rewrites its
-    touched buckets — and (b) the merge-on-read delta path (append-only
-    epochs + one final compaction). Small frequent epochs are exactly
-    where COW loses at 100 TB; this measures how much MoR buys back,
-    and asserts both paths materialize identical states."""
+def run_delta_depth(spark, workdir: str, n_events: int = 200_000,
+                    n_epochs: int = 40, reads_every: int = 8) -> dict:
+    """WHEN-to-compact bench: the same stream as many tiny epochs into
+    a LakeTable at several delta depths (``table.MAX_DELTA_DEPTH``,
+    set for the run only). Depth 0 is eager copy-on-write; depth d
+    compacts a bucket on every (d+1)-th epoch that touches it. Total
+    cost per depth = write wall + read wall (a consumer reads the
+    folded state every ``reads_every`` epochs — the part a write-only
+    bench hides: every read folds the outstanding deltas). States are
+    asserted identical to depth 0 before any wall counts."""
     from pyspark.sql import functions as F
 
-    from movex_cdc_spark.lake.mor import MergeOnReadTable
+    from movex_cdc_spark.lake import table as table_mod
     from movex_cdc_spark.lake.table import LakeTable
     from movex_cdc_spark.operators.apply import KEY_COLS, REPO_FILES_SCHEMA, apply_batch
     from movex_cdc_spark.sources.events import PAYLOAD_EVENTS_SCHEMA, parse_payload_events
@@ -869,118 +872,45 @@ def run_cow_vs_mor(spark, workdir: str, n_events: int = 200_000, n_epochs: int =
         spark.read.schema(PAYLOAD_EVENTS_SCHEMA).parquet(os.path.join(stage, "events_json"))
     ).persist()
     ev.count()
-    out = {"n_events": n_events, "n_epochs": n_epochs}
-
-    run_dir = os.path.join(workdir, "run-cowmor")
-    shutil.rmtree(run_dir, ignore_errors=True)
-    cow = LakeTable.create(spark, os.path.join(run_dir, "cow"), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=32)
-    t0 = time.monotonic()
-    for i in range(n_epochs):
-        apply_batch(cow, ev.filter(F.pmod(F.col("seq"), F.lit(n_epochs)) == i), epoch_id=i)
-    out["cow_wall_s"] = round(time.monotonic() - t0, 2)
-
-    base = LakeTable.create(spark, os.path.join(run_dir, "base"), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=32)
-    mor = MergeOnReadTable(base, os.path.join(run_dir, "delta"), compact_rows=10**12)
-    t0 = time.monotonic()
-    for i in range(n_epochs):
-        apply_batch(mor, ev.filter(F.pmod(F.col("seq"), F.lit(n_epochs)) == i), epoch_id=i)
-    out["mor_append_wall_s"] = round(time.monotonic() - t0, 2)
-    t0 = time.monotonic()
-    mor.compact()
-    out["mor_compact_wall_s"] = round(time.monotonic() - t0, 2)
-    out["mor_total_wall_s"] = round(out["mor_append_wall_s"] + out["mor_compact_wall_s"], 2)
-    out["write_amp_speedup"] = round(out["cow_wall_s"] / out["mor_total_wall_s"], 2)
-
-    a = cow.read().select("repo", "path", "content_sha")
-    b = mor.read().select("repo", "path", "content_sha")
-    out["states_equal"] = (a.exceptAll(b).count() + b.exceptAll(a).count()) == 0
-    ev.unpersist()
-    shutil.rmtree(run_dir, ignore_errors=True)
-    return out
-
-
-def run_mor_policy(spark, workdir: str, n_events: int = 200_000,
-                   n_epochs: int = 40, reads_every: int = 8) -> dict:
-    """WHEN-to-compact policy bench (VERDICT r6 item 8): the same
-    stream as many tiny epochs through MoR under different
-    ``compact_rows`` thresholds, vs eager COW. Total cost per policy =
-    write wall (appends + auto-compactions fired by the threshold) +
-    read wall (a consumer reads the resolved state every
-    ``reads_every`` epochs — the part a write-only bench hides: an
-    uncompacted delta makes EVERY read pay base ∪ delta LWW).
-    Policies are expressed as delta-rows thresholds in epochs-worth of
-    rows; states are asserted identical to COW before any wall counts.
-    The documented default falls out of this table: the threshold
-    whose total wall is lowest while keeping reads near the COW read
-    wall."""
-    from pyspark.sql import functions as F
-
-    from movex_cdc_spark.lake.mor import MergeOnReadTable
-    from movex_cdc_spark.lake.table import LakeTable
-    from movex_cdc_spark.operators.apply import KEY_COLS, REPO_FILES_SCHEMA, apply_batch
-    from movex_cdc_spark.sources.events import PAYLOAD_EVENTS_SCHEMA, parse_payload_events
-
-    stage, _ = _stage_cdc_input(workdir, n_events)
-    ev = parse_payload_events(
-        spark.read.schema(PAYLOAD_EVENTS_SCHEMA).parquet(os.path.join(stage, "events_json"))
-    ).persist()
-    ev.count()
-    rows_per_epoch = n_events // n_epochs
     out: dict = {"n_events": n_events, "n_epochs": n_epochs,
-                 "rows_per_epoch": rows_per_epoch, "reads_every": reads_every,
-                 "policies": {}}
-
-    run_dir = os.path.join(workdir, "run-morpolicy")
-
-    def _drive(sink, tag: str) -> dict:
-        t_write = t_read = 0.0
-        n_compact = 0
-        for i in range(n_epochs):
-            t0 = time.monotonic()
-            lin = apply_batch(
-                sink, ev.filter(F.pmod(F.col("seq"), F.lit(n_epochs)) == i),
-                epoch_id=i,
-            )
-            t_write += time.monotonic() - t0
-            if lin.get("compaction"):
-                n_compact += 1
-            if (i + 1) % reads_every == 0:
-                t0 = time.monotonic()
-                sink.read().select(F.count(F.lit(1))).collect()
-                t_read += time.monotonic() - t0
-        return {"write_wall_s": round(t_write, 2), "read_wall_s": round(t_read, 2),
-                "total_wall_s": round(t_write + t_read, 2),
-                "auto_compactions": n_compact}
-
+                 "rows_per_epoch": n_events // n_epochs, "reads_every": reads_every,
+                 "depths": {}}
+    run_dir = os.path.join(workdir, "run-deltadepth")
     shutil.rmtree(run_dir, ignore_errors=True)
-    cow = LakeTable.create(spark, os.path.join(run_dir, "cow"),
-                           REPO_FILES_SCHEMA, KEY_COLS, n_buckets=32)
-    out["policies"]["cow"] = _drive(cow, "cow")
-    ref = cow.read().select("repo", "path", "content_sha").persist()
-    ref.count()
-
-    # thresholds in epochs-worth of delta rows; "never" defers the whole
-    # rewrite to one final compaction (the run_cow_vs_mor shape)
-    for label, epochs_worth in (("every_2_epochs", 2), ("every_5_epochs", 5),
-                                ("every_10_epochs", 10), ("never", None)):
-        base = LakeTable.create(spark, os.path.join(run_dir, f"base-{label}"),
-                                REPO_FILES_SCHEMA, KEY_COLS, n_buckets=32)
-        thr = 10**12 if epochs_worth is None else rows_per_epoch * epochs_worth
-        mor = MergeOnReadTable(base, os.path.join(run_dir, f"delta-{label}"),
-                               compact_rows=thr)
-        r = _drive(mor, label)
-        if epochs_worth is None:
-            t0 = time.monotonic()
-            mor.compact()
-            r["final_compact_wall_s"] = round(time.monotonic() - t0, 2)
-            r["total_wall_s"] = round(r["total_wall_s"] + r["final_compact_wall_s"], 2)
-        got = mor.read().select("repo", "path", "content_sha")
-        r["state_equals_cow"] = (
-            got.exceptAll(ref).count() + ref.exceptAll(got).count()
-        ) == 0
-        r["compact_rows_threshold"] = thr
-        out["policies"][label] = r
-    ref.unpersist()
+    default_depth = table_mod.MAX_DELTA_DEPTH
+    ref = None
+    try:
+        for depth in (0, 1, 4, 9, n_epochs):
+            table_mod.MAX_DELTA_DEPTH = depth
+            t = LakeTable.create(spark, os.path.join(run_dir, f"d{depth}"),
+                                 REPO_FILES_SCHEMA, KEY_COLS, n_buckets=32)
+            t_write = t_read = 0.0
+            n_cow = 0
+            for i in range(n_epochs):
+                t0 = time.monotonic()
+                lin = apply_batch(
+                    t, ev.filter(F.pmod(F.col("seq"), F.lit(n_epochs)) == i), epoch_id=i
+                )
+                t_write += time.monotonic() - t0
+                n_cow += lin.get("write_mode") == "cow"
+                if (i + 1) % reads_every == 0:
+                    t0 = time.monotonic()
+                    t.read().select(F.count(F.lit(1))).collect()
+                    t_read += time.monotonic() - t0
+            got = t.read().select("repo", "path", "content_sha").persist()
+            if ref is None:
+                ref = got
+            r = {"write_wall_s": round(t_write, 2), "read_wall_s": round(t_read, 2),
+                 "total_wall_s": round(t_write + t_read, 2), "cow_epochs": n_cow,
+                 "state_equals_depth_0": (
+                     got.exceptAll(ref).count() + ref.exceptAll(got).count()) == 0}
+            out["depths"][str(depth)] = r
+            if got is not ref:
+                got.unpersist()
+    finally:
+        table_mod.MAX_DELTA_DEPTH = default_depth
+    if ref is not None:
+        ref.unpersist()
     ev.unpersist()
     shutil.rmtree(run_dir, ignore_errors=True)
     return out
@@ -1105,20 +1035,12 @@ def main() -> None:
         print(json.dumps({"metric": "state_store_heap_vs_rocksdb",
                           **run_state_store_ab(workdir, n, u)}))
         return
-    if "--mor" in sys.argv:
+    if "--delta-depth" in sys.argv:
         spark = make_spark(CPUS)
-        n = int(os.environ.get("SPARK_GRAFT_MOR_EVENTS", "200000"))
-        print(json.dumps({"metric": "cow_vs_mor_tiny_epochs",
-                          **run_cow_vs_mor(spark, workdir, n_events=n)}))
-        spark.stop()
-        return
-    if "--mor-policy" in sys.argv:
-        spark = make_spark(CPUS)
-        n = int(os.environ.get("SPARK_GRAFT_MOR_EVENTS", "200000"))
-        e = int(os.environ.get("SPARK_GRAFT_MOR_EPOCHS", "40"))
-        print(json.dumps({"metric": "mor_compaction_policy",
-                          **run_mor_policy(spark, workdir, n_events=n,
-                                           n_epochs=e)}))
+        n = int(os.environ.get("SPARK_GRAFT_DELTA_EVENTS", "200000"))
+        e = int(os.environ.get("SPARK_GRAFT_DELTA_EPOCHS", "40"))
+        print(json.dumps({"metric": "delta_depth_write_read",
+                          **run_delta_depth(spark, workdir, n_events=n, n_epochs=e)}))
         spark.stop()
         return
     os.makedirs(workdir, exist_ok=True)

@@ -12,17 +12,35 @@ format is implemented here with the same contract Iceberg gives us:
     documented 1:1 mapping onto HDFS rename / S3 conditional PUT for
     cluster deployment; data files are Spark-side IO and already
     scheme-portable.
-  * **copy-on-write MERGE, bucket-pruned** — the table is hash-bucketed
-    on its key columns. A merge rewrites ONLY the buckets that contain
-    batch keys; untouched buckets carry their files forward by
-    reference. Merge cost is proportional to touched data, not table
-    size — this is what keeps a 10^10-row table mergeable.
+  * **per-bucket file lists** — the table is hash-bucketed on its key
+    columns, and the metadata names, per bucket, a BASE file (one row
+    per key, written by a copy-on-write merge under
+    ``snap-{v}-{uuid}/__bucket_part={b}/``) followed by the DELTA files
+    committed after it, oldest first. A delta file is one bucket-sorted
+    parquet file directly under its ``snap-{v}-{uuid}/`` dir; it holds
+    one epoch's change rows, un-deduped, for every bucket that epoch
+    touched, so the same delta file is named in several lists.
+  * **two write arms per merge** — while no touched bucket would hold
+    more than ``MAX_DELTA_DEPTH`` delta files, a merge appends ONE
+    delta file (no stored-side read, no exchange, no aggregate);
+    otherwise it runs the copy-on-write merge over base ∪ deltas of
+    the touched buckets, which writes each one a fresh base file and
+    drops its deltas — compaction is just that merge. Untouched buckets
+    carry their lists forward by reference, so cost is proportional to
+    touched data, not table size.
+  * **one fold** — readers (``read``, ``read_raw``, ``changes``) and
+    the merge's stored side resolve each key by the greatest
+    ``(seq, rank)``: a base row beats any delta row of the same seq,
+    an earlier delta beats a later one, a merge's batch rows lose every
+    tie, and a base row with a NULL ``last_seq`` loses to every other
+    row. A read of bucket *b* folds exactly the files *b*'s list names;
+    buckets without deltas are read as-is.
   * **epoch-id fencing in the same commit** — the metadata records, per
     stream id, the last applied epoch. A ``foreachBatch`` retry of an
     already-applied epoch is a no-op, because the fence check and the
     data swap are the same atomic pointer move (exactly-once; the
     reference's analogous hazard window is Kafka-commit-then-DB-delete,
-    transfer_thread.rb:68-80,171-177).
+    transfer_thread.rb:68-80,171-177). Both write arms commit this way.
   * **schema evolution** — column adds and int→long / float→double
     widening recorded per snapshot; old files are read with the new
     schema (missing columns → null), the Iceberg ALTER-before-MERGE
@@ -33,7 +51,8 @@ format is implemented here with the same contract Iceberg gives us:
     while a genuinely newer insert can (SURVEY §7.3 hard part 5).
 
 On a real cluster every piece of this maps 1:1 onto Iceberg catalog
-calls; the class is deliberately small so that swap is mechanical.
+calls (base files + merge-on-read delete/data deltas); the class is
+deliberately small so that swap is mechanical.
 """
 
 from __future__ import annotations
@@ -41,9 +60,12 @@ from __future__ import annotations
 import json
 import os
 import re
+import time
 import uuid
+from functools import reduce
 from typing import Any
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,7 +76,21 @@ BUCKET_COL = "__bucket"
 PART_COL = "__bucket_part"  # duplicated for partitionBy (dir layout)
 SEQ_COL = "last_seq"
 DELETED_COL = "deleted"
-_RANK = "__rank"  # merge tie-break: stored row vs batch row of equal seq
+_RANK = "__rank"  # fold tie-break between rows of equal seq (module docstring)
+# rank of a base row with a NULL last_seq: below every delta and batch row
+_NULL_BASE_RANK = -(1 << 62)
+
+# Delta files a bucket may hold before a merge touching it compacts it
+# (runs the copy-on-write arm). Measured with the former merge-on-read
+# table (bench.py --mor-policy, 40×5k-row epochs into 32 buckets, a
+# consumer read of the whole table every 8 epochs, BENCH_SCALING.md
+# r7): total write+read wall was eager COW 143.6 s / compact every 2
+# epochs 67.3 s / every 5 epochs 48.5 s / every 10 60.0 s / once at the
+# end 75.2 s, all final states identical. Too-eager compaction re-pays
+# the bucket rewrite; too-lazy makes every read fold a fat delta and
+# every (rarer) compaction rewrite more. Four deltas, then a compacting
+# merge, is one rewrite per 5 epochs — the measured minimum.
+MAX_DELTA_DEPTH = 4
 
 # widenings allowed without rewriting data files (Iceberg-compatible set)
 _WIDEN: dict[tuple[str, str], str] = {
@@ -63,6 +99,20 @@ _WIDEN: dict[tuple[str, str], str] = {
     ("integer", "double"): "double",
     ("date", "timestamp"): "timestamp",
 }
+
+
+def _is_delta(rel: str) -> bool:
+    """A delta file sits directly under its snapshot dir; base files
+    sit in the dir's ``__bucket_part=`` partitions."""
+    return f"{PART_COL}=" not in rel
+
+
+def _depth(files: list[str]) -> int:
+    return sum(map(_is_delta, files))
+
+
+def _file_version(rel: str) -> int:
+    return int(re.search(r"snap-(\d+)-", rel).group(1))
 
 
 def bucket_expr(key_cols: list[str], n_buckets: int):
@@ -75,16 +125,22 @@ def bucket_expr(key_cols: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
 
 
+_DIVERGED_MARK = "LAKE_MERGE_BUCKET_OUTSIDE_PROBE"
+
+
+def _diverged(extra, touched) -> str:
+    outside = f"buckets {extra}" if extra else "rows"
+    return (
+        f"merge wrote {outside} outside the probed touched set {touched} — "
+        "probe keys diverge from the batch keys; snapshot aborted, nothing committed"
+    )
+
+
 class CommitConflict(Exception):
     """Another writer committed this version first — reread and retry."""
 
 
 class LakeTable:
-    # merge() consumes a caller-supplied probe (bucket pruning). Sinks
-    # without buckets (MergeOnReadTable) leave this False so callers
-    # never run a probe job whose result nothing reads.
-    supports_probe = True
-
     def __init__(self, spark: SparkSession, path: str, fs=None):
         self.spark = spark
         self.path = path
@@ -125,7 +181,7 @@ class LakeTable:
             "schema": full.jsonValue(),
             "key_cols": key_cols,
             "n_buckets": n_buckets,
-            "buckets": {},  # bucket id (str) -> list of relative file paths
+            "buckets": {},  # bucket id (str) -> base file(s), then deltas oldest first
             "epochs": {},  # stream_id -> last applied epoch id
             "lineage": [],
             "stats": {"rows_live": 0, "rows_total": 0},
@@ -202,12 +258,88 @@ class LakeTable:
         self.fs.replace_text(os.path.join(self.meta_dir, "_current"), str(v))
 
     # ----------------------------------------------------------- read
-    def _files(self, meta: dict[str, Any], buckets: list[int] | None = None) -> list[str]:
-        out: list[str] = []
-        for b, files in meta["buckets"].items():
-            if buckets is None or int(b) in buckets:
-                out.extend(os.path.join(self.path, f) for f in files)
-        return out
+    def _scan(self, m: dict[str, Any], files: list[str]) -> DataFrame:
+        """BUCKET_COL + table columns of ``files``. The explicit schema is
+        the schema-evolution read path: files written before a column
+        add are read with null for the new column."""
+        schema = T.StructType.fromJson(m["schema"])
+        read_schema = T.StructType(
+            [T.StructField(BUCKET_COL, T.IntegerType())] + list(schema.fields)
+        )
+        if not files:
+            return self.spark.createDataFrame([], read_schema)
+        return self.spark.read.schema(read_schema).parquet(
+            *[os.path.join(self.path, f) for f in files]
+        )
+
+    @staticmethod
+    def _lists(m: dict[str, Any], buckets) -> dict[int, list[str]]:
+        return {
+            int(b): files
+            for b, files in m["buckets"].items()
+            if buckets is None or int(b) in buckets
+        }
+
+    def _stored(self, m: dict[str, Any], buckets) -> DataFrame:
+        """Every stored row of ``buckets``, unfolded, with its fold rank:
+        0 for base rows (``_NULL_BASE_RANK`` when ``last_seq`` is NULL)
+        and −version for the rows of the delta file committed at that
+        version. One scan for the base files, one per delta file,
+        filtered to the requested buckets whose lists name it."""
+        base: list[str] = []
+        deltas: dict[str, list[int]] = {}
+        for b, files in self._lists(m, buckets).items():
+            for f in files:
+                if _is_delta(f):
+                    deltas.setdefault(f, []).append(b)
+                else:
+                    base.append(f)
+        parts = []
+        if base or not deltas:
+            parts.append(self._scan(m, base).withColumn(
+                _RANK,
+                F.when(F.col(SEQ_COL).isNull(), F.lit(_NULL_BASE_RANK)).otherwise(F.lit(0)),
+            ))
+        for f, bs in sorted(deltas.items()):
+            parts.append(
+                self._scan(m, [f])
+                .filter(F.col(BUCKET_COL).isin(sorted(bs)))
+                .withColumn(_RANK, F.lit(-_file_version(f)).cast("long"))
+            )
+        return reduce(DataFrame.unionByName, parts).withColumn(
+            DELETED_COL, F.coalesce(F.col(DELETED_COL), F.lit(False))
+        )
+
+    def _fold(self, rows: DataFrame, m: dict[str, Any], n_buckets: int) -> DataFrame:
+        """One row per (bucket, key): the payload and tombstone flag of
+        the greatest ``(seq, rank)`` (NULL seq orders lowest), with
+        ``last_seq = max(coalesce(seq, -1))``. The read-time fold and the
+        copy-on-write merge's aggregate are this same plan: ONE exchange,
+        hash-partitioned on the bucket alone into ``_write_tasks`` tasks
+        — that already clusters every (bucket, key) group, so the
+        aggregate adds no second exchange, and its sorted output
+        satisfies the merge's partitionBy write without another sort."""
+        key_cols = m["key_cols"]
+        names = [
+            f.name
+            for f in T.StructType.fromJson(m["schema"]).fields
+            if f.name not in (SEQ_COL, DELETED_COL)
+        ]
+        rest = [n for n in names if n not in key_cols]
+        return (
+            rows.repartition(self._write_tasks(n_buckets), F.col(BUCKET_COL))
+            .groupBy(BUCKET_COL, *key_cols)
+            .agg(
+                F.max_by(F.struct(*rest, DELETED_COL), F.struct(SEQ_COL, _RANK)).alias("__w"),
+                F.max(F.coalesce(F.col(SEQ_COL), F.lit(-1).cast("long"))).alias(SEQ_COL),
+            )
+            .select(
+                BUCKET_COL,
+                *[F.col(n) if n in key_cols else F.col(f"__w.{n}").alias(n) for n in names],
+                SEQ_COL,
+                F.col(f"__w.{DELETED_COL}").alias(DELETED_COL),
+            )
+        )
 
     def read(
         self,
@@ -218,18 +350,7 @@ class LakeTable:
         """Read a snapshot. ``buckets`` prunes the scan to the named
         buckets (metadata-level partition pruning — untouched buckets
         are never listed, opened, or scanned)."""
-        m = self.meta(version)
-        schema = T.StructType.fromJson(m["schema"])
-        files = self._files(m, buckets)
-        read_schema = T.StructType(
-            [T.StructField(BUCKET_COL, T.IntegerType())] + list(schema.fields)
-        )
-        if not files:
-            df = self.spark.createDataFrame([], read_schema)
-        else:
-            # explicit schema = schema-evolution read path: files written
-            # before a column add are read with null for the new column.
-            df = self.spark.read.schema(read_schema).parquet(*files)
+        df = self.read_raw(version, buckets)
         if not include_deleted:
             df = df.filter(~F.col(DELETED_COL))
         return df.drop(BUCKET_COL)
@@ -240,18 +361,18 @@ class LakeTable:
         buckets: list[int] | None = None,
         meta: dict[str, Any] | None = None,
     ) -> DataFrame:
-        """Internal read keeping bucket + tombstone columns. ``meta``
-        skips the metadata re-read when the caller already parsed it
-        (each read_text is a round trip on a remote fs seam)."""
+        """Internal read keeping bucket + tombstone columns, one row per
+        key: buckets with delta files are folded, the rest read as-is.
+        ``meta`` skips the metadata re-read when the caller already
+        parsed it (each read_text is a round trip on a remote fs seam)."""
         m = meta if meta is not None else self.meta(version)
-        schema = T.StructType.fromJson(m["schema"])
-        read_schema = T.StructType(
-            [T.StructField(BUCKET_COL, T.IntegerType())] + list(schema.fields)
-        )
-        files = self._files(m, buckets)
-        if not files:
-            return self.spark.createDataFrame([], read_schema)
-        return self.spark.read.schema(read_schema).parquet(*files)
+        lists = self._lists(m, buckets)
+        folded = sorted(b for b, files in lists.items() if _depth(files))
+        plain = [f for b, files in lists.items() if b not in folded for f in files]
+        if not folded:
+            return self._scan(m, plain)
+        out = self._fold(self._stored(m, folded), m, len(folded))
+        return self._scan(m, plain).unionByName(out) if plain else out
 
     # ------------------------------------------------------- changelog
     def changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
@@ -262,8 +383,11 @@ class LakeTable:
         changed since.
 
         Scale shape: the bucket diff is pure METADATA (file lists per
-        bucket compared between the two versions); both snapshot reads
-        are pruned to the changed buckets, so cost is proportional to
+        bucket compared between the two versions: a delta epoch appends
+        to them, a compaction replaces them); both snapshot reads are
+        pruned to the changed buckets and FOLDED (``read_raw``), so the
+        two sides are resolved states whatever mix of delta epochs and
+        compactions lies between them, and cost is proportional to
         churn, not table size. One per-bucket key join classifies rows:
 
           I — absent/tombstoned at from, live at to
@@ -273,7 +397,8 @@ class LakeTable:
 
         Keys whose ``last_seq`` is unchanged are not emitted;
         tombstone→tombstone seq advances are suppressed (no visible
-        change). COW carries every key forward, so the new side is
+        change). Every key a bucket held at ``from`` is still in its
+        folded state at ``to`` (tombstones included), so the new side is
         complete and a left join suffices."""
         to_version = self.current_version() if to_version is None else to_version
         if from_version > to_version:
@@ -404,7 +529,7 @@ class LakeTable:
 
     # ------------------------------------------------ snapshot write
     def _write_tasks(self, n_buckets: int) -> int:
-        """Snapshot write tasks for ``n_buckets`` buckets:
+        """Fold (and so snapshot write) tasks for ``n_buckets`` buckets:
         min(buckets, defaultParallelism). Each bucket hashes to exactly
         one task and the partitioned writer closes one file per
         partition value, so a task holding several buckets still writes
@@ -414,11 +539,15 @@ class LakeTable:
         for ~1 % of the keys."""
         return max(1, min(n_buckets, self.spark.sparkContext.defaultParallelism))
 
-    def _write_snapshot(self, df: DataFrame, version: int) -> tuple[str, str]:
-        """Write ``df`` (BUCKET_COL + table columns, already hash-
-        partitioned on BUCKET_COL by the caller) into a fresh snapshot
-        dir, one parquet file per bucket; returns the dir (relative,
-        absolute).
+    def _write_snapshot(
+        self, df: DataFrame, version: int, by_bucket: bool = True
+    ) -> tuple[str, str]:
+        """Write ``df`` (BUCKET_COL + table columns) into a fresh
+        snapshot dir; returns the dir (relative, absolute). ``by_bucket``:
+        one parquet file per bucket (base files; the caller has already
+        hash-partitioned ``df`` on BUCKET_COL), else the dir holds ``df``
+        as written (a delta file: one partition, bucket-sorted). A failed
+        write drops the staged dir.
 
         The dir name carries a uuid suffix for the same reason the
         append log's segments do (append_log.py:15-17): a hard crash
@@ -432,11 +561,13 @@ class LakeTable:
         the orphan's files."""
         snap_rel = os.path.join("data", f"snap-{version}-{uuid.uuid4().hex[:8]}")
         snap_dir = os.path.join(self.path, snap_rel)
-        (
-            df.withColumn(PART_COL, F.col(BUCKET_COL))
-            .write.partitionBy(PART_COL)
-            .parquet(snap_dir, mode="errorifexists")
-        )
+        w = df.withColumn(PART_COL, F.col(BUCKET_COL)).write.partitionBy(PART_COL) if by_bucket else df.write
+        try:
+            w.parquet(snap_dir, mode="errorifexists")
+        except Exception:
+            if self.fs.exists(snap_dir):
+                self.fs.rmtree(snap_dir)
+            raise
         return snap_rel, snap_dir
 
     def _bucket_files(self, snap_rel: str, buckets) -> dict[str, list[str]]:
@@ -464,14 +595,15 @@ class LakeTable:
         epoch_id: int | None = None,
         lineage_extra: dict[str, Any] | None = None,
         probe: "list[int] | None" = None,
+        probe_rows: int | None = None,
         pre_commit: "Any | None" = None,
     ) -> dict[str, Any]:
         """LWW MERGE of a change batch into the table.
 
         ``batch`` carries ``seq_col`` (monotone per key) + ``op_col``
-        ('I'/'U'/'D') and may hold several rows per key: the merge
-        resolves last-writer-wins within the batch and against the
-        stored row in the same aggregate.
+        ('I'/'U'/'D') and may hold several rows per key: last-writer-
+        wins is resolved by the fold (module docstring), within the
+        batch and against the stored rows alike.
 
         Semantics per key (the Iceberg MERGE INTO the north rule names):
           WHEN MATCHED  AND s.seq > t.last_seq AND s.op =  'D' → tombstone
@@ -482,9 +614,16 @@ class LakeTable:
         ``s.seq > t.last_seq`` guard — a later micro-batch can never
         apply an older change over a newer one, mirroring the worker
         high-water mark @max_key_event_logs_id (transfer_thread.rb:40).
-        A NULL batch seq loses to any stored row with a seq; a stored
-        row with a NULL ``last_seq`` loses to any batch row. Null key
+        A NULL batch seq loses to any stored row with a seq; a base row
+        with a NULL ``last_seq`` loses to any batch row. Null key
         columns compare equal (one key per null combination).
+
+        Write arm: while every touched bucket holds fewer than
+        ``MAX_DELTA_DEPTH`` delta files, the batch rows are appended as
+        ONE delta file (``write_mode`` "delta"); otherwise the touched
+        buckets are rewritten from base ∪ deltas ∪ batch (``write_mode``
+        "cow", which compacts them). Both arms commit through the same
+        epoch-fenced pointer swap, and readers see the same state.
 
         Returns the lineage record. If ``epoch_id`` is already fenced
         for ``stream_id`` the call is a NO-OP and returns the fence
@@ -493,10 +632,10 @@ class LakeTable:
         ``probe``: the touched-bucket list from a caller that already
         ran the probe job itself (apply_batch_flagged folds it into the
         job that builds the micro-batch cache and counts poison — one
-        fewer action per epoch). The batch plan then runs exactly once,
-        inside the snapshot write job; the written-outside-touched
-        commit guard below fails loudly if the caller's probe diverges
-        from the batch keys.
+        fewer action per epoch), with ``probe_rows`` the batch rows it
+        counted. The batch plan then runs exactly once, inside the
+        snapshot write job; a commit guard fails loudly if the caller's
+        probe diverges from the batch keys.
 
         ``pre_commit``: zero-arg callable invoked after the snapshot
         write but BEFORE the metadata commit. The caller's barrier for
@@ -512,34 +651,28 @@ class LakeTable:
             if last is not None and epoch_id <= last:
                 return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
 
-        key_cols = m["key_cols"]
-        n_buckets = m["n_buckets"]
+        new_version = m["version"] + 1
         payload = self.payload_schema()
-        pay_names = [f.name for f in payload.fields]
-        rest = [n for n in pay_names if n not in key_cols]
-
         # align batch payload to table schema: missing cols -> null,
         # narrower types -> cast up (schema-evolution tolerant apply).
-        # _RANK orders a stored row against batch rows of the same seq.
+        # Batch rows rank below every stored row: they lose each tie.
         batch_names = set(batch.columns)
         src = batch.select(
-            bucket_expr(key_cols, n_buckets).alias(BUCKET_COL),
+            bucket_expr(m["key_cols"], m["n_buckets"]).alias(BUCKET_COL),
             *[
                 (F.col(f.name).cast(f.dataType) if f.name in batch_names else F.lit(None).cast(f.dataType)).alias(f.name)
                 for f in payload.fields
             ],
             F.col(seq_col).cast("long").alias(SEQ_COL),
             (F.col(op_col) == F.lit("D")).alias(DELETED_COL),
-            F.lit(0).alias(_RANK),
+            F.lit(-new_version).cast("long").alias(_RANK),
         )
-
-        import time as _time
 
         # per-phase wall timings, recorded in the lineage so driver-side
         # epoch cost is observable in production (and adjudicable in
         # BENCH_SCALING.md) without ad-hoc instrumentation
         timings: dict[str, float] = {}
-        _t = _time.monotonic()
+        _t = time.monotonic()
 
         # bucket pruning: which buckets does this batch touch?
         src_cached = probe is None
@@ -553,64 +686,71 @@ class LakeTable:
             # whole upstream pipeline (scan/filter/LWW) would run twice,
             # once for this collect and again for the snapshot write.
             src = src.persist()
-            touched = [r[0] for r in src.select(BUCKET_COL).distinct().collect()]
-        timings["probe_s"] = round(_time.monotonic() - _t, 4)
+            counts = src.groupBy(BUCKET_COL).count().collect()
+            touched = sorted(r[0] for r in counts)
+            probe_rows = sum(r[1] for r in counts)
+        timings["probe_s"] = round(time.monotonic() - _t, 4)
         if not touched:
             if src_cached:
                 src.unpersist()
             return {"skipped": True, "reason": "empty batch"}
 
-        # One exchange: batch rows ∪ stored rows of the touched buckets,
-        # hash-partitioned on the bucket alone — that already clusters
-        # every (bucket, key) group, so the per-key aggregate adds no
-        # second exchange and its sorted output satisfies the
-        # partitionBy write without another sort. The winner per key is
-        # the greatest (seq, rank): a stored row (rank 1) beats a batch
-        # row of EQUAL seq (rank 0) — the s.seq > t.last_seq guard — and
-        # a stored row with a NULL last_seq (rank -1) loses to every
-        # batch row.
-        stored = self.read_raw(buckets=touched, meta=m).select(
-            BUCKET_COL,
-            *pay_names,
-            SEQ_COL,
-            F.coalesce(F.col(DELETED_COL), F.lit(False)).alias(DELETED_COL),
-            F.when(F.col(SEQ_COL).isNull(), F.lit(-1)).otherwise(F.lit(1)).alias(_RANK),
-        )
-        result = (
-            src.unionByName(stored)
-            .repartition(self._write_tasks(len(touched)), F.col(BUCKET_COL))
-            .groupBy(BUCKET_COL, *key_cols)
-            .agg(
-                F.max_by(
-                    F.struct(*rest, DELETED_COL), F.struct(SEQ_COL, _RANK)
-                ).alias("__w"),
-                F.max(F.coalesce(F.col(SEQ_COL), F.lit(-1).cast("long"))).alias(SEQ_COL),
-            )
-            .select(
-                BUCKET_COL,
-                *[F.col(n) if n in key_cols else F.col(f"__w.{n}").alias(n) for n in pay_names],
-                SEQ_COL,
-                F.col(f"__w.{DELETED_COL}").alias(DELETED_COL),
-            )
-        )
-
-        # Write only the touched buckets into a fresh snapshot dir
-        # (uuid-named: crash-replay safety, see _write_snapshot).
-        new_version = m["version"] + 1
-        _t = _time.monotonic()
+        delta = all(_depth(m["buckets"].get(str(b), [])) < MAX_DELTA_DEPTH for b in touched)
         try:
-            snap_rel, snap_dir = self._write_snapshot(result, new_version)
+            stage = self._stage_delta if delta else self._stage_cow
+            snap_rel, lists, rows = stage(m, src, touched, new_version, timings)
         finally:
             if src_cached:
                 src.unpersist()
-        timings["write_s"] = round(_time.monotonic() - _t, 4)
-        _t = _time.monotonic()
+        lineage = {
+            "stream_id": stream_id,
+            "epoch_id": epoch_id,
+            "buckets_touched": touched,
+            "write_mode": "delta" if delta else "cow",
+            # the delta file holds exactly the batch rows the probe counted
+            "rows_written": probe_rows if delta else rows,
+        }
+        if lineage_extra:
+            lineage.update(lineage_extra)
+        return self._commit(m, snap_rel, lists, lineage, timings, pre_commit)
 
-        # Contract guard: the snapshot commit only adopts buckets in
-        # `touched`. If the write produced a bucket OUTSIDE that set,
-        # the probe's key set diverged from the batch's — those
-        # rows would be silently orphaned (written but never listed),
-        # i.e. lost. Fail loudly and drop the staged snapshot instead.
+    def compact(self, buckets: list[int] | None = None) -> dict[str, Any]:
+        """Fold the delta files of ``buckets`` (default: every bucket
+        holding some) into new base files — merge's copy-on-write arm
+        over an empty batch. The folded state, and so every read, is
+        the same before and after."""
+        m = self.meta()
+        todo = sorted(
+            b for b, files in self._lists(m, buckets).items() if _depth(files)
+        )
+        if not todo:
+            return {"skipped": True, "reason": "no delta files"}
+        timings: dict[str, float] = {}
+        snap_rel, lists, rows = self._stage_cow(m, None, todo, m["version"] + 1, timings)
+        lineage = {"stream_id": None, "epoch_id": None, "buckets_touched": todo,
+                   "write_mode": "cow", "rows_written": rows}
+        return self._commit(m, snap_rel, lists, lineage, timings, None)
+
+    def _stage_cow(self, m, src, touched, version, timings) -> tuple[str, dict, int | None]:
+        """Copy-on-write arm: the fold of batch rows ∪ base and delta
+        rows of the touched buckets, written one file per bucket. Returns
+        the staged dir, each touched bucket's new one-base list and the
+        rows written: parquet footers read by pyarrow on the driver, so
+        None for a table on a scheme-qualified (remote) path."""
+        cands = self._stored(m, touched)
+        if src is not None:
+            cands = src.unionByName(cands)
+        result = self._fold(cands, m, len(touched))
+        # uuid-named dir: crash-replay safety, see _write_snapshot
+        _t = time.monotonic()
+        snap_rel, snap_dir = self._write_snapshot(result, version)
+        timings["write_s"] = round(time.monotonic() - _t, 4)
+        _t = time.monotonic()
+        # Contract guard: the commit only adopts buckets in `touched`.
+        # If the write produced a bucket OUTSIDE that set, the probe's
+        # key set diverged from the batch's — those rows would be
+        # silently orphaned (written but never listed), i.e. lost.
+        # Fail loudly and drop the staged snapshot instead.
         written = {
             int(d.split("=", 1)[1])
             for d in self.fs.listdir(snap_dir)
@@ -619,31 +759,72 @@ class LakeTable:
         extra = written - set(touched)
         if extra:
             self.fs.rmtree(snap_dir)
-            raise RuntimeError(
-                f"merge wrote buckets {sorted(extra)} outside the probed "
-                f"touched set {sorted(touched)} — probe keys diverge "
-                "from the batch keys; snapshot aborted, nothing committed"
-            )
+            raise RuntimeError(_diverged(sorted(extra), touched))
+        # a bucket with no rows left (everything merged away) gets an
+        # empty list
+        lists = self._bucket_files(snap_rel, touched)
+        rows = None if "://" in self.path else sum(
+            pq.read_metadata(os.path.join(self.path, f)).num_rows
+            for files in lists.values()
+            for f in files
+        )
+        timings["listing_s"] = round(time.monotonic() - _t, 4)
+        return snap_rel, lists, rows
 
-        # the new file list per touched bucket; a bucket with no rows
-        # left (everything merged away) gets an empty list
+    def _stage_delta(self, m, src, touched, version, timings) -> tuple[str, dict, None]:
+        """Delta arm: the batch rows as ONE bucket-sorted parquet file
+        (no stored-side read, no exchange, no aggregate), appended to
+        each touched bucket's list. The same divergence guard runs
+        inside the write: a row whose bucket is not in ``touched`` fails
+        the job, and the staged dir is dropped."""
+        guard = F.when(F.col(BUCKET_COL).isin(touched), F.col(BUCKET_COL)).otherwise(
+            F.raise_error(F.lit(_DIVERGED_MARK))
+        )
+        rows = (
+            src.drop(_RANK)
+            .withColumn(BUCKET_COL, guard.cast("int"))
+            .coalesce(1)
+            .sortWithinPartitions(BUCKET_COL)
+        )
+        _t = time.monotonic()
+        try:
+            snap_rel, snap_dir = self._write_snapshot(rows, version, by_bucket=False)
+        except Exception as e:
+            if _DIVERGED_MARK not in str(e):
+                raise
+            raise RuntimeError(_diverged(None, touched)) from None
+        timings["write_s"] = round(time.monotonic() - _t, 4)
+        _t = time.monotonic()
+        files = [
+            os.path.join(snap_rel, f)
+            for f in sorted(self.fs.listdir(snap_dir))
+            if f.endswith(".parquet")
+        ]
+        timings["listing_s"] = round(time.monotonic() - _t, 4)
+        lists = {str(b): m["buckets"].get(str(b), []) + files for b in touched}
+        return snap_rel, lists, None
+
+    def _commit(self, m, snap_rel, lists, lineage, timings, pre_commit) -> dict[str, Any]:
+        """Commit a staged snapshot: the touched buckets' new lists, the
+        epoch fence and the lineage record in one pointer swap. A failed
+        ``pre_commit`` or a lost commit race drops the staged dir."""
+        snap_dir = os.path.join(self.path, snap_rel)
         new_buckets: dict[str, list[str]] = dict(m["buckets"])
-        new_buckets.update(self._bucket_files(snap_rel, touched))
-
-        timings["listing_s"] = round(_time.monotonic() - _t, 4)
+        new_buckets.update(lists)
+        written = sorted(
+            {f for files in lists.values() for f in files if f.startswith(snap_rel + os.sep)}
+        )
         lineage = {
-            "version": new_version,
-            "stream_id": stream_id,
-            "epoch_id": epoch_id,
-            "buckets_touched": sorted(touched),
-            "buckets_total": n_buckets,
+            "version": m["version"] + 1,
+            **lineage,
+            "buckets_total": m["n_buckets"],
+            "files_written": len(written),
+            "max_delta_depth": max(map(_depth, new_buckets.values()), default=0),
             "timings": timings,
         }
-        if lineage_extra:
-            lineage.update(lineage_extra)
-
+        epoch_id, stream_id = lineage["epoch_id"], lineage["stream_id"]
         m2 = dict(m)
-        m2["version"] = new_version
+        m2["version"] = lineage["version"]
         m2["parent"] = m["version"]
         m2["buckets"] = new_buckets
         m2["epochs"] = dict(m["epochs"])
@@ -652,21 +833,21 @@ class LakeTable:
         m2["lineage"] = (m.get("lineage") or [])[-99:] + [lineage]
         if pre_commit is not None:
             # join the caller's concurrent must-precede-commit work
-            # (see docstring); a failure here aborts the snapshot
-            _t = _time.monotonic()
+            # (see merge's docstring); a failure here aborts the snapshot
+            _t = time.monotonic()
             try:
                 pre_commit()
             except Exception:
                 self.fs.rmtree(snap_dir)
                 raise
-            timings["pre_commit_wait_s"] = round(_time.monotonic() - _t, 4)
-        _t = _time.monotonic()
+            timings["pre_commit_wait_s"] = round(time.monotonic() - _t, 4)
+        _t = time.monotonic()
         try:
             self._write_version(m2)
         except CommitConflict:
             self.fs.rmtree(snap_dir)
             raise
-        timings["commit_s"] = round(_time.monotonic() - _t, 4)
+        timings["commit_s"] = round(time.monotonic() - _t, 4)
         return lineage
 
     def merge_with_retry(self, batch: DataFrame, max_attempts: int = 3, **kw) -> dict[str, Any]:
@@ -722,7 +903,10 @@ class LakeTable:
         """Drop data files only referenced by snapshots older than the
         last ``keep_last`` versions (Iceberg expire_snapshots; the
         reference analog is dropping drained Event_Logs partitions,
-        housekeeping.rb:45-107). Returns number of files removed."""
+        housekeeping.rb:45-107). A file is live while any kept version's
+        bucket lists name it — base and delta files alike, so a delta
+        file some bucket still lists outlives the compaction of the
+        others. Returns number of files removed."""
         cur = self.current_version()
         keep_versions = set(range(max(0, cur - keep_last + 1), cur + 1))
         live: set[str] = set()
@@ -738,7 +922,8 @@ class LakeTable:
             top = os.path.join(self.data_dir, entry)
             if not self.fs.isdir(top):
                 continue
-            # In-flight-writer guard: a dir staged by an optimistic
+            # In-flight-writer guard (both write arms stage under
+            # snap-{v}-{uuid}): a dir staged by an optimistic
             # writer that has not committed yet has files in NO listing
             # — indistinguishable from a dead dir except by version. A
             # loser that read version v stages at v+1, which can trail

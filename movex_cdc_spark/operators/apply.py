@@ -237,10 +237,7 @@ def apply_batch_flagged(
     thread that overlaps the snapshot write and is joined at merge's
     ``pre_commit`` barrier. Skipping the empty append is safe: the
     dead-letter fence is consulted through monotone epoch ids, and an
-    epoch that appended nothing leaves nothing to fence or replay.
-    Sinks without bucket pruning (MergeOnReadTable) keep the generic
-    flow on an LWW-deduped batch — their delta append needs one row
-    per key, and for them the probe job would be pure extra work."""
+    epoch that appended nothing leaves nothing to fence or replay."""
     t0 = time.monotonic()
     valid, poison = split_flagged(flagged)
     if "old_content" not in poison.columns:
@@ -262,11 +259,6 @@ def apply_batch_flagged(
     keep = [c for c in valid.columns if c not in ("old_content", "ts", "txid", "is_noop")]
     slim = valid.select(*keep)
     sha = F.when(F.col("content").isNotNull(), sha256_builtin("content"))
-    if not getattr(table, "supports_probe", False):
-        return _apply_prepared(
-            table, lww_dedup_maxby(slim, KEY_COLS).withColumn("content_sha", sha),
-            poison, epoch_id, stream_id, dead_letter, metrics, evolve=True, obs_t0=t0,
-        )
     ready = slim.withColumn("content_sha", sha)
 
     m = table.meta()
@@ -358,6 +350,7 @@ def apply_batch_flagged(
                 stream_id=stream_id,
                 epoch_id=epoch_id,
                 probe=touched,
+                probe_rows=int(got.get("events") or 0),
                 pre_commit=dl_future.result if dl_future is not None else None,
             )
         if dl_future is not None:
@@ -413,9 +406,9 @@ def apply_batch(
 
 def _apply_prepared(table, ready, poison, epoch_id, stream_id, dead_letter, metrics,
                     evolve, obs_t0):
-    """The generic flow (batch replays and MergeOnReadTable): dead
-    letters first, then ``merge`` runs its own probe. The counters ride
-    the batch plan, so they count post-LWW deduped keys."""
+    """The generic flow (batch replays): dead letters first, then
+    ``merge`` runs its own probe. The counters ride the batch plan, so
+    they count post-LWW deduped keys."""
     t0 = obs_t0
     if evolve:
         batch_payload = T.StructType(
@@ -499,7 +492,9 @@ def apply_batch_unkeyed(
         # NULL for mode 'N' (consumers must not assume per-key order)
         valid = valid.withColumn("msg_key", table_cfg.key_column())
     n_poison = 0
-    if dead_letter is not None:
+    if dead_letter is not None and not poison.isEmpty():
+        # appended (and committed) only when there is poison, as in
+        # apply_batch_flagged: a clean epoch leaves nothing to fence
         n_poison = dead_letter.append(poison, stream_id=stream_id, epoch_id=epoch_id)
     lineage = log.append(valid, stream_id=stream_id, epoch_id=epoch_id)
     lineage["n_poison"] = n_poison

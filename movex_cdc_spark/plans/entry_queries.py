@@ -2027,20 +2027,19 @@ def streaming_hourly_stats_rollup(spark, sf_dir):
     """,
 )
 def cdc_mor_replay_final_state(spark, sf_dir):
-    """ENGINE-IN-THE-LOOP merge-on-read path (lake/mor.py — the COW
-    write-amplification answer for tiny frequent epochs): 4 epochs are
-    appended to the delta log (zero bucket rewrites), a compaction folds
-    epochs 0-1 into the base mid-stream, two more delta epochs land on
-    top, and the read-time LWW over base ∪ delta must equal the same
-    plain-SQL oracle the eager COW replay satisfies — the COW/MoR
-    equivalence is associativity of max-by-seq."""
+    """ENGINE-IN-THE-LOOP merge-on-read path (lake/table.py delta
+    files — the write-amplification answer for tiny frequent epochs):
+    6 un-deduped epochs are merged into a LakeTable. The first 4 append
+    one delta file each (zero bucket rewrites), the 5th exceeds the
+    delta depth and compacts the touched buckets through the
+    copy-on-write merge, and the 6th lands as a delta on top. The
+    read-time fold over base ∪ deltas must equal the same plain-SQL
+    oracle the eager COW replay satisfies."""
     import tempfile
 
     from pyspark.sql import types as T
 
-    from movex_cdc_spark.lake.mor import MergeOnReadTable
     from movex_cdc_spark.lake.table import LakeTable
-    from movex_cdc_spark.operators.lww import lww_dedup_maxby
 
     ev = load(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("repo"),
@@ -2057,16 +2056,13 @@ def cdc_mor_replay_final_state(spark, sf_dir):
         ]
     )
     tdir = tempfile.mkdtemp(prefix="mor_replay_")
-    base = LakeTable.create(spark, f"{tdir}/base", schema, ["repo", "path"], n_buckets=8)
-    mor = MergeOnReadTable(base, f"{tdir}/delta", compact_rows=10**9)
-    for i in range(4):
-        batch = lww_dedup_maxby(
-            ev.filter(F.pmod(F.col("seq"), F.lit(4)) == i), ["repo", "path"]
+    table = LakeTable.create(spark, f"{tdir}/lake", schema, ["repo", "path"], n_buckets=8)
+    for i in range(6):
+        table.merge(
+            ev.filter(F.pmod(F.col("seq"), F.lit(6)) == i),
+            seq_col="seq", op_col="op", epoch_id=i,
         )
-        mor.merge(batch, seq_col="seq", op_col="op", epoch_id=i)
-        if i == 1:
-            mor.compact()  # fold the first two epochs into the base
-    return mor.read().select("repo", F.col("last_seq"), "content")
+    return table.read().select("repo", F.col("last_seq"), "content")
 
 
 @register(

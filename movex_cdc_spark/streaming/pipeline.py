@@ -49,10 +49,9 @@ EPOCH_HISTORY = 1024
 
 
 class CdcStreamPipeline:
-    """``table`` is any LakeTable-compatible sink — the eager COW
-    LakeTable or a lake.mor.MergeOnReadTable (delta-append epochs +
-    amortized compaction; right choice when triggers are small and
-    frequent relative to the table)."""
+    """``table`` is the LakeTable sink: small epochs append one delta
+    file, and a bucket is compacted by the merge that would exceed its
+    delta depth (lake/table.py)."""
 
     def __init__(
         self,

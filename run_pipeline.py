@@ -31,6 +31,11 @@ spark-submit. The default mode drains the backlog exactly-once and
 exits; ``--trigger '30 seconds'`` runs a continuous micro-batch stream
 until signalled, re-beating the single-writer heartbeat between
 triggers.
+
+Write amplification needs no flag: the lake table picks its write per
+epoch. A small epoch appends one delta file; the merge that would take
+a bucket past its delta depth rewrites (compacts) the touched buckets
+(lake/table.py ``MAX_DELTA_DEPTH``).
 """
 
 from __future__ import annotations
@@ -54,13 +59,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--payload-format", action="store_true",
                    help="source rows are Event_Logs-shaped (msg_key + JSON payload)")
     p.add_argument("--max-files-per-trigger", type=int, default=None)
-    p.add_argument("--mor", action="store_true",
-                   help="merge-on-read delta path (tiny frequent epochs)")
-    p.add_argument("--compact-rows", type=int, default=1_000_000)
-    p.add_argument("--compact-epochs", type=int, default=None,
-                   help="also compact every N appended epochs — measured "
-                        "default for read-while-write deployments is 5 "
-                        "(bench.py --mor-policy, BENCH_SCALING.md)")
     p.add_argument("--trigger", default=None,
                    help="processing-time interval for a continuous run, e.g. '30 seconds'")
     p.add_argument("--timeout-s", type=int, default=3600,
@@ -113,7 +111,6 @@ def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
 
     from movex_cdc_spark.config.table_config import EngineConfig
-    from movex_cdc_spark.lake.mor import MergeOnReadTable
     from movex_cdc_spark.lake.table import LakeTable
     from movex_cdc_spark.operators.apply import KEY_COLS, REPO_FILES_SCHEMA
     from movex_cdc_spark.session import get_spark
@@ -175,13 +172,6 @@ def main(argv: list[str] | None = None) -> int:
             spark, args.table_dir, REPO_FILES_SCHEMA, KEY_COLS,
             n_buckets=args.buckets, fs=fs,
         )
-    sink = (
-        MergeOnReadTable(table, args.table_dir + "_delta",
-                         compact_rows=args.compact_rows,
-                         compact_epochs=args.compact_epochs)
-        if args.mor
-        else table
-    )  # MoR inherits the base table's fs for its delta log
     config = EngineConfig.load(args.config) if args.config else None
 
     # single-writer guard on the checkpoint home (reference
@@ -211,7 +201,7 @@ def main(argv: list[str] | None = None) -> int:
 
     pipe = CdcStreamPipeline(
         spark,
-        sink,
+        table,
         events_dir=args.events_dir,
         checkpoint_dir=args.checkpoint_dir,
         dead_letter_dir=args.dead_letter_dir,

@@ -1,4 +1,5 @@
 import os
+from contextlib import contextmanager
 
 import pytest
 
@@ -19,3 +20,21 @@ def spark():
 @pytest.fixture()
 def tmp_lake(tmp_path):
     return str(tmp_path / "lake")
+
+
+@pytest.fixture()
+def cow_only():
+    """``with cow_only():`` — every LakeTable merge inside the block takes
+    the copy-on-write arm (delta depth bound 0)."""
+    from movex_cdc_spark.lake import table
+
+    @contextmanager
+    def block():
+        real = table.MAX_DELTA_DEPTH
+        table.MAX_DELTA_DEPTH = 0
+        try:
+            yield
+        finally:
+            table.MAX_DELTA_DEPTH = real
+
+    return block

@@ -238,6 +238,28 @@ def test_unkeyed_epoch_fence(spark, tmp_path):
     assert log.read().count() == n1
 
 
+def test_unkeyed_clean_epoch_commits_no_dead_letter_version(spark, tmp_path):
+    """The unkeyed path appends (and commits) a dead-letter segment only
+    for an epoch that has poison, as apply_batch_flagged does."""
+    from movex_cdc_spark.operators.apply import DeadLetterTable
+
+    cfg = repo_files_config().tables["repo_files"]
+    cfg.key_handling = "N"
+    log = UnkeyedEventLog.create(spark, str(tmp_path / "ulog"))
+    dl = DeadLetterTable(spark, str(tmp_path / "dl"))
+    v0 = dl.log.meta()["version"]
+    clean = generate_events(GenParams(n_events=400, seed=29, p_poison=0.0))
+    r = apply_batch_unkeyed(log, spark.createDataFrame(clean.drop(columns=["is_noop"])),
+                            epoch_id=1, table_cfg=cfg, dead_letter=dl)
+    assert not r.get("skipped") and r["n_poison"] == 0
+    assert dl.log.meta()["version"] == v0 and dl.read() is None
+    dirty = generate_events(GenParams(n_events=400, seed=31, p_poison=0.05))
+    r = apply_batch_unkeyed(log, spark.createDataFrame(dirty.drop(columns=["is_noop"])),
+                            epoch_id=2, table_cfg=cfg, dead_letter=dl)
+    assert r["n_poison"] > 0 and dl.log.meta()["version"] > v0
+    assert dl.read().count() == r["n_poison"]
+
+
 def test_mixed_keyed_and_unkeyed_streams(spark, tmp_path):
     """Two tables fed from the same event dir: one keyed (merge), one
     unkeyed (append) — the reference runs keyed and keyless tables side

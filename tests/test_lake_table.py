@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from movex_cdc_spark.lake.table import CommitConflict, LakeTable, bucket_expr
+from movex_cdc_spark.lake.table import MAX_DELTA_DEPTH, CommitConflict, LakeTable, bucket_expr
 from movex_cdc_spark.operators.apply import KEY_COLS, REPO_FILES_SCHEMA
 
 COLS = ["seq", "repo", "path", "commit", "lang", "content", "op"]
@@ -93,8 +93,12 @@ def test_commit_conflict(spark, tmp_lake):
 
 def test_expire_snapshots(spark, tmp_lake):
     t = _table(spark, tmp_lake, n_buckets=2)
-    for i in range(4):
+    for i in range(MAX_DELTA_DEPTH):
         t.merge(_batch(spark, [(i + 1, "r", "p", "c", "py", f"v{i}", "I" if i == 0 else "U")]), epoch_id=i)
+    # delta epochs: every file is still named by the head's list
+    assert t.expire_snapshots(keep_last=1) == 0
+    for i in range(MAX_DELTA_DEPTH, MAX_DELTA_DEPTH + 2):  # compacts, then a delta
+        t.merge(_batch(spark, [(i + 1, "r", "p", "c", "py", f"v{i}", "U")]), epoch_id=i)
     before = t.read().collect()
     removed = t.expire_snapshots(keep_last=1)
     assert removed > 0
@@ -156,7 +160,7 @@ def _probe(t, frame):
     return sorted(r["b"] for r in rows)
 
 
-def test_merge_probe_path_and_divergence_guard(spark, tmp_lake):
+def test_merge_probe_path_and_divergence_guard(spark, tmp_lake, cow_only):
     """A caller-supplied probe drives bucket pruning without persisting
     src; a probe whose key set diverges from the batch must abort the
     snapshot loudly instead of silently orphaning written buckets."""
@@ -171,17 +175,22 @@ def test_merge_probe_path_and_divergence_guard(spark, tmp_lake):
     t.merge(more, epoch_id=1, probe=_probe(t, more.unionByName(batch.limit(5))))
     assert t.read().count() == 41
 
-    # diverging probe (MISSING the batch's buckets) aborts, commits nothing
+    # diverging probe (MISSING the batch's buckets) aborts, commits
+    # nothing, and leaves no staged dir — on either write arm
     batch2 = _batch(spark, [(200, f"rY{i}", "p", "c", "py", "y", "I") for i in range(8)])
     wrong = _probe(t, batch.limit(1))  # bucket of r0 only
     before = t.current_version()
+    staged = set(os.listdir(t.data_dir))
     with pytest.raises(RuntimeError, match="outside the probed"):
         t.merge(batch2, epoch_id=2, probe=wrong)
+    with cow_only(), pytest.raises(RuntimeError, match="outside the probed"):
+        t.merge(batch2, epoch_id=2, probe=wrong)
     assert t.current_version() == before
+    assert set(os.listdir(t.data_dir)) == staged
     assert t.read().count() == 41
 
 
-def test_merge_wider_than_cores_writes_one_file_per_bucket(spark, tmp_lake):
+def test_merge_wider_than_cores_writes_one_file_per_bucket(spark, tmp_lake, cow_only):
     """Snapshot writes run min(buckets, defaultParallelism) tasks, so a
     merge touching more buckets than there are cores packs several
     buckets per task — each touched bucket must still get exactly one
@@ -195,7 +204,8 @@ def test_merge_wider_than_cores_writes_one_file_per_bucket(spark, tmp_lake):
     assert len(t.meta()["buckets"]) == n_buckets
 
     upd = [(1, f"r{i}", f"p{i}", "c2", "py", f"w{i}", "U") for i in range(0, 40 * n_buckets, 3)]
-    lin = t.merge(_batch(spark, upd), epoch_id=0)
+    with cow_only():  # the base-file rewrite is what this sizes
+        lin = t.merge(_batch(spark, upd), epoch_id=0)
     touched = lin["buckets_touched"]
     assert len(touched) > cores
     m = t.meta()
@@ -262,8 +272,32 @@ def test_crash_between_snapshot_write_and_commit_replays_clean(spark, tmp_lake):
     t.merge(_batch(spark, [(4, "r", "p", "c", "py", "v4", "U")]), epoch_id=3)
     removed = t.expire_snapshots(keep_last=2)
     assert removed > 0
-    assert len([d for d in os.listdir(data_dir) if d.startswith("snap-2-")]) == 0
+    # the orphan is gone; the replay's delta dir is still named
+    named = {f.split(os.sep)[1] for fs in t.meta()["buckets"].values() for f in fs}
+    left = [d for d in os.listdir(data_dir) if d.startswith("snap-2-")]
+    assert len(left) == 1 and left[0] in named
     assert t.read().collect()[0]["content"] == "v4"
+
+    # every commit so far was a delta epoch; the bucket is now at full
+    # depth, so the next merge compacts — crash that commit the same way
+    assert max(len(f) for f in t.meta()["buckets"].values()) == MAX_DELTA_DEPTH
+    batch5 = _batch(spark, [(5, "r", "p", "c", "py", "v5", "U")])
+    LakeTable._write_version = crashing
+    try:
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            t.merge(batch5, epoch_id=4)
+    finally:
+        LakeTable._write_version = real
+    assert len([d for d in os.listdir(data_dir) if d.startswith("snap-5-")]) == 1
+    lin = t.merge(batch5, epoch_id=4)
+    assert lin["write_mode"] == "cow" and lin["version"] == 5
+    assert t.read().collect()[0]["content"] == "v5"
+    t.merge(_batch(spark, [(6, "r", "p", "c", "py", "v6", "U")]), epoch_id=5)
+    t.merge(_batch(spark, [(7, "r", "p", "c", "py", "v7", "U")]), epoch_id=6)
+    assert t.expire_snapshots(keep_last=2) > 0
+    # only the replayed compaction's dir survives at version 5
+    assert len([d for d in os.listdir(data_dir) if d.startswith("snap-5-")]) == 1
+    assert t.read().collect()[0]["content"] == "v7"
 
 
 def test_crash_between_overwrite_write_and_commit_replays_clean(spark, tmp_lake):
@@ -364,8 +398,9 @@ def test_hadoop_fs_impl_runs_the_table(spark, tmp_lake):
     lin = t.merge(_batch(spark, [(1, "r", "p", "c", "py", "v1", "I")]), epoch_id=0)
     assert lin.get("skipped")
 
-    # snapshot expiry walks/reaps through Hadoop IO too
+    # compaction and snapshot expiry walk/reap through Hadoop IO too
     t.merge(_batch(spark, [(3, "r", "p", "c", "py", "v3", "U")]), epoch_id=2)
+    assert t.compact()["write_mode"] == "cow"
     removed = t.expire_snapshots(keep_last=1)
     assert removed > 0
     assert t.read().collect()[0]["content"] == "v3"
@@ -764,15 +799,84 @@ def _lww_oracle(stored, batch):
     return out
 
 
-@pytest.mark.parametrize("case", sorted(_SEM_CASES))
-def test_merge_semantics_match_lww_oracle(spark, tmp_lake, case):
+# how the batch lands: the default (a delta epoch, read before any
+# compaction), a copy-on-write epoch, or a delta epoch read after a
+# compaction folded it into the base
+_SEM_MODES = {"": "delta", "-cow": "cow", "-compacted": "compacted"}
+
+
+@pytest.mark.parametrize(
+    "case,mode",
+    [pytest.param(c, m, id=c + sfx) for c in sorted(_SEM_CASES) for sfx, m in _SEM_MODES.items()],
+)
+def test_merge_semantics_match_lww_oracle(spark, tmp_lake, cow_only, case, mode):
     stored, batch, drop = _SEM_CASES[case]
     # one bucket: every stored row shares the batch's touched bucket
     t = _table(spark, tmp_lake, n_buckets=1)
     t.overwrite(spark.createDataFrame(stored, _STORED_SCHEMA))
-    t.merge(spark.createDataFrame(batch, _BATCH_SCHEMA).drop(*drop), epoch_id=0)
+    df = spark.createDataFrame(batch, _BATCH_SCHEMA).drop(*drop)
+    if mode == "cow":
+        with cow_only():
+            lin = t.merge(df, epoch_id=0)
+    else:
+        lin = t.merge(df, epoch_id=0)
+    assert lin["write_mode"] == ("cow" if mode == "cow" else "delta")
+    if mode == "compacted":
+        assert t.compact()["write_mode"] == "cow"
     got = {
         (r["repo"], r["path"]): (r["commit"], r["lang"], r["content"], r["deleted"], r["last_seq"])
         for r in t.read(include_deleted=True).collect()
     }
     assert got == _lww_oracle(stored, batch)
+
+
+@pytest.mark.parametrize("arms", [("delta", "delta"), ("cow", "delta"), ("delta", "cow"), ("cow", "cow")])
+def test_equal_seq_first_applied_wins_in_every_mode(spark, tmp_lake, cow_only, arms):
+    """Two different changes at the same seq: the first one applied
+    wins, whichever arm wrote each, and reads before and after a
+    compaction agree (the former merge-on-read table returned the later
+    delta row until a compaction and the stored row after it)."""
+    from contextlib import nullcontext
+
+    t = _table(spark, tmp_lake, n_buckets=1)
+    for epoch, (arm, content) in enumerate(zip(arms, ("first", "second"))):
+        with cow_only() if arm == "cow" else nullcontext():
+            lin = t.merge(_batch(spark, [(5, "r1", "p1", "c", "py", content, "U")]), epoch_id=epoch)
+        assert lin["write_mode"] == arm
+        assert [(r["content"], r["last_seq"]) for r in t.read().collect()] == [("first", 5)]
+    t.compact()
+    assert [(r["content"], r["last_seq"]) for r in t.read().collect()] == [("first", 5)]
+
+
+def test_delta_file_spanning_two_buckets_with_one_compacted(spark, tmp_lake):
+    """One delta file is named by two buckets' lists; compacting one of
+    them leaves the other folding the same file. Reads of either bucket,
+    of both, and at every version, still match the oracle."""
+    t = _table(spark, tmp_lake, n_buckets=2)
+    rows0 = [(1, f"r{i}", "p", "c", "py", f"a{i}", "I") for i in range(8)]
+    rows1 = [(2, f"r{i}", "p", "c", "py", f"b{i}", "U") for i in range(0, 8, 2)]
+    rows1 += [(0, "r1", "p", "c", "py", "stale", "U"), (3, "r3", "p", "c", "py", None, "D")]
+    t.merge(_batch(spark, rows0), epoch_id=0)
+    t.merge(_batch(spark, rows1), epoch_id=1)
+    m = t.meta()
+    (delta,) = set(m["buckets"]["0"]) & set(m["buckets"]["1"]) - {m["buckets"]["0"][0]}
+    want = {f"r{i}": f"b{i}" if i % 2 == 0 else f"a{i}" for i in range(8) if i != 3}
+    bucket_of = {r["repo"]: r["b"] for r in _batch(spark, rows0).select(
+        "repo", bucket_expr(KEY_COLS, 2).alias("b")).collect()}
+    assert set(bucket_of.values()) == {0, 1}
+
+    def by_bucket(version=None):
+        return {b: {r["repo"]: r["content"] for r in t.read(version, buckets=[b]).collect()}
+                for b in (0, 1)}
+
+    before = by_bucket()
+    t.compact(buckets=[0])
+    lists = t.meta()["buckets"]
+    assert delta in lists["1"] and delta not in lists["0"]
+    for got in (by_bucket(), before, by_bucket(t.current_version() - 1)):
+        for b in (0, 1):
+            assert got[b] == {k: v for k, v in want.items() if bucket_of[k] == b}
+    assert {r["repo"]: r["content"] for r in t.read().collect()} == want
+    # the half-compacted table keeps taking deltas
+    t.merge(_batch(spark, [(9, "r1", "p", "c", "py", "z", "U")]), epoch_id=2)
+    assert {r["repo"]: r["content"] for r in t.read().collect()} == {**want, "r1": "z"}

@@ -139,10 +139,7 @@ def _executed_plans(spark, action):
     ]
 
 
-def test_merge_write_is_one_exchange(spark, tmp_path):
-    """The COW merge write runs as batch ∪ stored rows → ONE exchange
-    on the bucket → per-key max_by aggregate → partitioned write: no
-    join, and the touched buckets are scanned once."""
+def _merge_fixture(spark, tmp_path):
     import pandas as pd
 
     from movex_cdc_spark.lake.table import LakeTable
@@ -158,11 +155,43 @@ def test_merge_write_is_one_exchange(spark, tmp_path):
         + [(100, "r1", "p1", "c3", "py", "w2", "U")],  # two rows for one key
         columns=["seq"] + cols + ["op"],
     ))
-    plans = _executed_plans(spark, lambda: t.merge(batch, epoch_id=0))
+    return t, batch
+
+
+def _write_plan(spark, merge):
+    plans = _executed_plans(spark, merge)
     writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
     assert len(writes) == 1
-    final = writes[0].split("== Initial Plan ==")[0].split("\n\n")[0]
+    return writes[0].split("== Initial Plan ==")[0].split("\n\n")[0]
+
+
+def test_merge_write_is_one_exchange(spark, tmp_path):
+    """The COW merge write runs as batch ∪ stored rows → ONE exchange
+    on the bucket → per-key max_by aggregate → partitioned write: no
+    join, and each stored file set is scanned once — the base files in
+    one scan, each delta file in its own."""
+    from movex_cdc_spark.lake.table import MAX_DELTA_DEPTH
+
+    t, batch = _merge_fixture(spark, tmp_path)
+    for e in range(MAX_DELTA_DEPTH):
+        assert t.merge(batch, epoch_id=e)["write_mode"] == "delta"
+    lin = {}
+    final = _write_plan(spark, lambda: lin.update(t.merge(batch, epoch_id=MAX_DELTA_DEPTH)))
+    assert lin["write_mode"] == "cow"
     assert final.count("Exchange (") == 1, final
-    assert final.count("Scan parquet") == 1, final
+    assert final.count("Scan parquet") == 1 + MAX_DELTA_DEPTH, final
     assert "Join" not in final, final
+    assert {r["path"]: r["content"] for r in t.read().collect()}["p1"] == "w2"
+
+
+def test_delta_write_has_no_exchange_or_aggregate(spark, tmp_path):
+    """The delta arm writes the batch rows as one file: no exchange, no
+    aggregate and no stored-side scan in its write plan."""
+    t, batch = _merge_fixture(spark, tmp_path)
+    lin = {}
+    final = _write_plan(spark, lambda: lin.update(t.merge(batch, epoch_id=0)))
+    assert lin["write_mode"] == "delta" and lin["files_written"] == 1
+    assert "Exchange" not in final, final
+    assert "Aggregate" not in final, final
+    assert "Scan parquet" not in final, final
     assert {r["path"]: r["content"] for r in t.read().collect()}["p1"] == "w2"

@@ -16,21 +16,18 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from movex_cdc_spark.lake.table import LakeTable
+from movex_cdc_spark.lake.table import MAX_DELTA_DEPTH, LakeTable
 from movex_cdc_spark.operators.apply import KEY_COLS, REPO_FILES_SCHEMA, apply_batch
 
 COLS = ["seq", "repo", "path", "commit", "lang", "content", "old_content", "op"]
 
 # an event: (key index, op, payload index) — seq is the stream position
-events_strategy = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=4),
-        st.sampled_from(["I", "U", "D"]),
-        st.integers(min_value=0, max_value=9),
-    ),
-    min_size=1,
-    max_size=60,
+event_strategy = st.tuples(
+    st.integers(min_value=0, max_value=4),
+    st.sampled_from(["I", "U", "D"]),
+    st.integers(min_value=0, max_value=9),
 )
+events_strategy = st.lists(event_strategy, min_size=1, max_size=60)
 
 
 def _to_rows(events):
@@ -59,11 +56,11 @@ def _tables(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("prop_lake")
     counter = {"i": 0}
 
-    def make():
+    def make(n_buckets=2):
         counter["i"] += 1
         return LakeTable.create(
             spark, str(root / f"t{counter['i']}"), REPO_FILES_SCHEMA, KEY_COLS,
-            n_buckets=2,
+            n_buckets=n_buckets,
         )
 
     return make
@@ -237,50 +234,113 @@ def test_sessionizer_hook_matches_fold(stream, n_batches):
 @settings(max_examples=6, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(
-    events=events_strategy,
-    n_epochs=st.integers(min_value=2, max_value=4),
-    crash_at=st.integers(min_value=0, max_value=3),
+    # >= 10 events cut into >= 6 epochs leaves >= MAX_DELTA_DEPTH + 1
+    # non-empty epochs, so the one-bucket table takes a compacting
+    # commit after its delta commits
+    events=st.lists(event_strategy, min_size=10, max_size=60),
+    n_epochs=st.integers(min_value=6, max_value=8),
+    crash_at=st.integers(min_value=0, max_value=7),
 )
 def test_crash_at_any_epoch_replays_to_same_state(
     spark, _tables, events, n_epochs, crash_at
 ):
     """Exactly-once under a crash at an ARBITRARY epoch boundary: kill
-    the writer between the snapshot write and the metadata commit of
-    any epoch, then resume from that epoch — the final state must equal
-    the crash-free fold, and no epoch may double-apply. Generalizes the
+    the writer between the snapshot write and the metadata commit,
+    then resume from that epoch — the final state must equal the
+    crash-free fold, and no epoch may double-apply. The crash lands on
+    the first delta commit at or after a hypothesis-chosen epoch AND
+    on the first compacting (copy-on-write) commit. Generalizes the
     deterministic kill-between-write-and-commit tests to every cut
     point hypothesis can find (uuid snapshot staging is what makes the
     replay collision-free)."""
     rows = _to_rows(events)
-    table = _tables()
+    table = _tables(n_buckets=1)
     step = (len(rows) + n_epochs - 1) // n_epochs
-    # clamp the crash to an epoch that actually HAS rows — an empty
-    # chunk is skipped before the patch block, which would silently
-    # degrade the example to the plain replay property
     nonempty = [e for e in range(n_epochs) if rows[e * step:(e + 1) * step]]
-    crash_epoch = nonempty[crash_at % len(nonempty)]
+    assert len(nonempty) > MAX_DELTA_DEPTH
+    crash_from = nonempty[crash_at % len(nonempty)]
     real = LakeTable._write_version
+    crashed: set[str] = set()
 
     def crashing(self, meta):
-        raise RuntimeError("simulated crash")
+        arm = meta["lineage"][-1]["write_mode"]
+        if arm not in crashed and (arm == "cow" or epoch >= crash_from):
+            crashed.add(arm)
+            raise RuntimeError("simulated crash")
+        real(self, meta)
 
-    for e in range(n_epochs):
-        chunk = rows[e * step:(e + 1) * step]
-        if not chunk:
-            continue
-        batch = spark.createDataFrame(pd.DataFrame(chunk, columns=COLS))
-        if e == crash_epoch:
-            LakeTable._write_version = crashing
+    LakeTable._write_version = crashing
+    try:
+        for epoch in nonempty:
+            chunk = rows[epoch * step:(epoch + 1) * step]
+            batch = spark.createDataFrame(pd.DataFrame(chunk, columns=COLS))
             try:
-                with pytest.raises(RuntimeError, match="simulated crash"):
-                    apply_batch(table, batch, epoch_id=e, condition_sql="1=1")
-            finally:
-                LakeTable._write_version = real
-        # resume: the epoch re-runs (foreachBatch replay), rest follow
-        apply_batch(table, batch, epoch_id=e, condition_sql="1=1")
+                apply_batch(table, batch, epoch_id=epoch, condition_sql="1=1")
+            except RuntimeError as e:
+                assert "simulated crash" in str(e)
+                # resume: the epoch re-runs (foreachBatch replay)
+                apply_batch(table, batch, epoch_id=epoch, condition_sql="1=1")
+    finally:
+        LakeTable._write_version = real
+    assert "cow" in crashed
 
     got = {
         (r["repo"], r["path"]): (r["last_seq"], r["content"])
         for r in table.read().select("repo", "path", "last_seq", "content").collect()
     }
     assert got == _fold_oracle(rows)
+
+
+def test_crash_between_delta_write_and_commit_replays_to_oracle(spark, tmp_path):
+    """Deterministic crash points on both write arms: a delta file (and
+    later a compacting snapshot) is written but its commit never runs.
+    The replayed epochs converge to replay_oracle, and expire_snapshots
+    reaps both orphans without touching the state."""
+    import os
+
+    from movex_cdc_spark.datagen import GenParams, generate_events, replay_oracle
+
+    ev = generate_events(GenParams(n_events=1500, seed=61))
+    table = LakeTable.create(spark, str(tmp_path / "lake"), REPO_FILES_SCHEMA, KEY_COLS,
+                             n_buckets=4)
+    df = spark.createDataFrame(ev.drop(columns=["is_noop"]))
+    n = MAX_DELTA_DEPTH + 2
+    real = LakeTable._write_version
+
+    def crashing(self, meta):
+        raise RuntimeError("simulated crash")
+
+    modes = []
+    for e in range(n):
+        batch = df.filter(F.pmod(F.col("seq"), F.lit(n)) == e)
+        if e in (1, MAX_DELTA_DEPTH):  # a delta commit, then a compacting one
+            LakeTable._write_version = crashing
+            try:
+                with pytest.raises(RuntimeError, match="simulated crash"):
+                    apply_batch(table, batch, epoch_id=e)
+            finally:
+                LakeTable._write_version = real
+        modes.append(apply_batch(table, batch, epoch_id=e)["write_mode"])
+    assert modes == ["delta"] * MAX_DELTA_DEPTH + ["cow", "delta"]
+
+    def state():
+        return table.read().select("repo", "path", "content_sha").toPandas()
+
+    oracle = replay_oracle(ev.iloc[0:0][["repo", "path", "commit", "lang", "content"]], ev)
+    got = state()
+    m = got.merge(oracle[["repo", "path", "content_sha"]], on=["repo", "path"],
+                  how="outer", indicator=True, suffixes=("_e", "_o"))
+    assert (m["_merge"] == "both").all()
+    assert (m["content_sha_e"] == m["content_sha_o"]).all()
+
+    data = os.path.join(table.path, "data")
+
+    def dirs_at(v):
+        return [d for d in os.listdir(data) if d.startswith(f"snap-{v}-")]
+
+    assert len(dirs_at(2)) == 2 and len(dirs_at(MAX_DELTA_DEPTH + 1)) == 2
+    assert table.expire_snapshots(keep_last=1) > 0
+    assert len(dirs_at(2)) == 0  # orphan reaped; its replay was compacted
+    assert len(dirs_at(MAX_DELTA_DEPTH + 1)) == 1  # the live base survives
+    assert state().sort_values(["repo", "path"]).reset_index(drop=True).equals(
+        got.sort_values(["repo", "path"]).reset_index(drop=True))

@@ -1,11 +1,15 @@
-"""Capture the physical plans of one streaming-shaped keyed apply.
+"""Capture the physical plans of streaming-shaped keyed applies.
 
-Runs ``apply_batch_flagged`` once over a cached, flagged batch of 400
+Runs ``apply_batch_flagged`` over a cached, flagged batch of 400
 generated events into a 32-bucket table seeded with the base snapshot,
-and writes the plan of every SQL execution it started — the probe job
-and the merge snapshot write — as ``<kind>_<tag>.txt`` under OUTDIR.
-Plans are read from the session's SQL status store after the run, so
-AQE-resolved stages are shown where the run finished them.
+once per epoch until both write arms have run: the delta epochs append
+one file each, and the epoch after ``MAX_DELTA_DEPTH`` of them
+compacts. For the first epoch of each arm it writes the plan of every
+SQL execution the epoch started — the probe job and the merge write —
+as ``<kind>_<tag>.txt`` under OUTDIR (kinds ``probe``,
+``merge_write_delta``, ``merge_write_cow``). Plans are read from the
+session's SQL status store after the run, so AQE-resolved stages are
+shown where the run finished them.
 
 Usage: python tools/capture_apply_plans.py OUTDIR TAG
 (run it from a parent checkout with TAG=before and from the change with
@@ -24,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from movex_cdc_spark.datagen import GenParams, generate_base_snapshot, generate_events
-from movex_cdc_spark.lake.table import LakeTable
+from movex_cdc_spark.lake.table import MAX_DELTA_DEPTH, LakeTable
 from movex_cdc_spark.operators.apply import (
     KEY_COLS,
     REPO_FILES_SCHEMA,
@@ -53,18 +57,25 @@ def main(out: str, tag: str) -> None:
             ex = store.executionsList()
             return [ex.apply(i) for i in range(ex.size())]
 
-        seen = {e.executionId() for e in executions()}
-        apply_batch_flagged(t, flagged, epoch_id=0, stream_id="capture")
         os.makedirs(out, exist_ok=True)
-        for e in executions():
-            if e.executionId() in seen:
-                continue
-            plan = e.physicalPlanDescription()
-            kind = "merge_write" if "InsertIntoHadoopFsRelationCommand" in plan else "probe"
-            head = e.description().splitlines()[0][:100]
-            with open(os.path.join(out, f"{kind}_{tag}.txt"), "w") as f:
-                f.write(f"# {kind} ({e.jobs().size()} Spark jobs): {head}\n{plan}\n")
-            print(kind, e.jobs().size(), "jobs")
+        done: set[str] = set()
+        for epoch in range(MAX_DELTA_DEPTH + 1):
+            seen = {e.executionId() for e in executions()}
+            arm = apply_batch_flagged(t, flagged, epoch_id=epoch, stream_id="capture").get(
+                "write_mode", "cow")
+            for e in executions():
+                if e.executionId() in seen:
+                    continue
+                plan = e.physicalPlanDescription()
+                write = "InsertIntoHadoopFsRelationCommand" in plan
+                kind = f"merge_write_{arm}" if write else "probe"
+                if kind in done:
+                    continue
+                done.add(kind)
+                head = e.description().splitlines()[0][:100]
+                with open(os.path.join(out, f"{kind}_{tag}.txt"), "w") as f:
+                    f.write(f"# {kind} ({e.jobs().size()} Spark jobs): {head}\n{plan}\n")
+                print(epoch, kind, e.jobs().size(), "jobs")
     finally:
         shutil.rmtree(lake, ignore_errors=True)
         spark.stop()
