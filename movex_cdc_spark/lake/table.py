@@ -65,8 +65,7 @@ import uuid
 from functools import reduce
 from typing import Any
 
-import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -81,15 +80,18 @@ _RANK = "__rank"  # fold tie-break between rows of equal seq (module docstring)
 _NULL_BASE_RANK = -(1 << 62)
 
 # Delta files a bucket may hold before a merge touching it compacts it
-# (runs the copy-on-write arm). Measured with the former merge-on-read
-# table (bench.py --mor-policy, 40×5k-row epochs into 32 buckets, a
-# consumer read of the whole table every 8 epochs, BENCH_SCALING.md
-# r7): total write+read wall was eager COW 143.6 s / compact every 2
-# epochs 67.3 s / every 5 epochs 48.5 s / every 10 60.0 s / once at the
-# end 75.2 s, all final states identical. Too-eager compaction re-pays
-# the bucket rewrite; too-lazy makes every read fold a fat delta and
-# every (rarer) compaction rewrite more. Four deltas, then a compacting
-# merge, is one rewrite per 5 epochs — the measured minimum.
+# (runs the copy-on-write arm). Measured on this table with
+# ``bench.py --delta-depth`` (200k events as 40 epochs of 5k rows into
+# 32 buckets, a consumer read of the whole table every 8 epochs, 4 vCPU,
+# three runs, all final states identical; BENCH_SCALING.md), median
+# write+read wall [range]: depth 0 (eager COW) 77.9 s [77.8, 83.6] /
+# depth 1 53.1 s [49.9, 55.6] / depth 4 47.2 s [46.2, 49.3] / depth 9
+# 46.3 s [40.1, 47.5] / never 49.0 s [47.1, 51.2]. The curve is
+# U-shaped: too-eager compaction re-pays the bucket rewrite, too-lazy
+# makes every read fold more deltas (read wall 2.3–2.5 s at depth 4,
+# 2.9–3.4 s at 9, 10.6–11.3 s never). Depths 4 and 9 tie within the
+# run-to-run spread; 4 keeps the read side, which grows with depth,
+# the cheaper one.
 MAX_DELTA_DEPTH = 4
 
 # widenings allowed without rewriting data files (Iceberg-compatible set)
@@ -539,15 +541,18 @@ class LakeTable:
         for ~1 % of the keys."""
         return max(1, min(n_buckets, self.spark.sparkContext.defaultParallelism))
 
-    def _write_snapshot(
-        self, df: DataFrame, version: int, by_bucket: bool = True
-    ) -> tuple[str, str]:
-        """Write ``df`` (BUCKET_COL + table columns) into a fresh
-        snapshot dir; returns the dir (relative, absolute). ``by_bucket``:
-        one parquet file per bucket (base files; the caller has already
-        hash-partitioned ``df`` on BUCKET_COL), else the dir holds ``df``
-        as written (a delta file: one partition, bucket-sorted). A failed
-        write drops the staged dir.
+    def _write_snapshot(self, df: DataFrame, version: int) -> tuple[str, str]:
+        """Write ``df`` (BUCKET_COL + table columns, already
+        hash-partitioned on BUCKET_COL) as base files, one parquet file
+        per bucket, into a fresh snapshot dir; returns the dir
+        (relative, absolute)."""
+        return self._stage(
+            df.withColumn(PART_COL, F.col(BUCKET_COL)).write.partitionBy(PART_COL), version
+        )
+
+    def _stage(self, writer: DataFrameWriter, version: int) -> tuple[str, str]:
+        """Run ``writer`` into a fresh ``snap-{version}-{uuid}`` dir;
+        returns the dir (relative, absolute). A failed write drops it.
 
         The dir name carries a uuid suffix for the same reason the
         append log's segments do (append_log.py:15-17): a hard crash
@@ -561,9 +566,8 @@ class LakeTable:
         the orphan's files."""
         snap_rel = os.path.join("data", f"snap-{version}-{uuid.uuid4().hex[:8]}")
         snap_dir = os.path.join(self.path, snap_rel)
-        w = df.withColumn(PART_COL, F.col(BUCKET_COL)).write.partitionBy(PART_COL) if by_bucket else df.write
         try:
-            w.parquet(snap_dir, mode="errorifexists")
+            writer.parquet(snap_dir, mode="errorifexists")
         except Exception:
             if self.fs.exists(snap_dir):
                 self.fs.rmtree(snap_dir)
@@ -731,43 +735,44 @@ class LakeTable:
                    "write_mode": "cow", "rows_written": rows}
         return self._commit(m, snap_rel, lists, lineage, timings, None)
 
-    def _stage_cow(self, m, src, touched, version, timings) -> tuple[str, dict, int | None]:
+    def _stage_cow(self, m, src, touched, version, timings) -> tuple[str, dict, int]:
         """Copy-on-write arm: the fold of batch rows ∪ base and delta
         rows of the touched buckets, written one file per bucket. Returns
         the staged dir, each touched bucket's new one-base list and the
-        rows written: parquet footers read by pyarrow on the driver, so
-        None for a table on a scheme-qualified (remote) path."""
+        rows written, counted inside the write job (an Observation on
+        the fold: no extra job, no driver-side file IO)."""
         cands = self._stored(m, touched)
         if src is not None:
             cands = src.unionByName(cands)
-        result = self._fold(cands, m, len(touched))
-        # uuid-named dir: crash-replay safety, see _write_snapshot
+        written_rows = Observation()
+        result = self._fold(cands, m, len(touched)).observe(
+            written_rows, F.count(F.lit(1)).alias("rows")
+        )
         _t = time.monotonic()
         snap_rel, snap_dir = self._write_snapshot(result, version)
         timings["write_s"] = round(time.monotonic() - _t, 4)
         _t = time.monotonic()
-        # Contract guard: the commit only adopts buckets in `touched`.
-        # If the write produced a bucket OUTSIDE that set, the probe's
-        # key set diverged from the batch's — those rows would be
-        # silently orphaned (written but never listed), i.e. lost.
-        # Fail loudly and drop the staged snapshot instead.
-        written = {
-            int(d.split("=", 1)[1])
-            for d in self.fs.listdir(snap_dir)
-            if d.startswith(f"{PART_COL}=")
-        }
-        extra = written - set(touched)
-        if extra:
+        try:
+            # Contract guard: the commit only adopts buckets in
+            # `touched`. If the write produced a bucket OUTSIDE that
+            # set, the probe's key set diverged from the batch's — those
+            # rows would be silently orphaned (written but never
+            # listed), i.e. lost. Fail loudly instead.
+            written = {
+                int(d.split("=", 1)[1])
+                for d in self.fs.listdir(snap_dir)
+                if d.startswith(f"{PART_COL}=")
+            }
+            extra = written - set(touched)
+            if extra:
+                raise RuntimeError(_diverged(sorted(extra), touched))
+            # a bucket with no rows left (everything merged away) gets
+            # an empty list
+            lists = self._bucket_files(snap_rel, touched)
+            rows = written_rows.get["rows"]
+        except Exception:
             self.fs.rmtree(snap_dir)
-            raise RuntimeError(_diverged(sorted(extra), touched))
-        # a bucket with no rows left (everything merged away) gets an
-        # empty list
-        lists = self._bucket_files(snap_rel, touched)
-        rows = None if "://" in self.path else sum(
-            pq.read_metadata(os.path.join(self.path, f)).num_rows
-            for files in lists.values()
-            for f in files
-        )
+            raise
         timings["listing_s"] = round(time.monotonic() - _t, 4)
         return snap_rel, lists, rows
 
@@ -788,7 +793,7 @@ class LakeTable:
         )
         _t = time.monotonic()
         try:
-            snap_rel, snap_dir = self._write_snapshot(rows, version, by_bucket=False)
+            snap_rel, snap_dir = self._stage(rows.write, version)
         except Exception as e:
             if _DIVERGED_MARK not in str(e):
                 raise

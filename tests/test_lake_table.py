@@ -406,6 +406,26 @@ def test_hadoop_fs_impl_runs_the_table(spark, tmp_lake):
     assert t.read().collect()[0]["content"] == "v3"
 
 
+def test_hadoop_fs_compacting_merge_on_scheme_qualified_path(spark, tmp_lake):
+    """A merge that reaches the delta depth bound compacts through
+    Hadoop IO on a scheme-qualified table path, and counts the rows it
+    wrote inside the write job: the merge reads no file on the driver,
+    so a path Hadoop resolves (hdfs://, s3a://, a bare path against the
+    cluster's defaultFS) needs no local copy."""
+    from movex_cdc_spark.lake.fs import HadoopFS
+
+    t = LakeTable.create(spark, "file://" + tmp_lake, REPO_FILES_SCHEMA, KEY_COLS,
+                         n_buckets=4, fs=HadoopFS(spark))
+    lins = [
+        t.merge(_batch(spark, [(s, "r", "p", "c", "py", f"v{s}", "U")]), epoch_id=s)
+        for s in range(MAX_DELTA_DEPTH + 1)
+    ]
+    assert [lin["write_mode"] for lin in lins] == ["delta"] * MAX_DELTA_DEPTH + ["cow"]
+    assert [lin["rows_written"] for lin in lins] == [1] * (MAX_DELTA_DEPTH + 1)
+    assert lins[-1]["max_delta_depth"] == 0
+    assert t.read().collect()[0]["content"] == f"v{MAX_DELTA_DEPTH}"
+
+
 def test_expire_skips_in_flight_staged_snapshot(spark, tmp_lake):
     """expire_snapshots must not reap a snapshot dir staged BEYOND the
     committed head: an optimistic concurrent writer's in-flight staging
