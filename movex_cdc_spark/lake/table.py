@@ -24,8 +24,9 @@ format is implemented here with the same contract Iceberg gives us:
     more than ``MAX_DELTA_DEPTH`` delta files, a merge appends ONE
     delta file (no stored-side read, no exchange, no aggregate);
     otherwise it runs the copy-on-write merge over base ∪ deltas of
-    the touched buckets, which writes each one a fresh base file and
-    drops its deltas — compaction is just that merge. Untouched buckets
+    the touched buckets and of any bucket already at the bound, which
+    writes each one a fresh base file and drops its deltas —
+    compaction is just that merge. Untouched buckets
     carry their lists forward by reference, so cost is proportional to
     touched data, not table size.
   * **one fold** — readers (``read``, ``read_raw``, ``changes``) and
@@ -625,8 +626,9 @@ class LakeTable:
         Write arm: while every touched bucket holds fewer than
         ``MAX_DELTA_DEPTH`` delta files, the batch rows are appended as
         ONE delta file (``write_mode`` "delta"); otherwise the touched
-        buckets are rewritten from base ∪ deltas ∪ batch (``write_mode``
-        "cow", which compacts them). Both arms commit through the same
+        buckets, and every other bucket already at the bound, are
+        rewritten from base ∪ deltas ∪ batch (``write_mode`` "cow",
+        which compacts them; ``buckets_touched`` lists them all). Both arms commit through the same
         epoch-fenced pointer swap, and readers see the same state.
 
         Returns the lineage record. If ``epoch_id`` is already fenced
@@ -700,6 +702,15 @@ class LakeTable:
             return {"skipped": True, "reason": "empty batch"}
 
         delta = all(_depth(m["buckets"].get(str(b), [])) < MAX_DELTA_DEPTH for b in touched)
+        if not delta:
+            # A bucket whose deltas already reach the bound is rewritten
+            # by the next merge that touches it anyway; folding it into
+            # this write job keeps an epoch that missed it from costing
+            # a second full rewrite right after this one.
+            touched = sorted(set(touched).union(
+                int(b) for b, files in m["buckets"].items()
+                if _depth(files) >= max(MAX_DELTA_DEPTH, 1)
+            ))
         try:
             stage = self._stage_delta if delta else self._stage_cow
             snap_rel, lists, rows = stage(m, src, touched, new_version, timings)

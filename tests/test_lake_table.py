@@ -176,7 +176,10 @@ def test_merge_probe_path_and_divergence_guard(spark, tmp_lake, cow_only):
     assert t.read().count() == 41
 
     # diverging probe (MISSING the batch's buckets) aborts, commits
-    # nothing, and leaves no staged dir — on either write arm
+    # nothing, and leaves no staged dir — on either write arm. Compact
+    # first: a copy-on-write merge also rewrites every bucket whose
+    # deltas reach the bound, and a rewritten bucket is not orphaned.
+    t.compact()
     batch2 = _batch(spark, [(200, f"rY{i}", "p", "c", "py", "y", "I") for i in range(8)])
     wrong = _probe(t, batch.limit(1))  # bucket of r0 only
     before = t.current_version()

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from movex_cdc_spark.datagen import GenParams, generate_events, replay_oracle
 from movex_cdc_spark.lake import table as table_mod
-from movex_cdc_spark.lake.table import MAX_DELTA_DEPTH, LakeTable
+from movex_cdc_spark.lake.table import MAX_DELTA_DEPTH, LakeTable, bucket_expr
 from movex_cdc_spark.operators.apply import KEY_COLS, REPO_FILES_SCHEMA, apply_batch
 
 COLS = ["seq", "repo", "path", "commit", "lang", "content", "op"]
@@ -81,24 +81,50 @@ def test_mor_compaction_preserves_state_and_truncates(spark, tmp_path, cow_only)
 
 def test_mor_auto_compaction_threshold(spark, tmp_path, cow_only):
     """The depth bound is per bucket: a merge that touches a full bucket
-    compacts only the buckets it touches; the others keep their deltas,
-    and reads of either kind match the copy-on-write table."""
+    compacts the buckets it touches plus every other bucket already at
+    the bound; buckets below the bound keep their deltas, and reads
+    match the copy-on-write table."""
     cow, t = _table(spark, tmp_path / "cow"), _table(spark, tmp_path / "lake")
     _, batches = _clean_batches(spark, n_events=1600, epochs=MAX_DELTA_DEPTH)
-    for i, b in enumerate(batches):
+    epochs = iter(range(100))
+
+    def merge(batch):
+        e = next(epochs)
         with cow_only():
-            cow.merge(b, epoch_id=i)
-        assert t.merge(b, epoch_id=i)["write_mode"] == "delta"
-    assert set(_depths(t).values()) == {MAX_DELTA_DEPTH}
-    one = _b(spark, [(10**6, "repo_0", "src/mod0/file0.txt", "c", "py", "ONE", "U")])
-    with cow_only():
-        cow.merge(one, epoch_id=MAX_DELTA_DEPTH)
-    lin = t.merge(one, epoch_id=MAX_DELTA_DEPTH)
-    assert lin["write_mode"] == "cow" and len(lin["buckets_touched"]) == 1
-    (b0,) = lin["buckets_touched"]
+            cow.merge(batch, epoch_id=e)
+        return t.merge(batch, epoch_id=e)
+
+    def upsert(seq, path):
+        return _b(spark, [(seq, "repo_0", path, "c", "py", f"v{seq}", "U")])
+
+    for b in batches[:-1]:
+        assert merge(b)["write_mode"] == "delta"
+    one = "src/mod0/file0.txt"
+    assert merge(upsert(10**6, one))["write_mode"] == "delta"
     depths = _depths(t)
-    assert depths.pop(b0) == 0 and set(depths.values()) == {MAX_DELTA_DEPTH}
-    assert lin["max_delta_depth"] == MAX_DELTA_DEPTH
+    (b0,) = [b for b, d in depths.items() if d == MAX_DELTA_DEPTH]
+    assert set(depths.values()) == {MAX_DELTA_DEPTH - 1, MAX_DELTA_DEPTH}
+
+    # only b0 is at the bound: the others keep their deltas
+    lin = merge(upsert(10**6 + 1, one))
+    assert lin["write_mode"] == "cow" and lin["buckets_touched"] == [b0]
+    depths = _depths(t)
+    assert depths.pop(b0) == 0 and set(depths.values()) == {MAX_DELTA_DEPTH - 1}
+    assert lin["max_delta_depth"] == MAX_DELTA_DEPTH - 1
+
+    # the other buckets reach the bound; a merge touching one of them
+    # rewrites them all in one job, and b0 keeps its delta
+    assert merge(batches[-1])["write_mode"] == "delta"
+    bucket = {
+        r["path"]: r["b"]
+        for r in spark.createDataFrame([("repo_0", f"new{i}") for i in range(16)], KEY_COLS)
+        .select("path", bucket_expr(KEY_COLS, 4).alias("b")).collect()
+    }
+    other = next(p for p, b in bucket.items() if b != b0)
+    lin = merge(upsert(10**6 + 2, other))
+    assert lin["write_mode"] == "cow"
+    assert lin["buckets_touched"] == sorted(set(range(4)) - {b0})
+    assert _depths(t) == {**{b: 0 for b in range(4)}, b0: 1}
     assert _state(t) == _state(cow)
 
 
