@@ -26,9 +26,9 @@ format is implemented here with the same contract Iceberg gives us:
     otherwise it runs the copy-on-write merge over base ∪ deltas of
     the touched buckets and of any bucket already at the bound, which
     writes each one a fresh base file and drops its deltas —
-    compaction is just that merge. Untouched buckets
-    carry their lists forward by reference, so cost is proportional to
-    touched data, not table size.
+    compaction is just that merge. Untouched buckets carry their lists
+    forward by reference, so cost is proportional to touched data, not
+    table size.
   * **one fold** — readers (``read``, ``read_raw``, ``changes``) and
     the merge's stored side resolve each key by the greatest
     ``(seq, rank)``: a base row beats any delta row of the same seq,
@@ -628,8 +628,9 @@ class LakeTable:
         ONE delta file (``write_mode`` "delta"); otherwise the touched
         buckets, and every other bucket already at the bound, are
         rewritten from base ∪ deltas ∪ batch (``write_mode`` "cow",
-        which compacts them; ``buckets_touched`` lists them all). Both arms commit through the same
-        epoch-fenced pointer swap, and readers see the same state.
+        which compacts them; ``buckets_touched`` lists them all). Both
+        arms commit through the same epoch-fenced pointer swap, and
+        readers see the same state.
 
         Returns the lineage record. If ``epoch_id`` is already fenced
         for ``stream_id`` the call is a NO-OP and returns the fence
