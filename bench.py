@@ -145,7 +145,7 @@ def _stage_cdc_input(workdir: str, n_events: int) -> tuple[str, "object"]:
         n_events=n_events,
         n_repos=max(200, n_events // 2000),
         paths_per_repo=100,
-        hot_repo_share=0.1,  # mild skew so the salted path matters
+        hot_repo_share=0.1,  # mild hot-key skew
         seed=42,
     )
     stage = os.path.join(workdir, f"stage-{n_events}")
@@ -219,7 +219,6 @@ def run_cdc_apply(spark, workdir: str, tag: str, n_events: int,
         checkpoint_dir=os.path.join(run_dir, "ckpt"),
         dead_letter_dir=os.path.join(run_dir, "dl"),
         metrics_dir=os.path.join(run_dir, "metrics"),
-        salted=True,
         max_files_per_trigger=files_per_trigger,
         payload_format=True,
     )
@@ -695,8 +694,7 @@ def run_analytics_sfx(spark, workdir: str) -> dict:
 
 def run_mux_ab(spark, workdir: str, n_tables: int = 8,
                events_per_table: int = 50_000, n_files: int = 8,
-               hot_share: float | None = None, salted: bool = False,
-               repeats: int = 2) -> dict:
+               hot_share: float | None = None, repeats: int = 2) -> dict:
     """ONE multiplexed streaming query vs N per-table queries at equal
     volume (the VERDICT r5 item-2 design claim, measured): same total
     events, same per-file trigger granularity. The multiplexed side
@@ -794,7 +792,7 @@ def run_mux_ab(spark, workdir: str, n_tables: int = 8,
         pipe = MultiplexedCdcPipeline(
             spark, cfg, sinks=sinks, events_dir=os.path.join(base, "mux"),
             checkpoint_dir=os.path.join(run_dir, "ck"),
-            max_files_per_trigger=1, salted=salted,
+            max_files_per_trigger=1,
         )
         t0 = time.monotonic()
         pipe.run_available_now(timeout_s=3600)
@@ -808,7 +806,6 @@ def run_mux_ab(spark, workdir: str, n_tables: int = 8,
                 checkpoint_dir=os.path.join(run_dir, f"ck-{name}"),
                 stream_id=f"cdc-{name}", payload_format=True,
                 config=cfg, table_name=name, max_files_per_trigger=1,
-                salted=salted,
             )
             for name in names
         ]
@@ -821,7 +818,7 @@ def run_mux_ab(spark, workdir: str, n_tables: int = 8,
         return round(time.monotonic() - t0, 2), sinks, run_dir
 
     out: dict = {"n_tables": n_tables, "events_per_table": events_per_table,
-                 "n_files": n_files, "hot_share": hot_share, "salted": salted}
+                 "n_files": n_files, "hot_share": hot_share}
     mux_walls, per_walls = [], []
     keep: dict = {}
     rounds = ["warm"] + [f"run{i}" for i in range(repeats)]
@@ -1017,10 +1014,7 @@ def main() -> None:
                                                 repeats=reps),
                           "skewed": run_mux_ab(spark, workdir, n_tables=t,
                                                events_per_table=e,
-                                               hot_share=hs, repeats=reps),
-                          "skewed_salted": run_mux_ab(
-                              spark, workdir, n_tables=t, events_per_table=e,
-                              hot_share=hs, salted=True, repeats=reps)}))
+                                               hot_share=hs, repeats=reps)}))
         spark.stop()
         return
     if "--dedup-scale" in sys.argv:

@@ -55,7 +55,7 @@ def run_apply_phases(spark, workdir: str, n_events: int) -> dict:
         checkpoint_dir=os.path.join(run_dir, "ckpt"),
         dead_letter_dir=os.path.join(run_dir, "dl"),
         metrics_dir=os.path.join(run_dir, "metrics"),
-        salted=True, max_files_per_trigger=bench.FILES_PER_EPOCH,
+        max_files_per_trigger=bench.FILES_PER_EPOCH,
         payload_format=True,
     )
     t0 = time.monotonic()

@@ -120,6 +120,24 @@ class UnkeyedEventLog:
         log.meta()  # raises if missing
         return log
 
+    @classmethod
+    def open(cls, spark: SparkSession, path: str, fs=None) -> "UnkeyedEventLog":
+        """Load the log, creating it only when it is MISSING. A dir that
+        holds parquet files but no log metadata is a legacy/foreign
+        store — creating an empty log over it would silently orphan its
+        rows — so that raises. Any other load error (corrupt metadata)
+        propagates as-is."""
+        fs = fs or DEFAULT_FS
+        try:
+            return cls.load(spark, path, fs=fs)
+        except FileNotFoundError:
+            if fs.isdir(path) and any(f.endswith(".parquet") for f in fs.listdir(path)):
+                raise ValueError(
+                    f"{path} holds parquet files but no log metadata — "
+                    "not re-initializing over its existing rows"
+                )
+            return cls.create(spark, path, fs=fs)
+
     # ------------------------------------------------------- metadata
     def meta(self) -> dict[str, Any]:
         v = int(self.fs.read_text(os.path.join(self.meta_dir, "_current")).strip())

@@ -3,13 +3,16 @@
 This is the Spark shape of the reference's hot path
 (transfer_thread.rb:53-99):
 
-    events → condition filter → no-op suppression → poison split →
-    [schema evolve] → LWW dedup (salted if skewed) → MERGE →
+    events → condition filter → no-op suppression → poison flag
+    (flag_dispositions) → valid/poison slices (split_flagged) →
+    [config projection] → [schema evolve] → MERGE (LWW inside) →
     dead-letter append → lineage record
 
-One micro-batch = one call; Structured Streaming drives it via
-``foreachBatch`` (streaming/pipeline.py), batch replay drives it
-directly.
+One micro-batch = one call. The streaming shells
+(streaming/pipeline.py) persist the flagged batch and run
+``apply_batch_flagged`` (keyed) or ``apply_batch_unkeyed``
+(key_handling='N') from ``foreachBatch``; batch replays call
+``apply_batch``, which dedups (LWW) before the merge.
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from movex_cdc_spark.functions.hashing import sha256_builtin, content_sha256
+from movex_cdc_spark.functions.hashing import sha256_builtin
 from movex_cdc_spark.lake.table import LakeTable, bucket_expr
 from movex_cdc_spark.operators.filters import (
     bad_op_predicate,
@@ -30,10 +33,9 @@ from movex_cdc_spark.operators.filters import (
     default_exclude_condition,
     per_op_condition_filter,
     poison_predicate,
-    split_poison,
     suppress_noop_updates,
 )
-from movex_cdc_spark.operators.lww import lww_dedup, lww_dedup_maxby, lww_dedup_salted
+from movex_cdc_spark.operators.lww import lww_dedup_maxby
 from movex_cdc_spark.session import inheriting_local_properties
 
 REPO_FILES_SCHEMA = T.StructType(
@@ -48,81 +50,6 @@ REPO_FILES_SCHEMA = T.StructType(
 )
 
 KEY_COLS = ["repo", "path"]
-
-
-def _filter_validate_project(
-    events: DataFrame,
-    condition_sql: str | None,
-    table_cfg: "object | None",
-) -> tuple[DataFrame, DataFrame]:
-    """Shared capture-side chain: condition filter → no-op suppression →
-    poison split → (config projection + expressions). Validation and
-    no-op checks see the ORIGINAL row, as the reference trigger does;
-    projection shapes only the captured payload."""
-    if table_cfg is not None:
-        df = per_op_condition_filter(events, table_cfg.conditions)
-    else:
-        df = condition_filter(events, condition_sql or default_exclude_condition())
-    df = suppress_noop_updates(df)
-    # NOTE: deliberately NOT persisted HERE. The poison chain re-scans
-    # the batch; for micro-batches the streaming pipeline persists the
-    # parsed batch around this whole chain (MEMORY_AND_DISK, +15%
-    # measured), while full-backlog batch replays are cheaper re-scanned
-    # (measured: MEMORY_ONLY caching of 16M rows cost more in GC/memory
-    # pressure than the rescan saved).
-    valid, poison = split_poison(df)
-    if table_cfg is not None:
-        # P1/P2 projection + column_expressions (may reference ts/txid/
-        # old_content, so this runs before any slim select)
-        valid = table_cfg.apply_projection(valid)
-    return valid, poison
-
-
-def prepare_batch(
-    events: DataFrame,
-    condition_sql: str | None = None,
-    salted: bool = False,
-    use_pandas_sha: bool = False,
-    lww_mode: str = "maxby",
-    table_cfg: "object | None" = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Filters + config projection + LWW + sha256.
-    Returns (ready_batch, poison_rows).
-
-    All column work is JVM-side expressions except the optional
-    pandas_udf sha path; either way content hashing is vectorized.
-
-    table_cfg (config.table_config.TableCfg): when given, the batch is
-    compiled exactly like the reference compiles its capture triggers
-    (db_trigger_generator_oracle.rb:98-238):
-      * per-op trigger conditions (P3) replace ``condition_sql``
-      * per-op column flags null un-logged payload columns (P1/P2)
-      * column_expressions add computed payload columns (§2.10)
-    Projection runs AFTER validation/no-op checks (those see the
-    original row, as the trigger does) and BEFORE LWW, so the winning
-    row per key carries the configured payload shape.
-
-    lww_mode:
-      maxby  (default) — map-side-combining aggregate; minimal shuffle,
-               skew-proof (see lww_dedup_maxby)
-      window — row_number window (reference-shaped, full shuffle)
-      salted is honored for window mode; maxby needs no salt (its
-      partial combine already bounds hot keys).
-    """
-    valid, poison = _filter_validate_project(events, condition_sql, table_cfg)
-    # shuffle hygiene: only key/seq/op/payload cross the wire — the
-    # old-image and bookkeeping columns were only needed by the filters
-    keep = [c for c in valid.columns if c not in ("old_content", "ts", "txid", "is_noop")]
-    slim = valid.select(*keep)
-    if lww_mode == "maxby":
-        dedup = lww_dedup_maxby(slim, KEY_COLS)
-    elif salted:
-        dedup = lww_dedup_salted(slim, KEY_COLS)
-    else:
-        dedup = lww_dedup(slim, KEY_COLS)
-    sha = content_sha256(F.col("content")) if use_pandas_sha else sha256_builtin("content")
-    ready = dedup.withColumn("content_sha", F.when(F.col("content").isNotNull(), sha))
-    return ready, poison
 
 
 POISON_FLAG = "__poison"
@@ -141,48 +68,108 @@ def flag_dispositions(
     events: DataFrame,
     condition_sql: str | None = None,
     table_cfg: "object | None" = None,
+    envelope_sink: "object | None" = None,
 ) -> DataFrame:
-    """Single-projection disposition pass for the streaming cache:
-    condition filter + no-op suppression applied, poison rows FLAGGED
-    (not split), ``old_content`` dropped — it is only consumed by the
-    no-op check, and at ~the payload's size it is the single biggest
-    column in the micro-batch cache. The caller persists the result and
-    slices valid/poison off the cache with cheap filters, so the JSON
-    parse and the cache write each happen exactly once per micro-batch
-    (previously the full batch was cached old-image and all, and the
-    poison split re-scanned it).
+    """THE disposition pass, one projection: condition filter (or the
+    config's per-op conditions) and no-op suppression applied, poison
+    rows FLAGGED (not split). Every apply path slices its valid and
+    poison rows off this frame with ``split_flagged``; the streaming
+    shells persist it first, so the JSON parse and the cache write each
+    happen exactly once per micro-batch.
 
-    ``table_cfg``: its per-op conditions replace ``condition_sql`` (as
-    in prepare_batch), and ``old_content`` is kept when one of its
-    expressions may read it — apply_batch_flagged projects the valid
-    slice with the same config. The envelope sink still caches the full
-    parsed batch (its envelope carries the old image).
+    ``old_content`` is only consumed by the no-op check, and at ~the
+    payload's size it is the single biggest column of the batch, so it
+    is dropped here unless a later stage reads it: a ``table_cfg``
+    expression that may read it, or an attached ``envelope_sink``
+    (the envelope carries the old image). Only the presence of the sink
+    matters; the decision is derived from the inputs, not configured.
     """
     if table_cfg is not None:
         df = per_op_condition_filter(events, table_cfg.conditions)
     else:
         df = condition_filter(events, condition_sql or default_exclude_condition())
     df = suppress_noop_updates(df).withColumn(POISON_FLAG, poison_predicate())
-    return df if _needs_old_image(table_cfg) else df.drop("old_content")
+    if envelope_sink is not None or _needs_old_image(table_cfg):
+        return df
+    return df.drop("old_content")
 
 
 def split_flagged(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(valid, poison) slices of a ``flag_dispositions`` frame —
-    mirror of ``split_poison`` over the persisted cache."""
+    """(valid, poison) slices of a ``flag_dispositions`` frame. Poison
+    rows carry an ``error_msg`` naming the defect (one rule for every
+    path) and keep the EVENT_COLS shape: where the old image was not
+    retained, ``old_content`` is explicitly NULL, so the dead-letter
+    schema stays union-stable across paths and RetryWorker's
+    re-validation chain resolves every column."""
     valid = flagged.filter(~F.col(POISON_FLAG)).drop(POISON_FLAG)
     poison = (
         flagged.filter(F.col(POISON_FLAG))
         .drop(POISON_FLAG)
         .withColumn(
             "error_msg",
-            # same diagnosis rule as split_poison: the dead-letter
-            # record must name the actual defect on both paths
             F.when(
                 bad_op_predicate(), F.lit("unknown operation")
             ).otherwise(F.lit("null content on insert/update")),
         )
     )
+    if "old_content" not in poison.columns:
+        poison = poison.withColumn("old_content", F.lit(None).cast("string"))
     return valid, poison
+
+
+def prepare_batch(
+    events: DataFrame,
+    condition_sql: str | None = None,
+    table_cfg: "object | None" = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Dispositions + config projection + LWW + sha256.
+    Returns (ready_batch, poison_rows).
+
+    table_cfg (config.table_config.TableCfg): when given, the batch is
+    compiled exactly like the reference compiles its capture triggers
+    (db_trigger_generator_oracle.rb:98-238):
+      * per-op trigger conditions (P3) replace ``condition_sql``
+      * per-op column flags null un-logged payload columns (P1/P2)
+      * column_expressions add computed payload columns (§2.10)
+    Projection runs AFTER validation/no-op checks (those see the
+    original row, as the trigger does) and BEFORE LWW, so the winning
+    row per key carries the configured payload shape.
+
+    The LWW is the map-side-combining ``max_by`` aggregate (skew-proof:
+    its partial combine bounds hot keys). Deduping before the merge
+    keeps a full-backlog replay's merge input at one row per key.
+
+    NOTE: deliberately NOT persisted: the poison slice re-scans the
+    batch. Full-backlog replays are cheaper re-scanned (measured: a
+    MEMORY_ONLY cache of 16M rows cost more in GC/memory pressure than
+    the rescan saved); the streaming shells persist their micro-batch.
+    """
+    valid, poison = split_flagged(flag_dispositions(events, condition_sql, table_cfg))
+    return _with_sha(lww_dedup_maxby(_slim(valid, table_cfg), KEY_COLS)), poison
+
+
+def _slim(valid: DataFrame, table_cfg) -> DataFrame:
+    """The valid slice shaped for the merge: P1/P2 projection +
+    column_expressions (they may read ts/txid/old_content, so they run
+    first), then only key/seq/op/payload are kept — the old-image and
+    bookkeeping columns were only needed by the filters."""
+    if table_cfg is not None:
+        valid = table_cfg.apply_projection(valid)
+    return valid.drop("old_content", "ts", "txid", "is_noop")
+
+
+def _with_sha(ready: DataFrame) -> DataFrame:
+    """``content_sha`` of the payload (NULL for a delete)."""
+    return ready.withColumn(
+        "content_sha", F.when(F.col("content").isNotNull(), sha256_builtin("content"))
+    )
+
+
+def _evolve(table: LakeTable, ready: DataFrame) -> None:
+    """ALTER-before-MERGE: widen the table to the batch's payload."""
+    table.evolve_schema(T.StructType(
+        [f for f in ready.schema.fields if f.name not in ("seq", "op")]
+    ))
 
 
 def _record_metrics(metrics, lineage, got, n_poison, stream_id, epoch_id, scope) -> None:
@@ -240,26 +227,11 @@ def apply_batch_flagged(
     epoch that appended nothing leaves nothing to fence or replay."""
     t0 = time.monotonic()
     valid, poison = split_flagged(flagged)
-    if "old_content" not in poison.columns:
-        # flag_dispositions dropped the old image from the cache (its
-        # only consumer was the no-op check). Quarantined rows keep the
-        # EVENT_COLS shape with old_content explicitly NULL so the
-        # dead-letter schema stays union-stable across paths and
-        # RetryWorker's re-validation chain resolves every column — the
-        # old image was simply not retained for quarantine (documented
-        # fidelity trade of the slim cache).
-        poison = poison.withColumn("old_content", F.lit(None).cast("string"))
-    probe_src = flagged
-    if table_cfg is not None:
-        valid = table_cfg.apply_projection(valid)
-        # the probe buckets the PROJECTED keys (a key column a config
-        # does not log for an op is nulled); column pruning keeps the
-        # expression columns out of the probe plan
-        probe_src = table_cfg.apply_projection(flagged)
-    keep = [c for c in valid.columns if c not in ("old_content", "ts", "txid", "is_noop")]
-    slim = valid.select(*keep)
-    sha = F.when(F.col("content").isNotNull(), sha256_builtin("content"))
-    ready = slim.withColumn("content_sha", sha)
+    ready = _with_sha(_slim(valid, table_cfg))
+    # the probe buckets the PROJECTED keys (a key column a config does
+    # not log for an op is nulled); column pruning keeps the expression
+    # columns out of the probe plan
+    probe_src = flagged if table_cfg is None else table_cfg.apply_projection(flagged)
 
     m = table.meta()
     if epoch_id is not None:
@@ -267,18 +239,14 @@ def apply_batch_flagged(
         if last is not None and epoch_id <= last:
             # Replayed epoch: the merge is fenced. Only the dead-letter
             # append may still be pending (crash between its commit and
-            # the table commit) — its OWN fence resolves that without
-            # any probe job here (append checks its metadata before
-            # touching the batch).
-            if dead_letter is not None:
+            # the table commit) — its OWN fence resolves that. A clean
+            # epoch appended nothing the first time, so its replay
+            # appends nothing either (no empty segment, no commit).
+            if dead_letter is not None and not poison.isEmpty():
                 dead_letter.append(poison, stream_id=stream_id, epoch_id=epoch_id)
             return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
 
-    batch_payload = T.StructType(
-        [f for f in ready.schema.fields
-         if f.name not in ("seq", "op", "old_content", "ts", "txid", "is_noop")]
-    )
-    table.evolve_schema(batch_payload)
+    _evolve(table, ready)
 
     ok = ~F.col(POISON_FLAG)
     obs = Observation(f"apply_{stream_id}_{epoch_id}_{time.monotonic_ns()}")
@@ -380,41 +348,23 @@ def apply_batch(
     epoch_id: int | None = None,
     stream_id: str = "default",
     condition_sql: str | None = None,
-    salted: bool = False,
     dead_letter: "DeadLetterTable | None" = None,
     metrics: "object | None" = None,
-    evolve: bool = True,
-    use_pandas_sha: bool = False,
-    lww_mode: str = "maxby",
     table_cfg: "object | None" = None,
 ) -> dict[str, Any]:
-    """Apply one micro-batch of change events with exactly-once fencing.
+    """Apply one batch of change events with exactly-once fencing — the
+    batch-replay flow (dead-letter readmission, direct backlog
+    replays): prepare_batch dedups first, dead letters are appended, then
+    ``merge`` runs its own probe. The counters ride the batch plan, so
+    they count post-LWW deduped keys.
 
     ``table_cfg`` compiles capture config (conditions / projection /
     expressions) into the batch plan — see prepare_batch. A config that
     adds expression columns triggers schema evolution on the lake table
     before the merge (ALTER-before-MERGE)."""
     t0 = time.monotonic()
-    ready, poison = prepare_batch(
-        events, condition_sql=condition_sql, salted=salted,
-        use_pandas_sha=use_pandas_sha, lww_mode=lww_mode, table_cfg=table_cfg,
-    )
-    return _apply_prepared(
-        table, ready, poison, epoch_id, stream_id, dead_letter, metrics, evolve, obs_t0=t0
-    )
-
-
-def _apply_prepared(table, ready, poison, epoch_id, stream_id, dead_letter, metrics,
-                    evolve, obs_t0):
-    """The generic flow (batch replays): dead letters first, then
-    ``merge`` runs its own probe. The counters ride the batch plan, so
-    they count post-LWW deduped keys."""
-    t0 = obs_t0
-    if evolve:
-        batch_payload = T.StructType(
-            [f for f in ready.schema.fields if f.name not in ("seq", "op", "old_content", "ts", "txid", "is_noop")]
-        )
-        table.evolve_schema(batch_payload)
+    ready, poison = prepare_batch(events, condition_sql=condition_sql, table_cfg=table_cfg)
+    _evolve(table, ready)
 
     # single-pass metrics riding a job the batch already runs — no
     # extra scan (reference A1 statistics counters,
@@ -455,8 +405,8 @@ def _apply_prepared(table, ready, poison, epoch_id, stream_id, dead_letter, metr
     lineage["n_poison"] = n_poison
     if dead_letter is not None:
         # the dead-letter append is the batch's FIRST action, so its
-        # wall includes materializing the micro-batch cache — recorded
-        # next to merge's per-phase timings for epoch-cost adjudication.
+        # wall includes reading the batch — recorded next to merge's
+        # per-phase timings for epoch-cost adjudication.
         # NOTE: this and commit_s ride the RETURNED lineage record (the
         # driver's epochs list / logs); the lineage row serialized into
         # the table metadata is frozen before the commit finishes, so
@@ -471,26 +421,27 @@ def _apply_prepared(table, ready, poison, epoch_id, stream_id, dead_letter, metr
 
 def apply_batch_unkeyed(
     log,
-    events: DataFrame,
+    flagged: DataFrame,
     epoch_id: int | None = None,
     stream_id: str = "default",
-    condition_sql: str | None = None,
     table_cfg: "object | None" = None,
     dead_letter: "DeadLetterTable | None" = None,
 ) -> dict[str, Any]:
-    """S5 unkeyed path (key_handling='N'): validated, projected events
-    are APPENDED in arrival order — no LWW collapse, no merge — exactly
-    the reference's keyless produce with relaxed ordering
+    """S5 unkeyed path (key_handling='N') over a ``flag_dispositions``
+    frame (built with the same ``table_cfg``): validated, projected
+    events are APPENDED in arrival order — no LWW collapse, no merge —
+    exactly the reference's keyless produce with relaxed ordering
     (transfer_thread.rb:331-347). ``log`` is a lake.append_log.
     UnkeyedEventLog; the epoch fence lives in its atomic commit."""
     t0 = time.monotonic()
-    valid, poison = _filter_validate_project(events, condition_sql, table_cfg)
-    keep = [c for c in valid.columns if c not in ("old_content", "is_noop")]
-    valid = valid.select(*keep)
+    valid, poison = split_flagged(flagged)
     if table_cfg is not None:
         # msg_key column materialized for the envelope/sink contract;
         # NULL for mode 'N' (consumers must not assume per-key order)
-        valid = valid.withColumn("msg_key", table_cfg.key_column())
+        valid = table_cfg.apply_projection(valid).withColumn(
+            "msg_key", table_cfg.key_column()
+        )
+    valid = valid.drop("old_content", "is_noop")
     n_poison = 0
     if dead_letter is not None and not poison.isEmpty():
         # appended (and committed) only when there is poison, as in
@@ -587,26 +538,10 @@ class DeadLetterTable:
 
     def __init__(self, spark, path: str, fs=None):
         from movex_cdc_spark.lake.append_log import UnkeyedEventLog
-        from movex_cdc_spark.lake.fs import DEFAULT_FS
 
         self.spark = spark
         self.path = path
-        fs = fs or DEFAULT_FS
-        try:
-            self.log = UnkeyedEventLog.load(spark, path, fs=fs)
-        except FileNotFoundError:
-            # only a MISSING log may be created; a dir that holds data
-            # but no _meta is a legacy/foreign store — creating an empty
-            # log over it would silently orphan its rows. Any other load
-            # error (corrupt metadata) propagates as-is.
-            if fs.isdir(path) and any(
-                f.endswith(".parquet") for f in fs.listdir(path)
-            ):
-                raise ValueError(
-                    f"{path} holds parquet files but no log metadata — "
-                    "not re-initializing over existing quarantine data"
-                )
-            self.log = UnkeyedEventLog.create(spark, path, fs=fs)
+        self.log = UnkeyedEventLog.open(spark, path, fs=fs)
 
     def append(self, poison: DataFrame, stream_id: str, epoch_id: int | None) -> int:
         out = (

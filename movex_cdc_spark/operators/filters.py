@@ -9,10 +9,12 @@ as declarative DataFrame filters Catalyst can push into the scan:
   * no-op-update suppression — UPDATE only fires when a tracked column
     actually changed, null-safe (reference P4:
     db_trigger_generator_oracle.rb:802-823)
-  * poison split — rows failing validation are quarantined instead of
-    failing the batch; Spark's whole-task failure model makes the
-    reference's divide-and-conquer recursion (transfer_thread.rb:143-178)
-    unnecessary: validate first, dead-letter the rest (ST6).
+  * poison rule — rows failing validation are quarantined instead of
+    failing the batch (apply.flag_dispositions flags them,
+    split_flagged slices them off). Spark's whole-task failure model
+    makes the reference's divide-and-conquer recursion
+    (transfer_thread.rb:143-178) unnecessary: validate first,
+    dead-letter the rest (ST6).
 """
 
 from __future__ import annotations
@@ -32,8 +34,8 @@ def bad_op_predicate(op_col: str = "op") -> F.Column:
 def poison_predicate(content_col: str = "content", op_col: str = "op") -> F.Column:
     """THE quarantine rule (single definition): I/U without content,
     or an unknown/NULL op. Everything that routes rows toward the
-    dead-letter path — split_poison, flag_dispositions, and the
-    condition filters' quarantine exemption — derives from this."""
+    dead-letter path — flag_dispositions and the condition filters'
+    quarantine exemption — derives from this."""
     bad_content = F.col(content_col).isNull() & F.col(op_col).isin("I", "U")
     return bad_content | bad_op_predicate(op_col)
 
@@ -104,26 +106,7 @@ def suppress_noop_updates(
     is_noop = (F.col(op_col) == "U") & F.col(old_col).eqNullSafe(F.col(new_col))
     # coalesce: a NULL op (malformed wire record, old<=>new both NULL)
     # makes is_noop NULL, and filter(~NULL) would silently drop the row
-    # HERE — before split_poison ever sees it. Only a definite no-op
+    # HERE — before the poison flag ever sees it. Only a definite no-op
     # may be suppressed; undecidable rows continue to the poison split.
     return df.filter(~F.coalesce(is_noop, F.lit(False)))
 
-
-def split_poison(
-    df: DataFrame, content_col: str = "content", op_col: str = "op"
-) -> tuple[DataFrame, DataFrame]:
-    """(valid, poison): I/U events must carry content, and every event
-    must carry a known operation; the rest are poison rows headed for
-    the dead-letter table (S11/ST6). The op check matters on byte-
-    stream transports (Kafka): a malformed wire record parses to an
-    all-null row, which must quarantine — not merge a null-key row
-    into the table. (The reference raises on an unknown operation,
-    transfer_thread.rb's else-branch; here it dead-letters.)"""
-    bad = poison_predicate(content_col, op_col)
-    poison = df.filter(bad).withColumn(
-        "error_msg",
-        F.when(bad_op_predicate(op_col), F.lit("unknown operation")).otherwise(
-            F.lit("null content on insert/update")
-        ),
-    )
-    return df.filter(~bad), poison

@@ -2299,7 +2299,7 @@ def cdc_unkeyed_append(spark, sf_dir):
 
     from movex_cdc_spark.config.table_config import ColumnCfg, TableCfg
     from movex_cdc_spark.lake.append_log import UnkeyedEventLog
-    from movex_cdc_spark.operators.apply import apply_batch_unkeyed
+    from movex_cdc_spark.operators.apply import apply_batch_unkeyed, flag_dispositions
 
     ev = load(spark, sf_dir, "events").select(
         F.col("event_id").alias("seq"),
@@ -2317,7 +2317,8 @@ def cdc_unkeyed_append(spark, sf_dir):
     log = UnkeyedEventLog.create(spark, f"{tdir}/log")
     for i in range(2):
         apply_batch_unkeyed(
-            log, ev.filter(F.pmod(F.col("seq"), F.lit(2)) == i),
+            log,
+            flag_dispositions(ev.filter(F.pmod(F.col("seq"), F.lit(2)) == i), table_cfg=cfg),
             epoch_id=i, table_cfg=cfg,
         )
     return log.read().select("seq", "op", "content", "msg_key")

@@ -93,16 +93,6 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        # Allow shuffled-hash join where its size conditions hold
-        # (guide §3.1). Build-side partitions are bounded by the shuffle
-        # partition count + AQE skew splitting, so the hash-build OOM
-        # risk the default guards against does not apply at this row
-        # width. It was measured (r8: never slower, up to ~25% faster)
-        # on the merge's old full-outer join, which the one-exchange
-        # merge aggregate replaced; no remaining plan was measured with
-        # it, so it stays session-wide until it is re-measured or
-        # scoped (ROADMAP item 3).
-        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

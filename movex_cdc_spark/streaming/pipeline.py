@@ -18,22 +18,27 @@ from __future__ import annotations
 
 import time
 from collections import deque
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from movex_cdc_spark.lake.table import LakeTable
-from movex_cdc_spark.operators.apply import (
+# apply_batch is re-exported next to apply_batch_flagged: perfbench's
+# tracer patches both names on this module
+from movex_cdc_spark.operators.apply import (  # noqa: F401
     DeadLetterTable,
-    _filter_validate_project,
     apply_batch,
     apply_batch_flagged,
     apply_batch_unkeyed,
     flag_dispositions,
+    split_flagged,
 )
 from movex_cdc_spark.session import inheriting_local_properties
 from movex_cdc_spark.sources.events import (
+    MULTIPLEX_EVENTS_SCHEMA,
     PAYLOAD_EVENTS_SCHEMA,
     parse_payload_events,
     read_events_stream,
@@ -48,35 +53,30 @@ from movex_cdc_spark.streaming.lineage import MetricsTable
 EPOCH_HISTORY = 1024
 
 
-class CdcStreamPipeline:
-    """``table`` is the LakeTable sink: small epochs append one delta
-    file, and a bucket is compacted by the merge that would exceed its
-    delta depth (lake/table.py)."""
+class _StreamShell:
+    """What both streaming pipelines share: the checkpointed
+    ``foreachBatch`` query, the quarantine and metrics tables, the
+    bounded lineage window, and the ONE per-table epoch apply
+    (``_apply_table``). Subclasses provide ``_apply``, the foreachBatch
+    function."""
 
     def __init__(
         self,
         spark: SparkSession,
-        table: LakeTable,
         events_dir: str,
         checkpoint_dir: str,
-        stream_id: str = "cdc",
-        dead_letter_dir: str | None = None,
-        metrics_dir: str | None = None,
-        condition_sql: str | None = None,
-        salted: bool = False,
-        max_files_per_trigger: int | None = None,
-        payload_format: bool = False,
-        config: "object | None" = None,
-        table_name: str | None = None,
-        unkeyed_log: "object | None" = None,
-        envelope_sink: "object | None" = None,
-        fs=None,
-        source_df: DataFrame | None = None,
+        stream_id: str,
+        dead_letter_dir: str | None,
+        metrics_dir: str | None,
+        max_files_per_trigger: int | None,
+        fs,
+        source_df: DataFrame | None,
+        source_schema,
     ):
         self.spark = spark
-        self.table = table
         self.events_dir = events_dir
-        # source_df: a pre-built STREAMING frame in the event schema
+        self.source_schema = source_schema
+        # source_df: a pre-built STREAMING frame in the source schema
         # replaces the file-source read — the seam a Kafka inbound
         # queue plugs into (sources/kafka.read_events_kafka); the
         # file source stays the default/test double. The checkpoint
@@ -93,149 +93,95 @@ class CdcStreamPipeline:
             DeadLetterTable(spark, dead_letter_dir, fs=fs) if dead_letter_dir else None
         )
         self.metrics = MetricsTable(spark, metrics_dir) if metrics_dir else None
-        self.condition_sql = condition_sql
-        self.salted = salted
         self.max_files_per_trigger = max_files_per_trigger
-        # payload_format: source rows are Event_Logs-shaped (msg_key +
-        # JSON payload); the event parse (from_json) runs first
-        self.payload_format = payload_format
-        # config-driven capture (reference: triggers compiled from table
-        # config, db_trigger_generator_oracle.rb:98-238). `config` is a
-        # config.table_config.EngineConfig; it is re-read EVERY batch, so
-        # swapping it between micro-batches (set_config) changes the
-        # captured columns/conditions/expressions mid-stream — the
-        # reference's trigger-regeneration-on-config-change story, with
-        # lake-table schema evolution as the ALTER-before-MERGE step.
-        self.config = config
-        self.table_name = table_name
-        # sink for key_handling='N' tables (S5): append-only, no merge
-        self.unkeyed_log = unkeyed_log
-        # outbound consumer stream (streaming/sink.py EnvelopeSink):
-        # every validated event is produced as an envelope, pre-LWW,
-        # exactly like the reference's Kafka producer
-        self.envelope_sink = envelope_sink
         # bounded lineage window (newest EPOCH_HISTORY records); the
         # durable copy is MetricsTable
         self.epochs: deque[dict[str, Any]] = deque(maxlen=EPOCH_HISTORY)
-        self._envelope_dl = None  # lazy; one instance, not one per epoch
+        self._side_dls: dict[str, DeadLetterTable] = {}
 
-    def set_config(self, config) -> None:
-        """Swap capture config between micro-batches (S12 import →
-        live reconfiguration)."""
-        self.config = config
-
-    def _table_cfg(self):
-        if self.config is None:
+    def _side_dead_letter(self, suffix: str) -> DeadLetterTable | None:
+        """The quarantine next to ``dead_letter`` for rows that are not
+        event-shaped (envelope rejects, untagged/unconfigured mux rows):
+        mixing them into the event dead letters would corrupt that
+        table's read schema. Built on first use and cached — per-epoch
+        construction re-read the log metadata every time. None when the
+        pipeline has no dead-letter dir."""
+        if self.dead_letter is None:
             return None
-        name = self.table_name or next(iter(self.config.tables))
-        return self.config.tables[name]
+        if suffix not in self._side_dls:
+            self._side_dls[suffix] = DeadLetterTable(
+                self.spark, self.dead_letter.path + suffix, fs=self.fs
+            )
+        return self._side_dls[suffix]
 
-    def _apply(self, batch_df, epoch_id: int) -> None:
-        from pyspark import StorageLevel
+    def _apply_table(
+        self,
+        sink,
+        events: DataFrame,
+        epoch_id: int,
+        stream_id: str,
+        cfg=None,
+        condition_sql: str | None = None,
+        envelope_sink=None,
+    ) -> dict[str, Any]:
+        """One table's epoch: flag → persist → (envelope emit from the
+        valid slice) → ``apply_batch_flagged`` into a LakeTable, or
+        ``apply_batch_unkeyed`` into an append log for
+        key_handling='N' → unpersist.
 
-        # NOTE (r8, measured and deliberately NOT adopted): an
-        # under-parallel micro-batch (one partition per source file)
-        # COULD be hash-repartitioned here before the parse (guide
-        # §2.5). In-process A/B at 4×1M-event epochs showed the raw-
-        # payload exchange (~200 MB/epoch) costs as much as or more
-        # than the added parse parallelism saves on this host (walls
-        # 22.4→34.1 s and 19.0→42.7 s ON vs OFF in adjacent runs) —
-        # the epoch is bandwidth-bound, not parse-bound. At production
-        # scale epochs have >= cores files anyway, so the fan-out
-        # would be a no-op exactly where it is safe.
-        if self.payload_format:
-            batch_df = parse_payload_events(batch_df)
-        # One-probe path (every keyed table without an envelope sink):
-        # run the whole disposition chain — condition filter (or the
-        # config's per-op conditions), no-op suppression, poison FLAG —
-        # inside the cache-building projection and drop old_content
-        # before the persist unless a config expression reads it. The
-        # JSON parse and the cache write then happen exactly once per
-        # micro-batch, the cache loses its biggest column (the old
-        # image), and the poison quarantine is a cheap flag-slice of the
-        # cache instead of a second full-parse scan. The envelope and
-        # unkeyed paths keep the full parsed cache: the envelope carries
-        # the old image.
-        cfg = self._table_cfg()
-        fast = self.envelope_sink is None and (cfg is None or cfg.key_handling != "N")
-        if fast:
-            batch_df = flag_dispositions(batch_df, self.condition_sql, cfg)
-        # MEMORY_AND_DISK: an oversized batch spills instead of
-        # GC-thrashing (measured +15% on the 4×1M-epoch bench; a
-        # MEMORY_ONLY cache of a 16M-row full backlog measured WORSE in
-        # round 1, which is why batch-replay callers of apply_batch on
-        # full backlogs do not persist).
-        batch_df = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
+        The disposition chain (condition filter or the config's per-op
+        conditions, no-op suppression, poison FLAG) runs inside the
+        cache-building projection, so the JSON parse and the cache
+        write happen exactly once; the cache keeps ``old_content`` only
+        for a config expression or the envelope. MEMORY_AND_DISK: an
+        oversized batch spills instead of GC-thrashing (measured +15% on
+        the 4×1M-epoch bench).
+
+        The apply functions are looked up in this module's globals at
+        call time, so a tracer that patches ``pipeline.apply_batch_*``
+        sees every call."""
+        unkeyed = cfg is not None and cfg.key_handling == "N"
+        if unkeyed and sink is None:
+            raise ValueError("key_handling='N' requires an unkeyed_log sink")
+        flagged = flag_dispositions(events, condition_sql, cfg, envelope_sink).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         try:
-            if fast:
-                lin = apply_batch_flagged(
-                    self.table,
-                    batch_df,
-                    epoch_id=epoch_id,
-                    stream_id=self.stream_id,
-                    dead_letter=self.dead_letter,
-                    metrics=self.metrics,
-                    table_cfg=cfg,
-                )
-                self.epochs.append(lin)
-            else:
-                self._apply_inner(batch_df, epoch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _apply_inner(self, batch_df, epoch_id: int) -> None:
-        cfg = self._table_cfg()
-        if self.envelope_sink is not None:
-            valid, _poison = _filter_validate_project(
-                batch_df, self.condition_sql, cfg
-            )
-            sink_lin = self.envelope_sink.emit(
-                valid, stream_id=self.stream_id, epoch_id=epoch_id
-            )
-            # pop UNCONDITIONALLY: with no dead-letter configured the
-            # record must not keep the rejected DataFrame (and its plan
-            # + checkpointed blocks) alive in driver memory
-            rejected_df = sink_lin.pop("rejected_df", None)
-            if rejected_df is not None and self.dead_letter is not None:
-                # envelope-shaped rejects get their own quarantine dir —
-                # mixing them into the event-shaped dead letters would
-                # corrupt that table's read schema. Constructed once and
-                # cached: per-epoch construction re-read the log
-                # metadata on every rejecting micro-batch
-                if self._envelope_dl is None:
-                    self._envelope_dl = DeadLetterTable(
-                        self.spark, self.dead_letter.path + "_envelope", fs=self.fs
+            if envelope_sink is not None:
+                # every validated event, projected and PRE-LWW, as an
+                # envelope (the reference producer)
+                valid, _poison = split_flagged(flagged)
+                if cfg is not None:
+                    valid = cfg.apply_projection(valid)
+                sink_lin = envelope_sink.emit(valid, stream_id=stream_id, epoch_id=epoch_id)
+                # pop UNCONDITIONALLY: with no dead-letter configured the
+                # lineage record must not keep the rejected DataFrame
+                # (and its plan + checkpointed blocks) alive
+                rejected_df = sink_lin.pop("rejected_df", None)
+                if rejected_df is not None and self.dead_letter is not None:
+                    self._side_dead_letter("_envelope").append(
+                        rejected_df, stream_id=f"{stream_id}-sink", epoch_id=epoch_id
                     )
-                self._envelope_dl.append(
-                    rejected_df,
-                    stream_id=f"{self.stream_id}-sink",
+            if unkeyed:
+                return apply_batch_unkeyed(
+                    sink,
+                    flagged,
                     epoch_id=epoch_id,
+                    stream_id=stream_id,
+                    table_cfg=cfg,
+                    dead_letter=self.dead_letter,
                 )
-        if cfg is not None and cfg.key_handling == "N":
-            if self.unkeyed_log is None:
-                raise ValueError("key_handling='N' requires an unkeyed_log sink")
-            lin = apply_batch_unkeyed(
-                self.unkeyed_log,
-                batch_df,
+            return apply_batch_flagged(
+                sink,
+                flagged,
                 epoch_id=epoch_id,
-                stream_id=self.stream_id,
-                condition_sql=self.condition_sql,
-                table_cfg=cfg,
-                dead_letter=self.dead_letter,
-            )
-        else:
-            lin = apply_batch(
-                self.table,
-                batch_df,
-                epoch_id=epoch_id,
-                stream_id=self.stream_id,
-                condition_sql=self.condition_sql,
-                salted=self.salted,
+                stream_id=stream_id,
                 dead_letter=self.dead_letter,
                 metrics=self.metrics,
                 table_cfg=cfg,
             )
-        self.epochs.append(lin)
+        finally:
+            flagged.unpersist()
 
     def start(self, available_now: bool = True, processing_time: str | None = None):
         stream = self.source_df
@@ -244,7 +190,7 @@ class CdcStreamPipeline:
                 self.spark,
                 self.events_dir,
                 self.max_files_per_trigger,
-                schema=PAYLOAD_EVENTS_SCHEMA if self.payload_format else None,
+                schema=self.source_schema,
             )
         w = (
             stream.writeStream.foreachBatch(self._apply)
@@ -273,7 +219,99 @@ class CdcStreamPipeline:
         return list(self.epochs)
 
 
-class MultiplexedCdcPipeline:
+class CdcStreamPipeline(_StreamShell):
+    """One table's stream. ``table`` is the LakeTable sink: small epochs
+    append one delta file, and a bucket is compacted by the merge that
+    would exceed its delta depth (lake/table.py).
+
+    ``salted`` is accepted and ignored: LWW runs inside the merge's
+    ``max_by`` aggregate, whose partial combine already bounds hot
+    keys, so there is no salted variant left to select."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        table: LakeTable,
+        events_dir: str,
+        checkpoint_dir: str,
+        stream_id: str = "cdc",
+        dead_letter_dir: str | None = None,
+        metrics_dir: str | None = None,
+        condition_sql: str | None = None,
+        salted: bool = False,
+        max_files_per_trigger: int | None = None,
+        payload_format: bool = False,
+        config: "object | None" = None,
+        table_name: str | None = None,
+        unkeyed_log: "object | None" = None,
+        envelope_sink: "object | None" = None,
+        fs=None,
+        source_df: DataFrame | None = None,
+    ):
+        super().__init__(spark, events_dir, checkpoint_dir, stream_id, dead_letter_dir,
+                         metrics_dir, max_files_per_trigger, fs, source_df,
+                         PAYLOAD_EVENTS_SCHEMA if payload_format else None)
+        self.table = table
+        self.condition_sql = condition_sql
+        # payload_format: source rows are Event_Logs-shaped (msg_key +
+        # JSON payload); the event parse (from_json) runs first
+        self.payload_format = payload_format
+        # config-driven capture (reference: triggers compiled from table
+        # config, db_trigger_generator_oracle.rb:98-238). `config` is a
+        # config.table_config.EngineConfig; it is re-read EVERY batch, so
+        # swapping it between micro-batches (set_config) changes the
+        # captured columns/conditions/expressions mid-stream — the
+        # reference's trigger-regeneration-on-config-change story, with
+        # lake-table schema evolution as the ALTER-before-MERGE step.
+        self.config = config
+        self.table_name = table_name
+        # sink for key_handling='N' tables (S5): append-only, no merge
+        self.unkeyed_log = unkeyed_log
+        # outbound consumer stream (streaming/sink.py EnvelopeSink):
+        # every validated event is produced as an envelope, pre-LWW,
+        # exactly like the reference's Kafka producer
+        self.envelope_sink = envelope_sink
+
+    def set_config(self, config) -> None:
+        """Swap capture config between micro-batches (S12 import →
+        live reconfiguration)."""
+        self.config = config
+
+    def _table_cfg(self):
+        if self.config is None:
+            return None
+        name = self.table_name or next(iter(self.config.tables))
+        return self.config.tables[name]
+
+    def _apply(self, batch_df, epoch_id: int) -> None:
+        # NOTE (r8, measured and deliberately NOT adopted): an
+        # under-parallel micro-batch (one partition per source file)
+        # COULD be hash-repartitioned here before the parse (guide
+        # §2.5). In-process A/B at 4×1M-event epochs showed the raw-
+        # payload exchange (~200 MB/epoch) costs as much as or more
+        # than the added parse parallelism saves on this host (walls
+        # 22.4→34.1 s and 19.0→42.7 s ON vs OFF in adjacent runs) —
+        # the epoch is bandwidth-bound, not parse-bound. At production
+        # scale epochs have >= cores files anyway, so the fan-out
+        # would be a no-op exactly where it is safe.
+        if self.payload_format:
+            batch_df = parse_payload_events(batch_df)
+        cfg = self._table_cfg()
+        unkeyed = cfg is not None and cfg.key_handling == "N"
+        self.epochs.append(
+            self._apply_table(
+                self.unkeyed_log if unkeyed else self.table,
+                batch_df,
+                epoch_id,
+                self.stream_id,
+                cfg,
+                condition_sql=self.condition_sql,
+                envelope_sink=self.envelope_sink,
+            )
+        )
+
+
+class MultiplexedCdcPipeline(_StreamShell):
     """ONE streaming query serving N configured tables — the
     reference's single Event_Logs queue with per-event Table_ID
     dispatch (transfer_thread.rb:390,566-587), vs. one
@@ -316,7 +354,6 @@ class MultiplexedCdcPipeline:
         stream_id: str = "cdc-mux",
         dead_letter_dir: str | None = None,
         metrics_dir: str | None = None,
-        salted: bool = False,
         max_files_per_trigger: int | None = None,
         dispatch_parallelism: int | None = None,
         fs=None,
@@ -325,22 +362,11 @@ class MultiplexedCdcPipeline:
         missing = [n for n in config.tables if n not in sinks]
         if missing:
             raise ValueError(f"no sink for configured tables: {missing}")
-        self.spark = spark
+        super().__init__(spark, events_dir, checkpoint_dir, stream_id, dead_letter_dir,
+                         metrics_dir, max_files_per_trigger, fs, source_df,
+                         MULTIPLEX_EVENTS_SCHEMA)
         self.config = config
         self.sinks = sinks
-        self.events_dir = events_dir
-        self.checkpoint_dir = checkpoint_dir
-        self.stream_id = stream_id
-        self.dead_letter = (
-            DeadLetterTable(spark, dead_letter_dir, fs=fs) if dead_letter_dir else None
-        )
-        self.metrics = MetricsTable(spark, metrics_dir) if metrics_dir else None
-        self.salted = salted
-        self.max_files_per_trigger = max_files_per_trigger
-        # same seam as CdcStreamPipeline.source_df: a pre-built
-        # streaming frame in MULTIPLEX_EVENTS_SCHEMA (e.g. a tagged
-        # Kafka inbound topic via sources/kafka) replaces the file read
-        self.source_df = source_df
         # concurrent per-table dispatch: each table's apply is a chain
         # of INDEPENDENT Spark jobs plus driver-side metadata IO
         # (listing, commit, fence JSON) against ITS OWN sink; running
@@ -352,14 +378,6 @@ class MultiplexedCdcPipeline:
         # UnkeyedEventLog.append). Measured: 8 tables × tiny epochs run
         # ~3× faster dispatched concurrently (bench.py --mux-ab).
         self.dispatch_parallelism = dispatch_parallelism
-        # bounded lineage window (newest EPOCH_HISTORY records); the
-        # durable copy is MetricsTable
-        self.epochs: deque[dict[str, Any]] = deque(maxlen=EPOCH_HISTORY)
-        self._fs = fs
-        # strays keep their own quarantine dir: they are queue-shaped
-        # (payload + table_name), not event-shaped — mixing them into
-        # the poison dead letters would corrupt that table's read schema
-        self._dispatch_dl = None
 
     def set_config(self, config) -> None:
         """Live config swap between micro-batches (S12) — adding a
@@ -385,18 +403,11 @@ class MultiplexedCdcPipeline:
         (stream_id=":reprocess", epoch_id=quarantine-log-version) in
         ITS OWN sink metadata, so a re-run of the same call no-ops the
         already-applied tables and only the rewrite re-runs."""
-        from movex_cdc_spark.sources.events import parse_payload_events
-
-        if self._dispatch_dl is None:
-            if self.dead_letter is None:
-                return {"reprocessed": 0, "remaining": 0, "tables": []}
-            self._dispatch_dl = DeadLetterTable(
-                self.spark, self.dead_letter.path + "_dispatch", fs=self._fs
-            )
-        df = self._dispatch_dl.read()
+        dispatch_dl = self._side_dead_letter("_dispatch")
+        df = dispatch_dl.read() if dispatch_dl is not None else None
         if df is None:
             return {"reprocessed": 0, "remaining": 0, "tables": []}
-        token = int(self._dispatch_dl.log.meta()["version"])
+        token = int(dispatch_dl.log.meta()["version"])
         # bounded probe: distinct tags <= configured tables + strays
         present = {
             r["table_name"] for r in df.select("table_name").distinct().collect()
@@ -415,20 +426,13 @@ class MultiplexedCdcPipeline:
         n_reprocessed = int(counts["heal"] or 0)
         n_remaining = int(counts["stay"] or 0)
         for name in healable:
-            cfg = self.config.tables[name]
-            sub = parse_payload_events(df.filter(F.col("table_name") == name))
-            stream = f"{self.stream_id}:{name}:reprocess"
-            if cfg.key_handling == "N":
-                apply_batch_unkeyed(
-                    self.sinks[name], sub, epoch_id=token, stream_id=stream,
-                    table_cfg=cfg, dead_letter=self.dead_letter,
-                )
-            else:
-                apply_batch(
-                    self.sinks[name], sub, epoch_id=token, stream_id=stream,
-                    salted=self.salted, dead_letter=self.dead_letter,
-                    metrics=self.metrics, table_cfg=cfg,
-                )
+            self._apply_table(
+                self.sinks[name],
+                parse_payload_events(df.filter(F.col("table_name") == name)),
+                token,
+                f"{self.stream_id}:{name}:reprocess",
+                self.config.tables[name],
+            )
         # NULL-tag rows must survive the rewrite: NULL.isin(...) is
         # NULL, and ~NULL filters the row out — an untagged row would
         # silently vanish from quarantine
@@ -440,7 +444,7 @@ class MultiplexedCdcPipeline:
             if healable
             else df
         )
-        self._dispatch_dl.replace(remaining)
+        dispatch_dl.replace(remaining)
         return {
             "reprocessed": n_reprocessed,
             "remaining": n_remaining,
@@ -448,10 +452,6 @@ class MultiplexedCdcPipeline:
         }
 
     def _apply(self, batch_df, epoch_id: int) -> None:
-        from pyspark import StorageLevel
-
-        from movex_cdc_spark.sources.events import parse_payload_events
-
         batch = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             # bounded probe: distinct tags ≤ configured tables + strays,
@@ -484,12 +484,9 @@ class MultiplexedCdcPipeline:
                 stray_pred = stray_pred | F.col("table_name").isNull()
             n_strays = 0
             if strays or has_null_tag:
-                if self.dead_letter is not None:
-                    if self._dispatch_dl is None:
-                        self._dispatch_dl = DeadLetterTable(
-                            self.spark, self.dead_letter.path + "_dispatch", fs=self._fs
-                        )
-                    n_strays = self._dispatch_dl.append(
+                dispatch_dl = self._side_dead_letter("_dispatch")
+                if dispatch_dl is not None:
+                    n_strays = dispatch_dl.append(
                         batch.filter(stray_pred).withColumn(
                             "error_msg",
                             F.when(
@@ -505,98 +502,34 @@ class MultiplexedCdcPipeline:
                     # the epoch lineage must say so — a silent
                     # n_strays=0 would hide the data loss
                     n_strays = batch.filter(stray_pred).count()
+
             def _dispatch_one(name: str, cfg) -> dict[str, Any]:
-                sub = parse_payload_events(
-                    batch.filter(F.col("table_name") == name)
-                )
                 # per-table stream id: the shared dead-letter log and
                 # metrics table fence on (stream_id, epoch_id), so N
                 # tables appending under ONE id would let the first
                 # table with poison fence out every other table's
                 # poison in the same epoch
-                tbl_stream_id = f"{self.stream_id}:{name}"
-                if cfg.key_handling == "N":
-                    return apply_batch_unkeyed(
-                        self.sinks[name],
-                        sub,
-                        epoch_id=epoch_id,
-                        stream_id=tbl_stream_id,
-                        table_cfg=cfg,
-                        dead_letter=self.dead_letter,
-                    )
-                # the table's flagged slice is its micro-batch cache,
-                # exactly as in CdcStreamPipeline: one probe job builds
-                # it, and the dead-letter append runs only on poison
-                flagged = flag_dispositions(sub, table_cfg=cfg).persist(
-                    StorageLevel.MEMORY_AND_DISK
+                return self._apply_table(
+                    self.sinks[name],
+                    parse_payload_events(batch.filter(F.col("table_name") == name)),
+                    epoch_id,
+                    f"{self.stream_id}:{name}",
+                    cfg,
                 )
-                try:
-                    return apply_batch_flagged(
-                        self.sinks[name],
-                        flagged,
-                        epoch_id=epoch_id,
-                        stream_id=tbl_stream_id,
-                        dead_letter=self.dead_letter,
-                        metrics=self.metrics,
-                        table_cfg=cfg,
-                    )
-                finally:
-                    flagged.unpersist()
 
             todo = [(n, c) for n, c in self.config.tables.items() if n in present]
             workers = self.dispatch_parallelism or min(len(todo), 8) or 1
-            per_table: dict[str, dict[str, Any]] = {}
-            if workers > 1 and len(todo) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                # table applies keep this batch's job group, so
-                # query.stop() cancels them
-                dispatch = inheriting_local_properties(self.spark, _dispatch_one)
-                with ThreadPoolExecutor(max_workers=workers) as pool:
-                    futures = {n: pool.submit(dispatch, n, c) for n, c in todo}
-                # deterministic config order in the lineage record; the
-                # first failure propagates and fails the epoch (replay
-                # re-runs every table; applied ones fence to no-ops)
-                for n, _c in todo:
-                    per_table[n] = futures[n].result()
-            else:
-                for n, c in todo:
-                    per_table[n] = _dispatch_one(n, c)
+            # table applies keep this batch's job group, so query.stop()
+            # cancels them
+            dispatch = inheriting_local_properties(self.spark, _dispatch_one)
+            with ThreadPoolExecutor(max_workers=workers) as pool:
+                futures = {n: pool.submit(dispatch, n, c) for n, c in todo}
+            # deterministic config order in the lineage record; the first
+            # failure propagates and fails the epoch (replay re-runs every
+            # table; applied ones fence to no-ops)
+            per_table = {n: futures[n].result() for n, _c in todo}
             self.epochs.append(
                 {"epoch_id": epoch_id, "tables": per_table, "n_strays": n_strays}
             )
         finally:
             batch.unpersist()
-
-    def start(self, available_now: bool = True, processing_time: str | None = None):
-        from movex_cdc_spark.sources.events import MULTIPLEX_EVENTS_SCHEMA
-
-        stream = self.source_df
-        if stream is None:
-            stream = read_events_stream(
-                self.spark,
-                self.events_dir,
-                self.max_files_per_trigger,
-                schema=MULTIPLEX_EVENTS_SCHEMA,
-            )
-        w = (
-            stream.writeStream.foreachBatch(self._apply)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(f"cdc-{self.stream_id}")
-        )
-        if available_now:
-            w = w.trigger(availableNow=True)
-        elif processing_time:
-            w = w.trigger(processingTime=processing_time)
-        return w.start()
-
-    def run_available_now(self, timeout_s: int = 600) -> list[dict[str, Any]]:
-        q = self.start(available_now=True)
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
-        if self.metrics is not None:
-            self.metrics.flush()
-        if q.exception():
-            raise q.exception()
-        return list(self.epochs)

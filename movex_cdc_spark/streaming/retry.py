@@ -52,22 +52,10 @@ class FinalErrorsTable:
 
     def __init__(self, spark: SparkSession, path: str, fs=None):
         from movex_cdc_spark.lake.append_log import UnkeyedEventLog
-        from movex_cdc_spark.lake.fs import DEFAULT_FS
 
         self.spark = spark
         self.path = path
-        fs = fs or DEFAULT_FS
-        try:
-            self.log = UnkeyedEventLog.load(spark, path, fs=fs)
-        except FileNotFoundError:
-            if fs.isdir(path) and any(
-                f.endswith(".parquet") for f in fs.listdir(path)
-            ):
-                raise ValueError(
-                    f"{path} holds parquet files but no log metadata — "
-                    "not re-initializing over existing final-error data"
-                )
-            self.log = UnkeyedEventLog.create(spark, path, fs=fs)
+        self.log = UnkeyedEventLog.open(spark, path, fs=fs)
 
     def append(self, df: DataFrame, fence_token: int) -> bool:
         """Append exhausted rows, fenced on the CALLER's monotone token

@@ -148,22 +148,7 @@ class EnvelopeSink:
         self.cloudevents = cloudevents
         self.legacy_ts_format = legacy_ts_format
         self.tz_offset = tz_offset
-        from movex_cdc_spark.lake.fs import DEFAULT_FS
-
-        fs = fs or DEFAULT_FS
-        try:
-            self.log = UnkeyedEventLog.load(spark, path, fs=fs)
-        except FileNotFoundError:
-            # create only a MISSING log — a dir with data but no _meta is
-            # a legacy/foreign store, and corrupt metadata must propagate
-            if fs.isdir(path) and any(
-                f.endswith(".parquet") for f in fs.listdir(path)
-            ):
-                raise ValueError(
-                    f"{path} holds parquet files but no log metadata — "
-                    "not re-initializing over existing emitted messages"
-                )
-            self.log = UnkeyedEventLog.create(spark, path, fs=fs)
+        self.log = UnkeyedEventLog.open(spark, path, fs=fs)
 
     # ------------------------------------------------------------ emit
     def emit(

@@ -13,7 +13,7 @@
         --dead-letter-dir /mnt/shared/dl/repo_files \\
         --metrics-dir /mnt/shared/metrics/repo_files \\
         --config      conf/capture.json \\
-        --payload-format --salted --buckets 4096
+        --payload-format --buckets 4096
 
 Storage contract: the lake/log METADATA layer commits through the
 filesystem seam (lake/fs.py). The default ``--fs local`` uses POSIX
@@ -55,7 +55,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--config", default=None, help="EngineConfig JSON path (capture config)")
     p.add_argument("--table-name", default=None, help="table entry in the config to apply")
     p.add_argument("--buckets", type=int, default=256, help="hash buckets for a NEW table")
-    p.add_argument("--salted", action="store_true", help="two-phase LWW for hot keys")
     p.add_argument("--payload-format", action="store_true",
                    help="source rows are Event_Logs-shaped (msg_key + JSON payload)")
     p.add_argument("--max-files-per-trigger", type=int, default=None)
@@ -206,7 +205,6 @@ def main(argv: list[str] | None = None) -> int:
         checkpoint_dir=args.checkpoint_dir,
         dead_letter_dir=args.dead_letter_dir,
         metrics_dir=args.metrics_dir,
-        salted=args.salted,
         max_files_per_trigger=args.max_files_per_trigger,
         payload_format=args.payload_format,
         config=config,

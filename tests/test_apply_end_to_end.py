@@ -41,9 +41,9 @@ def _assert_matches_oracle(t, base, ev):
     assert (merged["content_sha_e"] == merged["content_sha_o"]).all()
 
 
-@pytest.mark.parametrize("n_batches,salted", [(1, False), (4, False), (3, True)])
-def test_replay_matches_oracle(spark, tmp_lake, tmp_path, n_batches, salted):
-    p = GenParams(n_events=4000, hot_repo_share=0.5 if salted else 0.0)
+@pytest.mark.parametrize("n_batches,hot_keys", [(1, False), (4, False), (3, True)])
+def test_replay_matches_oracle(spark, tmp_lake, tmp_path, n_batches, hot_keys):
+    p = GenParams(n_events=4000, hot_repo_share=0.5 if hot_keys else 0.0)
     ev = generate_events(p)
     t, base = _bootstrap(spark, tmp_lake, p)
     dl = DeadLetterTable(spark, str(tmp_path / "dl"))
@@ -55,7 +55,6 @@ def test_replay_matches_oracle(spark, tmp_lake, tmp_path, n_batches, salted):
             t,
             spark.createDataFrame(chunk.drop(columns=["is_noop"])),
             epoch_id=i,
-            salted=salted,
             dead_letter=dl,
         )
     _assert_matches_oracle(t, base, ev)

@@ -7,9 +7,12 @@
   * LakeTable.merge(probe=...) (caller-supplied probe) produces the
     identical final state as the generic path, and
     the written-outside-touched guard still fails loudly on a lying
-    probe.
+    probe;
+  * a poison epoch that crashes in the dead-letter append or in the
+    table commit replays to one apply and one quarantine.
 """
 
+import os
 import time
 
 import pandas as pd
@@ -58,6 +61,9 @@ def test_clean_epoch_skips_dead_letter_write(spark, tmp_path):
     assert int(dl.log.meta()["version"]) == dl_v0
     assert t.current_version() > v0
     assert t.read().count() == 2
+    # its replay is fenced, and commits no (empty) dead-letter segment
+    assert apply_batch_flagged(t, clean, epoch_id=0, stream_id="s", dead_letter=dl)["skipped"]
+    assert int(dl.log.meta()["version"]) == dl_v0
 
 
 def test_poison_epoch_quarantines_exactly_once(spark, tmp_path):
@@ -181,3 +187,44 @@ def test_dl_append_s_times_the_append_not_the_commit(spark, tmp_path, monkeypatc
     assert lin["n_poison"] == 1
     assert lin["merge_latency_s"] > 1.0
     assert lin["timings"]["dl_append_s"] < 1.0
+
+
+def _snap_dirs(t):
+    data = os.path.join(t.path, "data")
+    return sorted(d for d in os.listdir(data) if d.startswith("snap-")) if os.path.isdir(data) else []
+
+
+@pytest.mark.parametrize("crash_at", ["dead_letter_append", "table_commit"])
+def test_poison_epoch_crash_windows_replay_exactly_once(spark, tmp_path, monkeypatch, crash_at):
+    """A poison epoch crashes (a) in the dead-letter append — the
+    ``pre_commit`` barrier aborts the staged snapshot — or (b) in the
+    table's metadata commit, after the dead letters committed. The
+    replay applies the epoch once and quarantines each poison row once."""
+    t = _mk(spark, tmp_path, "lake")
+    dl = DeadLetterTable(spark, str(tmp_path / "dl"))
+    v0, staged0 = t.current_version(), _snap_dirs(t)
+    flagged = _poison_epoch(spark)
+
+    def crash(*_a, **_k):
+        raise RuntimeError("injected crash")
+
+    owner = {"dead_letter_append": (DeadLetterTable, "append"),
+             "table_commit": (LakeTable, "_write_version")}[crash_at]
+    with monkeypatch.context() as mp:
+        mp.setattr(*owner, crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            apply_batch_flagged(t, flagged, epoch_id=0, stream_id="s", dead_letter=dl)
+    assert t.current_version() == v0
+    if crash_at == "dead_letter_append":
+        assert _snap_dirs(t) == staged0
+        assert dl.read() is None
+    else:
+        assert dl.read().count() == 1  # committed before the table
+
+    lin = apply_batch_flagged(t, flagged, epoch_id=0, stream_id="s", dead_letter=dl)
+    assert not lin.get("skipped")
+    assert [(r["repo"], r["path"]) for r in t.read().collect()] == [("r1", "p1")]
+    assert [r["seq"] for r in dl.read().collect()] == [2]
+    # a second replay is fenced on both sides
+    assert apply_batch_flagged(t, flagged, epoch_id=0, stream_id="s", dead_letter=dl)["skipped"]
+    assert dl.read().count() == 1

@@ -25,6 +25,7 @@ from movex_cdc_spark.operators.apply import (
     REPO_FILES_SCHEMA,
     apply_batch,
     apply_batch_unkeyed,
+    flag_dispositions,
 )
 from movex_cdc_spark.sources.events import read_events_batch, write_event_files
 from movex_cdc_spark.streaming.pipeline import CdcStreamPipeline
@@ -208,7 +209,14 @@ def test_unkeyed_append_path(spark, tmp_path):
     from movex_cdc_spark.operators.apply import DeadLetterTable
 
     n_poison = int((ev["content"].isna() & ev["op"].isin(["I", "U"])).sum())
-    assert DeadLetterTable(spark, str(tmp_path / "dl")).read().count() == n_poison
+    dead = DeadLetterTable(spark, str(tmp_path / "dl")).read()
+    assert dead.count() == n_poison
+    # the one poison rule diagnoses every quarantined row; the slim
+    # flagged cache keeps no old image for the dead letters
+    assert {r["error_msg"] for r in dead.select("error_msg").collect()} == {
+        "null content on insert/update"
+    }
+    assert dead.filter(F.col("old_content").isNotNull()).count() == 0
 
     # resume from the same checkpoint: nothing new, nothing duplicated
     pipe2 = CdcStreamPipeline(
@@ -225,15 +233,16 @@ def test_unkeyed_append_path(spark, tmp_path):
 
 def test_unkeyed_epoch_fence(spark, tmp_path):
     ev = generate_events(GenParams(n_events=500, seed=19, p_poison=0.0, p_filtered=0.0))
-    df = spark.createDataFrame(ev.drop(columns=["is_noop"]))
     log = UnkeyedEventLog.create(spark, str(tmp_path / "ulog"))
     cfg = repo_files_config().tables["repo_files"]
     cfg.key_handling = "N"
-    r1 = apply_batch_unkeyed(log, df, epoch_id=1, table_cfg=cfg)
+    flagged = flag_dispositions(spark.createDataFrame(ev.drop(columns=["is_noop"])),
+                                table_cfg=cfg)
+    r1 = apply_batch_unkeyed(log, flagged, epoch_id=1, table_cfg=cfg)
     n1 = log.read().count()
     assert not r1.get("skipped") and n1 > 0
     # replay of the same epoch is fenced — append is exactly-once
-    r2 = apply_batch_unkeyed(log, df, epoch_id=1, table_cfg=cfg)
+    r2 = apply_batch_unkeyed(log, flagged, epoch_id=1, table_cfg=cfg)
     assert r2.get("skipped")
     assert log.read().count() == n1
 
@@ -249,13 +258,15 @@ def test_unkeyed_clean_epoch_commits_no_dead_letter_version(spark, tmp_path):
     dl = DeadLetterTable(spark, str(tmp_path / "dl"))
     v0 = dl.log.meta()["version"]
     clean = generate_events(GenParams(n_events=400, seed=29, p_poison=0.0))
-    r = apply_batch_unkeyed(log, spark.createDataFrame(clean.drop(columns=["is_noop"])),
-                            epoch_id=1, table_cfg=cfg, dead_letter=dl)
+    flagged = flag_dispositions(spark.createDataFrame(clean.drop(columns=["is_noop"])),
+                                table_cfg=cfg)
+    r = apply_batch_unkeyed(log, flagged, epoch_id=1, table_cfg=cfg, dead_letter=dl)
     assert not r.get("skipped") and r["n_poison"] == 0
     assert dl.log.meta()["version"] == v0 and dl.read() is None
     dirty = generate_events(GenParams(n_events=400, seed=31, p_poison=0.05))
-    r = apply_batch_unkeyed(log, spark.createDataFrame(dirty.drop(columns=["is_noop"])),
-                            epoch_id=2, table_cfg=cfg, dead_letter=dl)
+    flagged = flag_dispositions(spark.createDataFrame(dirty.drop(columns=["is_noop"])),
+                                table_cfg=cfg)
+    r = apply_batch_unkeyed(log, flagged, epoch_id=2, table_cfg=cfg, dead_letter=dl)
     assert r["n_poison"] > 0 and dl.log.meta()["version"] > v0
     assert dl.read().count() == r["n_poison"]
 
@@ -297,10 +308,10 @@ def test_unkeyed_log_segment_compaction(spark, tmp_path):
     """Small-files housekeeping on the append log: many per-epoch
     segments rewritten into few files, same rows, fences preserved."""
     ev = generate_events(GenParams(n_events=600, seed=47, p_poison=0.0, p_filtered=0.0))
-    df = spark.createDataFrame(ev.drop(columns=["is_noop"]))
     log = UnkeyedEventLog.create(spark, str(tmp_path / "ulog"))
     cfg = repo_files_config().tables["repo_files"]
     cfg.key_handling = "N"
+    df = flag_dispositions(spark.createDataFrame(ev.drop(columns=["is_noop"])), table_cfg=cfg)
     for i in range(8):
         apply_batch_unkeyed(log, df.filter(F.pmod(F.col("seq"), F.lit(8)) == i),
                             epoch_id=i, table_cfg=cfg)

@@ -7,8 +7,9 @@ from pyspark.sql import functions as F
 from movex_cdc_spark.config.table_config import repo_files_config
 from movex_cdc_spark.datagen import GenParams, generate_events
 from movex_cdc_spark.lake.table import LakeTable
-from movex_cdc_spark.operators.apply import KEY_COLS, REPO_FILES_SCHEMA
+from movex_cdc_spark.operators.apply import KEY_COLS, REPO_FILES_SCHEMA, DeadLetterTable
 from movex_cdc_spark.sources.events import write_event_files
+from movex_cdc_spark.streaming.lineage import MetricsTable
 from movex_cdc_spark.streaming.pipeline import CdcStreamPipeline
 from movex_cdc_spark.streaming.sink import EnvelopeSink
 
@@ -64,6 +65,7 @@ def test_pipeline_with_envelope_sink(spark, tmp_path):
         events_dir=str(tmp_path / "events"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         dead_letter_dir=str(tmp_path / "dl"),
+        metrics_dir=str(tmp_path / "metrics"),
         config=repo_files_config(),
         envelope_sink=sink,
         max_files_per_trigger=1,
@@ -84,6 +86,16 @@ def test_pipeline_with_envelope_sink(spark, tmp_path):
     a = sink.audit()
     assert a["messages"] == len(valid)
     assert a["keys"] == valid.groupby(["repo", "path"]).ngroups
+    # the keyed apply shares the envelope's flagged cache: its counters
+    # ride the one probe (valid events, pre-LWW) ...
+    rows = MetricsTable(spark, str(tmp_path / "metrics")).read().collect()
+    assert rows and all(r["counter_scope"] == "valid_events_pre_dedup" for r in rows)
+    # ... and its dead letters are exactly the planted poison, each
+    # diagnosed by the one poison rule
+    planted = ev[ev["content"].isna() & ev["op"].isin(["I", "U"])]
+    dead = DeadLetterTable(spark, str(tmp_path / "dl")).read().collect()
+    assert sorted(r["seq"] for r in dead) == sorted(planted["seq"])
+    assert {r["error_msg"] for r in dead} == {"null content on insert/update"}
 
 
 def test_legacy_timestamp_modes_format_and_validate(spark, tmp_path):

@@ -3,10 +3,11 @@
 import pandas as pd
 
 from movex_cdc_spark.datagen import EXCLUDE_MARKER
+from movex_cdc_spark.operators.apply import POISON_FLAG, flag_dispositions, split_flagged
 from movex_cdc_spark.operators.filters import (
     condition_filter,
     default_exclude_condition,
-    split_poison,
+    poison_predicate,
     suppress_noop_updates,
 )
 
@@ -55,16 +56,19 @@ def test_split_poison(spark):
             (4, "r", "d", "ok", None, "I"),
         ],
     )
-    valid, poison = split_poison(df)
+    # the split alone (flag_dispositions' no-op check would drop seq 2,
+    # an update whose NULL content equals its NULL old image)
+    valid, poison = split_flagged(df.withColumn(POISON_FLAG, poison_predicate()))
     assert sorted(r["seq"] for r in valid.collect()) == [3, 4]
     assert sorted(r["seq"] for r in poison.collect()) == [1, 2]
     assert "error_msg" in poison.columns
+    assert POISON_FLAG not in valid.columns + poison.columns
 
 
 def test_null_op_rows_survive_noop_suppression_to_quarantine(spark):
     """Regression: a malformed wire record parses all-null; NULL op made
     is_noop NULL (NULL AND TRUE) and filter(~NULL) silently dropped the
-    row BEFORE split_poison ever saw it. Only a definite no-op may be
+    row BEFORE the poison flag ever saw it. Only a definite no-op may be
     suppressed — undecidable rows must continue to the poison split."""
     df = _df(
         spark,
@@ -75,7 +79,7 @@ def test_null_op_rows_survive_noop_suppression_to_quarantine(spark):
     )
     kept = suppress_noop_updates(df)
     assert sorted(r["seq"] for r in kept.select("seq").collect()) == [1, 2]
-    valid, poison = split_poison(kept)
+    valid, poison = split_flagged(flag_dispositions(df))
     assert [r["seq"] for r in valid.collect()] == [1]
     p = poison.collect()
     assert len(p) == 1 and p[0]["error_msg"] == "unknown operation"
@@ -83,10 +87,8 @@ def test_null_op_rows_survive_noop_suppression_to_quarantine(spark):
 
 def test_flagged_fast_path_diagnoses_unknown_op(spark):
     """Regression: split_flagged stamped EVERY poison row 'null content
-    on insert/update'; unknown-op rows must carry the same diagnosis
-    split_poison gives them, on both the batch and streaming paths."""
-    from movex_cdc_spark.operators.apply import flag_dispositions, split_flagged
-
+    on insert/update'; unknown-op rows must carry their own diagnosis.
+    Batch and streaming paths share this split."""
     df = _df(
         spark,
         [
@@ -111,7 +113,6 @@ def test_custom_condition_passes_malformed_rows_to_quarantine(spark):
     default), a malformed row makes the predicate NULL and three-valued
     logic dropped it before the poison split. Poison-shaped rows must
     bypass the condition on both the single- and per-op paths."""
-    from movex_cdc_spark.operators.apply import flag_dispositions, split_flagged
     from movex_cdc_spark.operators.filters import per_op_condition_filter
 
     df = _df(

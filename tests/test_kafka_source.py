@@ -87,11 +87,11 @@ def test_malformed_record_flows_to_poison_split(spark):
         [(k, v, "events", 0, i, None, 0) for i, (k, v) in enumerate(rows)],
         KAFKA_SOURCE_SCHEMA,
     )
-    from movex_cdc_spark.operators.filters import split_poison
+    from movex_cdc_spark.operators.apply import flag_dispositions, split_flagged
     from movex_cdc_spark.sources.events import parse_payload_events
 
     parsed = parse_payload_events(parse_queue_wire(wire))
-    valid, poison = split_poison(parsed)
+    valid, poison = split_flagged(flag_dispositions(parsed))
     vrows = valid.collect()
     assert [r["seq"] for r in vrows] == [1]
     assert vrows[0]["content"] == "x"

@@ -42,9 +42,9 @@ def test_malformed_payload_quarantined(spark):
         pd.DataFrame(rows, columns=["seq", "op", "msg_key", "payload"])
     ).withColumn("ts", F.current_timestamp()).withColumn("txid", F.lit(0).cast("long"))
     parsed = parse_payload_events(df.select([f.name for f in PAYLOAD_EVENTS_SCHEMA.fields]))
-    from movex_cdc_spark.operators.filters import split_poison
+    from movex_cdc_spark.operators.apply import flag_dispositions, split_flagged
 
-    valid, poison = split_poison(parsed)
+    valid, poison = split_flagged(flag_dispositions(parsed))
     assert [r["seq"] for r in valid.collect()] == [1]
     assert [r["seq"] for r in poison.collect()] == [2]
 
