@@ -8,19 +8,18 @@ no LWW collapse, no MERGE — each valid event is appended once.
 
 Scale shape: an append is one parquet write of the batch, zero shuffle,
 zero rewrite of existing data — O(batch), never O(table). Exactly-once
-comes from the same metadata-pointer protocol as LakeTable: the file
-list and the per-stream epoch fence are committed in one atomic
-``os.replace`` of the ``_current`` pointer. Segment directories are
-uuid-named, so a crash BETWEEN the parquet write and the metadata
-commit leaves only an orphan dir that no listing ever references —
-the replayed epoch writes a fresh dir and commits normally (a
-version-derived name would collide with the orphan and wedge the log).
+comes from the commit protocol LakeTable uses too (``lake/versioned.py``):
+the file list and the per-stream epoch fence are committed in one
+atomic swap of the ``_current`` pointer, and each segment is a
+uuid-named ``seg-{version}-{uuid}`` staging dir, so a crash BETWEEN the
+parquet write and the metadata commit leaves only an orphan dir that no
+listing ever references.
 
-Schema evolution mirrors LakeTable.evolve_schema: the committed read
-schema is the add-only UNION of every appended batch (widenable
-primitives widen — Spark 4's parquet readers promote int32->long /
-float->double at scan time); an incompatible type change raises
-instead of silently corrupting older segments.
+The committed read schema is the add-only ``union_schema``
+(versioned.py) of every appended batch: widenable primitives widen —
+Spark 4's parquet readers promote int32->long / float->double at scan
+time — and an incompatible type change raises instead of silently
+corrupting older segments.
 
 Compaction (small-files housekeeping) swaps the listing atomically and
 RETAINS the old segment dirs: a concurrent reader that planned a scan
@@ -31,93 +30,32 @@ LakeTable.expire_snapshots.
 
 from __future__ import annotations
 
-import json
 import os
 import time
-import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from movex_cdc_spark.lake.fs import DEFAULT_FS
-from movex_cdc_spark.lake.table import _WIDEN
+from movex_cdc_spark.lake.versioned import CommitConflict, VersionedStore, union_schema
 
 
-def _union_schema(cur: dict | None, batch: T.StructType) -> dict:
-    """Add-only union of the committed schema and a batch schema, with
-    Iceberg-compatible primitive widening; incompatible changes raise."""
-    if cur is None:
+def _union(m: dict[str, Any], batch: T.StructType) -> dict:
+    """The committed schema of ``m`` unioned with ``batch``, as metadata
+    JSON; the first append's schema is the batch's own, all-null
+    columns included."""
+    if not m.get("schema"):
         return batch.jsonValue()
-    have = T.StructType.fromJson(cur)
-    by_name = {f.name: f for f in have.fields}
-    for f in batch.fields:
-        if isinstance(f.dataType, T.NullType):
-            continue  # all-null column carries no type information
-        if f.name not in by_name:
-            by_name[f.name] = T.StructField(f.name, f.dataType, True)
-        else:
-            old = by_name[f.name].dataType
-            new = f.dataType
-            if old != new:
-                if (old.typeName(), new.typeName()) in _WIDEN:
-                    by_name[f.name] = T.StructField(f.name, new, True)
-                elif (new.typeName(), old.typeName()) in _WIDEN:
-                    pass  # batch is narrower; the reader widens at scan
-                else:
-                    raise ValueError(
-                        f"incompatible append-log type change for {f.name}: {old} -> {new}"
-                    )
-    ordered = [by_name[f.name] for f in have.fields] + [
-        by_name[f.name] for f in batch.fields if f.name not in {g.name for g in have.fields}
-    ]
-    return T.StructType(ordered).jsonValue()
+    return union_schema(T.StructType.fromJson(m["schema"]), batch)[0].jsonValue()
 
 
-class UnkeyedEventLog:
-    def __init__(self, spark: SparkSession, path: str, fs=None):
-        self.spark = spark
-        self.path = path
-        # metadata/commit IO through the fs seam (lake/fs.py); data
-        # files are Spark reads/writes, already scheme-portable
-        self.fs = fs or DEFAULT_FS
-        self.meta_dir = os.path.join(path, "_meta")
-
+class UnkeyedEventLog(VersionedStore):
+    # commit, fence, create and staging: lake/versioned.py
     @classmethod
     def create(cls, spark: SparkSession, path: str, fs=None) -> "UnkeyedEventLog":
         log = cls(spark, path, fs=fs)
-        # creation lock = the exclusive v0 commit, not the dir (see
-        # LakeTable.create: a crashed create must be re-runnable)
-        log.fs.makedirs(log.meta_dir, exist_ok=True)
-        meta0 = {"version": 0, "files": [], "epochs": {}, "schema": None, "retired": []}
-        try:
-            log._write_version(meta0)
-        except FileExistsError:
-            if log.fs.exists(os.path.join(log.meta_dir, "_current")):
-                raise FileExistsError(f"log already exists at {path}") from None
-            # crashed OR concurrent create: tolerate the other creator
-            # winning the remove/redo races (see LakeTable.create —
-            # first committed v0 wins, differing payloads undefined)
-            try:
-                log.fs.remove(os.path.join(log.meta_dir, "v0.json"))
-            except FileNotFoundError:
-                pass
-            try:
-                log._write_version(meta0)
-            except FileExistsError:
-                if log.fs.exists(os.path.join(log.meta_dir, "_current")):
-                    raise FileExistsError(
-                        f"log already exists at {path}"
-                    ) from None
-                raise FileExistsError(
-                    f"concurrent create in progress at {path}"
-                ) from None
-        return log
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str, fs=None) -> "UnkeyedEventLog":
-        log = cls(spark, path, fs=fs)
-        log.meta()  # raises if missing
+        log._create({"version": 0, "files": [], "epochs": {}, "schema": None, "retired": []})
         return log
 
     @classmethod
@@ -138,35 +76,10 @@ class UnkeyedEventLog:
                 )
             return cls.create(spark, path, fs=fs)
 
-    # ------------------------------------------------------- metadata
-    def meta(self) -> dict[str, Any]:
-        v = int(self.fs.read_text(os.path.join(self.meta_dir, "_current")).strip())
-        return json.loads(self.fs.read_text(os.path.join(self.meta_dir, f"v{v}.json")))
-
-    def meta_at(self, version: int) -> dict[str, Any]:
-        """Historical metadata (version JSONs are never deleted —
-        expire_segments reaps DATA dirs only). Raises FileNotFoundError
-        for a version that never committed."""
-        return json.loads(
-            self.fs.read_text(os.path.join(self.meta_dir, f"v{version}.json"))
-        )
-
-    def _write_version(self, meta: dict[str, Any]) -> None:
-        v = meta["version"]
-        # exclusive-create = commit lock; replace_text = atomic pointer
-        # swap (cluster mappings documented in lake/fs.py)
-        self.fs.create_exclusive_text(
-            os.path.join(self.meta_dir, f"v{v}.json"), json.dumps(meta)
-        )
-        self.fs.replace_text(os.path.join(self.meta_dir, "_current"), str(v))
-
     def _write_segment(self, batch: DataFrame, new_version: int) -> list[str]:
-        """Write one uuid-named segment dir; returns the relative file
-        list. The uuid makes a crash-replayed epoch rewrite a FRESH dir
-        (the orphan from the crashed attempt is never listed)."""
-        seg_rel = f"seg-{new_version}-{uuid.uuid4().hex[:8]}"
-        seg_dir = os.path.join(self.path, seg_rel)
-        batch.write.parquet(seg_dir, mode="errorifexists")
+        """Write one uuid-named segment dir (``_stage``); returns the
+        relative file list."""
+        seg_rel, seg_dir = self._stage(batch.write, "seg", new_version)
         return [
             os.path.join(seg_rel, f)
             for f in sorted(self.fs.listdir(seg_dir))
@@ -193,23 +106,16 @@ class UnkeyedEventLog:
         contract). The uuid-named segment of a fenced-out loser is
         never listed, i.e. invisible, same as a crash orphan."""
         m = self.meta()
-        if epoch_id is not None:
-            last = m["epochs"].get(stream_id)
-            if last is not None and epoch_id <= last:
-                return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
+        if self.fenced(m, stream_id, epoch_id):
+            return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
         files = self._write_segment(batch, m["version"] + 1)
         for _attempt in range(max_attempts):
-            new_version = m["version"] + 1
-            m2 = dict(m)
-            m2["version"] = new_version
-            m2["files"] = list(m["files"]) + files
-            m2["epochs"] = dict(m["epochs"])
-            if epoch_id is not None:
-                m2["epochs"][stream_id] = epoch_id
-            m2["schema"] = _union_schema(m.get("schema"), batch.schema)
+            m2 = self._next(
+                m, stream_id, epoch_id, files=m["files"] + files, schema=_union(m, batch.schema)
+            )
             try:
                 self._write_version(m2)
-            except FileExistsError:
+            except CommitConflict:
                 # the winner's commit is two steps (exclusive-create
                 # version file, then _current swap); a zero-backoff spin
                 # can burn every attempt re-reading the STALE _current
@@ -218,15 +124,12 @@ class UnkeyedEventLog:
                 # second step lands within a few retries.
                 time.sleep(0.001 * (_attempt + 1))
                 m = self.meta()  # lost the version race: rebase and retry
-                if epoch_id is not None:
-                    last = m["epochs"].get(stream_id)
-                    if last is not None and epoch_id <= last:
-                        # a concurrent replay of OUR epoch won instead
-                        return {"skipped": True, "stream_id": stream_id,
-                                "epoch_id": epoch_id}
+                if self.fenced(m, stream_id, epoch_id):
+                    # a concurrent replay of OUR epoch won instead
+                    return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
                 continue
             return {
-                "version": new_version,
+                "version": m2["version"],
                 "stream_id": stream_id,
                 "epoch_id": epoch_id,
                 "files_added": len(files),
@@ -236,37 +139,16 @@ class UnkeyedEventLog:
         )
 
     # -------------------------------------------------------- rewrite
-    def _swap_listing(
-        self,
-        m: dict,
-        new_files: list[str],
-        schema: dict,
-        extra: dict[str, Any] | None = None,
-    ) -> dict[str, Any]:
+    def _swap_listing(self, m: dict, new_files: list[str], schema: dict) -> dict[str, Any]:
         """Commit a full-listing swap: the old segments become RETIRED
         (still on disk for in-flight readers) and are reaped later by
-        expire_segments — never deleted inside the commit. ``extra``
-        merges additional metadata keys into the SAME atomic commit
-        (e.g. the MoR delta's row counter reset)."""
-        old_dirs = sorted({f.split(os.sep, 1)[0] for f in m["files"]})
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["files"] = new_files
-        m2["schema"] = schema
-        m2["retired"] = list(m.get("retired", [])) + [
-            {"dir": d, "at_version": m2["version"]} for d in old_dirs
+        expire_segments — never deleted inside the commit."""
+        v = m["version"] + 1
+        retired = list(m.get("retired", [])) + [
+            {"dir": d, "at_version": v} for d in sorted({f.split(os.sep, 1)[0] for f in m["files"]})
         ]
-        # durable swap marker for incremental readers: retired records
-        # are PRUNED by expire_segments, so a changes() consumer lagging
-        # past the retention window would otherwise stop seeing the swap
-        # and compute a silently-wrong diff (the COW table's
-        # last_overwrite_version, same role)
-        m2["last_swap_version"] = m2["version"]
-        if extra:
-            m2.update(extra)
-        self._write_version(m2)
-        return {"version": m2["version"], "files_before": len(m["files"]),
-                "files_after": len(new_files)}
+        self._write_version(self._next(m, files=new_files, schema=schema, retired=retired))
+        return {"version": v, "files_before": len(m["files"]), "files_after": len(new_files)}
 
     def replace(self, df: DataFrame) -> dict[str, Any]:
         """Replace the whole log content in one atomic commit (the
@@ -275,7 +157,7 @@ class UnkeyedEventLog:
         old or the new listing, never a partial state."""
         m = self.meta()
         files = self._write_segment(df, m["version"] + 1)
-        return self._swap_listing(m, files, _union_schema(m.get("schema"), df.schema))
+        return self._swap_listing(m, files, _union(m, df.schema))
 
     def compact_segments(self, target_files: int = 4) -> dict[str, Any]:
         """Small-files housekeeping (the sink-side ST8): a long-running
@@ -285,8 +167,7 @@ class UnkeyedEventLog:
         m = self.meta()
         if len(m["files"]) <= target_files:
             return {"skipped": True, "files": len(m["files"])}
-        new_version = m["version"] + 1
-        files = self._write_segment(self.read().coalesce(target_files), new_version)
+        files = self._write_segment(self.read().coalesce(target_files), m["version"] + 1)
         return self._swap_listing(m, files, m.get("schema"))
 
     def _dir_age_s(self, seg_dir: str) -> float:
@@ -377,14 +258,10 @@ class UnkeyedEventLog:
             return removed
         keep = [r for r in m.get("retired", []) if r["dir"] not in reaped_dirs]
         for _attempt in range(max_attempts):
-            m2 = dict(m)
-            m2["version"] = m["version"] + 1
-            m2["retired"] = keep
-            m2["orphans_seen"] = new_seen
             try:
-                self._write_version(m2)
+                self._write_version(self._next(m, retired=keep, orphans_seen=new_seen))
                 return removed
-            except FileExistsError:
+            except CommitConflict:
                 time.sleep(0.001 * (_attempt + 1))
                 m = self.meta()  # lost the version race: rebase
                 keep = [

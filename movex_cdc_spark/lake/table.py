@@ -4,14 +4,12 @@ This is the engine's sink — the role Iceberg ``MERGE INTO`` plays in
 the north rule. The sandbox ships no Iceberg runtime jar, so the table
 format is implemented here with the same contract Iceberg gives us:
 
-  * **atomic snapshot commit** — a new metadata JSON is staged and the
-    current-version pointer swapped atomically (Iceberg's atomic
-    metadata swap); readers only ever see a committed version. All
-    metadata/commit IO goes through the filesystem seam in
-    ``lake/fs.py`` — LocalFS (POSIX os.replace / O_EXCL) here, with a
-    documented 1:1 mapping onto HDFS rename / S3 conditional PUT for
-    cluster deployment; data files are Spark-side IO and already
-    scheme-portable.
+  * **atomic snapshot commit** — a new metadata JSON is committed and
+    the current-version pointer swapped atomically (Iceberg's atomic
+    metadata swap); readers only ever see a committed version. The
+    protocol (commit lock, pointer swap through the ``lake/fs.py``
+    seam, crash-redo create, uuid-named staging) is
+    ``lake/versioned.py``, shared with the append log.
   * **per-bucket file lists** — the table is hash-bucketed on its key
     columns, and the metadata names, per bucket, a BASE file (one row
     per key, written by a copy-on-write merge under
@@ -36,16 +34,14 @@ format is implemented here with the same contract Iceberg gives us:
     tie, and a base row with a NULL ``last_seq`` loses to every other
     row. A read of bucket *b* folds exactly the files *b*'s list names;
     buckets without deltas are read as-is.
-  * **epoch-id fencing in the same commit** — the metadata records, per
-    stream id, the last applied epoch. A ``foreachBatch`` retry of an
-    already-applied epoch is a no-op, because the fence check and the
-    data swap are the same atomic pointer move (exactly-once; the
-    reference's analogous hazard window is Kafka-commit-then-DB-delete,
-    transfer_thread.rb:68-80,171-177). Both write arms commit this way.
+  * **epoch-id fencing in the same commit** — the per-stream epoch
+    fence of ``lake/versioned.py`` moves with the data swap, so a
+    ``foreachBatch`` retry of an already-applied epoch is a no-op. Both
+    write arms commit this way.
   * **schema evolution** — column adds and int→long / float→double
-    widening recorded per snapshot; old files are read with the new
-    schema (missing columns → null), the Iceberg ALTER-before-MERGE
-    analog.
+    widening (``union_schema``, versioned.py) recorded per snapshot;
+    old files are read with the new schema (missing columns → null),
+    the Iceberg ALTER-before-MERGE analog.
   * **time travel** — any committed version can be read back.
   * **tombstones** — deletes keep ``(key, last_seq, deleted=true)`` so
     a late event with a LOWER seq can never resurrect a deleted row,
@@ -58,19 +54,17 @@ deliberately small so that swap is mechanical.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import time
-import uuid
 from functools import reduce
 from typing import Any
 
-from pyspark.sql import DataFrame, DataFrameWriter, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from movex_cdc_spark.lake.fs import DEFAULT_FS
+from movex_cdc_spark.lake.versioned import CommitConflict, VersionedStore, union_schema
 
 BUCKET_COL = "__bucket"
 PART_COL = "__bucket_part"  # duplicated for partitionBy (dir layout)
@@ -79,6 +73,8 @@ DELETED_COL = "deleted"
 _RANK = "__rank"  # fold tie-break between rows of equal seq (module docstring)
 # rank of a base row with a NULL last_seq: below every delta and batch row
 _NULL_BASE_RANK = -(1 << 62)
+_SNAP = os.path.join("data", "snap")  # staged snapshot dirs: data/snap-{v}-{uuid}
+_BOOKKEEPING = [T.StructField(SEQ_COL, T.LongType()), T.StructField(DELETED_COL, T.BooleanType())]
 
 # Delta files a bucket may hold before a merge touching it compacts it
 # (runs the copy-on-write arm). Measured on this table with
@@ -95,14 +91,6 @@ _NULL_BASE_RANK = -(1 << 62)
 # the cheaper one.
 MAX_DELTA_DEPTH = 4
 
-# widenings allowed without rewriting data files (Iceberg-compatible set)
-_WIDEN: dict[tuple[str, str], str] = {
-    ("integer", "long"): "long",
-    ("float", "double"): "double",
-    ("integer", "double"): "double",
-    ("date", "timestamp"): "timestamp",
-}
-
 
 def _is_delta(rel: str) -> bool:
     """A delta file sits directly under its snapshot dir; base files
@@ -112,6 +100,14 @@ def _is_delta(rel: str) -> bool:
 
 def _depth(files: list[str]) -> int:
     return sum(map(_is_delta, files))
+
+
+def _payload(m: dict[str, Any]) -> T.StructType:
+    """The payload schema of metadata ``m``: its schema without the
+    ``last_seq``/``deleted`` bookkeeping columns."""
+    return T.StructType([
+        f for f in T.StructType.fromJson(m["schema"]).fields if f.name not in (SEQ_COL, DELETED_COL)
+    ])
 
 
 def _file_version(rel: str) -> int:
@@ -139,19 +135,9 @@ def _diverged(extra, touched) -> str:
     )
 
 
-class CommitConflict(Exception):
-    """Another writer committed this version first — reread and retry."""
-
-
-class LakeTable:
-    def __init__(self, spark: SparkSession, path: str, fs=None):
-        self.spark = spark
-        self.path = path
-        # all metadata/commit IO goes through the fs seam (lake/fs.py);
-        # DATA files are Spark reads/writes, already scheme-portable
-        self.fs = fs or DEFAULT_FS
-        self.meta_dir = os.path.join(path, "_meta")
-        self.data_dir = os.path.join(path, "data")
+class LakeTable(VersionedStore):
+    # commit, fence, create and staging: lake/versioned.py
+    data_dir = property(lambda self: os.path.join(self.path, "data"))
 
     # ---------------------------------------------------------- create
     @classmethod
@@ -168,97 +154,23 @@ class LakeTable:
         columns included); ``last_seq``/``deleted`` bookkeeping columns
         are added automatically."""
         t = cls(spark, path, fs=fs)
-        # exist_ok: the REAL creation lock is the exclusive v0 commit
-        # below, not the dir — makedirs(exist_ok=False) left a crash
-        # window (dir created, v0 never committed) after which every
-        # re-create failed on the empty _meta dir forever
-        t.fs.makedirs(t.meta_dir, exist_ok=True)
         t.fs.makedirs(t.data_dir, exist_ok=True)
-        full = T.StructType(
-            list(schema.fields)
-            + [T.StructField(SEQ_COL, T.LongType()), T.StructField(DELETED_COL, T.BooleanType())]
-        )
-        meta = {
+        t._create({
             "version": 0,
             "parent": None,
-            "schema": full.jsonValue(),
+            "schema": T.StructType(schema.fields + _BOOKKEEPING).jsonValue(),
             "key_cols": key_cols,
             "n_buckets": n_buckets,
             "buckets": {},  # bucket id (str) -> base file(s), then deltas oldest first
             "epochs": {},  # stream_id -> last applied epoch id
             "lineage": [],
             "stats": {"rows_live": 0, "rows_total": 0},
-        }
-        try:
-            t._write_version(meta)
-        except CommitConflict:
-            # v0 exists: a LIVE table (committed _current pointer) must
-            # be refused; a create that crashed between the v0 write
-            # and the pointer swap left a possibly-partial v0 no reader
-            # ever saw — drop it and redo the exclusive commit.
-            # Concurrent create: two creators that both see no _current
-            # can each reach this arm; the remove may then lose a race
-            # with the other's remove (tolerated) and the redo may lose
-            # the v0 commit to the other's redo (surfaces as
-            # FileExistsError once its pointer lands). First committed
-            # v0 wins; concurrent create with DIFFERING schemas is
-            # undefined — the surviving v0 is whichever creator won.
-            if t.fs.exists(os.path.join(t.meta_dir, "_current")):
-                raise FileExistsError(f"table already exists at {path}") from None
-            try:
-                t.fs.remove(os.path.join(t.meta_dir, "v0.json"))
-            except FileNotFoundError:
-                pass  # the concurrent creator already removed it
-            try:
-                t._write_version(meta)
-            except CommitConflict:
-                if t.fs.exists(os.path.join(t.meta_dir, "_current")):
-                    raise FileExistsError(
-                        f"table already exists at {path}"
-                    ) from None
-                # the other creator committed v0 but hasn't swapped the
-                # pointer yet — its swap is imminent; refuse as exists
-                raise FileExistsError(
-                    f"concurrent create in progress at {path}"
-                ) from None
-        return t
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str, fs=None) -> "LakeTable":
-        t = cls(spark, path, fs=fs)
-        t.current_version()  # raises if missing
+        })
         return t
 
     # ------------------------------------------------------- metadata
-    def current_version(self) -> int:
-        return int(self.fs.read_text(os.path.join(self.meta_dir, "_current")).strip())
-
-    def meta(self, version: int | None = None) -> dict[str, Any]:
-        v = self.current_version() if version is None else version
-        return json.loads(self.fs.read_text(os.path.join(self.meta_dir, f"v{v}.json")))
-
-    def schema(self, version: int | None = None) -> T.StructType:
-        return T.StructType.fromJson(self.meta(version)["schema"])
-
     def payload_schema(self, version: int | None = None) -> T.StructType:
-        return T.StructType(
-            [f for f in self.schema(version).fields if f.name not in (SEQ_COL, DELETED_COL)]
-        )
-
-    def _write_version(self, meta: dict[str, Any]) -> None:
-        """Atomic commit: exclusive-create v{n}.json (commit lock), then
-        swap the _current pointer. Iceberg's version-hint protocol."""
-        v = meta["version"]
-        vpath = os.path.join(self.meta_dir, f"v{v}.json")
-        try:
-            # fs.create_exclusive_text is the commit lock (HDFS
-            # create-no-overwrite / S3 If-None-Match PUT — lake/fs.py)
-            self.fs.create_exclusive_text(vpath, json.dumps(meta))
-        except FileExistsError as e:  # lost the race for this version
-            raise CommitConflict(f"version {v} already committed") from e
-        # fs.replace_text is the atomic pointer swap (HDFS rename /
-        # S3 If-Match PUT or catalog pointer row)
-        self.fs.replace_text(os.path.join(self.meta_dir, "_current"), str(v))
+        return _payload(self.meta(version))
 
     # ----------------------------------------------------------- read
     def _scan(self, m: dict[str, Any], files: list[str]) -> DataFrame:
@@ -323,11 +235,7 @@ class LakeTable:
         aggregate adds no second exchange, and its sorted output
         satisfies the merge's partitionBy write without another sort."""
         key_cols = m["key_cols"]
-        names = [
-            f.name
-            for f in T.StructType.fromJson(m["schema"]).fields
-            if f.name not in (SEQ_COL, DELETED_COL)
-        ]
+        names = _payload(m).fieldNames()
         rest = [n for n in names if n not in key_cols]
         return (
             rows.repartition(self._write_tasks(n_buckets), F.col(BUCKET_COL))
@@ -448,13 +356,7 @@ class LakeTable:
             .when(o_live & ~n_live, "D")
             .when(o_live & n_live, "U")
         )  # tombstone→tombstone stays NULL and is filtered below
-        payload = T.StructType(
-            [
-                f
-                for f in T.StructType.fromJson(m_to["schema"]).fields
-                if f.name not in (SEQ_COL, DELETED_COL)
-            ]
-        )
+        payload = _payload(m_to)
         return (
             j.filter(o_seq.isNull() | (n_seq != o_seq))
             .select(
@@ -481,53 +383,15 @@ class LakeTable:
         config change regenerating triggers mid-stream
         (import_export_config.rb:86-120, db_trigger.rb:38-92).
         Metadata-only: no data files are rewritten."""
-        cur = self.payload_schema()
-        by_name = {f.name: f for f in cur.fields}
-        changed = False
-        for f in batch_payload_schema.fields:
-            if f.name in (SEQ_COL, DELETED_COL):
-                continue
-            if isinstance(f.dataType, T.NullType):
-                continue  # all-null column carries no type information
-            if f.name not in by_name:
-                by_name[f.name] = T.StructField(f.name, f.dataType, True)
-                changed = True
-            else:
-                have = by_name[f.name].dataType
-                want = f.dataType
-                if have != want:
-                    key = (have.typeName(), want.typeName())
-                    if key in _WIDEN:
-                        by_name[f.name] = T.StructField(f.name, want, True)
-                        changed = True
-                    elif (want.typeName(), have.typeName()) in _WIDEN:
-                        pass  # batch is narrower; cast at merge time
-                    else:
-                        raise ValueError(
-                            f"incompatible type change for {f.name}: {have} -> {want}"
-                        )
-        # preserve existing column order, append new ones
-        cur_names = [f.name for f in cur.fields]
-        ordered = [by_name[n] for n in cur_names] + [
-            by_name[f.name]
-            for f in batch_payload_schema.fields
-            if f.name not in cur_names and f.name in by_name
-        ]
-        new_payload = T.StructType(ordered)
+        m = self.meta()
+        new_payload, changed = union_schema(_payload(m), T.StructType([
+            f for f in batch_payload_schema.fields if f.name not in (SEQ_COL, DELETED_COL)
+        ]))
         if changed:
-            m = self.meta()
-            full = T.StructType(
-                list(new_payload.fields)
-                + [
-                    T.StructField(SEQ_COL, T.LongType()),
-                    T.StructField(DELETED_COL, T.BooleanType()),
-                ]
-            )
-            m2 = dict(m)
-            m2["version"] = m["version"] + 1
-            m2["parent"] = m["version"]
-            m2["schema"] = full.jsonValue()
-            self._write_version(m2)
+            self._write_version(self._next(
+                m, parent=m["version"],
+                schema=T.StructType(new_payload.fields + _BOOKKEEPING).jsonValue(),
+            ))
         return new_payload
 
     # ------------------------------------------------ snapshot write
@@ -548,32 +412,8 @@ class LakeTable:
         per bucket, into a fresh snapshot dir; returns the dir
         (relative, absolute)."""
         return self._stage(
-            df.withColumn(PART_COL, F.col(BUCKET_COL)).write.partitionBy(PART_COL), version
+            df.withColumn(PART_COL, F.col(BUCKET_COL)).write.partitionBy(PART_COL), _SNAP, version
         )
-
-    def _stage(self, writer: DataFrameWriter, version: int) -> tuple[str, str]:
-        """Run ``writer`` into a fresh ``snap-{version}-{uuid}`` dir;
-        returns the dir (relative, absolute). A failed write drops it.
-
-        The dir name carries a uuid suffix for the same reason the
-        append log's segments do (append_log.py:15-17): a hard crash
-        BETWEEN this parquet write and the _write_version commit leaves
-        an orphan dir that no metadata references — the foreachBatch
-        replay of the epoch recomputes the same version (metadata never
-        advanced), and a version-derived name would collide with the
-        orphan ("path already exists") and wedge the stream until
-        someone hand-deletes it. With the uuid the replay stages a FRESH
-        dir and commits normally; expire_snapshots' liveness walk reaps
-        the orphan's files."""
-        snap_rel = os.path.join("data", f"snap-{version}-{uuid.uuid4().hex[:8]}")
-        snap_dir = os.path.join(self.path, snap_rel)
-        try:
-            writer.parquet(snap_dir, mode="errorifexists")
-        except Exception:
-            if self.fs.exists(snap_dir):
-                self.fs.rmtree(snap_dir)
-            raise
-        return snap_rel, snap_dir
 
     def _bucket_files(self, snap_rel: str, buckets) -> dict[str, list[str]]:
         """Table-relative parquet files per bucket id (str, the metadata
@@ -653,13 +493,11 @@ class LakeTable:
         raises, the staged snapshot is dropped and nothing commits.
         """
         m = self.meta()
-        if epoch_id is not None:
-            last = m["epochs"].get(stream_id)
-            if last is not None and epoch_id <= last:
-                return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
+        if self.fenced(m, stream_id, epoch_id):
+            return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
 
         new_version = m["version"] + 1
-        payload = self.payload_schema()
+        payload = _payload(m)
         # align batch payload to table schema: missing cols -> null,
         # narrower types -> cast up (schema-evolution tolerant apply).
         # Batch rows rank below every stored row: they lose each tie.
@@ -805,7 +643,7 @@ class LakeTable:
         )
         _t = time.monotonic()
         try:
-            snap_rel, snap_dir = self._stage(rows.write, version)
+            snap_rel, snap_dir = self._stage(rows.write, _SNAP, version)
         except Exception as e:
             if _DIVERGED_MARK not in str(e):
                 raise
@@ -839,15 +677,10 @@ class LakeTable:
             "max_delta_depth": max(map(_depth, new_buckets.values()), default=0),
             "timings": timings,
         }
-        epoch_id, stream_id = lineage["epoch_id"], lineage["stream_id"]
-        m2 = dict(m)
-        m2["version"] = lineage["version"]
-        m2["parent"] = m["version"]
-        m2["buckets"] = new_buckets
-        m2["epochs"] = dict(m["epochs"])
-        if epoch_id is not None:
-            m2["epochs"][stream_id] = epoch_id
-        m2["lineage"] = (m.get("lineage") or [])[-99:] + [lineage]
+        m2 = self._next(
+            m, lineage["stream_id"], lineage["epoch_id"], parent=m["version"],
+            buckets=new_buckets, lineage=(m.get("lineage") or [])[-99:] + [lineage],
+        )
         if pre_commit is not None:
             # join the caller's concurrent must-precede-commit work
             # (see merge's docstring); a failure here aborts the snapshot
@@ -888,7 +721,7 @@ class LakeTable:
         m = self.meta()
         n_buckets = m["n_buckets"]
         key_cols = m["key_cols"]
-        payload = self.payload_schema()
+        payload = _payload(m)
         names = set(df.columns)
         out = df.withColumn(BUCKET_COL, bucket_expr(key_cols, n_buckets)).select(
             F.col(BUCKET_COL),
@@ -906,14 +739,11 @@ class LakeTable:
         buckets = {
             b: files for b, files in self._bucket_files(snap_rel, range(n_buckets)).items() if files
         }
-        m2 = dict(m)
-        m2["version"] = new_version
-        m2["parent"] = m["version"]
-        m2["buckets"] = buckets
         # changes() refuses ranges spanning a bulk load (bucket map
         # rebuilt, seqs reset — not a change set)
-        m2["last_overwrite_version"] = new_version
-        self._write_version(m2)
+        self._write_version(self._next(
+            m, parent=m["version"], buckets=buckets, last_overwrite_version=new_version
+        ))
 
     # --------------------------------------------------- housekeeping
     def expire_snapshots(self, keep_last: int = 2) -> int:

@@ -234,17 +234,15 @@ def apply_batch_flagged(
     probe_src = flagged if table_cfg is None else table_cfg.apply_projection(flagged)
 
     m = table.meta()
-    if epoch_id is not None:
-        last = m["epochs"].get(stream_id)
-        if last is not None and epoch_id <= last:
-            # Replayed epoch: the merge is fenced. Only the dead-letter
-            # append may still be pending (crash between its commit and
-            # the table commit) — its OWN fence resolves that. A clean
-            # epoch appended nothing the first time, so its replay
-            # appends nothing either (no empty segment, no commit).
-            if dead_letter is not None and not poison.isEmpty():
-                dead_letter.append(poison, stream_id=stream_id, epoch_id=epoch_id)
-            return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
+    if table.fenced(m, stream_id, epoch_id):
+        # Replayed epoch: the merge is fenced. Only the dead-letter
+        # append may still be pending (crash between its commit and the
+        # table commit) — its OWN fence resolves that. A clean epoch
+        # appended nothing the first time, so its replay appends nothing
+        # either (no empty segment, no commit).
+        if dead_letter is not None and not poison.isEmpty():
+            dead_letter.append(poison, stream_id=stream_id, epoch_id=epoch_id)
+        return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
 
     _evolve(table, ready)
 

@@ -38,41 +38,10 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movex_cdc_spark.lake.append_log import UnkeyedEventLog
 from movex_cdc_spark.lake.table import LakeTable
 from movex_cdc_spark.operators.apply import DeadLetterTable, apply_batch
 from movex_cdc_spark.sources.events import EVENT_COLS
-
-
-class FinalErrorsTable:
-    """Epoch-fenced store for retry-exhausted rows (reference:
-    Event_Log_Final_Errors, db/migrate/*create_event_log_final_errors*).
-    Thin wrapper over UnkeyedEventLog: fenced append (idempotent across
-    a crashed readmit pass re-run), atomic listing swap for the
-    reprocess rewrite, metadata-listing read."""
-
-    def __init__(self, spark: SparkSession, path: str, fs=None):
-        from movex_cdc_spark.lake.append_log import UnkeyedEventLog
-
-        self.spark = spark
-        self.path = path
-        self.log = UnkeyedEventLog.open(spark, path, fs=fs)
-
-    def append(self, df: DataFrame, fence_token: int) -> bool:
-        """Append exhausted rows, fenced on the CALLER's monotone token
-        (readmit uses the dead-letter log version at pass start).
-        Returns False when the token was already committed — the
-        crashed-pass re-run case."""
-        lineage = self.log.append(df, stream_id="final", epoch_id=fence_token)
-        return not lineage.get("skipped")
-
-    def replace(self, df: DataFrame) -> None:
-        self.log.replace(df)
-
-    def read(self) -> DataFrame | None:
-        df = self.log.read()
-        if not df.columns:
-            return None
-        return df
 
 
 class RetryWorker:
@@ -89,7 +58,8 @@ class RetryWorker:
         self.table = table
         self.dl = dead_letter
         self.final_errors_dir = final_errors_dir
-        self.final = FinalErrorsTable(spark, final_errors_dir, fs=self.dl.log.fs)
+        # retry-exhausted rows (reference: Event_Log_Final_Errors)
+        self.final = UnkeyedEventLog.open(spark, final_errors_dir, fs=self.dl.log.fs)
         self.max_retries = max_retries
         self.start_delay_s = start_delay_s
 
@@ -102,7 +72,7 @@ class RetryWorker:
         # passes (the rewrite bumps it); stable across a crashed pass's
         # re-run (the rewrite never happened), so the re-run's append
         # fences to a no-op instead of duplicating final rows.
-        dl_version = int(self.dl.log.meta()["version"])
+        dl_version = self.dl.log.current_version()
         # Pin ONE wall-clock instant for the whole pass. readmit runs up
         # to four Spark actions (counts agg, heal merge, exhausted write,
         # dl.replace rewrite); F.current_timestamp() is re-evaluated per
@@ -167,7 +137,8 @@ class RetryWorker:
         if n_final:
             self.final.append(
                 exhausted.withColumn("error_time", F.lit(now)),
-                fence_token=dl_version,
+                stream_id="final",
+                epoch_id=dl_version,
             )
 
         # rewrite the dead-letter table = waiting ∪ retrying, through
@@ -181,7 +152,9 @@ class RetryWorker:
         }
 
     def final_errors(self) -> DataFrame | None:
-        return self.final.read()
+        """The final-errors rows; None while the store is empty."""
+        df = self.final.read()
+        return df if df.columns else None
 
     def reprocess_final_errors(self, where: str | None = None) -> dict[str, Any]:
         """Operator-initiated requeue of final errors (reference:
@@ -203,10 +176,10 @@ class RetryWorker:
         final log's version, so a re-run of the same call re-reads the
         same version, the append no-ops, and only the removal re-runs.
         """
-        df = self.final.read()
+        df = self.final_errors()
         if df is None:
             return {"reprocessed": 0, "remaining": 0}
-        token = int(self.final.log.meta()["version"])
+        token = self.final.current_version()
         # coalesce: a predicate that evaluates NULL on a row (e.g.
         # ``op = 'I'`` over a NULL op) would otherwise drop the row
         # from BOTH the selected AND the remaining side — silently

@@ -9,7 +9,9 @@
     the written-outside-touched guard still fails loudly on a lying
     probe;
   * a poison epoch that crashes in the dead-letter append or in the
-    table commit replays to one apply and one quarantine.
+    table commit replays to one apply and one quarantine, and so does
+    one whose shared store commit fails on the unkeyed path or on the
+    batch flow's dead-letter commit.
 """
 
 import os
@@ -19,12 +21,15 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from movex_cdc_spark.lake.append_log import UnkeyedEventLog
 from movex_cdc_spark.lake.table import LakeTable, bucket_expr
 from movex_cdc_spark.operators.apply import (
     KEY_COLS,
     REPO_FILES_SCHEMA,
     DeadLetterTable,
+    apply_batch,
     apply_batch_flagged,
+    apply_batch_unkeyed,
     flag_dispositions,
 )
 
@@ -138,11 +143,13 @@ def test_lying_probe_fails_loud(spark, tmp_path):
         t.merge(batch, epoch_id=0, probe=wrong)
 
 
+def _poison_rows(spark):
+    return _events(spark, [(1, "r1", "p1", "c1", "py", "x", None, "I", TS, 1),
+                           (2, "r2", "p2", "c2", "py", None, None, "I", TS, 1)])  # poison
+
+
 def _poison_epoch(spark):
-    return flag_dispositions(
-        _events(spark, [(1, "r1", "p1", "c1", "py", "x", None, "I", TS, 1),
-                        (2, "r2", "p2", "c2", "py", None, None, "I", TS, 1)])  # poison
-    )
+    return flag_dispositions(_poison_rows(spark))
 
 
 def test_dead_letter_thread_inherits_local_properties(spark, tmp_path, monkeypatch):
@@ -228,3 +235,44 @@ def test_poison_epoch_crash_windows_replay_exactly_once(spark, tmp_path, monkeyp
     # a second replay is fenced on both sides
     assert apply_batch_flagged(t, flagged, epoch_id=0, stream_id="s", dead_letter=dl)["skipped"]
     assert dl.read().count() == 1
+
+
+@pytest.mark.parametrize("crash_at", ["unkeyed_log_commit", "batch_dead_letter_commit"])
+def test_shared_commit_crash_replays_exactly_once(spark, tmp_path, crash_at):
+    """The store commit both lake stores share fails (a) in the unkeyed
+    log's commit of a poison epoch, after its dead letters committed, or
+    (b) in the batch flow's dead-letter commit, before the table's. The
+    replay lands the valid row and the poison row once each, and a
+    second replay is fenced on both sides."""
+    dl = DeadLetterTable(spark, str(tmp_path / "dl"))
+    if crash_at == "unkeyed_log_commit":
+        sink = victim = UnkeyedEventLog.create(spark, str(tmp_path / "ulog"))
+        flagged = _poison_epoch(spark)
+
+        def run():
+            return apply_batch_unkeyed(sink, flagged, epoch_id=0, stream_id="s", dead_letter=dl)
+    else:
+        sink, victim = _mk(spark, tmp_path, "lake"), dl.log
+        events = _poison_rows(spark)
+
+        def run():
+            return apply_batch(sink, events, epoch_id=0, stream_id="s", dead_letter=dl)
+    v0 = sink.current_version()
+
+    def crash(_meta):
+        raise RuntimeError("injected crash")
+
+    victim._write_version = crash
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run()
+    finally:
+        del victim._write_version
+    assert sink.current_version() == v0
+    n_dl = 0 if dl.read() is None else dl.read().count()
+    assert n_dl == (1 if crash_at == "unkeyed_log_commit" else 0)
+
+    assert not run().get("skipped")
+    assert run().get("skipped")
+    assert [(r["repo"], r["path"]) for r in sink.read().collect()] == [("r1", "p1")]
+    assert [r["seq"] for r in dl.read().collect()] == [2]

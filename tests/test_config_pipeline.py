@@ -452,3 +452,21 @@ def test_expire_segments_reaps_fenced_orphans(spark, tmp_path):
     assert not os.path.isdir(orphan_dir)
     # committed data untouched
     assert log.read().count() == 15
+
+
+def test_failed_segment_write_leaves_no_dir(spark, tmp_path):
+    """A segment write that fails inside its Spark job commits nothing
+    and drops its staged ``seg-`` dir; the next append commits normally."""
+    import os
+
+    log = UnkeyedEventLog.create(spark, str(tmp_path / "ulog"))
+    bad = spark.range(4).select(
+        F.when(F.col("id") == 2, F.raise_error(F.lit("injected write failure")))
+        .otherwise(F.col("id")).alias("a")
+    )
+    with pytest.raises(Exception, match="injected write failure"):
+        log.append(bad, stream_id="s", epoch_id=0)
+    assert log.current_version() == 0
+    assert not [d for d in os.listdir(tmp_path / "ulog") if d.startswith("seg-")]
+    log.append(spark.range(4).selectExpr("id AS a"), stream_id="s", epoch_id=0)
+    assert log.current_version() == 1 and log.read().count() == 4

@@ -5,8 +5,8 @@ checks the structural properties that decide 100-TB behavior:
 
   * filter/column pushdown reached the parquet scan (PushedFilters /
     ReadSchema width),
-  * small-side joins are broadcast (no accidental SortMergeJoin of a
-    dimension table),
+  * small-side joins are broadcast (no accidental SortMergeJoin or
+    ShuffledHashJoin of a dimension table),
   * no cartesian products outside the labeled brute-force ANN baseline,
   * whole-stage codegen covers the expression work,
   * shuffle (Exchange) count — the number the cluster pays for.
@@ -56,6 +56,7 @@ def audit(name: str, df) -> dict:
         "codegen_spans": len(set(re.findall(r"codegen id : (\d+)", plan))),
         "broadcast_joins": len(re.findall(r"BroadcastHashJoin", plan)),
         "sortmerge_joins": len(re.findall(r"SortMergeJoin", plan)),
+        "shuffledhash_joins": len(re.findall(r"ShuffledHashJoin", plan)),
         "nested_loop": bool(re.search(r"BroadcastNestedLoopJoin|CartesianProduct", plan)),
         "pushed_filters": re.findall(r"PushedFilters: \[([^\]]*)\]", plan),
         "read_schemas": re.findall(r"ReadSchema: struct<([^>]*)>", plan),
@@ -84,21 +85,22 @@ def main(names: list[str] | None = None) -> int:
     out = ["# PLAN_AUDIT — physical-plan structure per registered query",
            "",
            f"sf_dir: {SF_DIR}; columns: shuffles (Exchange nodes), codegen spans,",
-           "broadcast vs sort-merge joins, filter pushdown into the parquet scan.",
+           "broadcast vs sort-merge vs shuffled-hash joins, filter pushdown into the parquet scan.",
            "Engine-in-the-loop queries (merge/bootstrap/retry/sink) execute during",
            "construction and are audited on their final read plan.",
            "",
-           "| query | shuffles | codegen | bcast joins | SMJ | pushed filters | narrowest scan |",
-           "|---|---|---|---|---|---|---|"]
+           "| query | shuffles | codegen | bcast joins | SMJ | SHJ | pushed filters | narrowest scan |",
+           "|---|---|---|---|---|---|---|---|"]
     for r in rows:
         if "note" in r:
-            out.append(f"| {r['name']} | — | — | — | — | {r['note']} | — |")
+            out.append(f"| {r['name']} | — | — | — | — | — | {r['note']} | — |")
             continue
         pf = "; ".join(p for p in r["pushed_filters"] if p)[:60] or "—"
         rs = min((s.count(":") for s in r["read_schemas"]), default=0)
         out.append(
             f"| {r['name']} | {r['exchanges']} | {r['codegen_spans']} |"
-            f" {r['broadcast_joins']} | {r['sortmerge_joins']} | {pf} | {rs} cols |"
+            f" {r['broadcast_joins']} | {r['sortmerge_joins']} | {r['shuffledhash_joins']} |"
+            f" {pf} | {rs} cols |"
         )
     if problems:
         out += ["", "## PROBLEMS", ""] + [f"- {p}" for p in problems]
