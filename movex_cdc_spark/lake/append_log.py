@@ -18,8 +18,9 @@ listing ever references.
 The committed read schema is the add-only ``union_schema``
 (versioned.py) of every appended batch: widenable primitives widen —
 Spark 4's parquet readers promote int32->long / float->double at scan
-time — and an incompatible type change raises instead of silently
-corrupting older segments.
+time — and an incompatible type change raises, before anything is
+staged, instead of silently corrupting older segments. An all-null
+column is written with its committed type, or not at all (``_align``).
 
 Compaction (small-files housekeeping) swaps the listing atomically and
 RETAINS the old segment dirs: a concurrent reader that planned a scan
@@ -35,16 +36,30 @@ import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from movex_cdc_spark.lake.fs import DEFAULT_FS
 from movex_cdc_spark.lake.versioned import CommitConflict, VersionedStore, union_schema
 
 
+def _align(m: dict[str, Any], batch: DataFrame) -> DataFrame:
+    """``batch`` with each all-null (NullType) column cast to its type in
+    ``m``'s committed schema, or left out while the log has no type for
+    it (LakeTable's evolve skips such a column too). Spark writes a
+    ``void`` column as physical BOOLEAN, which a later read with a typed
+    schema rejects, and a committed ``void`` could never widen."""
+    have = {f.name: f.dataType for f in T.StructType.fromJson(m.get("schema") or {"fields": []}).fields}
+    nulls = [f.name for f in batch.schema.fields if isinstance(f.dataType, T.NullType)]
+    return batch.drop(*[c for c in nulls if c not in have]).withColumns(
+        {c: F.col(c).cast(have[c]) for c in nulls if c in have}
+    )
+
+
 def _union(m: dict[str, Any], batch: T.StructType) -> dict:
-    """The committed schema of ``m`` unioned with ``batch``, as metadata
-    JSON; the first append's schema is the batch's own, all-null
-    columns included."""
+    """The committed schema of ``m`` unioned with an ``_align``-ed
+    ``batch``, as metadata JSON; the first append's schema is the
+    batch's own. Raises on an incompatible type change."""
     if not m.get("schema"):
         return batch.jsonValue()
     return union_schema(T.StructType.fromJson(m["schema"]), batch)[0].jsonValue()
@@ -108,11 +123,12 @@ class UnkeyedEventLog(VersionedStore):
         m = self.meta()
         if self.fenced(m, stream_id, epoch_id):
             return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
+        # aligned and unioned BEFORE the write: a rejected batch stages nothing
+        batch = _align(m, batch)
+        schema = _union(m, batch.schema)
         files = self._write_segment(batch, m["version"] + 1)
         for _attempt in range(max_attempts):
-            m2 = self._next(
-                m, stream_id, epoch_id, files=m["files"] + files, schema=_union(m, batch.schema)
-            )
+            m2 = self._next(m, stream_id, epoch_id, files=m["files"] + files, schema=schema)
             try:
                 self._write_version(m2)
             except CommitConflict:
@@ -127,6 +143,7 @@ class UnkeyedEventLog(VersionedStore):
                 if self.fenced(m, stream_id, epoch_id):
                     # a concurrent replay of OUR epoch won instead
                     return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
+                schema = _union(m, batch.schema)
                 continue
             return {
                 "version": m2["version"],
@@ -156,8 +173,9 @@ class UnkeyedEventLog(VersionedStore):
         healed rows out). Epoch fences are preserved; readers see the
         old or the new listing, never a partial state."""
         m = self.meta()
-        files = self._write_segment(df, m["version"] + 1)
-        return self._swap_listing(m, files, _union(m, df.schema))
+        df = _align(m, df)
+        schema = _union(m, df.schema)  # before the write, as in append
+        return self._swap_listing(m, self._write_segment(df, m["version"] + 1), schema)
 
     def compact_segments(self, target_files: int = 4) -> dict[str, Any]:
         """Small-files housekeeping (the sink-side ST8): a long-running

@@ -124,6 +124,34 @@ def bucket_expr(key_cols: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
 
 
+def probe_buckets(
+    df: DataFrame, key_cols: list[str], n_buckets: int, valid=None, **aggs
+) -> tuple[list[int], dict[str, Any]]:
+    """THE bucket probe, one job: a ``noop`` write of ``df`` carrying an
+    ``Observation`` (a ``distinct().collect()`` or a global
+    ``agg().collect()`` plans as 3 jobs under AQE). Returns the sorted
+    buckets of the rows where ``valid`` holds (every row when None) and
+    ``{"rows": their count, **aggs}`` — ``aggs`` are extra aggregate
+    columns the caller folds into the same job. Narrow ``df`` to the
+    columns the aggregates read first: the write materializes every
+    column it is given."""
+    ok = F.lit(True) if valid is None else valid
+    obs = Observation()
+    (
+        df.observe(
+            obs,
+            F.collect_set(F.when(ok, bucket_expr(key_cols, n_buckets))).alias("touched"),
+            F.count(F.when(ok, 1)).alias("rows"),
+            *[c.alias(name) for name, c in aggs.items()],
+        )
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    got = obs.get
+    return sorted(got.pop("touched")), got
+
+
 _DIVERGED_MARK = "LAKE_MERGE_BUCKET_OUTSIDE_PROBE"
 
 
@@ -438,7 +466,6 @@ class LakeTable(VersionedStore):
         op_col: str = "op",
         stream_id: str = "default",
         epoch_id: int | None = None,
-        lineage_extra: dict[str, Any] | None = None,
         probe: "list[int] | None" = None,
         probe_rows: int | None = None,
         pre_commit: "Any | None" = None,
@@ -477,12 +504,13 @@ class LakeTable(VersionedStore):
         record instead (idempotent retry).
 
         ``probe``: the touched-bucket list from a caller that already
-        ran the probe job itself (apply_batch_flagged folds it into the
-        job that builds the micro-batch cache and counts poison — one
-        fewer action per epoch), with ``probe_rows`` the batch rows it
-        counted. The batch plan then runs exactly once, inside the
-        snapshot write job; a commit guard fails loudly if the caller's
-        probe diverges from the batch keys.
+        ran ``probe_buckets`` itself (the keyed apply flows fold their
+        counters and poison count into that job), with ``probe_rows``
+        the batch rows it counted. Without it, merge runs
+        ``probe_buckets`` over the batch's keys, so the batch plan runs
+        once for the probe and once for the write: a caller with an
+        expensive plan persists the batch first. A commit guard fails
+        loudly if the probe diverges from the batch keys.
 
         ``pre_commit``: zero-arg callable invoked after the snapshot
         write but BEFORE the metadata commit. The caller's barrier for
@@ -519,25 +547,12 @@ class LakeTable(VersionedStore):
         timings: dict[str, float] = {}
         _t = time.monotonic()
 
-        # bucket pruning: which buckets does this batch touch?
-        src_cached = probe is None
-        if probe is not None:
-            # caller-supplied probe (see docstring): no collect here at
-            # all — the heavy batch plan runs exactly once, inside the
-            # snapshot write job
-            touched = sorted(int(b) for b in probe)
-        else:
-            # Generic path (uncached batch): persist src — otherwise the
-            # whole upstream pipeline (scan/filter/LWW) would run twice,
-            # once for this collect and again for the snapshot write.
-            src = src.persist()
-            counts = src.groupBy(BUCKET_COL).count().collect()
-            touched = sorted(r[0] for r in counts)
-            probe_rows = sum(r[1] for r in counts)
+        if probe is None:
+            probe, got = probe_buckets(batch.select(*m["key_cols"]), m["key_cols"], m["n_buckets"])
+            probe_rows = got["rows"]
+        touched = sorted(int(b) for b in probe)
         timings["probe_s"] = round(time.monotonic() - _t, 4)
         if not touched:
-            if src_cached:
-                src.unpersist()
             return {"skipped": True, "reason": "empty batch"}
 
         delta = all(_depth(m["buckets"].get(str(b), [])) < MAX_DELTA_DEPTH for b in touched)
@@ -550,12 +565,8 @@ class LakeTable(VersionedStore):
                 int(b) for b, files in m["buckets"].items()
                 if _depth(files) >= max(MAX_DELTA_DEPTH, 1)
             ))
-        try:
-            stage = self._stage_delta if delta else self._stage_cow
-            snap_rel, lists, rows = stage(m, src, touched, new_version, timings)
-        finally:
-            if src_cached:
-                src.unpersist()
+        stage = self._stage_delta if delta else self._stage_cow
+        snap_rel, lists, rows = stage(m, src, touched, new_version, timings)
         lineage = {
             "stream_id": stream_id,
             "epoch_id": epoch_id,
@@ -564,8 +575,6 @@ class LakeTable(VersionedStore):
             # the delta file holds exactly the batch rows the probe counted
             "rows_written": probe_rows if delta else rows,
         }
-        if lineage_extra:
-            lineage.update(lineage_extra)
         return self._commit(m, snap_rel, lists, lineage, timings, pre_commit)
 
     def compact(self, buckets: list[int] | None = None) -> dict[str, Any]:

@@ -5,20 +5,23 @@ This is the Spark shape of the reference's hot path
 
     events → condition filter → no-op suppression → poison flag
     (flag_dispositions) → valid/poison slices (split_flagged) →
-    [config projection] → [schema evolve] → MERGE (LWW inside) →
-    dead-letter append → lineage record
+    [config projection] → fence → [schema evolve] → one probe job →
+    [dead-letter append, only on poison] ∥ MERGE (LWW inside) →
+    lineage/metrics record
 
 One micro-batch = one call. The streaming shells
 (streaming/pipeline.py) persist the flagged batch and run
 ``apply_batch_flagged`` (keyed) or ``apply_batch_unkeyed``
 (key_handling='N') from ``foreachBatch``; batch replays call
-``apply_batch``, which dedups (LWW) before the merge.
+``apply_batch``, which dedups (LWW) before the merge and persists the
+deduped rows. Both keyed flows end in the same tail, ``_apply_keyed``.
 """
 
 from __future__ import annotations
 
 import re
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import DataFrame, Observation
@@ -26,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from movex_cdc_spark.functions.hashing import sha256_builtin
-from movex_cdc_spark.lake.table import LakeTable, bucket_expr
+from movex_cdc_spark.lake.table import LakeTable, probe_buckets
 from movex_cdc_spark.operators.filters import (
     bad_op_predicate,
     condition_filter,
@@ -37,6 +40,7 @@ from movex_cdc_spark.operators.filters import (
 )
 from movex_cdc_spark.operators.lww import lww_dedup_maxby
 from movex_cdc_spark.session import inheriting_local_properties
+from movex_cdc_spark.sources.events import EVENTS_SCHEMA
 
 REPO_FILES_SCHEMA = T.StructType(
     [
@@ -139,10 +143,11 @@ def prepare_batch(
     its partial combine bounds hot keys). Deduping before the merge
     keeps a full-backlog replay's merge input at one row per key.
 
-    NOTE: deliberately NOT persisted: the poison slice re-scans the
-    batch. Full-backlog replays are cheaper re-scanned (measured: a
-    MEMORY_ONLY cache of 16M rows cost more in GC/memory pressure than
-    the rescan saved); the streaming shells persist their micro-batch.
+    NOTE: the input is deliberately NOT persisted: the poison slice
+    re-scans it. Full-backlog replays are cheaper re-scanned (measured:
+    a MEMORY_ONLY cache of 16M rows cost more in GC/memory pressure than
+    the rescan saved); apply_batch persists only the deduped output, and
+    the streaming shells persist their micro-batch.
     """
     valid, poison = split_flagged(flag_dispositions(events, condition_sql, table_cfg))
     return _with_sha(lww_dedup_maxby(_slim(valid, table_cfg), KEY_COLS)), poison
@@ -174,10 +179,10 @@ def _evolve(table: LakeTable, ready: DataFrame) -> None:
 
 def _record_metrics(metrics, lineage, got, n_poison, stream_id, epoch_id, scope) -> None:
     """One MetricsTable row per applied epoch. ``scope`` names what the
-    counters count, and is never mixed silently: the probe path counts
-    valid captured EVENTS pre-LWW (reference statistic_counter
-    semantics); the generic path counts post-LWW deduped KEYS (the rows
-    actually merged)."""
+    counters count, and is never mixed silently: the streaming flow
+    counts valid captured EVENTS pre-LWW (``valid_events_pre_dedup``,
+    reference statistic_counter semantics); the batch flow counts the
+    post-LWW deduped KEYS it merges (``deduped_keys``)."""
     lineage["counter_scope"] = scope
     if metrics is None:
         return
@@ -200,39 +205,38 @@ def _record_metrics(metrics, lineage, got, n_poison, stream_id, epoch_id, scope)
     lineage["metrics"] = got
 
 
-def apply_batch_flagged(
+def _apply_keyed(
     table: LakeTable,
-    flagged: DataFrame,
-    epoch_id: int | None = None,
-    stream_id: str = "default",
-    dead_letter: "DeadLetterTable | None" = None,
-    metrics: "object | None" = None,
-    table_cfg: "object | None" = None,
+    ready: DataFrame,
+    poison: DataFrame,
+    probe_src: DataFrame,
+    scope: str,
+    t0: float,
+    epoch_id: int | None,
+    stream_id: str,
+    dead_letter: "DeadLetterTable | None",
+    metrics: "object | None",
 ) -> dict[str, Any]:
-    """apply_batch over a pre-flagged (cached) micro-batch — the
-    streaming path of every keyed table; filters already ran in
-    flag_dispositions (with the same ``table_cfg``). The config's
-    projection and expressions shape the valid slice, as in
-    prepare_batch; poison rows are quarantined unprojected.
+    """The keyed tail both flows share; they differ only in the
+    ``ready`` rows they merge and the ``probe_src`` they probe:
 
-    ONE probe job over the cached batch carries everything the driver
-    needs before the merge write: the touched-bucket set (valid rows),
-    the A1 counters, and the poison count. The valid slice then goes to
-    ``merge`` un-deduped — merge resolves last-writer-wins in the same
-    aggregate that joins it with the stored rows. The dead-letter
-    append runs ONLY when there is poison to quarantine, on a driver
-    thread that overlaps the snapshot write and is joined at merge's
-    ``pre_commit`` barrier. Skipping the empty append is safe: the
-    dead-letter fence is consulted through monotone epoch ids, and an
-    epoch that appended nothing leaves nothing to fence or replay."""
-    t0 = time.monotonic()
-    valid, poison = split_flagged(flagged)
-    ready = _with_sha(_slim(valid, table_cfg))
-    # the probe buckets the PROJECTED keys (a key column a config does
-    # not log for an op is nulled); column pruning keeps the expression
-    # columns out of the probe plan
-    probe_src = flagged if table_cfg is None else table_cfg.apply_projection(flagged)
-
+    1. read the metadata once and check the fence;
+    2. evolve the schema (ALTER-before-MERGE);
+    3. ONE probe job (``probe_buckets``) over ``probe_src``: the touched
+       buckets, the A1 counters and, while ``probe_src`` still carries
+       the poison flag, the poison count (else one ``isEmpty`` over
+       ``poison`` decides, and only when there is a dead-letter log);
+    4. the dead-letter append, ONLY when there is poison, on a pool
+       thread that inherits this thread's Spark local properties (so
+       query.stop() cancels its jobs) and overlaps the snapshot write.
+       It is joined at merge's ``pre_commit`` barrier, so the poison
+       commit still durably precedes the table commit: a crash between
+       the two replays only the append, which the dead-letter log's own
+       fence resolves. An epoch that appended nothing leaves nothing to
+       fence or replay;
+    5. ``merge(probe=touched)``: the ``ready`` plan runs once more,
+       inside the snapshot write;
+    6. the metrics row, its counters in ``scope``."""
     m = table.meta()
     if table.fenced(m, stream_id, epoch_id):
         # Replayed epoch: the merge is fenced. Only the dead-letter
@@ -246,66 +250,38 @@ def apply_batch_flagged(
 
     _evolve(table, ready)
 
-    ok = ~F.col(POISON_FLAG)
-    obs = Observation(f"apply_{stream_id}_{epoch_id}_{time.monotonic_ns()}")
+    flagged = POISON_FLAG in probe_src.columns
+    ok = ~F.col(POISON_FLAG) if flagged else F.lit(True)
+    counters = {"max_seq": F.max(F.when(ok, F.col("seq"))), **{
+        f"n_{name}": F.count(F.when(ok & (F.col("op") == op), 1))
+        for op, name in (("I", "insert"), ("U", "update"), ("D", "delete"))
+    }}
+    if flagged:
+        counters["n_poison_seen"] = F.count(F.when(~ok, 1))
+    # Never observe the counters on `ready` itself: its only action is
+    # the snapshot write, which did not deliver observed metrics inside
+    # a micro-batch — obs.get deadlocked the stream.
     _t = time.monotonic()
-    # The probe is ONE job: the observation rides a noop write of the
-    # probe projection (a distinct().collect() — or a global
-    # agg().collect() — plans as 3 jobs under AQE). Counters are
-    # valid-only (valid_events_pre_dedup scope); poison rows are
-    # counted separately. Never attach the observation to `ready`: its
-    # only action is the snapshot write, which did not deliver observed
-    # metrics inside a micro-batch — obs.get deadlocked the stream.
-    (
-        probe_src.select(POISON_FLAG, "seq", "op", *m["key_cols"])
-        .observe(
-            obs,
-            F.sum(ok.cast("long")).alias("events"),
-            F.max(F.when(ok, F.col("seq"))).alias("max_seq"),
-            F.sum(F.when(ok & (F.col("op") == "I"), 1).otherwise(0)).alias("n_insert"),
-            F.sum(F.when(ok & (F.col("op") == "U"), 1).otherwise(0)).alias("n_update"),
-            F.sum(F.when(ok & (F.col("op") == "D"), 1).otherwise(0)).alias("n_delete"),
-            F.sum(F.col(POISON_FLAG).cast("long")).alias("n_poison_seen"),
-            F.collect_set(
-                F.when(ok, bucket_expr(m["key_cols"], m["n_buckets"]))
-            ).alias("touched"),
-        )
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
+    touched, got = probe_buckets(
+        probe_src.select(*([POISON_FLAG] if flagged else []), "seq", "op", *m["key_cols"]),
+        m["key_cols"], m["n_buckets"], ok, **counters,
     )
     probe_wall = round(time.monotonic() - _t, 4)
-    got = obs.get
-    touched = sorted(got.pop("touched"))
+    got["events"] = got.pop("rows")
+    n_seen = got.pop("n_poison_seen", 0)
+    has_poison = dead_letter is not None and (n_seen > 0 if flagged else not poison.isEmpty())
 
-    n_poison = 0
-    dl_wall = 0.0
-    dl_future = None
-    pool = None
-    if dead_letter is not None and int(got.get("n_poison_seen") or 0) > 0:
-        # The append reads the already-built cache and writes a small
-        # segment — independent Spark jobs from the merge's snapshot write,
-        # so run it CONCURRENTLY from a driver thread (guide §2.6) and
-        # join it at merge's pre_commit barrier: the poison commit
-        # still durably precedes the table commit (same crash ordering
-        # as the serial form — a crash between the two replays only
-        # the fenced append), but its wall overlaps the snapshot write
-        # instead of adding to the epoch. The thread inherits this
-        # thread's Spark local properties (the streaming batch's job
-        # group), so query.stop() cancels its jobs too.
-        from concurrent.futures import ThreadPoolExecutor
+    def append_timed() -> tuple[int, float]:
+        _t = time.monotonic()
+        n = dead_letter.append(poison, stream_id=stream_id, epoch_id=epoch_id)
+        return n, round(time.monotonic() - _t, 4)
 
-        def append_timed() -> tuple[int, float]:
-            _t = time.monotonic()
-            n = dead_letter.append(poison, stream_id=stream_id, epoch_id=epoch_id)
-            return n, round(time.monotonic() - _t, 4)
-
-        pool = ThreadPoolExecutor(max_workers=1)
-        dl_future = pool.submit(
-            inheriting_local_properties(flagged.sparkSession, append_timed)
+    # the pool starts no thread unless the append is submitted
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        dl_future = (
+            pool.submit(inheriting_local_properties(ready.sparkSession, append_timed))
+            if has_poison else None
         )
-
-    try:
         if not touched:
             lineage: dict[str, Any] = {"skipped": True, "reason": "empty batch"}
         else:
@@ -316,28 +292,56 @@ def apply_batch_flagged(
                 stream_id=stream_id,
                 epoch_id=epoch_id,
                 probe=touched,
-                probe_rows=int(got.get("events") or 0),
+                probe_rows=got["events"],
                 pre_commit=dl_future.result if dl_future is not None else None,
             )
-        if dl_future is not None:
-            # already done when the merge ran (pre_commit barrier)
-            n_poison, dl_wall = dl_future.result()
-    finally:
-        if pool is not None:
-            pool.shutdown(wait=True)
+        # already done when the merge ran (pre_commit barrier)
+        n_poison, dl_wall = dl_future.result() if dl_future is not None else (0, 0.0)
     lineage["merge_latency_s"] = round(time.monotonic() - t0, 4)
     lineage["n_poison"] = n_poison
+    # Phase timings ride the RETURNED lineage record; the copy frozen
+    # into the table metadata is taken before the commit finishes.
     timings = lineage.setdefault("timings", {})
-    timings["probe_s"] = probe_wall  # the external probe, not merge's
+    timings["probe_s"] = probe_wall  # the probe above, not merge's
     if dead_letter is not None:
         # the append's own wall; merge's pre_commit_wait_s is the part
         # of it the snapshot write did not hide
         timings["dl_append_s"] = dl_wall
     if lineage.get("skipped"):
         return lineage
-    _record_metrics(metrics, lineage, got, n_poison, stream_id, epoch_id,
-                    "valid_events_pre_dedup")
+    _record_metrics(metrics, lineage, got, n_poison, stream_id, epoch_id, scope)
     return lineage
+
+
+def apply_batch_flagged(
+    table: LakeTable,
+    flagged: DataFrame,
+    epoch_id: int | None = None,
+    stream_id: str = "default",
+    dead_letter: "DeadLetterTable | None" = None,
+    metrics: "object | None" = None,
+    table_cfg: "object | None" = None,
+) -> dict[str, Any]:
+    """The streaming flow of every keyed table, over a pre-flagged
+    (cached) micro-batch; filters already ran in flag_dispositions (with
+    the same ``table_cfg``). The config's projection and expressions
+    shape the valid slice, as in prepare_batch; poison rows are
+    quarantined unprojected.
+
+    The keyed tail (``_apply_keyed``) probes the cached flagged frame,
+    so one job counts the valid events pre-LWW
+    (``valid_events_pre_dedup``) and the poison rows. The valid slice
+    goes to ``merge`` un-deduped: merge resolves last-writer-wins in the
+    same aggregate that joins it with the stored rows."""
+    t0 = time.monotonic()
+    valid, poison = split_flagged(flagged)
+    ready = _with_sha(_slim(valid, table_cfg))
+    # the probe buckets the PROJECTED keys (a key column a config does
+    # not log for an op is nulled); column pruning keeps the expression
+    # columns out of the probe plan
+    probe_src = flagged if table_cfg is None else table_cfg.apply_projection(flagged)
+    return _apply_keyed(table, ready, poison, probe_src, "valid_events_pre_dedup", t0,
+                        epoch_id, stream_id, dead_letter, metrics)
 
 
 def apply_batch(
@@ -352,9 +356,13 @@ def apply_batch(
 ) -> dict[str, Any]:
     """Apply one batch of change events with exactly-once fencing — the
     batch-replay flow (dead-letter readmission, direct backlog
-    replays): prepare_batch dedups first, dead letters are appended, then
-    ``merge`` runs its own probe. The counters ride the batch plan, so
-    they count post-LWW deduped keys.
+    replays). prepare_batch dedups (LWW) first, which keeps a
+    full-backlog replay's merge input at one row per key; the deduped
+    ``ready`` frame is persisted, so the keyed tail's probe job builds
+    it once and the snapshot write reads it back. The counters count
+    the post-LWW keys merged (``deduped_keys``); dead letters are
+    appended only when the batch holds poison, overlapped with the
+    snapshot write.
 
     ``table_cfg`` compiles capture config (conditions / projection /
     expressions) into the batch plan — see prepare_batch. A config that
@@ -362,59 +370,12 @@ def apply_batch(
     before the merge (ALTER-before-MERGE)."""
     t0 = time.monotonic()
     ready, poison = prepare_batch(events, condition_sql=condition_sql, table_cfg=table_cfg)
-    _evolve(table, ready)
-
-    # single-pass metrics riding a job the batch already runs — no
-    # extra scan (reference A1 statistics counters,
-    # statistic_counter.rb:14-48; the partial->final combine is Spark's
-    # own partial aggregation)
-    obs = Observation(f"apply_{stream_id}_{epoch_id}_{time.monotonic_ns()}")
-    ready = ready.observe(
-        obs,
-        F.count(F.lit(1)).alias("events"),
-        F.max("seq").alias("max_seq"),
-        F.sum(F.when(F.col("op") == "I", 1).otherwise(0)).alias("n_insert"),
-        F.sum(F.when(F.col("op") == "U", 1).otherwise(0)).alias("n_update"),
-        F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_delete"),
-    )
-
-    n_poison = 0
-    dl_wall = 0.0
-    if dead_letter is not None:
-        # Append poison rows BEFORE the merge commit: a crash between the
-        # two can only replay the append, never lose it — and the dead
-        # letter log's OWN (stream_id, epoch_id) fence makes the replay a
-        # metadata no-op, so quarantine rows are exactly-once, like the
-        # reference's final-errors path (transfer_thread.rb:468-491).
-        # Runs even when the merge will be empty — a batch can be ALL
-        # poison.
-        _t = time.monotonic()
-        n_poison = dead_letter.append(poison, stream_id=stream_id, epoch_id=epoch_id)
-        dl_wall = round(time.monotonic() - _t, 4)
-
-    lineage = table.merge(
-        ready,
-        seq_col="seq",
-        op_col="op",
-        stream_id=stream_id,
-        epoch_id=epoch_id,
-    )
-    lineage["merge_latency_s"] = round(time.monotonic() - t0, 4)
-    lineage["n_poison"] = n_poison
-    if dead_letter is not None:
-        # the dead-letter append is the batch's FIRST action, so its
-        # wall includes reading the batch — recorded next to merge's
-        # per-phase timings for epoch-cost adjudication.
-        # NOTE: this and commit_s ride the RETURNED lineage record (the
-        # driver's epochs list / logs); the lineage row serialized into
-        # the table metadata is frozen before the commit finishes, so
-        # it carries only the pre-commit phases (probe/write/listing).
-        lineage.setdefault("timings", {})["dl_append_s"] = dl_wall
-    if lineage.get("skipped"):
-        return lineage
-    _record_metrics(metrics, lineage, obs.get if metrics is not None else {},
-                    n_poison, stream_id, epoch_id, "deduped_keys")
-    return lineage
+    ready = ready.persist()
+    try:
+        return _apply_keyed(table, ready, poison, ready, "deduped_keys", t0,
+                            epoch_id, stream_id, dead_letter, metrics)
+    finally:
+        ready.unpersist()
 
 
 def apply_batch_unkeyed(
@@ -542,8 +503,14 @@ class DeadLetterTable:
         self.log = UnkeyedEventLog.open(spark, path, fs=fs)
 
     def append(self, poison: DataFrame, stream_id: str, epoch_id: int | None) -> int:
+        # an all-null event column keeps its event type: the log leaves an
+        # untyped column out, and RetryWorker re-validates on content/op
+        untyped = {f.name for f in poison.schema.fields if isinstance(f.dataType, T.NullType)}
         out = (
-            poison.withColumn("retry_count", F.lit(0))
+            poison.withColumns({
+                f.name: F.col(f.name).cast(f.dataType) for f in EVENTS_SCHEMA.fields if f.name in untyped
+            })
+            .withColumn("retry_count", F.lit(0))
             .withColumn("last_error_time", F.current_timestamp())
             .withColumn("stream_id", F.lit(stream_id))
             .withColumn("epoch_id", F.lit(epoch_id).cast("long"))

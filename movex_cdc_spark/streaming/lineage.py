@@ -42,10 +42,10 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("max_seq", T.LongType()),
         T.StructField("buckets_touched", T.IntegerType()),
         T.StructField("merge_latency_s", T.DoubleType()),
-        # what the `events` counters COUNT for this row: the probe path
-        # records pre-LWW valid events, the generic/MoR path post-LWW
-        # deduped keys — persisted so rows are self-describing and the
-        # two scopes are never mixed silently (ADVICE r4)
+        # what the `events` counters COUNT for this row: the streaming
+        # flow records pre-LWW valid events, the batch flow (apply_batch)
+        # post-LWW deduped keys — persisted so rows are self-describing
+        # and the two scopes are never mixed silently (ADVICE r4)
         T.StructField("counter_scope", T.StringType()),
         T.StructField("end_ts", T.TimestampType()),
     ]
@@ -143,7 +143,7 @@ class MetricsTable:
         if df is None:
             return None
         # counter_scope joins the grouping so a stream that switched
-        # apply paths mid-history (probe ↔ generic) can never sum
+        # apply flows mid-history (streaming ↔ batch) can never sum
         # pre-LWW event counts with post-LWW key counts into one cell —
         # the same never-mix rule the per-epoch rows carry (ADVICE r4)
         return (

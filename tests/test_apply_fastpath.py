@@ -1,17 +1,18 @@
-"""Focused tests for the r8 streaming fast-path restructure:
+"""Focused tests for the keyed apply tail both keyed flows share
+(``apply_batch_flagged``, the streaming flow, and ``apply_batch``, the
+batch flow):
 
   * ONE probe job carries bucket set + counters + poison count;
   * the dead-letter append is SKIPPED when the epoch has no poison
-    (no empty segment write, no metadata commit), and still lands
-    exactly-once when poison exists;
+    (no empty segment write, no metadata commit), in both flows, and
+    still lands exactly-once when poison exists;
   * LakeTable.merge(probe=...) (caller-supplied probe) produces the
-    identical final state as the generic path, and
-    the written-outside-touched guard still fails loudly on a lying
-    probe;
+    identical final state as merge's own probe, and the
+    written-outside-touched guard still fails loudly on a lying probe;
   * a poison epoch that crashes in the dead-letter append or in the
-    table commit replays to one apply and one quarantine, and so does
-    one whose shared store commit fails on the unkeyed path or on the
-    batch flow's dead-letter commit.
+    table commit replays to one apply and one quarantine, in both
+    flows, and so does one whose shared store commit fails on the
+    unkeyed path or on the batch flow's dead-letter commit.
 """
 
 import os
@@ -71,6 +72,26 @@ def test_clean_epoch_skips_dead_letter_write(spark, tmp_path):
     assert int(dl.log.meta()["version"]) == dl_v0
 
 
+def test_clean_batch_flow_skips_dead_letter_write(spark, tmp_path):
+    """The batch flow (apply_batch) appends dead letters only on poison,
+    like the streaming flow: a clean batch and its fenced replay commit
+    nothing to the dead-letter log."""
+    t = _mk(spark, tmp_path, "lake")
+    dl = DeadLetterTable(spark, str(tmp_path / "dl"))
+    v0 = t.current_version()
+    dl_v0 = int(dl.log.meta()["version"])
+    clean = _events(spark, [(1, "r1", "p1", "c1", "py", "x", None, "I", TS, 1),
+                            (2, "r2", "p2", "c2", "py", "y", None, "I", TS, 1)])
+    lin = apply_batch(t, clean, epoch_id=0, stream_id="s", dead_letter=dl)
+    assert not lin.get("skipped")
+    assert lin["n_poison"] == 0
+    assert int(dl.log.meta()["version"]) == dl_v0
+    assert t.current_version() > v0
+    assert t.read().count() == 2
+    assert apply_batch(t, clean, epoch_id=0, stream_id="s", dead_letter=dl)["skipped"]
+    assert int(dl.log.meta()["version"]) == dl_v0
+
+
 def test_poison_epoch_quarantines_exactly_once(spark, tmp_path):
     t = _mk(spark, tmp_path, "lake")
     dl = DeadLetterTable(spark, str(tmp_path / "dl"))
@@ -91,8 +112,8 @@ def test_poison_epoch_quarantines_exactly_once(spark, tmp_path):
 
 
 def test_probe_path_matches_generic_merge(spark, tmp_path):
-    """Same batch through merge(probe=...) and the generic persist path
-    must land the identical state."""
+    """Same batch through merge(probe=...) and merge's own probe must
+    land the identical state."""
     import pandas as _pd
 
     batch_pdf = _pd.DataFrame(
@@ -201,16 +222,32 @@ def _snap_dirs(t):
     return sorted(d for d in os.listdir(data) if d.startswith("snap-")) if os.path.isdir(data) else []
 
 
-@pytest.mark.parametrize("crash_at", ["dead_letter_append", "table_commit"])
-def test_poison_epoch_crash_windows_replay_exactly_once(spark, tmp_path, monkeypatch, crash_at):
-    """A poison epoch crashes (a) in the dead-letter append — the
-    ``pre_commit`` barrier aborts the staged snapshot — or (b) in the
-    table's metadata commit, after the dead letters committed. The
-    replay applies the epoch once and quarantines each poison row once."""
+@pytest.mark.parametrize("crash_at,flow", [
+    pytest.param("dead_letter_append", "flagged", id="dead_letter_append"),
+    pytest.param("table_commit", "flagged", id="table_commit"),
+    pytest.param("dead_letter_append", "batch", id="batch-dead_letter_append"),
+    pytest.param("table_commit", "batch", id="batch-table_commit"),
+])
+def test_poison_epoch_crash_windows_replay_exactly_once(spark, tmp_path, monkeypatch, crash_at,
+                                                       flow):
+    """A poison epoch, through the streaming (flagged) or the batch
+    flow, crashes (a) in the dead-letter append — the ``pre_commit``
+    barrier aborts the staged snapshot — or (b) in the table's metadata
+    commit, after the dead letters committed. The replay applies the
+    epoch once and quarantines each poison row once."""
     t = _mk(spark, tmp_path, "lake")
     dl = DeadLetterTable(spark, str(tmp_path / "dl"))
     v0, staged0 = t.current_version(), _snap_dirs(t)
-    flagged = _poison_epoch(spark)
+    if flow == "flagged":
+        flagged = _poison_epoch(spark)
+
+        def run():
+            return apply_batch_flagged(t, flagged, epoch_id=0, stream_id="s", dead_letter=dl)
+    else:
+        events = _poison_rows(spark)
+
+        def run():
+            return apply_batch(t, events, epoch_id=0, stream_id="s", dead_letter=dl)
 
     def crash(*_a, **_k):
         raise RuntimeError("injected crash")
@@ -220,7 +257,7 @@ def test_poison_epoch_crash_windows_replay_exactly_once(spark, tmp_path, monkeyp
     with monkeypatch.context() as mp:
         mp.setattr(*owner, crash)
         with pytest.raises(RuntimeError, match="injected crash"):
-            apply_batch_flagged(t, flagged, epoch_id=0, stream_id="s", dead_letter=dl)
+            run()
     assert t.current_version() == v0
     if crash_at == "dead_letter_append":
         assert _snap_dirs(t) == staged0
@@ -228,12 +265,12 @@ def test_poison_epoch_crash_windows_replay_exactly_once(spark, tmp_path, monkeyp
     else:
         assert dl.read().count() == 1  # committed before the table
 
-    lin = apply_batch_flagged(t, flagged, epoch_id=0, stream_id="s", dead_letter=dl)
+    lin = run()
     assert not lin.get("skipped")
     assert [(r["repo"], r["path"]) for r in t.read().collect()] == [("r1", "p1")]
     assert [r["seq"] for r in dl.read().collect()] == [2]
     # a second replay is fenced on both sides
-    assert apply_batch_flagged(t, flagged, epoch_id=0, stream_id="s", dead_letter=dl)["skipped"]
+    assert run()["skipped"]
     assert dl.read().count() == 1
 
 

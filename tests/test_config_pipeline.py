@@ -470,3 +470,38 @@ def test_failed_segment_write_leaves_no_dir(spark, tmp_path):
     assert not [d for d in os.listdir(tmp_path / "ulog") if d.startswith("seg-")]
     log.append(spark.range(4).selectExpr("id AS a"), stream_id="s", epoch_id=0)
     assert log.current_version() == 1 and log.read().count() == 4
+
+
+def _orphan_segments(log) -> list[str]:
+    import os
+
+    listed = {f.split(os.sep, 1)[0] for f in log.meta()["files"]}
+    return sorted(d for d in os.listdir(log.path) if d.startswith("seg-") and d not in listed)
+
+
+def test_all_null_column_first_then_typed_stays_readable(spark, tmp_path):
+    """A fresh log whose first batch has an all-null column leaves it out
+    of the segment and the schema (committing ``void`` would refuse every
+    later typed batch); a later typed batch adds it, and both read back."""
+    log = UnkeyedEventLog.create(spark, str(tmp_path / "ulog"))
+    log.append(spark.range(2).select("id", F.lit(None).alias("c")), stream_id="s", epoch_id=0)
+    log.append(spark.range(2, 4).select("id", F.lit("x").alias("c")), stream_id="s", epoch_id=1)
+    got = sorted((r["id"], r["c"]) for r in log.read().collect())
+    assert got == [(0, None), (1, None), (2, "x"), (3, "x")]
+    assert _orphan_segments(log) == []
+
+
+def test_typed_column_then_all_null_stays_readable(spark, tmp_path):
+    """An all-null batch column is written with the log's committed type:
+    Spark writes a ``void`` column as physical BOOLEAN, which a read with
+    the committed ``string`` schema rejects. A batch with an incompatible
+    type is refused before its segment is staged."""
+    log = UnkeyedEventLog.create(spark, str(tmp_path / "ulog"))
+    log.append(spark.range(2).select("id", F.lit("x").alias("c")), stream_id="s", epoch_id=0)
+    log.append(spark.range(2, 4).select("id", F.lit(None).alias("c")), stream_id="s", epoch_id=1)
+    got = sorted((r["id"], r["c"]) for r in log.read().collect())
+    assert got == [(0, "x"), (1, "x"), (2, None), (3, None)]
+    with pytest.raises(ValueError, match="incompatible type change"):
+        log.append(spark.range(1).select("id", F.lit(1.5).alias("c")), stream_id="s", epoch_id=2)
+    assert log.current_version() == 2
+    assert _orphan_segments(log) == []

@@ -273,8 +273,8 @@ def test_fast_path_dead_letters_survive_readmit(spark, tmp_path):
 
 
 def test_apply_batch_through_mor(spark, tmp_path):
-    """The generic batch-replay flow lands delta epochs too: merge's own
-    probe counts the rows the delta file holds."""
+    """The batch-replay flow lands delta epochs too: its probe counts
+    the rows the delta file holds."""
     ev = generate_events(GenParams(n_events=1500, seed=41))
     t = _table(spark, tmp_path / "lake")
     df = spark.createDataFrame(ev.drop(columns=["is_noop"]))
