@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from movex_cdc_spark.lake.fs import DEFAULT_FS
-from movex_cdc_spark.lake.versioned import CommitConflict, VersionedStore, union_schema
+from movex_cdc_spark.lake.versioned import VersionedStore, union_schema
 
 
 def _align(m: dict[str, Any], batch: DataFrame) -> DataFrame:
@@ -91,16 +91,6 @@ class UnkeyedEventLog(VersionedStore):
                 )
             return cls.create(spark, path, fs=fs)
 
-    def _write_segment(self, batch: DataFrame, new_version: int) -> list[str]:
-        """Write one uuid-named segment dir (``_stage``); returns the
-        relative file list."""
-        seg_rel, seg_dir = self._stage(batch.write, "seg", new_version)
-        return [
-            os.path.join(seg_rel, f)
-            for f in sorted(self.fs.listdir(seg_dir))
-            if f.endswith(".parquet")
-        ]
-
     # --------------------------------------------------------- append
     def append(
         self,
@@ -115,45 +105,31 @@ class UnkeyedEventLog(VersionedStore):
         Optimistic concurrency: several writers (the multiplexed
         pipeline's per-table dispatch threads sharing one dead-letter
         log, or parallel streams) may race on the version counter. A
-        loser re-reads the listing, re-checks its fence, and re-commits
-        the SAME already-written segment — data is written once, only
-        the metadata commit retries (LakeTable.merge_with_retry's
-        contract). The uuid-named segment of a fenced-out loser is
-        never listed, i.e. invisible, same as a crash orphan."""
+        loser rebases (``_commit_rebasing``): it re-reads the listing,
+        re-checks its fence, re-unions the schema and re-commits the
+        SAME already-written segment — data is written once, only the
+        metadata commit retries. The uuid-named segment of a fenced-out
+        loser is never listed, i.e. invisible, same as a crash orphan."""
+        skipped = {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
         m = self.meta()
         if self.fenced(m, stream_id, epoch_id):
-            return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
+            return skipped
         # aligned and unioned BEFORE the write: a rejected batch stages nothing
         batch = _align(m, batch)
-        schema = _union(m, batch.schema)
-        files = self._write_segment(batch, m["version"] + 1)
-        for _attempt in range(max_attempts):
-            m2 = self._next(m, stream_id, epoch_id, files=m["files"] + files, schema=schema)
-            try:
-                self._write_version(m2)
-            except CommitConflict:
-                # the winner's commit is two steps (exclusive-create
-                # version file, then _current swap); a zero-backoff spin
-                # can burn every attempt re-reading the STALE _current
-                # while the winner is parked between them. Linear
-                # backoff guarantees the winner's microsecond-scale
-                # second step lands within a few retries.
-                time.sleep(0.001 * (_attempt + 1))
-                m = self.meta()  # lost the version race: rebase and retry
-                if self.fenced(m, stream_id, epoch_id):
-                    # a concurrent replay of OUR epoch won instead
-                    return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
-                schema = _union(m, batch.schema)
-                continue
-            return {
-                "version": m2["version"],
-                "stream_id": stream_id,
-                "epoch_id": epoch_id,
-                "files_added": len(files),
-            }
-        raise RuntimeError(
-            f"append to {self.path} lost the commit race {max_attempts} times"
-        )
+        _union(m, batch.schema)
+        _, files = self._stage(batch.write, "seg", m["version"] + 1)
+
+        def build(cur: dict[str, Any]) -> dict[str, Any] | None:
+            if self.fenced(cur, stream_id, epoch_id):
+                return None  # a concurrent replay of OUR epoch won instead
+            return self._next(cur, stream_id, epoch_id, files=cur["files"] + files,
+                              schema=_union(cur, batch.schema))
+
+        m2 = self._commit_rebasing(m, build, max_attempts)
+        if m2 is None:
+            return skipped
+        return {"version": m2["version"], "stream_id": stream_id,
+                "epoch_id": epoch_id, "files_added": len(files)}
 
     # -------------------------------------------------------- rewrite
     def _swap_listing(self, m: dict, new_files: list[str], schema: dict) -> dict[str, Any]:
@@ -175,7 +151,7 @@ class UnkeyedEventLog(VersionedStore):
         m = self.meta()
         df = _align(m, df)
         schema = _union(m, df.schema)  # before the write, as in append
-        return self._swap_listing(m, self._write_segment(df, m["version"] + 1), schema)
+        return self._swap_listing(m, self._stage(df.write, "seg", m["version"] + 1)[1], schema)
 
     def compact_segments(self, target_files: int = 4) -> dict[str, Any]:
         """Small-files housekeeping (the sink-side ST8): a long-running
@@ -185,7 +161,7 @@ class UnkeyedEventLog(VersionedStore):
         m = self.meta()
         if len(m["files"]) <= target_files:
             return {"skipped": True, "files": len(m["files"])}
-        files = self._write_segment(self.read().coalesce(target_files), m["version"] + 1)
+        _, files = self._stage(self.read().coalesce(target_files).write, "seg", m["version"] + 1)
         return self._swap_listing(m, files, m.get("schema"))
 
     def _dir_age_s(self, seg_dir: str) -> float:
@@ -239,9 +215,10 @@ class UnkeyedEventLog(VersionedStore):
           disk-space leak, never a correctness issue, so erring on
           KEEP is free.
 
-        The bookkeeping commit rebases and retries like ``append`` —
-        concurrent appenders advancing the version must not make
-        maintenance fail spuriously after dirs were already removed."""
+        The bookkeeping commit rebases like ``append``
+        (``_commit_rebasing``) — concurrent appenders advancing the
+        version must not make maintenance fail spuriously after dirs
+        were already removed."""
         m = self.meta()
         cutoff = m["version"] - keep_last
         removed = 0
@@ -274,39 +251,21 @@ class UnkeyedEventLog(VersionedStore):
                 new_seen[d] = m["version"] if observed_at is None else observed_at
         if not (removed or new_seen != seen):
             return removed
-        keep = [r for r in m.get("retired", []) if r["dir"] not in reaped_dirs]
-        for _attempt in range(max_attempts):
-            try:
-                self._write_version(self._next(m, retired=keep, orphans_seen=new_seen))
-                return removed
-            except CommitConflict:
-                time.sleep(0.001 * (_attempt + 1))
-                m = self.meta()  # lost the version race: rebase
-                keep = [
-                    r
-                    for r in m.get("retired", [])
-                    if r["dir"] not in reaped_dirs
-                ]
-                fresh_seen = dict(m.get("orphans_seen", {}))
-                live = {f.split(os.sep, 1)[0] for f in m["files"]}
-                kept_dirs = {r["dir"] for r in keep}
-                merged: dict[str, int] = {}
-                for d in set(fresh_seen) | set(new_seen):
-                    # a dir we reaped, or that COMMITTED meanwhile
-                    # (now live/retired), leaves the watch list; a dir
-                    # both we and a rival expire observed keeps its
-                    # EARLIEST observation version
-                    if d in reaped_dirs or d in live or d in kept_dirs:
-                        continue
-                    merged[d] = min(
-                        fresh_seen.get(d, new_seen.get(d, m["version"])),
-                        new_seen.get(d, fresh_seen.get(d, m["version"])),
-                    )
-                new_seen = merged
-        raise RuntimeError(
-            f"expire_segments on {self.path} lost the commit race"
-            f" {max_attempts} times (dirs already removed: {removed})"
-        )
+
+        def build(cur: dict[str, Any]) -> dict[str, Any]:
+            # on a rebase, keep a rival expire's new observations: a dir
+            # both observed keeps its EARLIEST observation version; a dir
+            # reaped here, or COMMITTED meanwhile, leaves the watch list
+            keep = [r for r in cur.get("retired", []) if r["dir"] not in reaped_dirs]
+            gone = reaped_dirs | {r["dir"] for r in keep} | {f.split(os.sep, 1)[0] for f in cur["files"]}
+            watch = {d: v for d, v in cur.get("orphans_seen", {}).items() if d not in seen}
+            for d, v in new_seen.items():
+                watch[d] = min(v, watch.get(d, v))
+            return self._next(cur, retired=keep,
+                              orphans_seen={d: v for d, v in watch.items() if d not in gone})
+
+        self._commit_rebasing(m, build, max_attempts)
+        return removed
 
     # ----------------------------------------------------------- read
     def read(self) -> DataFrame:

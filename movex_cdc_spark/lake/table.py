@@ -57,7 +57,7 @@ from __future__ import annotations
 import os
 import re
 import time
-from functools import reduce
+from functools import cached_property, reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -167,6 +167,16 @@ class LakeTable(VersionedStore):
     # commit, fence, create and staging: lake/versioned.py
     data_dir = property(lambda self: os.path.join(self.path, "data"))
 
+    @cached_property
+    def _layout(self) -> tuple[list[str], int]:
+        # read once per loaded handle (``create`` sets it): no commit
+        # changes the key columns or the bucket count
+        m = self.meta()
+        return m["key_cols"], m["n_buckets"]
+
+    key_cols = property(lambda self: self._layout[0])
+    n_buckets = property(lambda self: self._layout[1])
+
     # ---------------------------------------------------------- create
     @classmethod
     def create(
@@ -194,6 +204,7 @@ class LakeTable(VersionedStore):
             "lineage": [],
             "stats": {"rows_live": 0, "rows_total": 0},
         })
+        t._layout = (key_cols, n_buckets)
         return t
 
     # ------------------------------------------------------- metadata
@@ -434,29 +445,20 @@ class LakeTable(VersionedStore):
         for ~1 % of the keys."""
         return max(1, min(n_buckets, self.spark.sparkContext.defaultParallelism))
 
-    def _write_snapshot(self, df: DataFrame, version: int) -> tuple[str, str]:
+    def _write_snapshot(self, df: DataFrame, version: int) -> tuple[str, dict[int, list[str]]]:
         """Write ``df`` (BUCKET_COL + table columns, already
         hash-partitioned on BUCKET_COL) as base files, one parquet file
-        per bucket, into a fresh snapshot dir; returns the dir
-        (relative, absolute)."""
-        return self._stage(
+        per bucket, into a fresh snapshot dir; returns the dir (relative)
+        and the table-relative files of each bucket the write gave rows,
+        by bucket id."""
+        rel, files = self._stage(
             df.withColumn(PART_COL, F.col(BUCKET_COL)).write.partitionBy(PART_COL), _SNAP, version
         )
-
-    def _bucket_files(self, snap_rel: str, buckets) -> dict[str, list[str]]:
-        """Table-relative parquet files per bucket id (str, the metadata
-        key) of a staged snapshot; an empty list for a bucket the write
-        left without rows."""
-        out: dict[str, list[str]] = {}
-        for b in buckets:
-            rel = os.path.join(snap_rel, f"{PART_COL}={b}")
-            bdir = os.path.join(self.path, rel)
-            out[str(b)] = (
-                [os.path.join(rel, f) for f in sorted(self.fs.listdir(bdir)) if f.endswith(".parquet")]
-                if self.fs.isdir(bdir)
-                else []
-            )
-        return out
+        by_bucket: dict[int, list[str]] = {}
+        for f in files:
+            b = int(re.search(rf"{PART_COL}=(\d+)", f).group(1))
+            by_bucket.setdefault(b, []).append(f)
+        return rel, dict(sorted(by_bucket.items()))
 
     # ---------------------------------------------------------- merge
     def merge(
@@ -608,32 +610,20 @@ class LakeTable(VersionedStore):
             written_rows, F.count(F.lit(1)).alias("rows")
         )
         _t = time.monotonic()
-        snap_rel, snap_dir = self._write_snapshot(result, version)
+        snap_rel, written = self._write_snapshot(result, version)
         timings["write_s"] = round(time.monotonic() - _t, 4)
-        _t = time.monotonic()
-        try:
-            # Contract guard: the commit only adopts buckets in
-            # `touched`. If the write produced a bucket OUTSIDE that
-            # set, the probe's key set diverged from the batch's — those
-            # rows would be silently orphaned (written but never
-            # listed), i.e. lost. Fail loudly instead.
-            written = {
-                int(d.split("=", 1)[1])
-                for d in self.fs.listdir(snap_dir)
-                if d.startswith(f"{PART_COL}=")
-            }
-            extra = written - set(touched)
-            if extra:
-                raise RuntimeError(_diverged(sorted(extra), touched))
-            # a bucket with no rows left (everything merged away) gets
-            # an empty list
-            lists = self._bucket_files(snap_rel, touched)
-            rows = written_rows.get["rows"]
-        except Exception:
-            self.fs.rmtree(snap_dir)
-            raise
-        timings["listing_s"] = round(time.monotonic() - _t, 4)
-        return snap_rel, lists, rows
+        # Contract guard: the commit only adopts buckets in `touched`.
+        # If the write produced a bucket OUTSIDE that set, the probe's
+        # key set diverged from the batch's — those rows would be
+        # silently orphaned (written but never listed), i.e. lost. Fail
+        # loudly instead.
+        extra = set(written) - set(touched)
+        if extra:
+            self.fs.rmtree(os.path.join(self.path, snap_rel))
+            raise RuntimeError(_diverged(sorted(extra), touched))
+        # a bucket with no rows left (everything merged away) gets an
+        # empty list
+        return snap_rel, {str(b): written.get(b, []) for b in touched}, written_rows.get["rows"]
 
     def _stage_delta(self, m, src, touched, version, timings) -> tuple[str, dict, None]:
         """Delta arm: the batch rows as ONE bucket-sorted parquet file
@@ -652,19 +642,12 @@ class LakeTable(VersionedStore):
         )
         _t = time.monotonic()
         try:
-            snap_rel, snap_dir = self._stage(rows.write, _SNAP, version)
+            snap_rel, files = self._stage(rows.write, _SNAP, version)
         except Exception as e:
             if _DIVERGED_MARK not in str(e):
                 raise
             raise RuntimeError(_diverged(None, touched)) from None
         timings["write_s"] = round(time.monotonic() - _t, 4)
-        _t = time.monotonic()
-        files = [
-            os.path.join(snap_rel, f)
-            for f in sorted(self.fs.listdir(snap_dir))
-            if f.endswith(".parquet")
-        ]
-        timings["listing_s"] = round(time.monotonic() - _t, 4)
         lists = {str(b): m["buckets"].get(str(b), []) + files for b in touched}
         return snap_rel, lists, None
 
@@ -688,7 +671,7 @@ class LakeTable(VersionedStore):
         }
         m2 = self._next(
             m, lineage["stream_id"], lineage["epoch_id"], parent=m["version"],
-            buckets=new_buckets, lineage=(m.get("lineage") or [])[-99:] + [lineage],
+            buckets=new_buckets, lineage=[lineage],
         )
         if pre_commit is not None:
             # join the caller's concurrent must-precede-commit work
@@ -742,12 +725,10 @@ class LakeTable(VersionedStore):
             (F.col(DELETED_COL) if DELETED_COL in names else F.lit(False)).alias(DELETED_COL),
         )
         new_version = m["version"] + 1
-        snap_rel, _ = self._write_snapshot(
+        _, written = self._write_snapshot(
             out.repartition(self._write_tasks(n_buckets), F.col(BUCKET_COL)), new_version
         )
-        buckets = {
-            b: files for b, files in self._bucket_files(snap_rel, range(n_buckets)).items() if files
-        }
+        buckets = {str(b): files for b, files in written.items()}
         # changes() refuses ranges spanning a bulk load (bucket map
         # rebuilt, seqs reset — not a change set)
         self._write_version(self._next(

@@ -26,7 +26,15 @@ JSON per committed version and a ``_current`` pointer.
     the replayed epoch recomputes the same version, and a
     version-derived name would collide with the orphan ("path already
     exists") and wedge the stream. Each store's expiry reaps orphans.
-    A write that fails drops its dir.
+    A write that fails drops its dir. ``_stage`` returns the parquet
+    files it wrote, from one walk of the dir, and every writer commits
+    exactly that list — no writer lists its staged dir again (Iceberg's
+    writers hand their data files to the snapshot commit the same way).
+  * **rebase loop** — ``_commit_rebasing`` commits a version built from
+    the current metadata and, on ``CommitConflict``, re-reads it and
+    rebuilds. Only a commit that stays valid on ANY newer version may
+    rebase: an append (its segment is independent of the listing) or
+    expiry bookkeeping. A full-listing swap stays single-attempt.
   * **schema union** — ``union_schema``: add-only, with the
     Iceberg-compatible primitive widenings of ``_WIDEN`` (metadata only;
     Spark's parquet readers promote the old files at scan time);
@@ -37,7 +45,9 @@ from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrameWriter, SparkSession
@@ -169,17 +179,50 @@ class VersionedStore:
         last = None if epoch_id is None else m["epochs"].get(stream_id)
         return last is not None and epoch_id <= last
 
+    def _commit_rebasing(
+        self,
+        m: dict[str, Any],
+        build: Callable[[dict[str, Any]], "dict[str, Any] | None"],
+        max_attempts: int = 20,
+    ) -> "dict[str, Any] | None":
+        """Commit ``build(m)``; on ``CommitConflict`` back off, re-read
+        the metadata and commit ``build`` of the new head. ``build``
+        returns None to stop (say, a rival already committed this
+        epoch), and so does this. Returns the committed metadata."""
+        for attempt in range(max_attempts):
+            m2 = build(m)
+            if m2 is None:
+                return None
+            try:
+                self._write_version(m2)
+                return m2
+            except CommitConflict:
+                # the winner's commit is two steps (exclusive-create the
+                # version file, then swap _current); a zero-backoff spin
+                # can burn every attempt re-reading the STALE _current
+                # while the winner is parked between them. Linear backoff
+                # lets its microsecond-scale second step land.
+                time.sleep(0.001 * (attempt + 1))
+                m = self.meta()
+        raise RuntimeError(f"commit to {self.path} lost the commit race {max_attempts} times")
+
     # ---------------------------------------------------------- stage
-    def _stage(self, writer: DataFrameWriter, prefix: str, version: int) -> tuple[str, str]:
+    def _stage(self, writer: DataFrameWriter, prefix: str, version: int) -> tuple[str, list[str]]:
         """Run ``writer`` into a fresh ``{prefix}-{version}-{uuid}`` dir
-        (module docstring); returns the dir (store-relative, absolute).
-        A failed write drops the dir."""
+        (module docstring); returns the dir and its parquet files, both
+        store-relative, the files sorted. A failed write or listing drops
+        the dir."""
         rel = f"{prefix}-{version}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.path, rel)
         try:
             writer.parquet(out, mode="errorifexists")
+            files = sorted(
+                os.path.join(rel, root[len(out) + 1:], f)
+                for root, _dirs, names in self.fs.walk(out)
+                for f in names
+                if f.endswith(".parquet")
+            )
         except Exception:
-            if self.fs.exists(out):
-                self.fs.rmtree(out)
+            self.fs.rmtree(out)
             raise
-        return rel, out
+        return rel, files

@@ -5,9 +5,9 @@ This is the Spark shape of the reference's hot path
 
     events → condition filter → no-op suppression → poison flag
     (flag_dispositions) → valid/poison slices (split_flagged) →
-    [config projection] → fence → [schema evolve] → one probe job →
-    [dead-letter append, only on poison] ∥ MERGE (LWW inside) →
-    lineage/metrics record
+    [config projection] → [schema evolve] → one probe job →
+    [dead-letter append, only on poison] ∥ MERGE (epoch fence and LWW
+    inside) → lineage/metrics record
 
 One micro-batch = one call. The streaming shells
 (streaming/pipeline.py) persist the flagged batch and run
@@ -39,7 +39,7 @@ from movex_cdc_spark.operators.filters import (
     suppress_noop_updates,
 )
 from movex_cdc_spark.operators.lww import lww_dedup_maxby
-from movex_cdc_spark.session import inheriting_local_properties
+from movex_cdc_spark.session import inheriting_local_properties, pinned_now
 from movex_cdc_spark.sources.events import EVENTS_SCHEMA
 
 REPO_FILES_SCHEMA = T.StructType(
@@ -220,13 +220,12 @@ def _apply_keyed(
     """The keyed tail both flows share; they differ only in the
     ``ready`` rows they merge and the ``probe_src`` they probe:
 
-    1. read the metadata once and check the fence;
-    2. evolve the schema (ALTER-before-MERGE);
-    3. ONE probe job (``probe_buckets``) over ``probe_src``: the touched
+    1. evolve the schema (ALTER-before-MERGE);
+    2. ONE probe job (``probe_buckets``) over ``probe_src``: the touched
        buckets, the A1 counters and, while ``probe_src`` still carries
        the poison flag, the poison count (else one ``isEmpty`` over
        ``poison`` decides, and only when there is a dead-letter log);
-    4. the dead-letter append, ONLY when there is poison, on a pool
+    3. the dead-letter append, ONLY when there is poison, on a pool
        thread that inherits this thread's Spark local properties (so
        query.stop() cancels its jobs) and overlaps the snapshot write.
        It is joined at merge's ``pre_commit`` barrier, so the poison
@@ -234,20 +233,10 @@ def _apply_keyed(
        the two replays only the append, which the dead-letter log's own
        fence resolves. An epoch that appended nothing leaves nothing to
        fence or replay;
-    5. ``merge(probe=touched)``: the ``ready`` plan runs once more,
-       inside the snapshot write;
-    6. the metrics row, its counters in ``scope``."""
-    m = table.meta()
-    if table.fenced(m, stream_id, epoch_id):
-        # Replayed epoch: the merge is fenced. Only the dead-letter
-        # append may still be pending (crash between its commit and the
-        # table commit) — its OWN fence resolves that. A clean epoch
-        # appended nothing the first time, so its replay appends nothing
-        # either (no empty segment, no commit).
-        if dead_letter is not None and not poison.isEmpty():
-            dead_letter.append(poison, stream_id=stream_id, epoch_id=epoch_id)
-        return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
-
+    4. ``merge(probe=touched)``: the ``ready`` plan runs once more,
+       inside the snapshot write; a replayed epoch is fenced there and
+       returns the fence record;
+    5. the metrics row, its counters in ``scope``."""
     _evolve(table, ready)
 
     flagged = POISON_FLAG in probe_src.columns
@@ -263,8 +252,8 @@ def _apply_keyed(
     # a micro-batch — obs.get deadlocked the stream.
     _t = time.monotonic()
     touched, got = probe_buckets(
-        probe_src.select(*([POISON_FLAG] if flagged else []), "seq", "op", *m["key_cols"]),
-        m["key_cols"], m["n_buckets"], ok, **counters,
+        probe_src.select(*([POISON_FLAG] if flagged else []), "seq", "op", *table.key_cols),
+        table.key_cols, table.n_buckets, ok, **counters,
     )
     probe_wall = round(time.monotonic() - _t, 4)
     got["events"] = got.pop("rows")
@@ -483,6 +472,16 @@ def with_envelope(df: DataFrame, schema_name: str = "public",
     return out
 
 
+def backoff_elapsed(now, start_delay_s: int):
+    """Whether a dead-letter row is due for retry at the instant ``now``
+    (``pinned_now``), reference S7: retry_count = 0 OR last_error_time +
+    start_delay * 3^(retry_count-1) < now (transfer_thread.rb:358-371)."""
+    backoff = F.expr(
+        f"last_error_time + make_interval(0,0,0,0,0,0, {start_delay_s} * pow(3, retry_count - 1))"
+    )
+    return (F.col("retry_count") == 0) | (backoff < F.lit(now))
+
+
 class DeadLetterTable:
     """Append-only quarantine for poison rows (reference S11:
     Event_Log_Final_Errors, transfer_thread.rb:468-491) with
@@ -534,13 +533,8 @@ class DeadLetterTable:
         return df
 
     def retry_eligible(self, start_delay_s: int = 20) -> DataFrame:
-        """Rows whose exponential backoff has elapsed (reference S7:
-        retry_count=0 OR last_error_time + start_delay*3^(retry-1) < now,
-        transfer_thread.rb:358-371)."""
+        """Rows due for retry now (``backoff_elapsed``)."""
         df = self.read()
         if df is None:
             return None
-        backoff = F.expr(
-            f"last_error_time + make_interval(0,0,0,0,0,0, {start_delay_s} * pow(3, retry_count - 1))"
-        )
-        return df.filter((F.col("retry_count") == 0) | (backoff < F.current_timestamp()))
+        return df.filter(backoff_elapsed(pinned_now(self.spark), start_delay_s))

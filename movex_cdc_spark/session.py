@@ -133,3 +133,12 @@ def inheriting_local_properties(spark: SparkSession, fn):
 
     wrap = inheritable_thread_target(spark)
     return fn if wrap is spark else wrap(fn)
+
+
+def pinned_now(spark: SparkSession):
+    """The session's current timestamp, read once. ``current_timestamp()``
+    is re-evaluated by every action, so a pass that classifies rows by
+    age across several actions compares against ``F.lit(pinned_now())``
+    instead: a row whose age crosses the line between two actions would
+    otherwise be counted on one side and written on the other."""
+    return spark.sql("SELECT current_timestamp() AS ts").first()["ts"]

@@ -6,45 +6,37 @@ final-errors retention after final_errors_keep_hours
 fencing (heartbeat.rb:12-44).
 
 Spark analogs: lake-table snapshot expiry (LakeTable.expire_snapshots),
-age-based retention on the dead-letter/final-errors parquet dirs, and a
-heartbeat lockfile guarding one writer per checkpoint."""
+age-based retention on the final-errors log, and a heartbeat lockfile
+guarding one writer per checkpoint."""
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import socket
 import time
-import uuid
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from movex_cdc_spark.session import pinned_now
 
-def retain_recent(
-    spark: SparkSession,
-    path: str,
-    ts_col: str = "error_time",
-    keep_hours: int = 96,
-) -> int:
-    """Age out rows older than keep_hours from an append-only parquet
-    dir (final-errors retention). Rewrite-and-swap; returns rows kept."""
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
-        return 0
-    kept = df.filter(
-        F.col(ts_col) >= F.current_timestamp() - F.expr(f"make_interval(0,0,0,0,{keep_hours},0,0)")
+
+def retain_recent(log, ts_col: str = "error_time", keep_hours: int = 96) -> int:
+    """Age out rows older than ``keep_hours`` from an UnkeyedEventLog
+    (final-errors retention, ``RetryWorker.final``) through the log's
+    atomic listing swap; returns rows kept. Rows are classified against
+    one pinned instant and counted before the swap; nothing is rewritten
+    when nothing ages out."""
+    df = log.read()
+    if ts_col not in df.columns:
+        return 0  # nothing logged yet
+    fresh = F.col(ts_col) >= F.lit(pinned_now(log.spark)) - F.expr(
+        f"make_interval(0,0,0,0,{keep_hours},0,0)"
     )
-    n = kept.count()
-    tmp = path + f".tmp.{uuid.uuid4().hex}"
-    kept.write.mode("overwrite").parquet(tmp)
-    trash = path + ".old"
-    os.rename(path, trash)
-    os.rename(tmp, path)
-    shutil.rmtree(trash, ignore_errors=True)
-    return n
+    counts = df.agg(F.count(F.when(fresh, 1)).alias("kept"), F.count(F.lit(1)).alias("all")).first()
+    if counts["kept"] < counts["all"]:
+        log.replace(df.filter(fresh))
+    return counts["kept"]
 
 
 def housekeep_unkeyed_log(log, target_files: int = 4, keep_last: int = 2) -> dict:

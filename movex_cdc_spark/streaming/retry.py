@@ -40,7 +40,8 @@ from pyspark.sql import functions as F
 
 from movex_cdc_spark.lake.append_log import UnkeyedEventLog
 from movex_cdc_spark.lake.table import LakeTable
-from movex_cdc_spark.operators.apply import DeadLetterTable, apply_batch
+from movex_cdc_spark.operators.apply import DeadLetterTable, apply_batch, backoff_elapsed
+from movex_cdc_spark.session import pinned_now
 from movex_cdc_spark.sources.events import EVENT_COLS
 
 
@@ -73,18 +74,13 @@ class RetryWorker:
         # re-run (the rewrite never happened), so the re-run's append
         # fences to a no-op instead of duplicating final rows.
         dl_version = self.dl.log.current_version()
-        # Pin ONE wall-clock instant for the whole pass. readmit runs up
-        # to four Spark actions (counts agg, heal merge, exhausted write,
-        # dl.replace rewrite); F.current_timestamp() is re-evaluated per
-        # action, so a row whose backoff expired between actions would be
-        # counted eligible+healed yet dropped from the rewrite — silent
-        # row loss. F.lit(now) classifies identically in every action.
-        now = self.spark.sql("select current_timestamp() AS ts").first()["ts"]
-        backoff = F.expr(
-            f"last_error_time + make_interval(0,0,0,0,0,0,"
-            f" {self.start_delay_s} * pow(3, retry_count - 1))"
-        )
-        eligible_pred = (F.col("retry_count") == 0) | (backoff < F.lit(now))
+        # Pin ONE wall-clock instant for the whole pass (``pinned_now``):
+        # readmit runs up to four Spark actions (counts agg, heal merge,
+        # exhausted write, dl.replace rewrite), and a row whose backoff
+        # expired between them would be counted eligible+healed yet
+        # dropped from the rewrite — silent row loss.
+        now = pinned_now(self.spark)
+        eligible_pred = backoff_elapsed(now, self.start_delay_s)
         eligible = df.filter(eligible_pred)
         waiting = df.filter(~eligible_pred)
 

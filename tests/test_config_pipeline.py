@@ -5,6 +5,7 @@ key_handling='N' append path (S5)."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from movex_cdc_spark.config.table_config import (
     ColumnCfg,
@@ -429,9 +430,8 @@ def test_expire_segments_reaps_fenced_orphans(spark, tmp_path):
     df = spark.range(5).selectExpr("id as a")
     log.append(df, stream_id="s", epoch_id=0)
     # the fenced-out loser: segment written, metadata commit never won
-    orphan_files = log._write_segment(df, log.meta()["version"] + 1)
-    orphan_dir = os.path.join(str(tmp_path / "log"),
-                              orphan_files[0].split(os.sep, 1)[0])
+    orphan_rel, _ = log._stage(df.write, "seg", log.meta()["version"] + 1)
+    orphan_dir = os.path.join(str(tmp_path / "log"), orphan_rel)
     assert os.path.isdir(orphan_dir)
     # phase 1: observed, NOT reaped (could be an in-flight append)
     assert log.expire_segments(keep_last=1) == 0
@@ -505,3 +505,75 @@ def test_typed_column_then_all_null_stays_readable(spark, tmp_path):
         log.append(spark.range(1).select("id", F.lit(1.5).alias("c")), stream_id="s", epoch_id=2)
     assert log.current_version() == 2
     assert _orphan_segments(log) == []
+
+
+def test_append_rebases_a_stolen_commit_onto_its_own_segment(spark, tmp_path, monkeypatch):
+    """An append that loses its version to a rival rebases: the commit
+    it retries lists the rival's segment and its own, each once, and
+    reuses the segment it already wrote (no second staging)."""
+    import os
+
+    path = str(tmp_path / "log")
+    log = UnkeyedEventLog.create(spark, path)
+    real = UnkeyedEventLog._write_version
+    rival: dict = {}
+
+    def stealing_write(self, meta):
+        if not rival:
+            # the "other writer" stages its own segment and commits it first
+            _, rival["files"] = self._stage(spark.range(2).selectExpr("id AS a").write, "seg", 1)
+            real(self, self._next(self.meta(), "rival", 0, files=rival["files"],
+                                  schema=T.StructType([T.StructField("a", T.LongType())]).jsonValue()))
+        return real(self, meta)
+
+    monkeypatch.setattr(UnkeyedEventLog, "_write_version", stealing_write)
+    lin = log.append(spark.range(10, 13).selectExpr("id AS a"), stream_id="s", epoch_id=0)
+    monkeypatch.undo()
+    assert lin["version"] == 2 and rival["files"]
+    files = log.meta()["files"]
+    assert files[: len(rival["files"])] == rival["files"]
+    assert len(set(files)) == len(files) == len(rival["files"]) + lin["files_added"]
+    seg_dirs = {f.split(os.sep, 1)[0] for f in files}
+    assert seg_dirs == {d for d in os.listdir(path) if d.startswith("seg-")}
+    assert len(seg_dirs) == 2
+    assert log.meta()["epochs"] == {"rival": 0, "s": 0}
+    assert sorted(r["a"] for r in log.read().collect()) == [0, 1, 10, 11, 12]
+
+
+def test_expire_bookkeeping_rebases_onto_a_rival_observation(spark, tmp_path, monkeypatch):
+    """expire_segments' bookkeeping commit, stolen by a rival expire that
+    observed the same orphan earlier: the rebased commit keeps the
+    EARLIEST observation and still drops the dirs it reaped."""
+    import os
+
+    path = str(tmp_path / "log")
+    log = UnkeyedEventLog.create(spark, path)
+    df = spark.range(3).selectExpr("id AS a")
+    for e in range(2):
+        log.append(df, stream_id="s", epoch_id=e)
+    log.compact_segments(target_files=1)  # v3 retires both segments
+    log.append(df, stream_id="s", epoch_id=2)  # v4
+    retired = [r["dir"] for r in log.meta()["retired"]]
+    orphan, _ = log._stage(df.write, "seg", 99)  # never committed
+    real = UnkeyedEventLog._write_version
+    stolen: dict = {}
+
+    def stealing_write(self, meta):
+        if not stolen:
+            # a rival expire that saw the orphan back at version 1, and
+            # did not reap the retired dirs, commits first
+            stolen["v"] = meta["version"]
+            real(self, self._next(self.meta(), orphans_seen={orphan: 1}))
+        return real(self, meta)
+
+    monkeypatch.setattr(UnkeyedEventLog, "_write_version", stealing_write)
+    removed = log.expire_segments(keep_last=1)
+    monkeypatch.undo()
+    assert removed == len(retired) == 2
+    assert not any(os.path.isdir(os.path.join(path, d)) for d in retired)
+    m = log.meta()
+    assert m["version"] == stolen["v"] + 1
+    assert m["orphans_seen"] == {orphan: 1}
+    assert m["retired"] == []
+    assert os.path.isdir(os.path.join(path, orphan))
+    assert log.read().count() == 9

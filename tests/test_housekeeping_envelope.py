@@ -6,22 +6,31 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from movex_cdc_spark.lake.append_log import UnkeyedEventLog
 from movex_cdc_spark.operators.apply import with_envelope
 from movex_cdc_spark.streaming.housekeeping import Heartbeat, retain_recent
 
 
 def test_retain_recent(spark, tmp_path):
-    path = str(tmp_path / "errs")
+    """Final-errors retention runs on the final-errors store, an
+    UnkeyedEventLog: rows past ``keep_hours`` leave through the log's
+    listing swap, fresh rows stay, and the log reopens."""
+    path = str(tmp_path / "final")
+    log = UnkeyedEventLog.create(spark, path)
     df = spark.range(10).select(
         F.col("id"),
         F.when(F.col("id") < 7, F.current_timestamp())
-        .otherwise(F.expr("current_timestamp() - make_interval(0,0,0,20,0,0,0)"))
+        .otherwise(F.expr("current_timestamp() - make_interval(0,0,0,0,200,0,0)"))
         .alias("error_time"),
     )
-    df.write.parquet(path)
-    kept = retain_recent(spark, path, keep_hours=96)
-    assert kept == 7
-    assert spark.read.parquet(path).count() == 7
+    log.append(df, stream_id="final", epoch_id=0)
+    assert retain_recent(log, keep_hours=96) == 7
+    reopened = UnkeyedEventLog.open(spark, path)
+    assert sorted(r["id"] for r in reopened.read().collect()) == list(range(7))
+    # nothing left to age out: no rewrite
+    v = reopened.current_version()
+    assert retain_recent(reopened, keep_hours=96) == 7
+    assert reopened.current_version() == v
 
 
 def test_heartbeat_fencing(tmp_path):

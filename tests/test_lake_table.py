@@ -354,9 +354,9 @@ def test_fs_seam_carries_all_metadata_io(spark, tmp_lake):
             self._count("replace_text")
             return super().replace_text(path, text)
 
-        def listdir(self, path):
-            self._count("listdir")
-            return super().listdir(path)
+        def walk(self, path):
+            self._count("walk")
+            return super().walk(path)
 
     fs = CountingFS()
     t = LakeTable.create(spark, tmp_lake, REPO_FILES_SCHEMA, KEY_COLS, n_buckets=4, fs=fs)
@@ -366,7 +366,8 @@ def test_fs_seam_carries_all_metadata_io(spark, tmp_lake):
     # create + 2 merges = 3 commits, each one exclusive-create + pointer swap
     assert fs.calls["create_exclusive_text"] == 3
     assert fs.calls["replace_text"] == 3
-    assert fs.calls["read_text"] > 0 and fs.calls["listdir"] > 0
+    # each merge lists its staged snapshot with one walk
+    assert fs.calls["read_text"] > 0 and fs.calls["walk"] == 2
 
 
 def test_hadoop_fs_impl_runs_the_table(spark, tmp_lake):
