@@ -22,11 +22,13 @@ time — and an incompatible type change raises, before anything is
 staged, instead of silently corrupting older segments. An all-null
 column is written with its committed type, or not at all (``_align``).
 
-Compaction (small-files housekeeping) swaps the listing atomically and
-RETAINS the old segment dirs: a concurrent reader that planned a scan
-over the old listing still finds its files. ``expire_segments`` reaps
-unreferenced dirs after a retention window, like
-LakeTable.expire_snapshots.
+A rewrite (``replace``: retry pass, retention, compaction) replaces
+exactly the segments of the snapshot it read, as the reference worker
+deletes exactly the Event_Logs rows it read while triggers keep
+inserting (transfer_thread.rb:68-80,149-177); segments appended since
+stay listed. It RETAINS the old segment dirs, so a reader that planned
+a scan over the old listing still finds its files; ``expire_segments``
+reaps them after a retention window, like LakeTable.expire_snapshots.
 """
 
 from __future__ import annotations
@@ -40,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from movex_cdc_spark.lake.fs import DEFAULT_FS
-from movex_cdc_spark.lake.versioned import VersionedStore, union_schema
+from movex_cdc_spark.lake.versioned import CommitConflict, VersionedStore, union_schema
 
 
 def _align(m: dict[str, Any], batch: DataFrame) -> DataFrame:
@@ -132,37 +134,45 @@ class UnkeyedEventLog(VersionedStore):
                 "epoch_id": epoch_id, "files_added": len(files)}
 
     # -------------------------------------------------------- rewrite
-    def _swap_listing(self, m: dict, new_files: list[str], schema: dict) -> dict[str, Any]:
-        """Commit a full-listing swap: the old segments become RETIRED
-        (still on disk for in-flight readers) and are reaped later by
-        expire_segments — never deleted inside the commit."""
-        v = m["version"] + 1
-        retired = list(m.get("retired", [])) + [
-            {"dir": d, "at_version": v} for d in sorted({f.split(os.sep, 1)[0] for f in m["files"]})
-        ]
-        self._write_version(self._next(m, files=new_files, schema=schema, retired=retired))
-        return {"version": v, "files_before": len(m["files"]), "files_after": len(new_files)}
-
-    def replace(self, df: DataFrame) -> dict[str, Any]:
-        """Replace the whole log content in one atomic commit (the
-        dead-letter RETRY rewrite: waiting ∪ still-poison rows back in,
-        healed rows out). Epoch fences are preserved; readers see the
-        old or the new listing, never a partial state."""
-        m = self.meta()
+    def replace(self, df: DataFrame, m: dict[str, Any]) -> dict[str, Any]:
+        """Replace the segments metadata ``m`` lists with ``df`` (rows read
+        from ``m``) in one atomic commit: the dead-letter RETRY rewrite,
+        retention, compaction. Segments appended after ``m`` stay listed:
+        the commit rebases (Iceberg re-applies a rewrite to new metadata
+        once its replaced files are still there). If a rival rewrite
+        already retired one of ``m``'s segments, this raises
+        ``CommitConflict`` and drops its staged segment. The replaced
+        segments become RETIRED, reaped later by expire_segments."""
         df = _align(m, df)
-        schema = _union(m, df.schema)  # before the write, as in append
-        return self._swap_listing(m, self._stage(df.write, "seg", m["version"] + 1)[1], schema)
+        _union(m, df.schema)  # before the write, as in append
+        rel, files = self._stage(df.write, "seg", m["version"] + 1)
+        read, dirs = set(m["files"]), sorted({f.split(os.sep, 1)[0] for f in m["files"]})
+
+        def build(cur: dict[str, Any]) -> dict[str, Any]:
+            if not read <= set(cur["files"]):
+                raise CommitConflict(f"a rival rewrite of {self.path} retired a segment this one read")
+            retired = cur.get("retired", []) + [
+                {"dir": d, "at_version": cur["version"] + 1} for d in dirs
+            ]
+            return self._next(cur, files=files + [f for f in cur["files"] if f not in read],
+                              schema=_union(cur, df.schema), retired=retired)
+
+        try:
+            m2 = self._commit_rebasing(m, build)
+        except CommitConflict:
+            self.fs.rmtree(os.path.join(self.path, rel))
+            raise
+        return {"version": m2["version"], "files_before": len(read), "files_after": len(m2["files"])}
 
     def compact_segments(self, target_files: int = 4) -> dict[str, Any]:
         """Small-files housekeeping (the sink-side ST8): a long-running
         stream appends one segment per epoch; rewrite them into
-        ``target_files`` files and swap the listing in one atomic
-        commit. Old segments stay on disk until expire_segments."""
+        ``target_files`` files (``replace``). Old segments stay on disk
+        until expire_segments."""
         m = self.meta()
         if len(m["files"]) <= target_files:
             return {"skipped": True, "files": len(m["files"])}
-        _, files = self._stage(self.read().coalesce(target_files).write, "seg", m["version"] + 1)
-        return self._swap_listing(m, files, m.get("schema"))
+        return self.replace(self.read(m).coalesce(target_files), m)
 
     def _dir_age_s(self, seg_dir: str) -> float:
         """Seconds since the NEWEST touch of ``seg_dir`` or any direct
@@ -268,8 +278,9 @@ class UnkeyedEventLog(VersionedStore):
         return removed
 
     # ----------------------------------------------------------- read
-    def read(self) -> DataFrame:
-        m = self.meta()
+    def read(self, m: dict[str, Any] | None = None) -> DataFrame:
+        """The rows metadata ``m`` lists (default: the current version)."""
+        m = self.meta() if m is None else m
         files = [os.path.join(self.path, f) for f in m["files"]]
         if not files:
             schema = (

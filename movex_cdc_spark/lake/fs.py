@@ -283,3 +283,10 @@ class HadoopFS:
 
 
 DEFAULT_FS = LocalFS()
+
+
+def fs_for(path: str, spark=None):
+    """The seam for ``path``: ``HadoopFS`` for a scheme-qualified path
+    (``hdfs://``, ``s3a://``; ``os.path`` on a URI is silently false),
+    else ``DEFAULT_FS``."""
+    return HadoopFS(spark) if spark is not None and "://" in path else DEFAULT_FS

@@ -40,8 +40,9 @@ format is implemented here with the same contract Iceberg gives us:
     write arms commit this way.
   * **schema evolution** — column adds and int→long / float→double
     widening (``union_schema``, versioned.py) recorded per snapshot;
-    old files are read with the new schema (missing columns → null),
-    the Iceberg ALTER-before-MERGE analog.
+    old files are read with the new schema (missing columns → null).
+    A merge widens the table to its batch first, as its own commit
+    (``_alter``): the Iceberg ALTER-before-MERGE analog.
   * **time travel** — any committed version can be read back.
   * **tombstones** — deletes keep ``(key, last_seq, deleted=true)`` so
     a late event with a LOWER seq can never resurrect a deleted row,
@@ -65,6 +66,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from movex_cdc_spark.lake.versioned import CommitConflict, VersionedStore, union_schema
+from movex_cdc_spark.session import observe_noop
 
 BUCKET_COL = "__bucket"
 PART_COL = "__bucket_part"  # duplicated for partitionBy (dir layout)
@@ -110,6 +112,15 @@ def _payload(m: dict[str, Any]) -> T.StructType:
     ])
 
 
+def _aligned(names, payload: T.StructType) -> list:
+    """``payload``'s columns from a frame with column ``names``, cast to
+    their committed types; a typed NULL where the frame lacks one."""
+    return [
+        (F.col(f.name) if f.name in names else F.lit(None)).cast(f.dataType).alias(f.name)
+        for f in payload.fields
+    ]
+
+
 def _file_version(rel: str) -> int:
     return int(re.search(r"snap-(\d+)-", rel).group(1))
 
@@ -127,28 +138,18 @@ def bucket_expr(key_cols: list[str], n_buckets: int):
 def probe_buckets(
     df: DataFrame, key_cols: list[str], n_buckets: int, valid=None, **aggs
 ) -> tuple[list[int], dict[str, Any]]:
-    """THE bucket probe, one job: a ``noop`` write of ``df`` carrying an
-    ``Observation`` (a ``distinct().collect()`` or a global
-    ``agg().collect()`` plans as 3 jobs under AQE). Returns the sorted
+    """THE bucket probe, one job (``observe_noop``). Returns the sorted
     buckets of the rows where ``valid`` holds (every row when None) and
     ``{"rows": their count, **aggs}`` — ``aggs`` are extra aggregate
     columns the caller folds into the same job. Narrow ``df`` to the
-    columns the aggregates read first: the write materializes every
-    column it is given."""
+    columns the aggregates read first."""
     ok = F.lit(True) if valid is None else valid
-    obs = Observation()
-    (
-        df.observe(
-            obs,
-            F.collect_set(F.when(ok, bucket_expr(key_cols, n_buckets))).alias("touched"),
-            F.count(F.when(ok, 1)).alias("rows"),
-            *[c.alias(name) for name, c in aggs.items()],
-        )
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
+    got = observe_noop(
+        df,
+        touched=F.collect_set(F.when(ok, bucket_expr(key_cols, n_buckets))),
+        rows=F.count(F.when(ok, 1)),
+        **aggs,
     )
-    got = obs.get
     return sorted(got.pop("touched")), got
 
 
@@ -415,23 +416,24 @@ class LakeTable(VersionedStore):
     def evolve_schema(self, batch_payload_schema: T.StructType) -> T.StructType:
         """Union the incoming batch schema into the table schema:
         new columns appended, widenable primitives widened. Returns the
-        resulting payload schema. Incompatible changes raise.
+        resulting payload schema. Incompatible changes raise. ``merge``
+        runs the same step (``_alter``) on its own metadata read."""
+        return _payload(self._alter(self.meta(), batch_payload_schema.fields))
 
-        The Iceberg 'ALTER TABLE ADD COLUMN / ALTER COLUMN TYPE before
-        MERGE' step of the north rule; the reference analog is a table
-        config change regenerating triggers mid-stream
-        (import_export_config.rb:86-120, db_trigger.rb:38-92).
-        Metadata-only: no data files are rewritten."""
-        m = self.meta()
-        new_payload, changed = union_schema(_payload(m), T.StructType([
-            f for f in batch_payload_schema.fields if f.name not in (SEQ_COL, DELETED_COL)
+    def _alter(self, m: dict[str, Any], fields: list[T.StructField]) -> dict[str, Any]:
+        """``m`` with ``fields`` unioned into its payload schema, a widened
+        schema committed as its own version: the Iceberg 'ALTER TABLE
+        ADD COLUMN / ALTER COLUMN TYPE before MERGE' step (reference: a
+        config change regenerating triggers, import_export_config.rb:
+        86-120, db_trigger.rb:38-92). Metadata-only."""
+        payload, changed = union_schema(_payload(m), T.StructType([
+            f for f in fields if f.name not in (SEQ_COL, DELETED_COL)
         ]))
         if changed:
-            self._write_version(self._next(
-                m, parent=m["version"],
-                schema=T.StructType(new_payload.fields + _BOOKKEEPING).jsonValue(),
-            ))
-        return new_payload
+            m = self._next(m, parent=m["version"],
+                           schema=T.StructType(payload.fields + _BOOKKEEPING).jsonValue())
+            self._write_version(m)
+        return m
 
     # ------------------------------------------------ snapshot write
     def _write_tasks(self, n_buckets: int) -> int:
@@ -501,6 +503,11 @@ class LakeTable(VersionedStore):
         arms commit through the same epoch-fenced pointer swap, and
         readers see the same state.
 
+        Schema: every batch column but ``seq_col`` and ``op_col`` is
+        payload. A batch wider than the table (a new column, a widened
+        primitive) commits the widened schema as its own version, from
+        the same metadata read, before anything is staged.
+
         Returns the lineage record. If ``epoch_id`` is already fenced
         for ``stream_id`` the call is a NO-OP and returns the fence
         record instead (idempotent retry).
@@ -525,19 +532,13 @@ class LakeTable(VersionedStore):
         m = self.meta()
         if self.fenced(m, stream_id, epoch_id):
             return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
+        m = self._alter(m, [f for f in batch.schema.fields if f.name not in (seq_col, op_col)])
 
         new_version = m["version"] + 1
-        payload = _payload(m)
-        # align batch payload to table schema: missing cols -> null,
-        # narrower types -> cast up (schema-evolution tolerant apply).
         # Batch rows rank below every stored row: they lose each tie.
-        batch_names = set(batch.columns)
         src = batch.select(
             bucket_expr(m["key_cols"], m["n_buckets"]).alias(BUCKET_COL),
-            *[
-                (F.col(f.name).cast(f.dataType) if f.name in batch_names else F.lit(None).cast(f.dataType)).alias(f.name)
-                for f in payload.fields
-            ],
+            *_aligned(batch.columns, _payload(m)),
             F.col(seq_col).cast("long").alias(SEQ_COL),
             (F.col(op_col) == F.lit("D")).alias(DELETED_COL),
             F.lit(-new_version).cast("long").alias(_RANK),
@@ -712,15 +713,10 @@ class LakeTable(VersionedStore):
         db_trigger_generator_oracle.rb:499-569). Replaces all data."""
         m = self.meta()
         n_buckets = m["n_buckets"]
-        key_cols = m["key_cols"]
-        payload = _payload(m)
         names = set(df.columns)
-        out = df.withColumn(BUCKET_COL, bucket_expr(key_cols, n_buckets)).select(
-            F.col(BUCKET_COL),
-            *[
-                (F.col(f.name).cast(f.dataType) if f.name in names else F.lit(None).cast(f.dataType)).alias(f.name)
-                for f in payload.fields
-            ],
+        out = df.select(
+            bucket_expr(m["key_cols"], n_buckets).alias(BUCKET_COL),
+            *_aligned(names, _payload(m)),
             (F.col(SEQ_COL).cast("long") if SEQ_COL in names else F.lit(seq_value).cast("long")).alias(SEQ_COL),
             (F.col(DELETED_COL) if DELETED_COL in names else F.lit(False)).alias(DELETED_COL),
         )

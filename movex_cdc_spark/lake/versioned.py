@@ -30,11 +30,14 @@ JSON per committed version and a ``_current`` pointer.
     files it wrote, from one walk of the dir, and every writer commits
     exactly that list — no writer lists its staged dir again (Iceberg's
     writers hand their data files to the snapshot commit the same way).
-  * **rebase loop** — ``_commit_rebasing`` commits a version built from
-    the current metadata and, on ``CommitConflict``, re-reads it and
-    rebuilds. Only a commit that stays valid on ANY newer version may
-    rebase: an append (its segment is independent of the listing) or
-    expiry bookkeeping. A full-listing swap stays single-attempt.
+  * **rebase loop** — a store operation reads the metadata ``m`` once
+    and builds its commit on it; ``_commit_rebasing`` commits that and,
+    on ``CommitConflict``, rebuilds on the re-read head. Every
+    ``UnkeyedEventLog`` commit rebases: an append, expiry bookkeeping,
+    and a rewrite (it replaces only ``m``'s segments, so it raises
+    ``CommitConflict`` once a rival retired one). ``LakeTable`` commits
+    stay single-attempt: the staged buckets hold ``m``'s stored rows,
+    so ``merge_with_retry`` re-stages.
   * **schema union** — ``union_schema``: add-only, with the
     Iceberg-compatible primitive widenings of ``_WIDEN`` (metadata only;
     Spark's parquet readers promote the old files at scan time);

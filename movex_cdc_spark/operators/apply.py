@@ -5,9 +5,9 @@ This is the Spark shape of the reference's hot path
 
     events → condition filter → no-op suppression → poison flag
     (flag_dispositions) → valid/poison slices (split_flagged) →
-    [config projection] → [schema evolve] → one probe job →
-    [dead-letter append, only on poison] ∥ MERGE (epoch fence and LWW
-    inside) → lineage/metrics record
+    [config projection] → one probe job → [dead-letter append, only
+    on poison] ∥ MERGE (epoch fence, schema evolve and LWW inside) →
+    lineage/metrics record
 
 One micro-batch = one call. The streaming shells
 (streaming/pipeline.py) persist the flagged batch and run
@@ -170,13 +170,6 @@ def _with_sha(ready: DataFrame) -> DataFrame:
     )
 
 
-def _evolve(table: LakeTable, ready: DataFrame) -> None:
-    """ALTER-before-MERGE: widen the table to the batch's payload."""
-    table.evolve_schema(T.StructType(
-        [f for f in ready.schema.fields if f.name not in ("seq", "op")]
-    ))
-
-
 def _record_metrics(metrics, lineage, got, n_poison, stream_id, epoch_id, scope) -> None:
     """One MetricsTable row per applied epoch. ``scope`` names what the
     counters count, and is never mixed silently: the streaming flow
@@ -220,12 +213,11 @@ def _apply_keyed(
     """The keyed tail both flows share; they differ only in the
     ``ready`` rows they merge and the ``probe_src`` they probe:
 
-    1. evolve the schema (ALTER-before-MERGE);
-    2. ONE probe job (``probe_buckets``) over ``probe_src``: the touched
+    1. ONE probe job (``probe_buckets``) over ``probe_src``: the touched
        buckets, the A1 counters and, while ``probe_src`` still carries
        the poison flag, the poison count (else one ``isEmpty`` over
        ``poison`` decides, and only when there is a dead-letter log);
-    3. the dead-letter append, ONLY when there is poison, on a pool
+    2. the dead-letter append, ONLY when there is poison, on a pool
        thread that inherits this thread's Spark local properties (so
        query.stop() cancels its jobs) and overlaps the snapshot write.
        It is joined at merge's ``pre_commit`` barrier, so the poison
@@ -233,12 +225,11 @@ def _apply_keyed(
        the two replays only the append, which the dead-letter log's own
        fence resolves. An epoch that appended nothing leaves nothing to
        fence or replay;
-    4. ``merge(probe=touched)``: the ``ready`` plan runs once more,
+    3. ``merge(probe=touched)``: it widens the schema first
+       (ALTER-before-MERGE), then the ``ready`` plan runs once more,
        inside the snapshot write; a replayed epoch is fenced there and
        returns the fence record;
-    5. the metrics row, its counters in ``scope``."""
-    _evolve(table, ready)
-
+    4. the metrics row, its counters in ``scope``."""
     flagged = POISON_FLAG in probe_src.columns
     ok = ~F.col(POISON_FLAG) if flagged else F.lit(True)
     counters = {"max_seq": F.max(F.when(ok, F.col("seq"))), **{
@@ -521,13 +512,14 @@ class DeadLetterTable:
             return 0  # fenced replay: rows already quarantined
         return int(obs.get.get("n", 0))
 
-    def replace(self, df: DataFrame) -> None:
+    def replace(self, df: DataFrame, m: dict[str, Any]) -> None:
         """Atomic rewrite for the retry pass (healed rows out,
-        still-poison rows back with retry_count+1)."""
-        self.log.replace(df)
+        still-poison rows back with retry_count+1) of the rows read from
+        metadata ``m``; rows appended since stay (``UnkeyedEventLog.replace``)."""
+        self.log.replace(df, m)
 
-    def read(self) -> DataFrame:
-        df = self.log.read()
+    def read(self, m: dict[str, Any] | None = None) -> DataFrame:
+        df = self.log.read(m)
         if not df.columns:
             return None  # nothing dead-lettered yet
         return df

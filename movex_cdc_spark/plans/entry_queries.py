@@ -2271,10 +2271,11 @@ def cdc_retry_heal_final_state(spark, sf_dir):
         )
     # heal the quarantined rows (the reference operator fixing bad data)
     # through the dead-letter table's own atomic rewrite
-    healed = dl.read().withColumn(
+    m = dl.log.meta()
+    healed = dl.read(m).withColumn(
         "content", F.concat(F.lit("healed:"), F.col("seq").cast("string"))
     )
-    dl.replace(healed)
+    dl.replace(healed, m)
     worker = RetryWorker(spark, table, dl, f"{tdir}/final")
     worker.readmit(epoch_id=10)
     return table.read().select("repo", F.col("last_seq"), "content")

@@ -142,3 +142,17 @@ def pinned_now(spark: SparkSession):
     instead: a row whose age crosses the line between two actions would
     otherwise be counted on one side and written on the other."""
     return spark.sql("SELECT current_timestamp() AS ts").first()["ts"]
+
+
+def observe_noop(df, **aggs) -> dict:
+    """The aggregates ``aggs`` (name → Column) over ``df`` in ONE job: a
+    ``noop`` write carrying an ``Observation`` (a ``distinct().collect()``
+    or a global ``agg().collect()`` plans as 3 jobs under AQE). Narrow
+    ``df`` first: the write materializes every column it is given."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df.observe(obs, *[c.alias(name) for name, c in aggs.items()]).write.format("noop").save(
+        mode="overwrite"
+    )
+    return obs.get

@@ -24,10 +24,11 @@ from movex_cdc_spark.session import pinned_now
 def retain_recent(log, ts_col: str = "error_time", keep_hours: int = 96) -> int:
     """Age out rows older than ``keep_hours`` from an UnkeyedEventLog
     (final-errors retention, ``RetryWorker.final``) through the log's
-    atomic listing swap; returns rows kept. Rows are classified against
+    atomic rewrite of the rows read; returns rows kept. Rows are classified against
     one pinned instant and counted before the swap; nothing is rewritten
     when nothing ages out."""
-    df = log.read()
+    m = log.meta()
+    df = log.read(m)
     if ts_col not in df.columns:
         return 0  # nothing logged yet
     fresh = F.col(ts_col) >= F.lit(pinned_now(log.spark)) - F.expr(
@@ -35,7 +36,7 @@ def retain_recent(log, ts_col: str = "error_time", keep_hours: int = 96) -> int:
     )
     counts = df.agg(F.count(F.when(fresh, 1)).alias("kept"), F.count(F.lit(1)).alias("all")).first()
     if counts["kept"] < counts["all"]:
-        log.replace(df.filter(fresh))
+        log.replace(df.filter(fresh), m)
     return counts["kept"]
 
 

@@ -5,7 +5,7 @@ marks, transfer_thread.rb:39-44).
 
 One row per (stream_id, epoch_id): event counts per op, max applied
 seq, buckets touched, merge latency. The writer BUFFERS rows in driver
-memory and flushes every ``flush_every`` epochs as ONE parquet file
+memory and flushes every ``FLUSH_EVERY`` epochs as ONE parquet file
 written directly with pyarrow — no Spark job, no 1-row files. This is
 the same design as the reference's concentrator, which collects
 per-transfer counters in memory and flushes them periodically in bulk
@@ -51,23 +51,20 @@ METRICS_SCHEMA = T.StructType(
     ]
 )
 
-_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("stream_id", pa.string()),
-        pa.field("epoch_id", pa.int64()),
-        pa.field("table_version", pa.int64()),
-        pa.field("events", pa.int64()),
-        pa.field("n_insert", pa.int64()),
-        pa.field("n_update", pa.int64()),
-        pa.field("n_delete", pa.int64()),
-        pa.field("n_poison", pa.int64()),
-        pa.field("max_seq", pa.int64()),
-        pa.field("buckets_touched", pa.int32()),
-        pa.field("merge_latency_s", pa.float64()),
-        pa.field("counter_scope", pa.string()),
-        pa.field("end_ts", pa.timestamp("us")),
-    ]
-)
+# The parquet type of each METRICS_SCHEMA type. Timestamps stay naive
+# ``timestamp("us")``, as every metrics file written so far has them.
+_ARROW_TYPES = {
+    T.StringType(): pa.string(),
+    T.LongType(): pa.int64(),
+    T.IntegerType(): pa.int32(),
+    T.DoubleType(): pa.float64(),
+    T.TimestampType(): pa.timestamp("us"),
+}
+_ARROW_SCHEMA = pa.schema([pa.field(f.name, _ARROW_TYPES[f.dataType]) for f in METRICS_SCHEMA.fields])
+# integer columns: counters may arrive as numpy or Spark-row ints
+_INT_COLS = [f.name for f in METRICS_SCHEMA.fields if isinstance(f.dataType, (T.LongType, T.IntegerType))]
+# buffered rows per parquet file
+FLUSH_EVERY = 16
 
 
 class MetricsTable:
@@ -79,12 +76,11 @@ class MetricsTable:
     ``path`` at a shared mount, or swap ``pq.write_table`` to an
     fsspec filesystem — pyarrow accepts one directly."""
 
-    def __init__(self, spark: SparkSession, path: str, flush_every: int = 16):
+    def __init__(self, spark: SparkSession, path: str):
         import threading
 
         self.spark = spark
         self.path = path
-        self.flush_every = flush_every
         self._buffer: list[dict[str, Any]] = []
         # the multiplexed pipeline appends from concurrent per-table
         # dispatch threads; an unguarded flush would snapshot the buffer
@@ -95,15 +91,12 @@ class MetricsTable:
         row = {f.name: record.get(f.name) for f in METRICS_SCHEMA.fields}
         if row["end_ts"] is None:
             row["end_ts"] = datetime.now(timezone.utc).replace(tzinfo=None)
-        for k in ("epoch_id", "table_version", "events", "n_insert", "n_update",
-                  "n_delete", "n_poison", "max_seq"):
+        for k in _INT_COLS:
             if row[k] is not None:
                 row[k] = int(row[k])
-        if row["buckets_touched"] is not None:
-            row["buckets_touched"] = int(row["buckets_touched"])
         with self._lock:
             self._buffer.append(row)
-            rows = list(self._buffer) if len(self._buffer) >= self.flush_every else None
+            rows = list(self._buffer) if len(self._buffer) >= FLUSH_EVERY else None
             if rows:
                 self._buffer.clear()
         if rows:

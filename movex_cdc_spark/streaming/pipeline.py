@@ -16,13 +16,12 @@ checkpoint's offset log (ST11).
 
 from __future__ import annotations
 
-import time
 from collections import deque
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movex_cdc_spark.lake.table import LakeTable
@@ -36,7 +35,7 @@ from movex_cdc_spark.operators.apply import (  # noqa: F401
     flag_dispositions,
     split_flagged,
 )
-from movex_cdc_spark.session import inheriting_local_properties
+from movex_cdc_spark.session import inheriting_local_properties, observe_noop
 from movex_cdc_spark.sources.events import (
     MULTIPLEX_EVENTS_SCHEMA,
     PAYLOAD_EVENTS_SCHEMA,
@@ -404,17 +403,17 @@ class MultiplexedCdcPipeline(_StreamShell):
         ITS OWN sink metadata, so a re-run of the same call no-ops the
         already-applied tables and only the rewrite re-runs."""
         dispatch_dl = self._side_dead_letter("_dispatch")
-        df = dispatch_dl.read() if dispatch_dl is not None else None
+        m = dispatch_dl.log.meta() if dispatch_dl is not None else None
+        df = dispatch_dl.read(m) if m is not None else None
         if df is None:
             return {"reprocessed": 0, "remaining": 0, "tables": []}
-        token = int(dispatch_dl.log.meta()["version"])
         # bounded probe: distinct tags <= configured tables + strays
         present = {
             r["table_name"] for r in df.select("table_name").distinct().collect()
         }
         healable = sorted(t for t in present if t in self.config.tables and t is not None)
         # one aggregate for all decision counts, taken BEFORE the
-        # listing swap below invalidates this read's lineage (same
+        # rewrite below invalidates this read's lineage (same
         # count-before-swap rule as RetryWorker.readmit)
         heal_pred = (
             F.col("table_name").isin(healable) if healable else F.lit(False)
@@ -429,7 +428,7 @@ class MultiplexedCdcPipeline(_StreamShell):
             self._apply_table(
                 self.sinks[name],
                 parse_payload_events(df.filter(F.col("table_name") == name)),
-                token,
+                m["version"],
                 f"{self.stream_id}:{name}:reprocess",
                 self.config.tables[name],
             )
@@ -444,7 +443,7 @@ class MultiplexedCdcPipeline(_StreamShell):
             if healable
             else df
         )
-        dispatch_dl.replace(remaining)
+        dispatch_dl.replace(remaining, m)
         return {
             "reprocessed": n_reprocessed,
             "remaining": n_remaining,
@@ -455,21 +454,12 @@ class MultiplexedCdcPipeline(_StreamShell):
         batch = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             # bounded probe: distinct tags ≤ configured tables + strays,
-            # observed on a noop write — ONE job, which also builds the
-            # cache the dispatch slices (a distinct().collect() is 3)
-            obs = Observation(f"tags_{self.stream_id}_{epoch_id}_{time.monotonic_ns()}")
-            (
-                batch.select("table_name")
-                .observe(
-                    obs,
-                    F.collect_set("table_name").alias("tags"),
-                    F.max(F.col("table_name").isNull()).alias("null_tag"),
-                )
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
+            # in ONE job, which also builds the cache the dispatch slices
+            got = observe_noop(
+                batch.select("table_name"),
+                tags=F.collect_set("table_name"),
+                null_tag=F.max(F.col("table_name").isNull()),
             )
-            got = obs.get
             present = set(got["tags"])
             # a NULL tag is reachable from the tagged Kafka source (a
             # malformed wire record parses all-null): it can't be in

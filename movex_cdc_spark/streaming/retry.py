@@ -27,8 +27,9 @@ from the reference, documented: the reference re-INSERTs into the
 Event_Logs queue table inside a DB transaction; this engine's inbound
 queue is a plain directory with no commit protocol, so requeue goes
 through the dead-letter store (same retry machinery, retry_count reset
-to 0 = immediately eligible) — the fenced append + listing swap give
-the INSERT-and-DELETE transactionality the reference gets from Oracle.
+to 0 = immediately eligible) — the fenced append + the rewrite of the
+rows read give the INSERT-and-DELETE transactionality the reference
+gets from Oracle.
 """
 
 from __future__ import annotations
@@ -65,15 +66,16 @@ class RetryWorker:
         self.start_delay_s = start_delay_s
 
     def readmit(self, epoch_id: int | None = None, stream_id: str = "retry") -> dict[str, Any]:
-        df = self.dl.read()
+        # ONE metadata read for the pass: the rows it reads, the rows its
+        # rewrite replaces, and the fence token of its final-errors
+        # append — the dead-letter version BEFORE the rewrite. Monotone
+        # across passes (the rewrite bumps it); stable across a crashed
+        # pass's re-run (the rewrite never happened), so the re-run's
+        # append fences to a no-op instead of duplicating final rows.
+        m = self.dl.log.meta()
+        df = self.dl.read(m)
         if df is None:
             return {"eligible": 0}
-        # the fence token for this pass's final-errors append: the
-        # dead-letter log version BEFORE the rewrite. Monotone across
-        # passes (the rewrite bumps it); stable across a crashed pass's
-        # re-run (the rewrite never happened), so the re-run's append
-        # fences to a no-op instead of duplicating final rows.
-        dl_version = self.dl.log.current_version()
         # Pin ONE wall-clock instant for the whole pass (``pinned_now``):
         # readmit runs up to four Spark actions (counts agg, heal merge,
         # exhausted write, dl.replace rewrite), and a row whose backoff
@@ -134,13 +136,14 @@ class RetryWorker:
             self.final.append(
                 exhausted.withColumn("error_time", F.lit(now)),
                 stream_id="final",
-                epoch_id=dl_version,
+                epoch_id=m["version"],
             )
 
-        # rewrite the dead-letter table = waiting ∪ retrying, through
-        # the log's atomic listing swap (write-new-then-commit: a crash
-        # never loses rows, in-flight readers keep their old listing)
-        self.dl.replace(waiting.unionByName(retrying))
+        # rewrite the segments read above as waiting ∪ retrying, in one
+        # atomic commit (write-new-then-commit: a crash never loses
+        # rows, in-flight readers keep their old listing); poison the
+        # stream appended meanwhile stays listed
+        self.dl.replace(waiting.unionByName(retrying), m)
         return {
             "eligible": n_healed + n_still,
             "healed": n_healed,
@@ -172,10 +175,10 @@ class RetryWorker:
         final log's version, so a re-run of the same call re-reads the
         same version, the append no-ops, and only the removal re-runs.
         """
-        df = self.final_errors()
-        if df is None:
+        m = self.final.meta()
+        df = self.final.read(m)
+        if not df.columns:
             return {"reprocessed": 0, "remaining": 0}
-        token = self.final.current_version()
         # coalesce: a predicate that evaluates NULL on a row (e.g.
         # ``op = 'I'`` over a NULL op) would otherwise drop the row
         # from BOTH the selected AND the remaining side — silently
@@ -195,7 +198,7 @@ class RetryWorker:
         n = self.dl.append(
             requeue,
             stream_id=f"reprocess:{self.final_errors_dir}",
-            epoch_id=token,
+            epoch_id=m["version"],
         )
         # count BEFORE the swap invalidates this read's lineage (the
         # count-before-swap rule readmit follows)
@@ -203,7 +206,7 @@ class RetryWorker:
         # fenced no-op (n == 0 with selected rows present) means a
         # crashed earlier call already requeued — fall through to the
         # removal either way
-        self.final.replace(remaining)
+        self.final.replace(remaining, m)
         return {
             "reprocessed": int(n),
             "remaining": int(n_remaining),

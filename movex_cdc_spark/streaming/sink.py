@@ -201,8 +201,8 @@ class EnvelopeSink:
         violations > 0 means a late event crossed an epoch boundary out
         of order. ONE job: messages/keys/violations all fold out of the
         same per-(key, epoch) aggregate."""
-        df = self.read()
         m = self.log.meta()
+        df = self.log.read(m)
         if not m["files"]:
             return {"messages": 0, "keys": 0, "violations": 0}
         # epoch attribution: segment dirs are committed per epoch in

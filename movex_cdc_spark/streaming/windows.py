@@ -23,6 +23,7 @@ windows and per-key session state are the point.
 
 from __future__ import annotations
 
+import functools
 from typing import Any, Iterator
 
 import numpy as np
@@ -109,24 +110,6 @@ def streaming_hourly_stats(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def _sessionize_group(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    return _sessionize_group_impl(key, pdfs, state, None)
-
-
-def _make_sessionizer(idle_timeout_s: int | None):
-    """Bind the idle timeout into the state hook (the hook signature is
-    fixed by applyInPandasWithState)."""
-    if idle_timeout_s is None:
-        return _sessionize_group
-
-    def hook(key, pdfs, state):
-        return _sessionize_group_impl(key, pdfs, state, idle_timeout_s)
-
-    return hook
 
 
 def _sessionize_group_impl(
@@ -387,10 +370,9 @@ def sessionize_backfill(
     #     and emits nothing, losing the whole backfill.
     import os
 
-    from movex_cdc_spark.lake.fs import DEFAULT_FS, HadoopFS
+    from movex_cdc_spark.lake.fs import fs_for
 
-    _ofs = HadoopFS(spark) if "://" in out_dir else DEFAULT_FS
-    _cfs = HadoopFS(spark) if "://" in checkpoint_dir else DEFAULT_FS
+    _ofs, _cfs = fs_for(out_dir, spark), fs_for(checkpoint_dir, spark)
     resumable = _ofs.isdir(os.path.join(out_dir, "_spark_metadata")) and _cfs.isdir(
         os.path.join(checkpoint_dir, "offsets")
     )
@@ -421,16 +403,9 @@ def _guard_state_schema(
     import json
     import os
 
-    from movex_cdc_spark.lake.fs import DEFAULT_FS, HadoopFS
+    from movex_cdc_spark.lake.fs import fs_for
 
-    # a scheme-qualified checkpoint (hdfs://, s3a://, ...) must be
-    # validated THROUGH that filesystem — local os.path checks against
-    # a URI string are silently false and would bypass the guard
-    fs = (
-        HadoopFS(spark)
-        if ("://" in checkpoint_dir and spark is not None)
-        else DEFAULT_FS
-    )
+    fs = fs_for(checkpoint_dir, spark)
     remedy = (
         "restart the stream with a FRESH checkpoint dir — the source "
         "replays from the log and the epoch-fenced sink makes the "
@@ -492,7 +467,8 @@ def gap_sessionize_stateful(
     if idle_timeout_s is not None:
         ev = ev.withWatermark("ts", f"{idle_timeout_s} seconds")
     sessions = ev.groupBy("user_id").applyInPandasWithState(
-        _make_sessionizer(idle_timeout_s),
+        # the hook signature is fixed by applyInPandasWithState
+        functools.partial(_sessionize_group_impl, idle_timeout_s=idle_timeout_s),
         outputStructType=SESSION_OUTPUT,
         stateStructType=SESSION_STATE,
         outputMode="append",

@@ -38,3 +38,22 @@ def cow_only():
             table.MAX_DELTA_DEPTH = real
 
     return block
+
+
+@pytest.fixture()
+def counting_fs():
+    """A ``LocalFS`` counting its metadata read calls in ``reads`` (a
+    ``walk`` is one call, as perfbench's tracer counts it). Pass it as a
+    store's ``fs=`` and reset ``reads`` before the operation measured."""
+    from movex_cdc_spark.lake.fs import LocalFS
+
+    class ReadCountingFS(LocalFS):
+        reads = 0
+
+    for name in ("read_text", "exists", "isdir", "listdir", "mtime", "walk"):
+        def counted(self, *a, _orig=getattr(LocalFS, name), **kw):
+            self.reads += 1
+            return _orig(self, *a, **kw)
+
+        setattr(ReadCountingFS, name, counted)
+    return ReadCountingFS()

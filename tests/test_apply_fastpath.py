@@ -23,7 +23,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from movex_cdc_spark.lake.append_log import UnkeyedEventLog
-from movex_cdc_spark.lake.fs import LocalFS
 from movex_cdc_spark.lake.table import MAX_DELTA_DEPTH, LakeTable, bucket_expr
 from movex_cdc_spark.operators.apply import (
     KEY_COLS,
@@ -316,27 +315,14 @@ def test_shared_commit_crash_replays_exactly_once(spark, tmp_path, crash_at):
     assert [r["seq"] for r in dl.read().collect()] == [2]
 
 
-class _ReadCountingFS(LocalFS):
-    """LocalFS counting metadata read calls (a ``walk`` is one call)."""
-
-    reads = 0
-
-
-for _name in ("read_text", "exists", "isdir", "listdir", "mtime", "walk"):
-    def _counted(self, *a, _orig=getattr(LocalFS, _name), **kw):
-        self.reads += 1
-        return _orig(self, *a, **kw)
-
-    setattr(_ReadCountingFS, _name, _counted)
-
-
-def test_epoch_fs_reads_stay_flat_across_write_arms(spark, tmp_path):
-    """A keyed epoch makes at most 5 metadata reads through the fs seam
-    — the metadata read by the schema evolve and by merge, and ONE walk
-    of the staged snapshot — on a delta epoch and on a compacting
-    epoch alike, however many buckets it touches, the first epoch of a
-    created handle included."""
-    fs = _ReadCountingFS()
+def test_epoch_fs_reads_stay_flat_across_write_arms(spark, tmp_path, counting_fs):
+    """A keyed epoch makes 3 metadata reads through the fs seam — ONE
+    metadata read (the ``_current`` pointer and ``v{n}.json``), in
+    merge, which also runs the schema evolve on it, and ONE walk of the
+    staged snapshot — on a delta epoch and on a compacting epoch alike,
+    however many buckets it touches, the first epoch of a created
+    handle included."""
+    fs = counting_fs
     t = LakeTable.create(spark, str(tmp_path / "lake"), REPO_FILES_SCHEMA, KEY_COLS,
                          n_buckets=32, fs=fs)
     seen = []
@@ -350,4 +336,4 @@ def test_epoch_fs_reads_stay_flat_across_write_arms(spark, tmp_path):
         seen.append((lin["write_mode"], len(lin["buckets_touched"]), fs.reads))
     assert [mode for mode, _, _ in seen] == ["delta"] * MAX_DELTA_DEPTH + ["cow"]
     assert seen[0][1] <= 4 and seen[1][1] > 16 and seen[-1][1] > 16
-    assert {reads for _, _, reads in seen} == {5}, seen
+    assert {reads for _, _, reads in seen} == {3}, seen

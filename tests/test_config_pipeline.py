@@ -354,6 +354,76 @@ def test_unkeyed_log_compaction_retains_then_expires(spark, tmp_path):
     assert log.read().count() == 100
 
 
+def test_log_rewrite_keeps_rows_appended_after_its_read(spark, tmp_path):
+    """``replace(df, m)`` replaces only the segments ``m`` lists: rows
+    another handle appended after ``m`` stay listed, and that handle's
+    epoch fence survives the rewrite."""
+    import os
+
+    path = str(tmp_path / "ulog")
+    log = UnkeyedEventLog.create(spark, path)
+    log.append(spark.range(3).selectExpr("id AS a"), stream_id="s", epoch_id=0)
+    m = log.meta()
+    df = log.read(m).selectExpr("a + 100 AS a")
+    UnkeyedEventLog.load(spark, path).append(
+        spark.range(3, 5).selectExpr("id AS a"), stream_id="rival", epoch_id=0
+    )
+    r = log.replace(df, m)
+    assert sorted(x["a"] for x in log.read().collect()) == [3, 4, 100, 101, 102]
+    cur = log.meta()
+    assert r["version"] == cur["version"] == m["version"] + 2
+    assert cur["epochs"] == {"s": 0, "rival": 0}
+    assert [x["dir"] for x in cur["retired"]] == [m["files"][0].split(os.sep, 1)[0]]
+
+
+def test_compaction_commits_over_an_append_during_its_write(spark, tmp_path, monkeypatch):
+    """An append that commits while ``compact_segments`` writes does not
+    fail the compaction: it rebases, and the appended row stays."""
+    path = str(tmp_path / "ulog")
+    log = UnkeyedEventLog.create(spark, path)
+    for e in range(3):  # one file per segment
+        log.append(spark.range(e * 2, e * 2 + 2, numPartitions=1).selectExpr("id AS a"), epoch_id=e)
+    real_stage = log._stage
+
+    def stage_then_append(*args, **kw):
+        out = real_stage(*args, **kw)
+        UnkeyedEventLog.load(spark, path).append(
+            spark.range(99, 100, numPartitions=1).selectExpr("id AS a"), stream_id="rival", epoch_id=0
+        )
+        return out
+
+    monkeypatch.setattr(log, "_stage", stage_then_append)
+    r = log.compact_segments(target_files=1)
+    monkeypatch.undo()
+    assert r["files_before"] == 3 and r["files_after"] == 2
+    assert sorted(x["a"] for x in log.read().collect()) == [0, 1, 2, 3, 4, 5, 99]
+
+
+def test_rival_rewrite_of_the_same_segments_conflicts(spark, tmp_path):
+    """Two rewrites of the same snapshot: the second finds its segments
+    already retired, raises ``CommitConflict``, drops its staged segment
+    and commits nothing."""
+    import os
+
+    from movex_cdc_spark.lake.versioned import CommitConflict
+
+    path = str(tmp_path / "ulog")
+    log = UnkeyedEventLog.create(spark, path)
+    for e in range(2):
+        log.append(spark.range(e * 3, e * 3 + 3).selectExpr("id AS a"), epoch_id=e)
+    m = log.meta()
+    rival = UnkeyedEventLog.load(spark, path)
+    rival.replace(rival.read(m).filter("a < 4"), m)
+    won = log.meta()
+    with pytest.raises(CommitConflict):
+        log.replace(log.read(m).filter("a > 1"), m)
+    assert log.meta() == won
+    on_disk = {d for d in os.listdir(path) if d.startswith("seg-")}
+    listed = {f.split(os.sep, 1)[0] for f in won["files"]}
+    assert on_disk == listed | {x["dir"] for x in won["retired"]}
+    assert sorted(x["a"] for x in log.read().collect()) == [0, 1, 2, 3]
+
+
 def test_unkeyed_log_schema_union_and_widen(spark, tmp_path):
     """append() UNIONS schemas add-only with primitive widening — a
     narrowing config swap must not drop columns from older segments,

@@ -262,10 +262,11 @@ def test_fast_path_dead_letters_survive_readmit(spark, tmp_path):
     # dead letters carry the EVENT_COLS shape with a NULL old image
     assert "old_content" in dl.read().columns
     # heal all rows and re-admit through the normal merge path
-    healed = dl.read().withColumn("content", F.lit("healed")).withColumn(
+    m = dl.log.meta()
+    healed = dl.read(m).withColumn("content", F.lit("healed")).withColumn(
         "last_error_time", F.expr("last_error_time - make_interval(0,0,0,1,0,0,0)")
     )
-    dl.replace(healed)
+    dl.replace(healed, m)
     worker = RetryWorker(spark, t, dl, str(tmp_path / "final"), max_retries=2)
     r = worker.readmit(epoch_id=100)
     assert r["healed"] == n_dl

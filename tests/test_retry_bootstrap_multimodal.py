@@ -61,10 +61,11 @@ def test_retry_readmission(spark, tmp_path):
     # heal the row in the dead-letter table, force eligibility — through
     # the table's own atomic rewrite (the dl dir is a fenced log now,
     # not a bare parquet dir)
-    healed = dl.read().withColumn("content", F.lit("recovered")).withColumn(
+    m = dl.log.meta()
+    healed = dl.read(m).withColumn("content", F.lit("recovered")).withColumn(
         "last_error_time", F.expr("last_error_time - make_interval(0,0,0,1,0,0,0)")
     )
-    dl.replace(healed)
+    dl.replace(healed, m)
     r3 = worker.readmit(epoch_id=3)
     assert r3["healed"] == 1
     got = {r["path"]: r["content"] for r in t.read().collect()}

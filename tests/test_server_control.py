@@ -247,7 +247,7 @@ def test_readmit_rerun_does_not_duplicate_final_errors(spark, tmp_path):
 
     # crash simulation: monkeypatch the rewrite away for one pass
     real_replace = dl.replace
-    dl.replace = lambda df: None  # crash before the dl rewrite
+    dl.replace = lambda df, m: None  # crash before the dl rewrite
     worker.readmit(epoch_id=2)
     n_after_crash = worker.final_errors().count()
     dl.replace = real_replace
@@ -255,6 +255,60 @@ def test_readmit_rerun_does_not_duplicate_final_errors(spark, tmp_path):
     worker.readmit(epoch_id=3)  # the re-run (dl still holds the rows)
     assert worker.final_errors().count() == n_after_crash  # fenced: no dupes
     assert dl.read() is None or dl.read().count() == 0
+
+
+def test_readmit_keeps_poison_appended_during_the_pass(spark, tmp_path):
+    """The stream keeps quarantining while a readmit pass runs. The
+    pass rewrites only the rows it read, so poison appended after its
+    read stays in the dead-letter log, untouched (retry_count 0)."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "lake"), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=4
+    )
+    dl = DeadLetterTable(spark, str(tmp_path / "dl"))
+    ev = spark.createDataFrame(_poison_events(n=30, seed=13).drop(columns=["is_noop"]))
+    apply_batch(t, ev, epoch_id=0, dead_letter=dl)
+    n_read = dl.read().count()
+    later = spark.createDataFrame(_poison_events(n=20, seed=17).drop(columns=["is_noop"]))
+    worker = RetryWorker(
+        spark, t, dl, str(tmp_path / "final"), max_retries=5, start_delay_s=0
+    )
+    real_replace = dl.replace
+    appended = []
+
+    def replace_after_a_stream_append(*args):
+        # the stream's next epoch commits its poison before the rewrite
+        appended.append(apply_batch(t, later, epoch_id=1, dead_letter=dl)["n_poison"])
+        return real_replace(*args)
+
+    dl.replace = replace_after_a_stream_append
+    r = worker.readmit(epoch_id=10)
+    dl.replace = real_replace
+    assert r["eligible"] == n_read and appended[0] > 0
+    got = dl.read()
+    assert got.count() == n_read + appended[0]
+    assert got.filter("retry_count = 1").count() == n_read
+    assert got.filter("retry_count = 0").count() == appended[0]
+
+
+def test_clean_readmit_pass_reads_the_metadata_once(spark, tmp_path, counting_fs):
+    """A readmit pass that finalises nothing makes 3 metadata reads on
+    the dead-letter log: ONE metadata read (the ``_current`` pointer and
+    ``v{n}.json``) for the rows it reads, its rewrite and its fence
+    token, and the walk of the rewrite's staged segment."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "lake"), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=4
+    )
+    dl = DeadLetterTable(spark, str(tmp_path / "dl"), fs=counting_fs)
+    ev = spark.createDataFrame(_poison_events(n=30, seed=13).drop(columns=["is_noop"]))
+    apply_batch(t, ev, epoch_id=0, dead_letter=dl)
+    worker = RetryWorker(
+        spark, t, dl, str(tmp_path / "final"), max_retries=5, start_delay_s=0
+    )
+    counting_fs.reads = 0
+    r = worker.readmit(epoch_id=1)
+    assert r["eligible"] > 0 and r["final_errors"] == 0
+    assert counting_fs.reads <= 3, counting_fs.reads
+    assert dl.read().filter("retry_count = 1").count() == r["eligible"]
 
 
 # --------------------------------------------------- reprocess (mux)
