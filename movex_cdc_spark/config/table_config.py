@@ -29,6 +29,9 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from movex_cdc_spark.session import select_sql
+from movex_cdc_spark.sqltext import ident, in_list, literal
+
 OPS = ("I", "U", "D")
 
 
@@ -78,45 +81,55 @@ class TableCfg:
     def condition(self, op: str) -> str | None:
         return self.conditions.get(op)
 
-    def key_column(self) -> Column:
-        """The message-key expression for the 5 key-handling modes
-        (reference table.rb:67-85, trigger gen oracle.rb:917-967)."""
+    def key_sql(self) -> str:
+        """The message-key expression (SQL text) for the 5 key-handling
+        modes (reference table.rb:67-85, trigger gen oracle.rb:917-967)."""
         mode = self.key_handling
         if mode == "N":
-            return F.lit(None).cast("string")
+            return "CAST(NULL AS STRING)"
         if mode == "P":
-            return F.to_json(F.struct(*[F.col(c) for c in self.key_cols]))
+            fields = ", ".join(f"{literal(c)}, {ident(c)}" for c in self.key_cols)
+            return f"to_json(named_struct({fields}))"
         if mode == "F":
-            return F.lit(self.fixed_key)
+            return literal(self.fixed_key)
         if mode == "T":
-            return F.col("txid").cast("string")
+            return "CAST(txid AS STRING)"
         if mode == "E":
-            return F.expr(self.key_expression).cast("string")
+            return f"CAST(({self.key_expression}) AS STRING)"
         raise ValueError(f"unknown key_handling {mode!r}")
 
+    def key_column(self) -> Column:
+        return F.expr(self.key_sql())
+
+    def column_sql(self, col: ColumnCfg, op_col: str = "op") -> str:
+        """Column ``col`` for the ops that log it, NULL for the rest (P1/P2)."""
+        ops = [op for op in OPS if col.logged_for(op)]
+        if not ops:
+            return "NULL"
+        return f"CASE WHEN {in_list(ident(op_col), ops)} THEN {ident(col.name)} END"
+
+    def projection(self, columns: list[str], op_col: str = "op") -> dict[str, str]:
+        """Name → SQL text of the per-operation column selection over a
+        frame with ``columns``: the columns the config does not name pass
+        through, then the config's columns, each nulled for the ops that
+        do not log it, so one plan serves all three ops."""
+        named = {c.name for c in self.columns}
+        out = {c: ident(c) for c in columns if c not in named}
+        out.update((c.name, self.column_sql(c, op_col)) for c in self.columns)
+        return out
+
     def apply_projection(self, df: DataFrame, op_col: str = "op") -> DataFrame:
-        """Per-operation column selection (P1/P2): columns not logged
-        for an op are nulled so one plan serves all three ops."""
-        keep: dict[str, Column] = {}
-        passthrough = [c for c in df.columns if c not in {col.name for col in self.columns}]
-        for col in self.columns:
-            cond = None
-            for op in OPS:
-                if col.logged_for(op):
-                    c = F.col(op_col) == op
-                    cond = c if cond is None else (cond | c)
-            keep[col.name] = (
-                F.when(cond, F.col(col.name)).otherwise(F.lit(None)) if cond is not None else F.lit(None)
-            )
-        out = df.select(
-            *passthrough, *[v.alias(k) for k, v in keep.items()]
-        )
+        """Per-operation column selection (``projection``), then the
+        column_expressions, each for its operations, added one by one in
+        config order: an expression may read an earlier one's alias, and
+        an alias naming an existing column replaces it in place."""
+        proj = self.projection(df.columns, op_col)
+        out = select_sql(df, [f"{sql} AS {ident(n)}" for n, sql in proj.items()])
         for ex in self.expressions:
-            expr = F.expr(ex.sql)
+            sql = f"({ex.sql})"
             if tuple(ex.operations) != OPS:
-                ops = list(ex.operations)
-                expr = F.when(F.col(op_col).isin(ops), expr)
-            out = out.withColumn(ex.alias, expr)
+                sql = f"CASE WHEN {in_list(ident(op_col), ex.operations)} THEN {sql} END"
+            out = out.withColumn(ex.alias, F.expr(sql))
         return out
 
 

@@ -38,11 +38,12 @@ import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from movex_cdc_spark.lake.fs import DEFAULT_FS
 from movex_cdc_spark.lake.versioned import CommitConflict, VersionedStore, union_schema
+from movex_cdc_spark.session import select_sql
+from movex_cdc_spark.sqltext import cast, ident
 
 
 def _align(m: dict[str, Any], batch: DataFrame) -> DataFrame:
@@ -52,10 +53,15 @@ def _align(m: dict[str, Any], batch: DataFrame) -> DataFrame:
     ``void`` column as physical BOOLEAN, which a later read with a typed
     schema rejects, and a committed ``void`` could never widen."""
     have = {f.name: f.dataType for f in T.StructType.fromJson(m.get("schema") or {"fields": []}).fields}
-    nulls = [f.name for f in batch.schema.fields if isinstance(f.dataType, T.NullType)]
-    return batch.drop(*[c for c in nulls if c not in have]).withColumns(
-        {c: F.col(c).cast(have[c]) for c in nulls if c in have}
-    )
+    fields = batch.schema.fields
+    if not any(isinstance(f.dataType, T.NullType) for f in fields):
+        return batch
+    return select_sql(batch, [
+        ident(f.name) if not isinstance(f.dataType, T.NullType)
+        else f"{cast(ident(f.name), have[f.name])} AS {ident(f.name)}"
+        for f in fields
+        if f.name in have or not isinstance(f.dataType, T.NullType)
+    ])
 
 
 def _union(m: dict[str, Any], batch: T.StructType) -> dict:

@@ -66,7 +66,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from movex_cdc_spark.lake.versioned import CommitConflict, VersionedStore, union_schema
-from movex_cdc_spark.session import observe_noop
+from movex_cdc_spark.session import jstrings, observe_noop, select_sql
+from movex_cdc_spark.sqltext import cast, ident, in_list
 
 BUCKET_COL = "__bucket"
 PART_COL = "__bucket_part"  # duplicated for partitionBy (dir layout)
@@ -112,11 +113,12 @@ def _payload(m: dict[str, Any]) -> T.StructType:
     ])
 
 
-def _aligned(names, payload: T.StructType) -> list:
-    """``payload``'s columns from a frame with column ``names``, cast to
-    their committed types; a typed NULL where the frame lacks one."""
+def _aligned(names, payload: T.StructType) -> list[str]:
+    """``payload``'s columns (SQL text) from a frame with column
+    ``names``, cast to their committed types; a typed NULL where the
+    frame lacks one."""
     return [
-        (F.col(f.name) if f.name in names else F.lit(None)).cast(f.dataType).alias(f.name)
+        f"{cast(ident(f.name) if f.name in names else 'NULL', f.dataType)} AS {ident(f.name)}"
         for f in payload.fields
     ]
 
@@ -125,29 +127,32 @@ def _file_version(rel: str) -> int:
     return int(re.search(r"snap-(\d+)-", rel).group(1))
 
 
-def bucket_expr(key_cols: list[str], n_buckets: int):
+def bucket_sql(key_cols: list[str], n_buckets: int) -> str:
     """Deterministic key→bucket assignment: pmod(xxhash64(keys), n).
 
     Same role as the reference's MOD(ORA_HASH(Msg_Key,1e6), workers)
     worker-affinity slice (transfer_thread.rb:239-242): every key maps
     to exactly one bucket, so per-key state never spans tasks.
     """
-    return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
+    return f"CAST(pmod(xxhash64({', '.join(map(ident, key_cols))}), {int(n_buckets)}) AS INT)"
+
+
+def bucket_expr(key_cols: list[str], n_buckets: int):
+    return F.expr(bucket_sql(key_cols, n_buckets))
 
 
 def probe_buckets(
-    df: DataFrame, key_cols: list[str], n_buckets: int, valid=None, **aggs
+    df: DataFrame, key_cols: list[str], n_buckets: int, valid: str = "true", **aggs: str
 ) -> tuple[list[int], dict[str, Any]]:
     """THE bucket probe, one job (``observe_noop``). Returns the sorted
-    buckets of the rows where ``valid`` holds (every row when None) and
-    ``{"rows": their count, **aggs}`` — ``aggs`` are extra aggregate
-    columns the caller folds into the same job. Narrow ``df`` to the
+    buckets of the rows where ``valid`` (SQL text) holds and
+    ``{"rows": their count, **aggs}`` — ``aggs`` are extra aggregates
+    (SQL text) the caller folds into the same job. Narrow ``df`` to the
     columns the aggregates read first."""
-    ok = F.lit(True) if valid is None else valid
     got = observe_noop(
         df,
-        touched=F.collect_set(F.when(ok, bucket_expr(key_cols, n_buckets))),
-        rows=F.count(F.when(ok, 1)),
+        touched=f"collect_set(CASE WHEN {valid} THEN {bucket_sql(key_cols, n_buckets)} END)",
+        rows=f"count(CASE WHEN {valid} THEN 1 END)",
         **aggs,
     )
     return sorted(got.pop("touched")), got
@@ -223,9 +228,9 @@ class LakeTable(VersionedStore):
         )
         if not files:
             return self.spark.createDataFrame([], read_schema)
-        return self.spark.read.schema(read_schema).parquet(
-            *[os.path.join(self.path, f) for f in files]
-        )
+        reader = self.spark.read.schema(read_schema)._jreader
+        paths = jstrings(self.spark, [os.path.join(self.path, f) for f in files])
+        return DataFrame(reader.parquet(paths), self.spark)
 
     @staticmethod
     def _lists(m: dict[str, Any], buckets) -> dict[int, list[str]]:
@@ -249,21 +254,22 @@ class LakeTable(VersionedStore):
                     deltas.setdefault(f, []).append(b)
                 else:
                     base.append(f)
+        names = [BUCKET_COL, *T.StructType.fromJson(m["schema"]).fieldNames()]
+        cols = list(map(ident, names))
         parts = []
         if base or not deltas:
-            parts.append(self._scan(m, base).withColumn(
-                _RANK,
-                F.when(F.col(SEQ_COL).isNull(), F.lit(_NULL_BASE_RANK)).otherwise(F.lit(0)),
-            ))
+            parts.append(select_sql(self._scan(m, base), [
+                *cols, f"CASE WHEN {ident(SEQ_COL)} IS NULL THEN {_NULL_BASE_RANK} ELSE 0 END AS {_RANK}",
+            ]))
         for f, bs in sorted(deltas.items()):
-            parts.append(
-                self._scan(m, [f])
-                .filter(F.col(BUCKET_COL).isin(sorted(bs)))
-                .withColumn(_RANK, F.lit(-_file_version(f)).cast("long"))
-            )
-        return reduce(DataFrame.unionByName, parts).withColumn(
-            DELETED_COL, F.coalesce(F.col(DELETED_COL), F.lit(False))
-        )
+            parts.append(select_sql(
+                self._scan(m, [f]).filter(in_list(BUCKET_COL, sorted(bs))),
+                [*cols, f"CAST({-_file_version(f)} AS BIGINT) AS {_RANK}"],
+            ))
+        deleted = f"coalesce({ident(DELETED_COL)}, false) AS {ident(DELETED_COL)}"
+        return select_sql(reduce(DataFrame.unionByName, parts), [
+            *(deleted if n == DELETED_COL else ident(n) for n in names), _RANK,
+        ])
 
     def _fold(self, rows: DataFrame, m: dict[str, Any], n_buckets: int) -> DataFrame:
         """One row per (bucket, key): the payload and tombstone flag of
@@ -276,21 +282,22 @@ class LakeTable(VersionedStore):
         satisfies the merge's partitionBy write without another sort."""
         key_cols = m["key_cols"]
         names = _payload(m).fieldNames()
-        rest = [n for n in names if n not in key_cols]
-        return (
+        rest = ", ".join(ident(n) for n in names if n not in key_cols)
+        seq = ident(SEQ_COL)
+        folded = (
             rows.repartition(self._write_tasks(n_buckets), F.col(BUCKET_COL))
             .groupBy(BUCKET_COL, *key_cols)
             .agg(
-                F.max_by(F.struct(*rest, DELETED_COL), F.struct(SEQ_COL, _RANK)).alias("__w"),
-                F.max(F.coalesce(F.col(SEQ_COL), F.lit(-1).cast("long"))).alias(SEQ_COL),
-            )
-            .select(
-                BUCKET_COL,
-                *[F.col(n) if n in key_cols else F.col(f"__w.{n}").alias(n) for n in names],
-                SEQ_COL,
-                F.col(f"__w.{DELETED_COL}").alias(DELETED_COL),
+                F.expr(f"max_by(struct({rest}, {ident(DELETED_COL)}), struct({seq}, {_RANK})) AS __w"),
+                F.expr(f"max(coalesce({seq}, CAST(-1 AS BIGINT))) AS {seq}"),
             )
         )
+        return select_sql(folded, [
+            BUCKET_COL,
+            *(ident(n) if n in key_cols else f"__w.{ident(n)} AS {ident(n)}" for n in names),
+            seq,
+            f"__w.{ident(DELETED_COL)} AS {ident(DELETED_COL)}",
+        ])
 
     def read(
         self,
@@ -303,7 +310,7 @@ class LakeTable(VersionedStore):
         are never listed, opened, or scanned)."""
         df = self.read_raw(version, buckets)
         if not include_deleted:
-            df = df.filter(~F.col(DELETED_COL))
+            df = df.filter(f"NOT {ident(DELETED_COL)}")
         return df.drop(BUCKET_COL)
 
     def read_raw(
@@ -454,7 +461,8 @@ class LakeTable(VersionedStore):
         and the table-relative files of each bucket the write gave rows,
         by bucket id."""
         rel, files = self._stage(
-            df.withColumn(PART_COL, F.col(BUCKET_COL)).write.partitionBy(PART_COL), _SNAP, version
+            select_sql(df, ["*", f"{BUCKET_COL} AS {PART_COL}"]).write.partitionBy(PART_COL),
+            _SNAP, version,
         )
         by_bucket: dict[int, list[str]] = {}
         for f in files:
@@ -536,13 +544,13 @@ class LakeTable(VersionedStore):
 
         new_version = m["version"] + 1
         # Batch rows rank below every stored row: they lose each tie.
-        src = batch.select(
-            bucket_expr(m["key_cols"], m["n_buckets"]).alias(BUCKET_COL),
+        src = select_sql(batch, [
+            f"{bucket_sql(m['key_cols'], m['n_buckets'])} AS {BUCKET_COL}",
             *_aligned(batch.columns, _payload(m)),
-            F.col(seq_col).cast("long").alias(SEQ_COL),
-            (F.col(op_col) == F.lit("D")).alias(DELETED_COL),
-            F.lit(-new_version).cast("long").alias(_RANK),
-        )
+            f"CAST({ident(seq_col)} AS BIGINT) AS {SEQ_COL}",
+            f"({ident(op_col)} = 'D') AS {DELETED_COL}",
+            f"CAST({-new_version} AS BIGINT) AS {_RANK}",
+        ])
 
         # per-phase wall timings, recorded in the lineage so driver-side
         # epoch cost is observable in production (and adjudicable in
@@ -551,7 +559,9 @@ class LakeTable(VersionedStore):
         _t = time.monotonic()
 
         if probe is None:
-            probe, got = probe_buckets(batch.select(*m["key_cols"]), m["key_cols"], m["n_buckets"])
+            probe, got = probe_buckets(
+                select_sql(batch, list(map(ident, m["key_cols"]))), m["key_cols"], m["n_buckets"]
+            )
             probe_rows = got["rows"]
         touched = sorted(int(b) for b in probe)
         timings["probe_s"] = round(time.monotonic() - _t, 4)
@@ -607,9 +617,7 @@ class LakeTable(VersionedStore):
         if src is not None:
             cands = src.unionByName(cands)
         written_rows = Observation()
-        result = self._fold(cands, m, len(touched)).observe(
-            written_rows, F.count(F.lit(1)).alias("rows")
-        )
+        result = self._fold(cands, m, len(touched)).observe(written_rows, F.expr("count(1) AS rows"))
         _t = time.monotonic()
         snap_rel, written = self._write_snapshot(result, version)
         timings["write_s"] = round(time.monotonic() - _t, 4)
@@ -632,12 +640,12 @@ class LakeTable(VersionedStore):
         each touched bucket's list. The same divergence guard runs
         inside the write: a row whose bucket is not in ``touched`` fails
         the job, and the staged dir is dropped."""
-        guard = F.when(F.col(BUCKET_COL).isin(touched), F.col(BUCKET_COL)).otherwise(
-            F.raise_error(F.lit(_DIVERGED_MARK))
+        guard = (
+            f"CAST(CASE WHEN {in_list(BUCKET_COL, touched)} THEN {BUCKET_COL}"
+            f" ELSE raise_error('{_DIVERGED_MARK}') END AS INT) AS {BUCKET_COL}"
         )
         rows = (
-            src.drop(_RANK)
-            .withColumn(BUCKET_COL, guard.cast("int"))
+            select_sql(src, [guard, *map(ident, _payload(m).fieldNames()), SEQ_COL, DELETED_COL])
             .coalesce(1)
             .sortWithinPartitions(BUCKET_COL)
         )
@@ -714,12 +722,12 @@ class LakeTable(VersionedStore):
         m = self.meta()
         n_buckets = m["n_buckets"]
         names = set(df.columns)
-        out = df.select(
-            bucket_expr(m["key_cols"], n_buckets).alias(BUCKET_COL),
+        out = select_sql(df, [
+            f"{bucket_sql(m['key_cols'], n_buckets)} AS {BUCKET_COL}",
             *_aligned(names, _payload(m)),
-            (F.col(SEQ_COL).cast("long") if SEQ_COL in names else F.lit(seq_value).cast("long")).alias(SEQ_COL),
-            (F.col(DELETED_COL) if DELETED_COL in names else F.lit(False)).alias(DELETED_COL),
-        )
+            f"CAST({ident(SEQ_COL) if SEQ_COL in names else int(seq_value)} AS BIGINT) AS {SEQ_COL}",
+            f"{ident(DELETED_COL) if DELETED_COL in names else 'false'} AS {DELETED_COL}",
+        ])
         new_version = m["version"] + 1
         _, written = self._write_snapshot(
             out.repartition(self._write_tasks(n_buckets), F.col(BUCKET_COL)), new_version

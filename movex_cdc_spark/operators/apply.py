@@ -22,24 +22,24 @@ from __future__ import annotations
 import re
 import time
 from concurrent.futures import ThreadPoolExecutor
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from movex_cdc_spark.functions.hashing import sha256_builtin
 from movex_cdc_spark.lake.table import LakeTable, probe_buckets
 from movex_cdc_spark.operators.filters import (
-    bad_op_predicate,
-    condition_filter,
+    bad_op_sql,
+    condition_keep_sql,
     default_exclude_condition,
-    per_op_condition_filter,
-    poison_predicate,
-    suppress_noop_updates,
+    noop_keep_sql,
+    per_op_keep_sql,
+    poison_sql,
 )
 from movex_cdc_spark.operators.lww import lww_dedup_maxby
-from movex_cdc_spark.session import inheriting_local_properties, pinned_now
+from movex_cdc_spark.session import inheriting_local_properties, pinned_now, select_sql
+from movex_cdc_spark.sqltext import cast, ident, literal
 from movex_cdc_spark.sources.events import EVENTS_SCHEMA
 
 REPO_FILES_SCHEMA = T.StructType(
@@ -74,12 +74,12 @@ def flag_dispositions(
     table_cfg: "object | None" = None,
     envelope_sink: "object | None" = None,
 ) -> DataFrame:
-    """THE disposition pass, one projection: condition filter (or the
-    config's per-op conditions) and no-op suppression applied, poison
-    rows FLAGGED (not split). Every apply path slices its valid and
-    poison rows off this frame with ``split_flagged``; the streaming
-    shells persist it first, so the JSON parse and the cache write each
-    happen exactly once per micro-batch.
+    """THE disposition pass, one projection over one filter: condition
+    filter (or the config's per-op conditions) and no-op suppression
+    applied, poison rows FLAGGED (not split). Every apply path slices
+    its valid and poison rows off this frame with ``split_flagged``;
+    the streaming shells persist it first, so the JSON parse and the
+    cache write each happen exactly once per micro-batch.
 
     ``old_content`` is only consumed by the no-op check, and at ~the
     payload's size it is the single biggest column of the batch, so it
@@ -88,37 +88,46 @@ def flag_dispositions(
     (the envelope carries the old image). Only the presence of the sink
     matters; the decision is derived from the inputs, not configured.
     """
+    cols = events.columns
     if table_cfg is not None:
-        df = per_op_condition_filter(events, table_cfg.conditions)
+        keep = [per_op_keep_sql(table_cfg.conditions, event_shaped="content" in cols)]
     else:
-        df = condition_filter(events, condition_sql or default_exclude_condition())
-    df = suppress_noop_updates(df).withColumn(POISON_FLAG, poison_predicate())
-    if envelope_sink is not None or _needs_old_image(table_cfg):
-        return df
-    return df.drop("old_content")
+        keep = [condition_keep_sql(condition_sql or default_exclude_condition(),
+                                   "op" in cols and "content" in cols)]
+    if "old_content" in cols:
+        keep.append(noop_keep_sql())
+    keep = [k for k in keep if k]
+    df = events.filter(" AND ".join(keep)) if keep else events
+    drop = {POISON_FLAG}
+    if envelope_sink is None and not _needs_old_image(table_cfg):
+        drop.add("old_content")
+    return select_sql(df, [*(ident(c) for c in cols if c not in drop),
+                           f"{poison_sql()} AS {POISON_FLAG}"])
+
+
+def _poison_slice(flagged: DataFrame) -> DataFrame:
+    """The poison rows of a flagged frame, with ``error_msg`` naming the
+    defect (one rule for every path) and the EVENT_COLS shape: where the
+    old image was not retained, ``old_content`` is explicitly NULL, so
+    the dead-letter schema stays union-stable across paths and
+    RetryWorker's re-validation chain resolves every column."""
+    cols = [c for c in flagged.columns if c != POISON_FLAG]
+    msg = (f"CASE WHEN {bad_op_sql()} THEN 'unknown operation'"
+           " ELSE 'null content on insert/update' END AS error_msg")
+    out = [msg if c == "error_msg" else ident(c) for c in cols]
+    if "error_msg" not in cols:
+        out.append(msg)
+    if "old_content" not in cols:
+        out.append("CAST(NULL AS STRING) AS old_content")
+    return select_sql(flagged.filter(POISON_FLAG), out)
 
 
 def split_flagged(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(valid, poison) slices of a ``flag_dispositions`` frame. Poison
-    rows carry an ``error_msg`` naming the defect (one rule for every
-    path) and keep the EVENT_COLS shape: where the old image was not
-    retained, ``old_content`` is explicitly NULL, so the dead-letter
-    schema stays union-stable across paths and RetryWorker's
-    re-validation chain resolves every column."""
-    valid = flagged.filter(~F.col(POISON_FLAG)).drop(POISON_FLAG)
-    poison = (
-        flagged.filter(F.col(POISON_FLAG))
-        .drop(POISON_FLAG)
-        .withColumn(
-            "error_msg",
-            F.when(
-                bad_op_predicate(), F.lit("unknown operation")
-            ).otherwise(F.lit("null content on insert/update")),
-        )
-    )
-    if "old_content" not in poison.columns:
-        poison = poison.withColumn("old_content", F.lit(None).cast("string"))
-    return valid, poison
+    """(valid, poison) slices of a ``flag_dispositions`` frame, each one
+    projection over one filter (``_poison_slice``)."""
+    valid = select_sql(flagged.filter(f"NOT {POISON_FLAG}"),
+                       [ident(c) for c in flagged.columns if c != POISON_FLAG])
+    return valid, _poison_slice(flagged)
 
 
 def prepare_batch(
@@ -149,25 +158,49 @@ def prepare_batch(
     the rescan saved); apply_batch persists only the deduped output, and
     the streaming shells persist their micro-batch.
     """
-    valid, poison = split_flagged(flag_dispositions(events, condition_sql, table_cfg))
-    return _with_sha(lww_dedup_maxby(_slim(valid, table_cfg), KEY_COLS)), poison
+    flagged = flag_dispositions(events, condition_sql, table_cfg)
+    slim = _slim(flagged, table_cfg)
+    return _with_sha(lww_dedup_maxby(slim, KEY_COLS)), _poison_slice(flagged)
 
 
-def _slim(valid: DataFrame, table_cfg) -> DataFrame:
-    """The valid slice shaped for the merge: P1/P2 projection +
-    column_expressions (they may read ts/txid/old_content, so they run
-    first), then only key/seq/op/payload are kept — the old-image and
-    bookkeeping columns were only needed by the filters."""
-    if table_cfg is not None:
+# bookkeeping columns only the filters read; the merge never sees them
+_NOT_PAYLOAD = ("old_content", "ts", "txid", "is_noop", POISON_FLAG)
+
+
+def _sha_sql(content: str) -> str:
+    """``content_sha`` of the payload SQL ``content`` (NULL for a delete)."""
+    return f"CASE WHEN {content} IS NOT NULL THEN sha2(CAST({content} AS STRING), 256) END"
+
+
+def _slim(flagged: DataFrame, table_cfg, sha: bool = False) -> DataFrame:
+    """The valid rows of a flagged frame shaped for the merge, in one
+    projection over one filter: P1/P2 projection + column_expressions
+    (they may read ts/txid/old_content, so they run first), then only
+    key/seq/op/payload are kept — the old-image and bookkeeping columns
+    were only needed by the filters — plus ``content_sha`` when ``sha``
+    (over the projected content). Config expressions add their own
+    projections (``TableCfg.apply_projection``)."""
+    cols = flagged.columns
+    valid = flagged.filter(f"NOT {POISON_FLAG}") if POISON_FLAG in cols else flagged
+    if table_cfg is not None and table_cfg.expressions:
         valid = table_cfg.apply_projection(valid)
-    return valid.drop("old_content", "ts", "txid", "is_noop")
+        proj = {c: ident(c) for c in valid.columns}
+    elif table_cfg is not None:
+        proj = table_cfg.projection(cols)
+    else:
+        proj = {c: ident(c) for c in cols}
+    out = {n: sql for n, sql in proj.items() if n not in _NOT_PAYLOAD}
+    if sha:
+        out["content_sha"] = _sha_sql(proj["content"])
+    return select_sql(valid, [f"{sql} AS {ident(n)}" for n, sql in out.items()])
 
 
 def _with_sha(ready: DataFrame) -> DataFrame:
     """``content_sha`` of the payload (NULL for a delete)."""
-    return ready.withColumn(
-        "content_sha", F.when(F.col("content").isNotNull(), sha256_builtin("content"))
-    )
+    sha = f"{_sha_sql(ident('content'))} AS content_sha"
+    cols = ready.columns
+    return select_sql(ready, [sha if c == "content_sha" else ident(c) for c in cols]
+                      + ([] if "content_sha" in cols else [sha]))
 
 
 def _record_metrics(metrics, lineage, got, n_poison, stream_id, epoch_id, scope) -> None:
@@ -201,7 +234,7 @@ def _record_metrics(metrics, lineage, got, n_poison, stream_id, epoch_id, scope)
 def _apply_keyed(
     table: LakeTable,
     ready: DataFrame,
-    poison: DataFrame,
+    poison: "Callable[[], DataFrame]",
     probe_src: DataFrame,
     scope: str,
     t0: float,
@@ -211,7 +244,8 @@ def _apply_keyed(
     metrics: "object | None",
 ) -> dict[str, Any]:
     """The keyed tail both flows share; they differ only in the
-    ``ready`` rows they merge and the ``probe_src`` they probe:
+    ``ready`` rows they merge and the ``probe_src`` they probe
+    (``poison`` builds the poison slice, only when it is needed):
 
     1. ONE probe job (``probe_buckets``) over ``probe_src``: the touched
        buckets, the A1 counters and, while ``probe_src`` still carries
@@ -231,29 +265,26 @@ def _apply_keyed(
        returns the fence record;
     4. the metrics row, its counters in ``scope``."""
     flagged = POISON_FLAG in probe_src.columns
-    ok = ~F.col(POISON_FLAG) if flagged else F.lit(True)
-    counters = {"max_seq": F.max(F.when(ok, F.col("seq"))), **{
-        f"n_{name}": F.count(F.when(ok & (F.col("op") == op), 1))
+    ok = f"NOT {POISON_FLAG}" if flagged else "true"
+    counters = {"max_seq": f"max(CASE WHEN {ok} THEN seq END)", **{
+        f"n_{name}": f"count(CASE WHEN {ok} AND op = '{op}' THEN 1 END)"
         for op, name in (("I", "insert"), ("U", "update"), ("D", "delete"))
     }}
     if flagged:
-        counters["n_poison_seen"] = F.count(F.when(~ok, 1))
+        counters["n_poison_seen"] = f"count(CASE WHEN {POISON_FLAG} THEN 1 END)"
     # Never observe the counters on `ready` itself: its only action is
     # the snapshot write, which did not deliver observed metrics inside
     # a micro-batch — obs.get deadlocked the stream.
     _t = time.monotonic()
-    touched, got = probe_buckets(
-        probe_src.select(*([POISON_FLAG] if flagged else []), "seq", "op", *table.key_cols),
-        table.key_cols, table.n_buckets, ok, **counters,
-    )
+    touched, got = probe_buckets(probe_src, table.key_cols, table.n_buckets, ok, **counters)
     probe_wall = round(time.monotonic() - _t, 4)
     got["events"] = got.pop("rows")
     n_seen = got.pop("n_poison_seen", 0)
-    has_poison = dead_letter is not None and (n_seen > 0 if flagged else not poison.isEmpty())
+    has_poison = dead_letter is not None and (n_seen > 0 if flagged else not poison().isEmpty())
 
     def append_timed() -> tuple[int, float]:
         _t = time.monotonic()
-        n = dead_letter.append(poison, stream_id=stream_id, epoch_id=epoch_id)
+        n = dead_letter.append(poison(), stream_id=stream_id, epoch_id=epoch_id)
         return n, round(time.monotonic() - _t, 4)
 
     # the pool starts no thread unless the append is submitted
@@ -314,14 +345,15 @@ def apply_batch_flagged(
     goes to ``merge`` un-deduped: merge resolves last-writer-wins in the
     same aggregate that joins it with the stored rows."""
     t0 = time.monotonic()
-    valid, poison = split_flagged(flagged)
-    ready = _with_sha(_slim(valid, table_cfg))
+    ready = _slim(flagged, table_cfg, sha=True)
     # the probe buckets the PROJECTED keys (a key column a config does
-    # not log for an op is nulled); column pruning keeps the expression
-    # columns out of the probe plan
-    probe_src = flagged if table_cfg is None else table_cfg.apply_projection(flagged)
-    return _apply_keyed(table, ready, poison, probe_src, "valid_events_pre_dedup", t0,
-                        epoch_id, stream_id, dead_letter, metrics)
+    # not log for an op is nulled)
+    cols = flagged.columns
+    keys = table_cfg.projection(cols) if table_cfg is not None else {c: ident(c) for c in cols}
+    probe_src = select_sql(flagged, [POISON_FLAG, "seq", "op",
+                                     *(f"{keys[k]} AS {ident(k)}" for k in table.key_cols)])
+    return _apply_keyed(table, ready, lambda: _poison_slice(flagged), probe_src,
+                        "valid_events_pre_dedup", t0, epoch_id, stream_id, dead_letter, metrics)
 
 
 def apply_batch(
@@ -352,7 +384,8 @@ def apply_batch(
     ready, poison = prepare_batch(events, condition_sql=condition_sql, table_cfg=table_cfg)
     ready = ready.persist()
     try:
-        return _apply_keyed(table, ready, poison, ready, "deduped_keys", t0,
+        probe_src = select_sql(ready, ["seq", "op", *map(ident, table.key_cols)])
+        return _apply_keyed(table, ready, lambda: poison, probe_src, "deduped_keys", t0,
                             epoch_id, stream_id, dead_letter, metrics)
     finally:
         ready.unpersist()
@@ -375,12 +408,13 @@ def apply_batch_unkeyed(
     t0 = time.monotonic()
     valid, poison = split_flagged(flagged)
     if table_cfg is not None:
+        valid = table_cfg.apply_projection(valid)
+    cols = {c: ident(c) for c in valid.columns if c not in ("old_content", "is_noop")}
+    if table_cfg is not None:
         # msg_key column materialized for the envelope/sink contract;
         # NULL for mode 'N' (consumers must not assume per-key order)
-        valid = table_cfg.apply_projection(valid).withColumn(
-            "msg_key", table_cfg.key_column()
-        )
-    valid = valid.drop("old_content", "is_noop")
+        cols["msg_key"] = table_cfg.key_sql()
+    valid = select_sql(valid, [f"{sql} AS {ident(n)}" for n, sql in cols.items()])
     n_poison = 0
     if dead_letter is not None and not poison.isEmpty():
         # appended (and committed) only when there is poison, as in
@@ -495,18 +529,15 @@ class DeadLetterTable:
     def append(self, poison: DataFrame, stream_id: str, epoch_id: int | None) -> int:
         # an all-null event column keeps its event type: the log leaves an
         # untyped column out, and RetryWorker re-validates on content/op
-        untyped = {f.name for f in poison.schema.fields if isinstance(f.dataType, T.NullType)}
-        out = (
-            poison.withColumns({
-                f.name: F.col(f.name).cast(f.dataType) for f in EVENTS_SCHEMA.fields if f.name in untyped
-            })
-            .withColumn("retry_count", F.lit(0))
-            .withColumn("last_error_time", F.current_timestamp())
-            .withColumn("stream_id", F.lit(stream_id))
-            .withColumn("epoch_id", F.lit(epoch_id).cast("long"))
-        )
+        cols = {f.name: ident(f.name) for f in poison.schema.fields}
+        for f in poison.schema.fields:
+            if isinstance(f.dataType, T.NullType) and f.name in EVENTS_SCHEMA.fieldNames():
+                cols[f.name] = cast(ident(f.name), EVENTS_SCHEMA[f.name].dataType)
+        cols.update(retry_count="0", last_error_time="current_timestamp()",
+                    stream_id=literal(stream_id), epoch_id=cast(literal(epoch_id), T.LongType()))
         obs = Observation(f"dl_{stream_id}_{epoch_id}_{time.monotonic_ns()}")
-        out = out.observe(obs, F.count(F.lit(1)).alias("n"))
+        out = select_sql(poison, [f"{sql} AS {ident(n)}" for n, sql in cols.items()]).observe(
+            obs, F.expr("count(1) AS n"))
         lineage = self.log.append(out, stream_id=stream_id, epoch_id=epoch_id)
         if lineage.get("skipped"):
             return 0  # fenced replay: rows already quarantined

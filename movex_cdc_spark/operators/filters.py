@@ -19,30 +19,44 @@ as declarative DataFrame filters Catalyst can push into the scan:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from movex_cdc_spark.datagen import EXCLUDE_MARKER
+from movex_cdc_spark.sqltext import ident, literal
+
+# Each rule is defined once, as SQL text (``sqltext``: one string is one
+# py4j call, a Column tree one per node); the Column and DataFrame
+# forms below wrap that text.
 
 
-def bad_op_predicate(op_col: str = "op") -> F.Column:
+def bad_op_sql(op_col: str = "op") -> str:
     """Rows whose operation is unknown or NULL — transport junk on
     byte-stream sources (a malformed wire record parses all-null)."""
-    return ~F.col(op_col).isin("I", "U", "D") | F.col(op_col).isNull()
+    op = ident(op_col)
+    return f"({op} IS NULL OR {op} NOT IN ('I', 'U', 'D'))"
 
 
-def poison_predicate(content_col: str = "content", op_col: str = "op") -> F.Column:
+def poison_sql(content_col: str = "content", op_col: str = "op") -> str:
     """THE quarantine rule (single definition): I/U without content,
-    or an unknown/NULL op. Everything that routes rows toward the
-    dead-letter path — flag_dispositions and the condition filters'
-    quarantine exemption — derives from this."""
-    bad_content = F.col(content_col).isNull() & F.col(op_col).isin("I", "U")
-    return bad_content | bad_op_predicate(op_col)
+    or an unknown/NULL op. Total: never NULL. Everything that routes
+    rows toward the dead-letter path — flag_dispositions, the condition
+    filters' quarantine exemption, RetryWorker's re-validation —
+    derives from this."""
+    return (
+        f"(({ident(content_col)} IS NULL AND {ident(op_col)} IN ('I', 'U'))"
+        f" OR {bad_op_sql(op_col)})"
+    )
 
 
-def condition_filter(df: DataFrame, condition_sql: str | None) -> DataFrame:
-    """Apply a per-table SQL condition (rows NOT matching are dropped —
-    the trigger-condition semantics: condition true ⇒ event captured).
+def poison_predicate(content_col: str = "content", op_col: str = "op") -> Column:
+    return F.expr(poison_sql(content_col, op_col))
+
+
+def condition_keep_sql(condition_sql: str | None, event_shaped: bool) -> str | None:
+    """The keep predicate of a per-table SQL condition (rows NOT matching
+    are dropped — the trigger-condition semantics: condition true ⇒
+    event captured); None for no condition.
 
     Poison-shaped rows BYPASS the condition: on a malformed row the
     predicate is typically undecidable (NULL — e.g. ``lang = 'py'``
@@ -50,37 +64,65 @@ def condition_filter(df: DataFrame, condition_sql: str | None) -> DataFrame:
     drop it HERE before the poison split can quarantine it. The
     reference raises on such rows rather than filtering them; here
     they continue to the dead-letter path regardless of condition.
-    The exemption applies only to CDC-event-shaped frames (op +
+    The exemption applies only to ``event_shaped`` frames (op +
     content columns present) — on anything else there is no poison
     split downstream and the condition keeps its pure semantics."""
     if not condition_sql:
-        return df
-    keep = F.expr(condition_sql)
-    if "op" in df.columns and "content" in df.columns:
-        keep = F.coalesce(keep, F.lit(False)) | poison_predicate()
-    return df.filter(keep)
+        return None
+    if event_shaped:
+        return f"(coalesce(({condition_sql}), false) OR {poison_sql()})"
+    return f"({condition_sql})"
+
+
+def per_op_keep_sql(
+    conditions: dict[str, str] | None, op_col: str = "op", event_shaped: bool = True
+) -> str | None:
+    """The keep predicate of per-(table, op) trigger conditions (P3): a
+    row survives iff the condition configured for ITS op holds; ops
+    with no configured condition always pass (reference compiles one
+    WHEN clause per operation into the trigger,
+    db_trigger_generator_oracle.rb:774-777). One conjunctive predicate,
+    so Catalyst can push it into the scan; same quarantine exemption as
+    ``condition_keep_sql``, on frames with a content column."""
+    if not conditions:
+        return None
+    keep = " AND ".join(
+        f"(CASE WHEN {ident(op_col)} = {literal(op)} THEN ({sql}) ELSE true END)"
+        for op, sql in conditions.items()
+    )
+    if event_shaped:
+        return f"(coalesce({keep}, false) OR {poison_sql(op_col=op_col)})"
+    return f"({keep})"
+
+
+def noop_keep_sql(new_col: str = "content", old_col: str = "old_content", op_col: str = "op") -> str:
+    """Keep all but updates where the tracked payload did not change.
+
+    Null-safe: ``old <=> new`` mirrors the reference's pairwise
+    ``old != new OR (old IS NULL) != (new IS NULL)`` check
+    (P4: db_trigger_generator_oracle.rb:802-823). The coalesce: a NULL
+    op (malformed wire record, old<=>new both NULL) makes the no-op
+    test NULL, and ``NOT NULL`` would silently drop the row HERE —
+    before the poison flag ever sees it. Only a definite no-op may be
+    suppressed; undecidable rows continue to the poison split."""
+    return (
+        f"(NOT coalesce({ident(op_col)} = 'U' AND {ident(old_col)} <=> {ident(new_col)}, false))"
+    )
+
+
+def condition_filter(df: DataFrame, condition_sql: str | None) -> DataFrame:
+    """``df`` filtered by ``condition_keep_sql``; the quarantine
+    exemption applies to CDC-event-shaped frames."""
+    keep = condition_keep_sql(condition_sql, "op" in df.columns and "content" in df.columns)
+    return df.filter(keep) if keep else df
 
 
 def per_op_condition_filter(
     df: DataFrame, conditions: dict[str, str] | None, op_col: str = "op"
 ) -> DataFrame:
-    """Per-(table, op) trigger conditions (P3): a row survives iff the
-    condition configured for ITS op holds; ops with no configured
-    condition always pass (reference compiles one WHEN clause per
-    operation into the trigger, db_trigger_generator_oracle.rb:774-777).
-    Compiled to a single conjunctive predicate so Catalyst can push it
-    into the scan."""
-    if not conditions:
-        return df
-    keep = F.lit(True)
-    for op, sql in conditions.items():
-        keep = keep & F.when(F.col(op_col) == op, F.expr(sql)).otherwise(F.lit(True))
-    # same quarantine exemption as condition_filter: a poison-shaped
-    # row with an undecidable (NULL) condition must reach the split —
-    # only on CDC-event-shaped frames (content present), same rule
-    if "content" in df.columns:
-        keep = F.coalesce(keep, F.lit(False)) | poison_predicate(op_col=op_col)
-    return df.filter(keep)
+    """``df`` filtered by ``per_op_keep_sql``."""
+    keep = per_op_keep_sql(conditions, op_col, "content" in df.columns)
+    return df.filter(keep) if keep else df
 
 
 def default_exclude_condition() -> str:
@@ -92,10 +134,8 @@ def default_exclude_condition() -> str:
 def suppress_noop_updates(
     df: DataFrame, new_col: str = "content", old_col: str = "old_content", op_col: str = "op"
 ) -> DataFrame:
-    """Drop updates where the tracked payload did not change.
-
-    Null-safe: `old <=> new` (eqNullSafe) mirrors the reference's
-    pairwise `old != new OR (old IS NULL) != (new IS NULL)` check.
+    """Drop updates where the tracked payload did not change
+    (``noop_keep_sql``).
 
     A frame with no old-image column (e.g. dead letters quarantined by
     the slim streaming cache, which drops it) passes through unchanged:
@@ -103,10 +143,4 @@ def suppress_noop_updates(
     would lose real updates."""
     if old_col not in df.columns:
         return df
-    is_noop = (F.col(op_col) == "U") & F.col(old_col).eqNullSafe(F.col(new_col))
-    # coalesce: a NULL op (malformed wire record, old<=>new both NULL)
-    # makes is_noop NULL, and filter(~NULL) would silently drop the row
-    # HERE — before the poison flag ever sees it. Only a definite no-op
-    # may be suppressed; undecidable rows continue to the poison split.
-    return df.filter(~F.coalesce(is_noop, F.lit(False)))
-
+    return df.filter(noop_keep_sql(new_col, old_col, op_col))

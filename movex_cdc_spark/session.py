@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from movex_cdc_spark.sqltext import ident
+
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # Stateful-operator state store (sessionizer / idle-timeout /
@@ -98,9 +100,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # PySpark otherwise captures the Python call site on every
         # wrapped DataFrame/Column call (a stack walk, extra py4j round
-        # trips and an IPython import attempt each): one 200-event
-        # streaming apply made 2,093 py4j round trips with it, 813
-        # without (cProfile of CdcStreamPipeline._apply). The
+        # trips and an IPython import attempt each). On a 200-event
+        # delta epoch of CdcStreamPipeline._apply (32 buckets, the
+        # calling thread's send_command calls) it cost 1,822 round trips
+        # against 742 while the apply rules were Column trees; with the
+        # rules as SQL text (sqltext.py) it costs 76 against 66, and the
+        # setting still pays for every Column-built query. The
         # trade-off: analysis errors no longer carry the Python
         # call-site fragment, only the JVM-side message.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
@@ -145,14 +150,47 @@ def pinned_now(spark: SparkSession):
 
 
 def observe_noop(df, **aggs) -> dict:
-    """The aggregates ``aggs`` (name → Column) over ``df`` in ONE job: a
+    """The aggregates ``aggs`` (name → SQL text) over ``df`` in ONE job: a
     ``noop`` write carrying an ``Observation`` (a ``distinct().collect()``
-    or a global ``agg().collect()`` plans as 3 jobs under AQE). Narrow
+    or a global ``agg().collect()`` plans as 3 jobs under AQE). The
+    aggregates travel as one ``struct`` expression, so the observation
+    costs the same few py4j round trips however many there are. Narrow
     ``df`` first: the write materializes every column it is given."""
     from pyspark.sql import Observation
+    from pyspark.sql import functions as F
 
     obs = Observation()
-    df.observe(obs, *[c.alias(name) for name, c in aggs.items()]).write.format("noop").save(
+    fields = ", ".join(f"{sql} AS {ident(name)}" for name, sql in aggs.items())
+    df.observe(obs, F.expr(f"struct({fields}) AS m")).write.format("noop").save(
         mode="overwrite"
     )
-    return obs.get
+    return obs.get["m"].asDict()
+
+
+# ASCII unit separator: joins a string list for ``jstrings``; never part
+# of the SQL text this engine builds
+_SEP = "\x1f"
+_splitter: tuple = (None, None)
+
+
+def jstrings(spark: SparkSession, items: list[str]):
+    """``items`` as a JVM ``String[]`` in ONE py4j round trip: joined on
+    ``_SEP`` and split JVM-side by a ``Pattern`` compiled once per
+    gateway. A Python list argument crosses py4j as one
+    ``ArrayList.add`` call per element."""
+    global _splitter
+    gw = spark.sparkContext._gateway
+    if _splitter[0] is not gw:
+        _splitter = (gw, spark.sparkContext._jvm.java.util.regex.Pattern.compile(_SEP))
+    if not items or any(not s or _SEP in s for s in items):
+        raise ValueError(f"jstrings: empty item or separator in {items!r}")
+    return _splitter[1].split(_SEP.join(items))
+
+
+def select_sql(df, exprs: list[str]):
+    """``df.selectExpr(*exprs)`` in two py4j round trips whatever the
+    number of expressions (``jstrings``)."""
+    from pyspark.sql import DataFrame
+
+    spark = df.sparkSession
+    return DataFrame(df._jdf.selectExpr(jstrings(spark, exprs)), spark)

@@ -142,16 +142,14 @@ def parse_payload_events(df: DataFrame) -> DataFrame:
     strings, so the extraction is type-exact. Malformed payloads yield
     null fields -> caught by the poison split downstream, mirroring the
     reference's parse-validate-or-dead-letter flow."""
-    from pyspark.sql import functions as F
+    from movex_cdc_spark.session import select_sql
+    from movex_cdc_spark.sqltext import ident, literal
 
     fields = [f.name for f in PAYLOAD_STRUCT.fields]
-    return df.select(
-        "seq",
-        "op",
-        "ts",
-        "txid",
-        F.json_tuple(F.col("payload"), *fields).alias(*fields),
-    )
+    return select_sql(df, [
+        "seq", "op", "ts", "txid",
+        f"json_tuple(payload, {', '.join(map(literal, fields))}) AS ({', '.join(map(ident, fields))})",
+    ])
 
 
 def stage_payload_events(spark: SparkSession, columnar_dir: str, out_dir: str,

@@ -35,7 +35,8 @@ from movex_cdc_spark.operators.apply import (  # noqa: F401
     flag_dispositions,
     split_flagged,
 )
-from movex_cdc_spark.session import inheriting_local_properties, observe_noop
+from movex_cdc_spark.session import inheriting_local_properties, observe_noop, select_sql
+from movex_cdc_spark.sqltext import in_list, literal
 from movex_cdc_spark.sources.events import (
     MULTIPLEX_EVENTS_SCHEMA,
     PAYLOAD_EVENTS_SCHEMA,
@@ -427,7 +428,7 @@ class MultiplexedCdcPipeline(_StreamShell):
         for name in healable:
             self._apply_table(
                 self.sinks[name],
-                parse_payload_events(df.filter(F.col("table_name") == name)),
+                parse_payload_events(df.filter(f"table_name = {literal(name)}")),
                 m["version"],
                 f"{self.stream_id}:{name}:reprocess",
                 self.config.tables[name],
@@ -456,9 +457,9 @@ class MultiplexedCdcPipeline(_StreamShell):
             # bounded probe: distinct tags ≤ configured tables + strays,
             # in ONE job, which also builds the cache the dispatch slices
             got = observe_noop(
-                batch.select("table_name"),
-                tags=F.collect_set("table_name"),
-                null_tag=F.max(F.col("table_name").isNull()),
+                select_sql(batch, ["table_name"]),
+                tags="collect_set(table_name)",
+                null_tag="max(table_name IS NULL)",
             )
             present = set(got["tags"])
             # a NULL tag is reachable from the tagged Kafka source (a
@@ -467,11 +468,9 @@ class MultiplexedCdcPipeline(_StreamShell):
             # matching nothing — so it gets its own predicate branch.
             has_null_tag = bool(got["null_tag"])
             strays = sorted(present - set(self.config.tables))
-            stray_pred = (
-                F.col("table_name").isin(strays) if strays else F.lit(False)
-            )
+            stray_pred = in_list("table_name", strays)
             if has_null_tag:
-                stray_pred = stray_pred | F.col("table_name").isNull()
+                stray_pred = f"({stray_pred} OR table_name IS NULL)"
             n_strays = 0
             if strays or has_null_tag:
                 dispatch_dl = self._side_dead_letter("_dispatch")
@@ -501,7 +500,7 @@ class MultiplexedCdcPipeline(_StreamShell):
                 # poison in the same epoch
                 return self._apply_table(
                     self.sinks[name],
-                    parse_payload_events(batch.filter(F.col("table_name") == name)),
+                    parse_payload_events(batch.filter(f"table_name = {literal(name)}")),
                     epoch_id,
                     f"{self.stream_id}:{name}",
                     cfg,

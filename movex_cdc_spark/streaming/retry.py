@@ -16,11 +16,13 @@ the dead-letter table with retry_count+1 on the still-poison ones —
 rows beyond max_retries are moved to the final-errors store.
 
 The final-errors store is an epoch-fenced UnkeyedEventLog, NOT a plain
-``mode("append")`` parquet dir: readmit appends exhausted rows fenced
-on the dead-letter log's version, so a pass that crashes between the
-final-errors append and the dead-letter rewrite re-runs without
-duplicating rows in the final store (the rerun reads the same
-dead-letter version -> the same fence token -> the append no-ops).
+``mode("append")`` parquet dir. Each move between the two logs is an
+append to one and a rewrite of the other; a pass that crashes between
+them re-runs without duplicating rows, whatever committed to either log
+in between. The re-run appends only the rows the target does not
+already hold, and fences that append on the sum of the two logs'
+versions it read: the token grows with every commit to either log, and
+two passes that read the same versions append once.
 
 ``reprocess_final_errors`` is the operator-initiated requeue. Deviation
 from the reference, documented: the reference re-INSERTs into the
@@ -43,7 +45,19 @@ from movex_cdc_spark.lake.append_log import UnkeyedEventLog
 from movex_cdc_spark.lake.table import LakeTable
 from movex_cdc_spark.operators.apply import DeadLetterTable, apply_batch, backoff_elapsed
 from movex_cdc_spark.session import pinned_now
+from movex_cdc_spark.sqltext import ident, literal
 from movex_cdc_spark.sources.events import EVENT_COLS
+
+# A dead-letter row's identity: its origin (stream, epoch, event seq)
+# and its retry state, which every rewrite advances. A compaction of the
+# dead-letter log copies rows as they are, so the identity survives it.
+_ROW_ID = ("stream_id", "epoch_id", "seq", "retry_count", "last_error_time")
+
+
+def _missing(rows: DataFrame, held: DataFrame, key: tuple[str, ...]) -> DataFrame:
+    """The ``rows`` whose ``key`` (NULL-safe) no row of ``held`` has."""
+    on = " AND ".join(f"r.{ident(c)} <=> h.{ident(c)}" for c in key)
+    return rows.alias("r").join(held.select(*key).alias("h"), F.expr(on), "left_anti")
 
 
 class RetryWorker:
@@ -66,12 +80,8 @@ class RetryWorker:
         self.start_delay_s = start_delay_s
 
     def readmit(self, epoch_id: int | None = None, stream_id: str = "retry") -> dict[str, Any]:
-        # ONE metadata read for the pass: the rows it reads, the rows its
-        # rewrite replaces, and the fence token of its final-errors
-        # append — the dead-letter version BEFORE the rewrite. Monotone
-        # across passes (the rewrite bumps it); stable across a crashed
-        # pass's re-run (the rewrite never happened), so the re-run's
-        # append fences to a no-op instead of duplicating final rows.
+        # ONE dead-letter metadata read for the pass: the rows it reads
+        # and the rows its rewrite replaces
         m = self.dl.log.meta()
         df = self.dl.read(m)
         if df is None:
@@ -133,10 +143,17 @@ class RetryWorker:
             .withColumn("last_error_time", F.lit(now))
         )
         if n_final:
+            # a crashed pass may have appended some of these rows already
+            # (its rewrite never ran); the re-run still finalises rows
+            # first exhausted after the crash (module docstring)
+            fm = self.final.meta()
+            done = self.final.read(fm)
+            if done.columns:
+                exhausted = _missing(exhausted, done, _ROW_ID)
             self.final.append(
                 exhausted.withColumn("error_time", F.lit(now)),
                 stream_id="final",
-                epoch_id=m["version"],
+                epoch_id=m["version"] + fm["version"],
             )
 
         # rewrite the segments read above as waiting ∪ retrying, in one
@@ -171,9 +188,10 @@ class RetryWorker:
         retry_count=0 (immediately eligible for the next readmit pass,
         which re-validates them under the CURRENT config) and are
         removed from the final store. Exactly-once across a crash
-        between the two commits: the dead-letter append fences on the
-        final log's version, so a re-run of the same call re-reads the
-        same version, the append no-ops, and only the removal re-runs.
+        between the two commits (module docstring): a requeued row keeps
+        its ``error_time``, so a re-run finds the rows a crashed call
+        already requeued in the dead-letter store and appends only the
+        rest, then the removal re-runs.
         """
         m = self.final.meta()
         df = self.final.read(m)
@@ -189,23 +207,22 @@ class RetryWorker:
         remaining = df.filter(~pred)
 
         # strip the bookkeeping DeadLetterTable.append re-derives; keep
-        # event columns + the original quarantine reason
-        keep = [c for c in EVENT_COLS if c in df.columns]
-        if "error_msg" in df.columns:
-            keep.append("error_msg")
+        # event columns, the original quarantine reason and the time the
+        # row was finalised, which ties the requeued copy to this row
+        keep = [c for c in (*EVENT_COLS, "error_msg", "error_time") if c in df.columns]
         requeue = selected.select(*keep)
-
-        n = self.dl.append(
-            requeue,
-            stream_id=f"reprocess:{self.final_errors_dir}",
-            epoch_id=m["version"],
-        )
+        stream_id = f"reprocess:{self.final_errors_dir}"
+        dm = self.dl.log.meta()
+        held = self.dl.read(dm)
+        if held is not None and "error_time" in held.columns:
+            requeue = _missing(requeue, held.filter(f"stream_id = {literal(stream_id)}"),
+                               ("seq", "error_time"))
+        n = self.dl.append(requeue, stream_id=stream_id, epoch_id=m["version"] + dm["version"])
         # count BEFORE the swap invalidates this read's lineage (the
         # count-before-swap rule readmit follows)
         n_remaining = remaining.count()
-        # fenced no-op (n == 0 with selected rows present) means a
-        # crashed earlier call already requeued — fall through to the
-        # removal either way
+        # n == 0 with selected rows present means a crashed earlier call
+        # already requeued them: fall through to the removal either way
         self.final.replace(remaining, m)
         return {
             "reprocessed": int(n),

@@ -57,3 +57,33 @@ def counting_fs():
 
         setattr(ReadCountingFS, name, counted)
     return ReadCountingFS()
+
+
+@pytest.fixture()
+def py4j_round_trips(spark):
+    """``with py4j_round_trips() as rt:`` counts in ``rt.n`` the py4j
+    round trips (``send_command`` calls) the calling thread makes inside
+    the block; other threads' calls are not counted."""
+    import threading
+    from types import SimpleNamespace
+
+    client = type(spark.sparkContext._gateway._gateway_client)
+    orig = client.send_command
+
+    @contextmanager
+    def block():
+        rt = SimpleNamespace(n=0)
+        me = threading.get_ident()
+
+        def counted(self, *a, **kw):
+            if threading.get_ident() == me:
+                rt.n += 1
+            return orig(self, *a, **kw)
+
+        client.send_command = counted
+        try:
+            yield rt
+        finally:
+            client.send_command = orig
+
+    return block

@@ -12,7 +12,10 @@ batch flow):
   * a poison epoch that crashes in the dead-letter append or in the
     table commit replays to one apply and one quarantine, in both
     flows, and so does one whose shared store commit fails on the
-    unkeyed path or on the batch flow's dead-letter commit.
+    unkeyed path or on the batch flow's dead-letter commit;
+  * one epoch's plan building makes the same number of py4j round trips
+    at 8 and 64 buckets, within a budget, and an epoch the optimizer
+    can prove empty returns instead of blocking on its observation.
 """
 
 import os
@@ -22,6 +25,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from movex_cdc_spark.config.table_config import ColumnCfg, repo_files_config
+from movex_cdc_spark.datagen import GenParams, generate_events
 from movex_cdc_spark.lake.append_log import UnkeyedEventLog
 from movex_cdc_spark.lake.table import MAX_DELTA_DEPTH, LakeTable, bucket_expr
 from movex_cdc_spark.operators.apply import (
@@ -33,6 +38,7 @@ from movex_cdc_spark.operators.apply import (
     apply_batch_unkeyed,
     flag_dispositions,
 )
+from movex_cdc_spark.sources.events import EVENTS_SCHEMA
 
 
 def _events(spark, rows):
@@ -337,3 +343,86 @@ def test_epoch_fs_reads_stay_flat_across_write_arms(spark, tmp_path, counting_fs
     assert [mode for mode, _, _ in seen] == ["delta"] * MAX_DELTA_DEPTH + ["cow"]
     assert seen[0][1] <= 4 and seen[1][1] > 16 and seen[-1][1] > 16
     assert {reads for _, _, reads in seen} == {3}, seen
+
+
+def _configured():
+    """The repo_files config with a condition on every op and a column
+    that one op does not log."""
+    cfg = repo_files_config().tables["repo_files"]
+    cfg.conditions["D"] = cfg.conditions["I"]
+    cfg.columns = [ColumnCfg(c.name, c.log_insert, c.name != "lang" and c.log_update, c.log_delete)
+                   for c in cfg.columns]
+    return cfg
+
+
+@pytest.mark.parametrize("configured", [False, True], ids=["trickle", "configured"])
+def test_epoch_round_trips_stay_flat_across_bucket_counts(spark, tmp_path, py4j_round_trips,
+                                                          configured):
+    """The driver's cost of building one keyed epoch's plans does not
+    grow with the bucket count: every per-row rule is SQL text, and a
+    bucket list is one string. One ``apply_batch_flagged`` epoch makes
+    the same number of py4j round trips on its calling thread at 8 and
+    at 64 buckets, on the plain trickle shape and on a configured table
+    (per-op conditions, a column flag), and stays within a budget."""
+    cfg = _configured() if configured else None
+    ev = generate_events(GenParams(n_events=300, seed=31, p_poison=0.0)).drop(columns=["is_noop"])
+    flagged = flag_dispositions(spark.createDataFrame(ev), table_cfg=cfg).persist()
+    try:
+        counts = {}
+        # the first epoch in the process pays one-time lookups: warm up
+        for n_buckets in (16, 8, 64):
+            t = LakeTable.create(spark, str(tmp_path / f"lake{n_buckets}"), REPO_FILES_SCHEMA,
+                                 KEY_COLS, n_buckets=n_buckets)
+            dl = DeadLetterTable(spark, str(tmp_path / f"dl{n_buckets}"))
+            with py4j_round_trips() as rt:
+                lin = apply_batch_flagged(t, flagged, epoch_id=0, dead_letter=dl, table_cfg=cfg)
+            assert lin["write_mode"] == "delta" and len(lin["buckets_touched"]) > 4
+            counts[n_buckets] = rt.n
+    finally:
+        flagged.unpersist()
+    assert counts[8] == counts[64] <= 300, counts
+
+
+def _within(seconds, fn):
+    """``fn()`` on a daemon thread, failing the test when it has not
+    returned after ``seconds``: a blocked ``Observation.get`` fails here
+    instead of hanging the suite."""
+    import threading
+
+    out: dict = {}
+
+    def run():
+        try:
+            out["v"] = fn()
+        except BaseException as e:  # re-raised on the test thread
+            out["e"] = e
+
+    th = threading.Thread(target=run, daemon=True)
+    th.start()
+    th.join(seconds)
+    assert not th.is_alive(), f"still blocked after {seconds} s"
+    if "e" in out:
+        raise out["e"]
+    return out["v"]
+
+
+@pytest.mark.parametrize("shape", ["false_conditions", "empty_batch"])
+def test_provably_empty_epoch_returns(spark, tmp_path, shape):
+    """An epoch the optimizer can prove empty — every per-op condition
+    ``1 = 0``, or no rows at all — returns an empty-batch record and
+    writes nothing. The probe's observation sits at the top of its plan,
+    so it is delivered even when the relation below it folds away."""
+    t = _mk(spark, tmp_path, "lake")
+    cfg = None
+    if shape == "false_conditions":
+        cfg = repo_files_config().tables["repo_files"]
+        cfg.conditions = {op: "1 = 0" for op in ("I", "U", "D")}
+        events = _events(spark, [(1, "r1", "p1", "c1", "py", "x", None, "I", TS, 1),
+                                 (2, "r2", "p2", "c1", "py", "y", "x", "U", TS, 1)])
+    else:
+        events = spark.createDataFrame([], EVENTS_SCHEMA)
+    v0 = t.current_version()
+    lin = _within(120, lambda: apply_batch_flagged(
+        t, flag_dispositions(events, table_cfg=cfg), epoch_id=0, table_cfg=cfg))
+    assert lin.get("skipped") and lin["reason"] == "empty batch"
+    assert t.current_version() == v0 and t.read().count() == 0

@@ -232,8 +232,8 @@ def test_reprocess_where_null_predicate_keeps_undecidable_rows(spark, tmp_path):
 def test_readmit_rerun_does_not_duplicate_final_errors(spark, tmp_path):
     """The crashed-pass window: readmit appends exhausted rows to the
     final store, then crashes BEFORE the dead-letter rewrite. The
-    re-run reads the same dead-letter version -> same fence token ->
-    the final append no-ops instead of duplicating rows."""
+    re-run finds those rows in the final store and appends none of
+    them again."""
     t = LakeTable.create(
         spark, str(tmp_path / "lake"), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=4
     )
@@ -255,6 +255,72 @@ def test_readmit_rerun_does_not_duplicate_final_errors(spark, tmp_path):
     worker.readmit(epoch_id=3)  # the re-run (dl still holds the rows)
     assert worker.final_errors().count() == n_after_crash  # fenced: no dupes
     assert dl.read() is None or dl.read().count() == 0
+
+
+def test_readmit_rerun_after_dead_letter_commits_finalises_each_row_once(spark, tmp_path):
+    """The crashed-pass window with the dead-letter log moving before
+    the re-run: the stream appends more poison and a compaction rewrites
+    the segments. The re-run appends the crashed pass's rows to the
+    final store zero more times, and still finalises the rows first
+    exhausted on the re-run (the new poison, with ``max_retries=0``)."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "lake"), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=4
+    )
+    dl = DeadLetterTable(spark, str(tmp_path / "dl"))
+    first = spark.createDataFrame(_poison_events(n=30, seed=13).drop(columns=["is_noop"]))
+    apply_batch(t, first, epoch_id=0, dead_letter=dl)
+    n_first = dl.read().count()
+    worker = RetryWorker(
+        spark, t, dl, str(tmp_path / "final"), max_retries=0, start_delay_s=0
+    )
+    real_replace = dl.replace
+    dl.replace = lambda df, m: None  # crash before the dl rewrite
+    assert worker.readmit(epoch_id=1)["final_errors"] == n_first
+    dl.replace = real_replace
+    assert worker.final_errors().count() == n_first
+
+    later = spark.createDataFrame(_poison_events(n=20, seed=17).drop(columns=["is_noop"]))
+    n_later = apply_batch(t, later, epoch_id=1, dead_letter=dl)["n_poison"]
+    assert n_later > 0
+    dl.log.compact_segments(target_files=1)
+
+    worker.readmit(epoch_id=2)  # the re-run
+    final = worker.final_errors()
+    assert final.count() == n_first + n_later
+    assert final.select("stream_id", "epoch_id", "seq").distinct().count() == n_first + n_later
+    assert dl.read() is None or dl.read().count() == 0
+
+
+def test_reprocess_rerun_after_final_log_commits_requeues_each_row_once(spark, tmp_path):
+    """The same window on the operator requeue: reprocess_final_errors
+    appends the final rows to the dead-letter store, then crashes
+    before removing them from the final store; a compaction of the
+    final store commits before the re-run. The re-run requeues none of
+    them again, and removes them from the final store."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "lake"), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=4
+    )
+    dl = DeadLetterTable(spark, str(tmp_path / "dl"))
+    worker = RetryWorker(
+        spark, t, dl, str(tmp_path / "final"), max_retries=0, start_delay_s=0
+    )
+    for epoch, seed in ((0, 13), (2, 17)):  # two finalising passes: two segments
+        ev = spark.createDataFrame(_poison_events(n=30, seed=seed).drop(columns=["is_noop"]))
+        apply_batch(t, ev, epoch_id=epoch, dead_letter=dl)
+        worker.readmit(epoch_id=epoch + 1)
+    n_final = worker.final_errors().count()
+    assert n_final > 0 and (dl.read() is None or dl.read().count() == 0)
+
+    real_replace = worker.final.replace
+    worker.final.replace = lambda df, m: None  # crash before the final rewrite
+    assert worker.reprocess_final_errors()["reprocessed"] == n_final
+    worker.final.replace = real_replace
+    worker.final.compact_segments(target_files=1)
+
+    rep = worker.reprocess_final_errors()  # the re-run
+    assert rep["reprocessed"] == 0 and rep["remaining"] == 0
+    assert dl.read().count() == n_final
+    assert worker.final_errors() is None or worker.final_errors().count() == 0
 
 
 def test_readmit_keeps_poison_appended_during_the_pass(spark, tmp_path):
@@ -293,8 +359,8 @@ def test_readmit_keeps_poison_appended_during_the_pass(spark, tmp_path):
 def test_clean_readmit_pass_reads_the_metadata_once(spark, tmp_path, counting_fs):
     """A readmit pass that finalises nothing makes 3 metadata reads on
     the dead-letter log: ONE metadata read (the ``_current`` pointer and
-    ``v{n}.json``) for the rows it reads, its rewrite and its fence
-    token, and the walk of the rewrite's staged segment."""
+    ``v{n}.json``) for the rows it reads and its rewrite, and the walk
+    of the rewrite's staged segment."""
     t = LakeTable.create(
         spark, str(tmp_path / "lake"), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=4
     )
