@@ -26,7 +26,7 @@ from __future__ import annotations
 import json
 from dataclasses import asdict, dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from movex_cdc_spark.session import select_sql
@@ -97,9 +97,6 @@ class TableCfg:
         if mode == "E":
             return f"CAST(({self.key_expression}) AS STRING)"
         raise ValueError(f"unknown key_handling {mode!r}")
-
-    def key_column(self) -> Column:
-        return F.expr(self.key_sql())
 
     def column_sql(self, col: ColumnCfg, op_col: str = "op") -> str:
         """Column ``col`` for the ops that log it, NULL for the rest (P1/P2)."""

@@ -106,9 +106,11 @@ class UnkeyedEventLog(VersionedStore):
         stream_id: str = "default",
         epoch_id: int | None = None,
         max_attempts: int = 20,
+        pre_commit: "Any | None" = None,
     ) -> dict[str, Any]:
         """Append a batch; fenced per (stream_id, epoch_id) like
-        LakeTable.merge. Returns the lineage record.
+        LakeTable.merge, and ``pre_commit`` runs at the barrier as there.
+        Returns the lineage record.
 
         Optimistic concurrency: several writers (the multiplexed
         pipeline's per-table dispatch threads sharing one dead-letter
@@ -125,7 +127,8 @@ class UnkeyedEventLog(VersionedStore):
         # aligned and unioned BEFORE the write: a rejected batch stages nothing
         batch = _align(m, batch)
         _union(m, batch.schema)
-        _, files = self._stage(batch.write, "seg", m["version"] + 1)
+        rel, files = self._stage(batch.write, "seg", m["version"] + 1)
+        timings = self._barrier(pre_commit, rel)
 
         def build(cur: dict[str, Any]) -> dict[str, Any] | None:
             if self.fenced(cur, stream_id, epoch_id):
@@ -137,7 +140,7 @@ class UnkeyedEventLog(VersionedStore):
         if m2 is None:
             return skipped
         return {"version": m2["version"], "stream_id": stream_id,
-                "epoch_id": epoch_id, "files_added": len(files)}
+                "epoch_id": epoch_id, "files_added": len(files), "timings": timings}
 
     # -------------------------------------------------------- rewrite
     def replace(self, df: DataFrame, m: dict[str, Any]) -> dict[str, Any]:

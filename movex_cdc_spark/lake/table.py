@@ -529,13 +529,11 @@ class LakeTable(VersionedStore):
         expensive plan persists the batch first. A commit guard fails
         loudly if the probe diverges from the batch keys.
 
-        ``pre_commit``: zero-arg callable invoked after the snapshot
-        write but BEFORE the metadata commit. The caller's barrier for
-        work that must durably precede this commit (the dead-letter
-        append runs concurrently with the snapshot write — guide §2.6
-        overlapping independent jobs — and is joined here so the
-        poison-before-merge-commit crash ordering is preserved). If it
-        raises, the staged snapshot is dropped and nothing commits.
+        ``pre_commit``: zero-arg callable run at the store's barrier
+        (``VersionedStore._barrier``), after the snapshot write and
+        before the metadata commit: the keyed apply joins its
+        overlapped dead-letter append there. If it raises, the staged
+        snapshot is dropped and nothing commits.
         """
         m = self.meta()
         if self.fenced(m, stream_id, epoch_id):
@@ -661,10 +659,10 @@ class LakeTable(VersionedStore):
         return snap_rel, lists, None
 
     def _commit(self, m, snap_rel, lists, lineage, timings, pre_commit) -> dict[str, Any]:
-        """Commit a staged snapshot: the touched buckets' new lists, the
-        epoch fence and the lineage record in one pointer swap. A failed
-        ``pre_commit`` or a lost commit race drops the staged dir."""
-        snap_dir = os.path.join(self.path, snap_rel)
+        """Commit a staged snapshot after the ``pre_commit`` barrier: the
+        touched buckets' new lists, the epoch fence and the lineage record
+        in one pointer swap. A failed barrier or a lost commit race drops
+        the staged dir."""
         new_buckets: dict[str, list[str]] = dict(m["buckets"])
         new_buckets.update(lists)
         written = sorted(
@@ -682,21 +680,12 @@ class LakeTable(VersionedStore):
             m, lineage["stream_id"], lineage["epoch_id"], parent=m["version"],
             buckets=new_buckets, lineage=[lineage],
         )
-        if pre_commit is not None:
-            # join the caller's concurrent must-precede-commit work
-            # (see merge's docstring); a failure here aborts the snapshot
-            _t = time.monotonic()
-            try:
-                pre_commit()
-            except Exception:
-                self.fs.rmtree(snap_dir)
-                raise
-            timings["pre_commit_wait_s"] = round(time.monotonic() - _t, 4)
+        timings.update(self._barrier(pre_commit, snap_rel))
         _t = time.monotonic()
         try:
             self._write_version(m2)
         except CommitConflict:
-            self.fs.rmtree(snap_dir)
+            self.fs.rmtree(os.path.join(self.path, snap_rel))
             raise
         timings["commit_s"] = round(time.monotonic() - _t, 4)
         return lineage

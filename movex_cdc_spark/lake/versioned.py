@@ -30,6 +30,11 @@ JSON per committed version and a ``_current`` pointer.
     files it wrote, from one walk of the dir, and every writer commits
     exactly that list — no writer lists its staged dir again (Iceberg's
     writers hand their data files to the snapshot commit the same way).
+  * **pre-commit barrier** — ``_barrier`` runs a writer's
+    ``pre_commit`` after its staging write and before its metadata
+    commit: the one place where work that must durably precede a sink
+    commit (the epoch's dead letters, the envelope rejects) is joined.
+    If it raises, the staged dir is dropped and nothing commits.
   * **rebase loop** — a store operation reads the metadata ``m`` once
     and builds its commit on it; ``_commit_rebasing`` commits that and,
     on ``CommitConflict``, rebuilds on the re-read head. Every
@@ -229,3 +234,17 @@ class VersionedStore:
             self.fs.rmtree(out)
             raise
         return rel, files
+
+    def _barrier(self, pre_commit: "Callable[[], Any] | None", rel: str) -> dict[str, float]:
+        """Run ``pre_commit`` for the staged dir ``rel`` (module docstring);
+        returns its wall as ``pre_commit_wait_s``: the part of the
+        caller's concurrent work the staging write did not hide."""
+        if pre_commit is None:
+            return {}
+        _t = time.monotonic()
+        try:
+            pre_commit()
+        except Exception:
+            self.fs.rmtree(os.path.join(self.path, rel))
+            raise
+        return {"pre_commit_wait_s": round(time.monotonic() - _t, 4)}

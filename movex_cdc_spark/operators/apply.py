@@ -14,7 +14,7 @@ One micro-batch = one call. The streaming shells
 ``apply_batch_flagged`` (keyed) or ``apply_batch_unkeyed``
 (key_handling='N') from ``foreachBatch``; batch replays call
 ``apply_batch``, which dedups (LWW) before the merge and persists the
-deduped rows. Both keyed flows end in the same tail, ``_apply_keyed``.
+deduped rows. Every flow ends in the same tail, ``_apply_tail``.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ from movex_cdc_spark.operators.filters import (
     poison_sql,
 )
 from movex_cdc_spark.operators.lww import lww_dedup_maxby
-from movex_cdc_spark.session import inheriting_local_properties, pinned_now, select_sql
+from movex_cdc_spark.session import inheriting_local_properties, observe_noop, pinned_now, select_sql
 from movex_cdc_spark.sqltext import cast, ident, literal
 from movex_cdc_spark.sources.events import EVENTS_SCHEMA
 
@@ -231,8 +231,8 @@ def _record_metrics(metrics, lineage, got, n_poison, stream_id, epoch_id, scope)
     lineage["metrics"] = got
 
 
-def _apply_keyed(
-    table: LakeTable,
+def _apply_tail(
+    sink: "LakeTable | Any",
     ready: DataFrame,
     poison: "Callable[[], DataFrame]",
     probe_src: DataFrame,
@@ -243,27 +243,31 @@ def _apply_keyed(
     dead_letter: "DeadLetterTable | None",
     metrics: "object | None",
 ) -> dict[str, Any]:
-    """The keyed tail both flows share; they differ only in the
-    ``ready`` rows they merge and the ``probe_src`` they probe
-    (``poison`` builds the poison slice, only when it is needed):
+    """The tail every flow shares; they differ only in the sink (a keyed
+    ``LakeTable`` or an ``UnkeyedEventLog``), the ``ready`` rows they
+    write and the ``probe_src`` they probe (``poison`` builds the poison
+    slice, only when it is needed):
 
-    1. ONE probe job (``probe_buckets``) over ``probe_src``: the touched
-       buckets, the A1 counters and, while ``probe_src`` still carries
-       the poison flag, the poison count (else one ``isEmpty`` over
-       ``poison`` decides, and only when there is a dead-letter log);
+    1. ONE probe job over ``probe_src``: the A1 counters, the touched
+       buckets of a keyed sink (``probe_buckets``) and, while
+       ``probe_src`` still carries the poison flag, the poison count
+       (else one ``isEmpty`` over ``poison`` decides, and only when
+       there is a dead-letter log);
     2. the dead-letter append, ONLY when there is poison, on a pool
        thread that inherits this thread's Spark local properties (so
-       query.stop() cancels its jobs) and overlaps the snapshot write.
-       It is joined at merge's ``pre_commit`` barrier, so the poison
-       commit still durably precedes the table commit: a crash between
+       query.stop() cancels its jobs) and overlaps the sink's staging
+       write. It is joined at the sink's ``pre_commit`` barrier, so the
+       poison commit durably precedes the sink commit: a crash between
        the two replays only the append, which the dead-letter log's own
        fence resolves. An epoch that appended nothing leaves nothing to
        fence or replay;
-    3. ``merge(probe=touched)``: it widens the schema first
-       (ALTER-before-MERGE), then the ``ready`` plan runs once more,
-       inside the snapshot write; a replayed epoch is fenced there and
-       returns the fence record;
+    3. the sink write, skipped when no row is valid: ``merge(probe=
+       touched)`` widens the schema first (ALTER-before-MERGE), then the
+       ``ready`` plan runs once more, inside the snapshot write, or the
+       log's ``append``; a replayed epoch is fenced there and returns
+       the fence record;
     4. the metrics row, its counters in ``scope``."""
+    keyed = isinstance(sink, LakeTable)
     flagged = POISON_FLAG in probe_src.columns
     ok = f"NOT {POISON_FLAG}" if flagged else "true"
     counters = {"max_seq": f"max(CASE WHEN {ok} THEN seq END)", **{
@@ -273,10 +277,13 @@ def _apply_keyed(
     if flagged:
         counters["n_poison_seen"] = f"count(CASE WHEN {POISON_FLAG} THEN 1 END)"
     # Never observe the counters on `ready` itself: its only action is
-    # the snapshot write, which did not deliver observed metrics inside
-    # a micro-batch — obs.get deadlocked the stream.
+    # the sink write, which did not deliver observed metrics inside a
+    # micro-batch — obs.get deadlocked the stream.
     _t = time.monotonic()
-    touched, got = probe_buckets(probe_src, table.key_cols, table.n_buckets, ok, **counters)
+    if keyed:
+        touched, got = probe_buckets(probe_src, sink.key_cols, sink.n_buckets, ok, **counters)
+    else:
+        got = observe_noop(probe_src, rows=f"count(CASE WHEN {ok} THEN 1 END)", **counters)
     probe_wall = round(time.monotonic() - _t, 4)
     got["events"] = got.pop("rows")
     n_seen = got.pop("n_poison_seen", 0)
@@ -293,20 +300,16 @@ def _apply_keyed(
             pool.submit(inheriting_local_properties(ready.sparkSession, append_timed))
             if has_poison else None
         )
-        if not touched:
+        barrier = dl_future.result if dl_future is not None else None
+        if not got["events"]:
             lineage: dict[str, Any] = {"skipped": True, "reason": "empty batch"}
+        elif keyed:
+            lineage = sink.merge(ready, stream_id=stream_id, epoch_id=epoch_id, probe=touched,
+                                 probe_rows=got["events"], pre_commit=barrier)
         else:
-            lineage = table.merge(
-                ready,
-                seq_col="seq",
-                op_col="op",
-                stream_id=stream_id,
-                epoch_id=epoch_id,
-                probe=touched,
-                probe_rows=got["events"],
-                pre_commit=dl_future.result if dl_future is not None else None,
-            )
-        # already done when the merge ran (pre_commit barrier)
+            lineage = sink.append(ready, stream_id=stream_id, epoch_id=epoch_id,
+                                  pre_commit=barrier)
+        # already done when the sink committed (pre_commit barrier)
         n_poison, dl_wall = dl_future.result() if dl_future is not None else (0, 0.0)
     lineage["merge_latency_s"] = round(time.monotonic() - t0, 4)
     lineage["n_poison"] = n_poison
@@ -315,8 +318,8 @@ def _apply_keyed(
     timings = lineage.setdefault("timings", {})
     timings["probe_s"] = probe_wall  # the probe above, not merge's
     if dead_letter is not None:
-        # the append's own wall; merge's pre_commit_wait_s is the part
-        # of it the snapshot write did not hide
+        # the append's own wall; the sink's pre_commit_wait_s is the part
+        # of it the staging write did not hide
         timings["dl_append_s"] = dl_wall
     if lineage.get("skipped"):
         return lineage
@@ -339,7 +342,7 @@ def apply_batch_flagged(
     shape the valid slice, as in prepare_batch; poison rows are
     quarantined unprojected.
 
-    The keyed tail (``_apply_keyed``) probes the cached flagged frame,
+    The shared tail (``_apply_tail``) probes the cached flagged frame,
     so one job counts the valid events pre-LWW
     (``valid_events_pre_dedup``) and the poison rows. The valid slice
     goes to ``merge`` un-deduped: merge resolves last-writer-wins in the
@@ -352,7 +355,7 @@ def apply_batch_flagged(
     keys = table_cfg.projection(cols) if table_cfg is not None else {c: ident(c) for c in cols}
     probe_src = select_sql(flagged, [POISON_FLAG, "seq", "op",
                                      *(f"{keys[k]} AS {ident(k)}" for k in table.key_cols)])
-    return _apply_keyed(table, ready, lambda: _poison_slice(flagged), probe_src,
+    return _apply_tail(table, ready, lambda: _poison_slice(flagged), probe_src,
                         "valid_events_pre_dedup", t0, epoch_id, stream_id, dead_letter, metrics)
 
 
@@ -385,7 +388,7 @@ def apply_batch(
     ready = ready.persist()
     try:
         probe_src = select_sql(ready, ["seq", "op", *map(ident, table.key_cols)])
-        return _apply_keyed(table, ready, lambda: poison, probe_src, "deduped_keys", t0,
+        return _apply_tail(table, ready, lambda: poison, probe_src, "deduped_keys", t0,
                             epoch_id, stream_id, dead_letter, metrics)
     finally:
         ready.unpersist()
@@ -398,32 +401,28 @@ def apply_batch_unkeyed(
     stream_id: str = "default",
     table_cfg: "object | None" = None,
     dead_letter: "DeadLetterTable | None" = None,
+    metrics: "object | None" = None,
 ) -> dict[str, Any]:
     """S5 unkeyed path (key_handling='N') over a ``flag_dispositions``
     frame (built with the same ``table_cfg``): validated, projected
     events are APPENDED in arrival order — no LWW collapse, no merge —
     exactly the reference's keyless produce with relaxed ordering
     (transfer_thread.rb:331-347). ``log`` is a lake.append_log.
-    UnkeyedEventLog; the epoch fence lives in its atomic commit."""
+    UnkeyedEventLog; the epoch fence lives in its atomic commit. It ends
+    in the shared tail (``_apply_tail``), as the keyed flows do."""
     t0 = time.monotonic()
-    valid, poison = split_flagged(flagged)
+    valid = flagged.filter(f"NOT {POISON_FLAG}")
     if table_cfg is not None:
         valid = table_cfg.apply_projection(valid)
-    cols = {c: ident(c) for c in valid.columns if c not in ("old_content", "is_noop")}
+    cols = {c: ident(c) for c in valid.columns if c not in ("old_content", "is_noop", POISON_FLAG)}
     if table_cfg is not None:
         # msg_key column materialized for the envelope/sink contract;
         # NULL for mode 'N' (consumers must not assume per-key order)
         cols["msg_key"] = table_cfg.key_sql()
     valid = select_sql(valid, [f"{sql} AS {ident(n)}" for n, sql in cols.items()])
-    n_poison = 0
-    if dead_letter is not None and not poison.isEmpty():
-        # appended (and committed) only when there is poison, as in
-        # apply_batch_flagged: a clean epoch leaves nothing to fence
-        n_poison = dead_letter.append(poison, stream_id=stream_id, epoch_id=epoch_id)
-    lineage = log.append(valid, stream_id=stream_id, epoch_id=epoch_id)
-    lineage["n_poison"] = n_poison
-    lineage["merge_latency_s"] = round(time.monotonic() - t0, 4)
-    return lineage
+    probe_src = select_sql(flagged, [POISON_FLAG, "seq", "op"])
+    return _apply_tail(log, valid, lambda: _poison_slice(flagged), probe_src,
+                       "valid_events_pre_dedup", t0, epoch_id, stream_id, dead_letter, metrics)
 
 
 def envelope_timestamp(

@@ -110,13 +110,6 @@ def noop_keep_sql(new_col: str = "content", old_col: str = "old_content", op_col
     )
 
 
-def condition_filter(df: DataFrame, condition_sql: str | None) -> DataFrame:
-    """``df`` filtered by ``condition_keep_sql``; the quarantine
-    exemption applies to CDC-event-shaped frames."""
-    keep = condition_keep_sql(condition_sql, "op" in df.columns and "content" in df.columns)
-    return df.filter(keep) if keep else df
-
-
 def per_op_condition_filter(
     df: DataFrame, conditions: dict[str, str] | None, op_col: str = "op"
 ) -> DataFrame:
@@ -129,18 +122,3 @@ def default_exclude_condition() -> str:
     """The fixture condition: drop rows whose content carries the
     exclusion marker (analog of `:new.Name != 'EXCLUDE FILTER'`)."""
     return f"content IS NULL OR NOT contains(content, '{EXCLUDE_MARKER}')"
-
-
-def suppress_noop_updates(
-    df: DataFrame, new_col: str = "content", old_col: str = "old_content", op_col: str = "op"
-) -> DataFrame:
-    """Drop updates where the tracked payload did not change
-    (``noop_keep_sql``).
-
-    A frame with no old-image column (e.g. dead letters quarantined by
-    the slim streaming cache, which drops it) passes through unchanged:
-    with no old image the no-op check is undecidable and suppressing
-    would lose real updates."""
-    if old_col not in df.columns:
-        return df
-    return df.filter(noop_keep_sql(new_col, old_col, op_col))

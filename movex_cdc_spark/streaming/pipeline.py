@@ -44,6 +44,7 @@ from movex_cdc_spark.sources.events import (
     read_events_stream,
 )
 from movex_cdc_spark.streaming.lineage import MetricsTable
+from movex_cdc_spark.streaming.retry import _missing
 
 #: Driver-side epoch-lineage retention (VERDICT r6 item 4): the
 #: in-memory ``epochs`` window is a convenience for tests and the
@@ -125,7 +126,8 @@ class _StreamShell:
         envelope_sink=None,
     ) -> dict[str, Any]:
         """One table's epoch: flag → persist → (envelope emit from the
-        valid slice) → ``apply_batch_flagged`` into a LakeTable, or
+        valid slice, its rejects quarantined at the envelope log's
+        barrier) → ``apply_batch_flagged`` into a LakeTable, or
         ``apply_batch_unkeyed`` into an append log for
         key_handling='N' → unpersist.
 
@@ -153,15 +155,8 @@ class _StreamShell:
                 valid, _poison = split_flagged(flagged)
                 if cfg is not None:
                     valid = cfg.apply_projection(valid)
-                sink_lin = envelope_sink.emit(valid, stream_id=stream_id, epoch_id=epoch_id)
-                # pop UNCONDITIONALLY: with no dead-letter configured the
-                # lineage record must not keep the rejected DataFrame
-                # (and its plan + checkpointed blocks) alive
-                rejected_df = sink_lin.pop("rejected_df", None)
-                if rejected_df is not None and self.dead_letter is not None:
-                    self._side_dead_letter("_envelope").append(
-                        rejected_df, stream_id=f"{stream_id}-sink", epoch_id=epoch_id
-                    )
+                envelope_sink.emit(valid, stream_id=stream_id, epoch_id=epoch_id,
+                                   dead_letter=self._side_dead_letter("_envelope"))
             if unkeyed:
                 return apply_batch_unkeyed(
                     sink,
@@ -170,6 +165,7 @@ class _StreamShell:
                     stream_id=stream_id,
                     table_cfg=cfg,
                     dead_letter=self.dead_letter,
+                    metrics=self.metrics,
                 )
             return apply_batch_flagged(
                 sink,
@@ -402,7 +398,10 @@ class MultiplexedCdcPipeline(_StreamShell):
         quarantine rewrite: each table's apply fences on
         (stream_id=":reprocess", epoch_id=quarantine-log-version) in
         ITS OWN sink metadata, so a re-run of the same call no-ops the
-        already-applied tables and only the rewrite re-runs."""
+        already-applied tables and only the rewrite re-runs. A re-run
+        after the quarantine log committed in between carries a new
+        token: a keyed sink's merge keeps its stored rows on the
+        equal-seq tie; an unkeyed sink gets only the rows it lacks."""
         dispatch_dl = self._side_dead_letter("_dispatch")
         m = dispatch_dl.log.meta() if dispatch_dl is not None else None
         df = dispatch_dl.read(m) if m is not None else None
@@ -422,17 +421,21 @@ class MultiplexedCdcPipeline(_StreamShell):
         counts = df.agg(
             F.sum(F.when(heal_pred, 1).otherwise(0)).alias("heal"),
             F.sum(F.when(~F.coalesce(heal_pred, F.lit(False)), 1).otherwise(0)).alias("stay"),
+            F.min(F.when(heal_pred, F.col("seq"))).alias("lo"),
+            F.max(F.when(heal_pred, F.col("seq"))).alias("hi"),
         ).first()
         n_reprocessed = int(counts["heal"] or 0)
         n_remaining = int(counts["stay"] or 0)
         for name in healable:
-            self._apply_table(
-                self.sinks[name],
-                parse_payload_events(df.filter(f"table_name = {literal(name)}")),
-                m["version"],
-                f"{self.stream_id}:{name}:reprocess",
-                self.config.tables[name],
-            )
+            sink, cfg = self.sinks[name], self.config.tables[name]
+            events = parse_payload_events(df.filter(f"table_name = {literal(name)}"))
+            held = sink.read() if cfg.key_handling == "N" else None
+            if held is not None and "seq" in held.columns:
+                # only the sink rows in the healed seq range are read
+                held = held.filter(f"seq BETWEEN {literal(counts['lo'])} AND {literal(counts['hi'])}")
+                events = _missing(events, held, ("seq",))
+            self._apply_table(sink, events, m["version"],
+                              f"{self.stream_id}:{name}:reprocess", cfg)
         # NULL-tag rows must survive the rewrite: NULL.isin(...) is
         # NULL, and ~NULL filters the row out — an untagged row would
         # silently vanish from quarantine

@@ -11,8 +11,8 @@ hard invariants, asserted by its test double (kafka_mock.rb:37-141):
      kafka_mock.rb:80-96; oversized events raise and are dead-lettered).
 
 EnvelopeSink enforces 1 and 3 at emit time as Catalyst predicates
-(rows failing are returned for dead-lettering, mirroring the
-reference's exception path) and materializes the stream into an
+(rows failing are dead-lettered before the envelopes commit, mirroring
+the reference's exception path) and materializes the stream into an
 epoch-fenced append log. Invariant 2 is audited over the emitted
 stream: within an epoch a key's rows are produced in ascending id
 order by construction; across epochs the audit checks the per-key
@@ -156,14 +156,16 @@ class EnvelopeSink:
         batch: DataFrame,
         stream_id: str = "default",
         epoch_id: int | None = None,
+        dead_letter=None,
     ) -> dict[str, Any]:
         """Envelope + validate + fenced append.
 
         ``batch`` is a validated change-event frame (post condition/
         poison filters, PRE-LWW — every event is delivered, as the
-        reference producer does). Returns the lineage record plus
-        rejected-row counts; rejected rows (oversized / invalid) are in
-        ``lineage['rejected_df']`` for the caller to dead-letter."""
+        reference producer does). Returns the lineage record plus the
+        rejected-row count. Rejected rows (oversized / invalid) go to
+        ``dead_letter`` (stream ``{stream_id}-sink``) at the log's
+        barrier, before the envelopes commit; without one they drop."""
         env, msg, ok, error_col = build_envelopes(
             batch,
             schema_name=self.schema_name,
@@ -181,12 +183,16 @@ class EnvelopeSink:
         obs = Observation(f"emit_{stream_id}_{epoch_id}")
         observed = env.observe(obs, F.sum(F.when(~ok, 1).otherwise(0)).alias("n_rejected"))
         good = observed.filter(ok).withColumn("message_bytes", F.octet_length(msg))
-        rejected = env.filter(~ok).withColumn("error_msg", error_col)
-        lineage = self.log.append(good, stream_id=stream_id, epoch_id=epoch_id)
+
+        def quarantine() -> None:
+            if obs.get.get("n_rejected"):
+                rejected = env.filter(~ok).withColumn("error_msg", error_col)
+                dead_letter.append(rejected, stream_id=f"{stream_id}-sink", epoch_id=epoch_id)
+
+        lineage = self.log.append(good, stream_id=stream_id, epoch_id=epoch_id,
+                                  pre_commit=quarantine if dead_letter is not None else None)
         if not lineage.get("skipped"):
-            n_rejected = int(obs.get.get("n_rejected") or 0)
-            lineage["n_rejected"] = n_rejected
-            lineage["rejected_df"] = rejected if n_rejected else None
+            lineage["n_rejected"] = int(obs.get.get("n_rejected") or 0)
         return lineage
 
     # ------------------------------------------------------------ read
@@ -389,35 +395,32 @@ class KafkaEnvelopeWriter:
         batch: DataFrame,
         stream_id: str = "default",
         epoch_id: int | None = None,
+        dead_letter=None,
     ) -> dict[str, Any]:
         """Drop-in for EnvelopeSink.emit inside CdcStreamPipeline's
         foreachBatch (the sink-format knob: pass a KafkaEnvelopeWriter
         as ``envelope_sink`` to deploy, an EnvelopeSink to test). NOT
         epoch-fenced — Kafka produce is at-least-once (class docstring);
         a replayed epoch re-sends and the consumer-side dedup absorbs
-        it, so the lineage record carries no 'skipped' key."""
+        it, so the lineage record carries no 'skipped' key. Rejected
+        rows go to ``dead_letter`` BEFORE the produce."""
         from pyspark import StorageLevel
 
         env_batch = batch.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             wire, rejected = self.kafka_frames(env_batch)
-            # materialize the (small) rejected slice ONCE off the cached
-            # envelope input before that cache is dropped in the finally
-            # block — otherwise the caller's dead-letter append would
-            # recompute the full envelope build + validation for the
-            # rejected rows on every rejecting epoch (ADVICE r6). An
-            # eager localCheckpoint doubles as the count action (an
-            # Observation riding a kafka write does not fire inside
-            # foreachBatch — see spark-engine notes).
-            rejected = rejected.localCheckpoint(eager=True)
+            # both reads of the rejected slice hit the cached envelope
+            # input (an Observation riding a kafka write does not fire
+            # inside foreachBatch — see spark-engine notes)
             n_rejected = rejected.count()
+            if n_rejected and dead_letter is not None:
+                dead_letter.append(rejected, stream_id=f"{stream_id}-sink", epoch_id=epoch_id)
             self.writer(wire).save()
             return {
                 "stream_id": stream_id,
                 "epoch_id": epoch_id,
                 "topic": self.topic,
                 "n_rejected": n_rejected,
-                "rejected_df": rejected if n_rejected else None,
                 "delivery": "at-least-once",
             }
         finally:

@@ -12,7 +12,9 @@ batch flow):
   * a poison epoch that crashes in the dead-letter append or in the
     table commit replays to one apply and one quarantine, in both
     flows, and so does one whose shared store commit fails on the
-    unkeyed path or on the batch flow's dead-letter commit;
+    unkeyed path or on the batch flow's dead-letter commit, and one
+    whose envelope-reject or unkeyed dead-letter append fails at its
+    sink's barrier;
   * one epoch's plan building makes the same number of py4j round trips
     at 8 and 64 buckets, within a budget, and an epoch the optimizer
     can prove empty returns instead of blocking on its observation.
@@ -39,6 +41,8 @@ from movex_cdc_spark.operators.apply import (
     flag_dispositions,
 )
 from movex_cdc_spark.sources.events import EVENTS_SCHEMA
+from movex_cdc_spark.streaming.pipeline import CdcStreamPipeline
+from movex_cdc_spark.streaming.sink import EnvelopeSink
 
 
 def _events(spark, rows):
@@ -321,6 +325,66 @@ def test_shared_commit_crash_replays_exactly_once(spark, tmp_path, crash_at):
     assert [r["seq"] for r in dl.read().collect()] == [2]
 
 
+def _seg_dirs(path):
+    return sorted(d for d in os.listdir(path) if d.startswith("seg-"))
+
+
+@pytest.mark.parametrize("flow", ["envelope_reject_append", "unkeyed_dead_letter_append"])
+def test_sink_barrier_crash_replays_exactly_once(spark, tmp_path, flow):
+    """The dead letters an epoch owes a sink commit at that sink's
+    ``pre_commit`` barrier: an envelope sink's rejects (the envelope
+    quarantine) and an unkeyed log's poison rows. The append fails
+    there: the staged segment is dropped and the sink stays at its
+    version. The replay quarantines each reject or poison row once and
+    delivers each valid row once, and a second replay is fenced."""
+    dl = DeadLetterTable(spark, str(tmp_path / "dl"))
+    if flow == "envelope_reject_append":
+        t = _mk(spark, tmp_path, "lake")
+        envelope = EnvelopeSink(spark, str(tmp_path / "sink"), max_bytes=1000)
+        pipe = CdcStreamPipeline(spark, t, str(tmp_path / "ev"), str(tmp_path / "ck"),
+                                 dead_letter_dir=dl.path, envelope_sink=envelope)
+        events = _events(spark, [(1, "r1", "p1", "c1", "py", "x", None, "I", TS, 1),
+                                 (2, "r2", "p2", "c2", "py", "y" * 2000, None, "I", TS, 1),
+                                 (3, "r3", "p3", "c3", "py", None, None, "I", TS, 1)])
+        log, victim, key = envelope.log, pipe._side_dead_letter("_envelope"), "id"
+
+        def run():
+            pipe._apply(events, 0)
+            return pipe.epochs[-1]
+    else:
+        log = UnkeyedEventLog.create(spark, str(tmp_path / "ulog"))
+        victim, key = dl, "seq"
+        flagged = _poison_epoch(spark)
+
+        def run():
+            return apply_batch_unkeyed(log, flagged, epoch_id=0, stream_id="s", dead_letter=dl)
+    v0 = log.current_version()
+
+    def crash(*_a, **_k):
+        raise RuntimeError("injected crash")
+
+    victim.append = crash
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run()
+    finally:
+        del victim.append
+    assert log.current_version() == v0 and _seg_dirs(log.path) == []
+    assert victim.read() is None
+
+    assert not run().get("skipped")
+    assert run().get("skipped")
+    # row 1 is valid, row 2 the reject or the poison row
+    assert [r[key] for r in log.read().collect()] == [1]
+    assert [r[key] for r in victim.read().collect()] == [2]
+    if flow == "envelope_reject_append":
+        # the keyed table got every valid row once (the reject is only
+        # too big for an envelope), the poison row went to the event
+        # quarantine once
+        assert sorted(r["repo"] for r in t.read().collect()) == ["r1", "r2"]
+        assert [r["seq"] for r in dl.read().collect()] == [3]
+
+
 def test_epoch_fs_reads_stay_flat_across_write_arms(spark, tmp_path, counting_fs):
     """A keyed epoch makes 3 metadata reads through the fs seam — ONE
     metadata read (the ``_current`` pointer and ``v{n}.json``), in
@@ -406,23 +470,47 @@ def _within(seconds, fn):
     return out["v"]
 
 
-@pytest.mark.parametrize("shape", ["false_conditions", "empty_batch"])
+@pytest.mark.parametrize("shape", ["false_conditions", "empty_batch",
+                                   "unkeyed_false_conditions", "envelope_false_conditions"])
 def test_provably_empty_epoch_returns(spark, tmp_path, shape):
     """An epoch the optimizer can prove empty — every per-op condition
-    ``1 = 0``, or no rows at all — returns an empty-batch record and
-    writes nothing. The probe's observation sits at the top of its plan,
-    so it is delivered even when the relation below it folds away."""
+    ``1 = 0`` (into a keyed table, an unkeyed log, or a keyed table
+    behind an envelope sink), or no rows at all — returns an empty-batch
+    record and writes no row. Each observation read before a commit (the
+    probe's; the envelope log's reject count at its barrier) sits at the
+    top of its plan, so it is delivered even when the relation below it
+    folds away."""
     t = _mk(spark, tmp_path, "lake")
-    cfg = None
-    if shape == "false_conditions":
-        cfg = repo_files_config().tables["repo_files"]
-        cfg.conditions = {op: "1 = 0" for op in ("I", "U", "D")}
-        events = _events(spark, [(1, "r1", "p1", "c1", "py", "x", None, "I", TS, 1),
-                                 (2, "r2", "p2", "c1", "py", "y", "x", "U", TS, 1)])
+    dl = DeadLetterTable(spark, str(tmp_path / "dl"))
+    ecfg = repo_files_config()
+    cfg = ecfg.tables["repo_files"]
+    cfg.conditions = {op: "1 = 0" for op in ("I", "U", "D")}
+    events = _events(spark, [(1, "r1", "p1", "c1", "py", "x", None, "I", TS, 1),
+                             (2, "r2", "p2", "c1", "py", "y", "x", "U", TS, 1)])
+    if shape == "empty_batch":
+        cfg, events = None, spark.createDataFrame([], EVENTS_SCHEMA)
+    sink = t
+    if shape == "unkeyed_false_conditions":
+        cfg.key_handling = "N"
+        sink = UnkeyedEventLog.create(spark, str(tmp_path / "ulog"))
+
+        def run():
+            return apply_batch_unkeyed(sink, flag_dispositions(events, table_cfg=cfg),
+                                       epoch_id=0, table_cfg=cfg, dead_letter=dl)
+    elif shape == "envelope_false_conditions":
+        sink = EnvelopeSink(spark, str(tmp_path / "sink"))
+        pipe = CdcStreamPipeline(spark, t, str(tmp_path / "ev"), str(tmp_path / "ck"),
+                                 dead_letter_dir=dl.path, config=ecfg, envelope_sink=sink)
+
+        def run():
+            pipe._apply(events, 0)
+            return pipe.epochs[-1]
     else:
-        events = spark.createDataFrame([], EVENTS_SCHEMA)
+        def run():
+            return apply_batch_flagged(t, flag_dispositions(events, table_cfg=cfg), epoch_id=0,
+                                       dead_letter=dl, table_cfg=cfg)
     v0 = t.current_version()
-    lin = _within(120, lambda: apply_batch_flagged(
-        t, flag_dispositions(events, table_cfg=cfg), epoch_id=0, table_cfg=cfg))
+    lin = _within(120, run)
     assert lin.get("skipped") and lin["reason"] == "empty batch"
-    assert t.current_version() == v0 and t.read().count() == 0
+    assert t.current_version() == v0 and sink.read().count() == 0
+    assert dl.read() is None

@@ -92,5 +92,5 @@ def test_key_handling_modes(spark, cfg, mode, expected):
     cfg.fixed_key = "fixed!"
     cfg.key_expression = "upper(repo)"
     df = _df(spark, [(1, "r", "p", "c", "py", "x", 7, "I")])
-    got = df.withColumn("msg_key", cfg.key_column()).collect()[0]["msg_key"]
+    got = df.selectExpr(f"{cfg.key_sql()} AS msg_key").collect()[0]["msg_key"]
     assert got == expected

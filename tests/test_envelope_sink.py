@@ -22,22 +22,25 @@ def _batch(spark, rows):
 
 def test_emit_validate_and_fence(spark, tmp_path):
     sink = EnvelopeSink(spark, str(tmp_path / "sink"), max_bytes=500)
+    dl = DeadLetterTable(spark, str(tmp_path / "dl_envelope"))
     ok_rows = [(i, "r", f"p{i}", "c", "py", f"content {i}", None, "I") for i in range(5)]
     big = [(99, "r", "big", "c", "py", "x" * 2000, None, "I")]  # blows the cap
-    r = sink.emit(_batch(spark, ok_rows + big), epoch_id=0)
+    r = sink.emit(_batch(spark, ok_rows + big), epoch_id=0, dead_letter=dl)
     assert r["n_rejected"] == 1
-    rej = r["rejected_df"].collect()
-    assert rej[0]["error_msg"] == "message exceeds size cap"
+    # the reject is quarantined at the log's barrier, under the sink's stream
+    rej = dl.read().collect()
+    assert [(x["id"], x["error_msg"], x["stream_id"]) for x in rej] == [
+        (99, "message exceeds size cap", "default-sink")]
     out = sink.read()
     assert out.count() == 5
     # envelope JSON validity on everything emitted
     assert (
         out.filter(F.get_json_object("new_payload", "$.content").isNull()).count() == 0
     )
-    # fenced replay appends nothing
-    r2 = sink.emit(_batch(spark, ok_rows), epoch_id=0)
+    # fenced replay appends nothing, to either log
+    r2 = sink.emit(_batch(spark, ok_rows + big), epoch_id=0, dead_letter=dl)
     assert r2.get("skipped")
-    assert sink.read().count() == 5
+    assert sink.read().count() == 5 and dl.read().count() == 1
 
 
 def test_audit_per_key_ascending(spark, tmp_path):
@@ -232,6 +235,29 @@ def test_kafka_writer_uses_public_kafka_sink(spark):
     )
     with pytest.raises(AnalysisException, match="Failed to find data source: kafka"):
         k.writer(wire).save()
+
+
+def test_kafka_writer_quarantines_rejects_before_produce(spark, tmp_path):
+    """KafkaEnvelopeWriter.emit appends its rejects to the dead letter
+    BEFORE the produce, as EnvelopeSink does at its log's barrier: here
+    the produce fails (the Kafka connector jar is absent from the test
+    session) and the reject is already quarantined, once across a
+    replay."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from movex_cdc_spark.streaming.sink import KafkaEnvelopeWriter
+
+    k = KafkaEnvelopeWriter(spark, "b:9092", "t", max_bytes=500)
+    dl = DeadLetterTable(spark, str(tmp_path / "dl_envelope"))
+    batch = _batch(spark, [(1, "r", "p", "c", "py", "v", None, "I"),
+                           (2, "r", "big", "c", "py", "x" * 2000, None, "I")])
+    for _ in range(2):
+        with pytest.raises(AnalysisException, match="Failed to find data source: kafka"):
+            k.emit(batch, stream_id="k", epoch_id=0, dead_letter=dl)
+    rej = dl.read().collect()
+    assert [(r["id"], r["error_msg"], r["stream_id"]) for r in rej] == [
+        (2, "message exceeds size cap", "k-sink")]
 
 
 def test_kafka_writer_cloudevents_headers(spark):

@@ -5,10 +5,10 @@ import pandas as pd
 from movex_cdc_spark.datagen import EXCLUDE_MARKER
 from movex_cdc_spark.operators.apply import POISON_FLAG, flag_dispositions, split_flagged
 from movex_cdc_spark.operators.filters import (
-    condition_filter,
+    condition_keep_sql,
     default_exclude_condition,
+    noop_keep_sql,
     poison_predicate,
-    suppress_noop_updates,
 )
 
 COLS = ["seq", "repo", "path", "content", "old_content", "op"]
@@ -27,7 +27,8 @@ def test_condition_filter(spark):
             (3, "r", "c", None, None, "D"),  # null content passes
         ],
     )
-    got = condition_filter(df, default_exclude_condition()).select("seq").toPandas()
+    keep = condition_keep_sql(default_exclude_condition(), event_shaped=True)
+    got = df.filter(keep).select("seq").toPandas()
     assert sorted(got["seq"]) == [1, 3]
 
 
@@ -42,7 +43,7 @@ def test_noop_suppression_null_safe(spark):
             (5, "r", "e", "same", "same", "I"),      # not an update -> keep
         ],
     )
-    got = suppress_noop_updates(df).select("seq").toPandas()
+    got = df.filter(noop_keep_sql()).select("seq").toPandas()
     assert sorted(got["seq"]) == [2, 4, 5]
 
 
@@ -77,7 +78,7 @@ def test_null_op_rows_survive_noop_suppression_to_quarantine(spark):
             (2, None, None, None, None, None),  # malformed: all-null
         ],
     )
-    kept = suppress_noop_updates(df)
+    kept = df.filter(noop_keep_sql())
     assert sorted(r["seq"] for r in kept.select("seq").collect()) == [1, 2]
     valid, poison = split_flagged(flag_dispositions(df))
     assert [r["seq"] for r in valid.collect()] == [1]

@@ -474,3 +474,59 @@ def test_mux_reprocess_strays_after_config_heal(spark, tmp_path):
     assert rep2["reprocessed"] == 0 and rep2["remaining"] == 1
     assert t_b.current_version() == v_b
     assert t_b.read().count() == len(want_b)
+
+
+def test_mux_reprocess_rerun_after_quarantine_commits_appends_each_row_once(spark, tmp_path):
+    """A reprocess pass that crashed after its sink applies and before
+    the quarantine rewrite re-runs under a new fence token once the
+    quarantine log has committed in between (more strays arrived). An
+    unkeyed (key_handling='N') sink is sent only the healed rows it does
+    not hold yet, so each lands once; the re-run's rewrite keeps the new
+    strays."""
+    import dataclasses
+
+    from movex_cdc_spark.lake.append_log import UnkeyedEventLog
+    from movex_cdc_spark.sources.events import to_multiplex_events
+    from movex_cdc_spark.streaming.pipeline import MultiplexedCdcPipeline
+
+    cfg = repo_files_config()
+    pipe = MultiplexedCdcPipeline(
+        spark, cfg, sinks={"repo_files": LakeTable.create(
+            spark, str(tmp_path / "lake"), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=4)},
+        events_dir=str(tmp_path / "queue"), checkpoint_dir=str(tmp_path / "ck"),
+        dead_letter_dir=str(tmp_path / "dl"),
+    )
+    ev = spark.createDataFrame(
+        generate_events(GenParams(n_events=300, seed=37)).drop(columns=["is_noop"]))
+    pipe._apply(to_multiplex_events(ev, "t_u"), 0)  # every row a stray
+    quarantine = pipe._side_dead_letter("_dispatch")
+    assert quarantine.read().count() == 300
+
+    cfg2 = repo_files_config()
+    cfg2.tables["t_u"] = dataclasses.replace(cfg2.tables["repo_files"], name="t_u",
+                                             key_handling="N")
+    log = UnkeyedEventLog.create(spark, str(tmp_path / "ulog"))
+    pipe.sinks["t_u"] = log
+    pipe.set_config(cfg2)
+
+    def crash(*_a, **_k):
+        raise RuntimeError("injected crash")
+
+    quarantine.replace = crash  # the pass dies before its rewrite
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"):
+            pipe.reprocess_strays()
+    finally:
+        del quarantine.replace
+    n_applied = log.read().count()
+    assert 0 < n_applied <= 300
+
+    # five more strays, for a table still unconfigured, move the
+    # quarantine log's version
+    more = ev.filter("seq <= 5").withColumn("seq", F.col("seq") + 10_000)
+    pipe._apply(to_multiplex_events(more, "t_other"), 1)
+    rep = pipe.reprocess_strays()
+    assert rep["tables"] == ["t_u"] and rep["reprocessed"] == 300 and rep["remaining"] == 5
+    assert log.read().count() == n_applied
+    assert log.read().select("seq").distinct().count() == n_applied
+    assert quarantine.read().count() == 5

@@ -77,6 +77,40 @@ def test_engine_status_consolidates_all_sections(spark, tmp_path):
     json.dumps(st, default=str)
 
 
+def test_unkeyed_epochs_write_metrics_rows(spark, tmp_path):
+    """An unkeyed (key_handling='N') table's epochs each write one
+    MetricsTable row, counting the valid events pre-dedup, so
+    engine_status lists its stream like a keyed one."""
+    from movex_cdc_spark.config.table_config import repo_files_config
+    from movex_cdc_spark.lake.append_log import UnkeyedEventLog
+
+    ev = generate_events(GenParams(n_events=600, seed=59, p_poison=0.03))
+    cfg = repo_files_config()
+    cfg.tables["repo_files"].key_handling = "N"
+    log = UnkeyedEventLog.create(spark, str(tmp_path / "ulog"))
+    pipe = CdcStreamPipeline(
+        spark, None, str(tmp_path / "events"), str(tmp_path / "ckpt"), stream_id="u",
+        dead_letter_dir=str(tmp_path / "dl"), metrics_dir=str(tmp_path / "metrics"),
+        config=cfg, unkeyed_log=log,
+    )
+    sdf = spark.createDataFrame(ev.drop(columns=["is_noop"]))
+    for i in range(2):
+        pipe._apply(sdf.filter(F.pmod(F.col("seq"), F.lit(2)) == i), i)
+    rows = pipe.metrics.read().collect()  # flushes the buffered rows
+    assert sorted(r["epoch_id"] for r in rows) == [0, 1]
+    assert {r["counter_scope"] for r in rows} == {"valid_events_pre_dedup"}
+    assert sum(r["events"] for r in rows) == log.read().count() > 0
+    n_poison = int((ev["content"].isna() & (ev["op"] != "D")).sum())
+    assert sum(r["n_poison"] for r in rows) == n_poison > 0
+
+    st = engine_status(spark, metrics_dir=str(tmp_path / "metrics"),
+                       dead_letter_dir=str(tmp_path / "dl"))
+    [s] = st["streams"]
+    assert s["stream_id"] == "u" and s["epochs"] == 2 and s["last_epoch_id"] == 1
+    assert s["events_total"] == log.read().count()
+    assert s["n_poison"] == st["dead_letter"]["rows"] == n_poison
+
+
 def test_engine_status_degrades_without_inputs(spark, tmp_path):
     """A minimal deployment (no metrics, no heartbeat, nothing yet)
     still gets a well-formed probe instead of a crash."""
@@ -158,8 +192,8 @@ def test_epoch_lineage_is_bounded_and_frame_free(spark, tmp_path):
     pipe = CdcStreamPipeline(
         spark, table, str(tmp_path / "pe"), str(tmp_path / "ckpt"),
         max_files_per_trigger=1, payload_format=True,
-        # envelope sink present, NO dead letter: the rejected_df pop
-        # must still drop the frame from the record
+        # envelope sink present, NO dead letter: the rejects are
+        # dropped, and no frame rides the record
         envelope_sink=EnvelopeSink(spark, str(tmp_path / "sink"), max_bytes=300),
     )
     epochs = pipe.run_available_now()
