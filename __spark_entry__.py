@@ -65,7 +65,7 @@ _PRIORITY = [
 #     cdc_engine_replay_final_state (the full disposition chain);
 #   retry backoff -> cdc_retry_heal_final_state;
 #   envelope legacy ts -> cdc_envelope_sink_contract (same
-#     build_envelopes path + per-mode regex validation in pytest);
+#     EnvelopeFormat.build path + per-mode regex validation in pytest);
 #   config broadcast join / semi join -> join_multikey_config_assembly,
 #     join_anti_customers_without_orders, cdc_config_projection_expressions;
 #   scalar battery -> date_function_battery + every expression row;

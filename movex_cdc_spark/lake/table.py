@@ -127,35 +127,19 @@ def _file_version(rel: str) -> int:
     return int(re.search(r"snap-(\d+)-", rel).group(1))
 
 
-def bucket_sql(key_cols: list[str], n_buckets: int) -> str:
+def bucket_sql(key_cols: list[str], n_buckets: int, key_sql=ident) -> str:
     """Deterministic key→bucket assignment: pmod(xxhash64(keys), n).
 
     Same role as the reference's MOD(ORA_HASH(Msg_Key,1e6), workers)
     worker-affinity slice (transfer_thread.rb:239-242): every key maps
     to exactly one bucket, so per-key state never spans tasks.
+    ``key_sql`` maps a key column to the SQL text that computes it.
     """
-    return f"CAST(pmod(xxhash64({', '.join(map(ident, key_cols))}), {int(n_buckets)}) AS INT)"
+    return f"CAST(pmod(xxhash64({', '.join(map(key_sql, key_cols))}), {int(n_buckets)}) AS INT)"
 
 
 def bucket_expr(key_cols: list[str], n_buckets: int):
     return F.expr(bucket_sql(key_cols, n_buckets))
-
-
-def probe_buckets(
-    df: DataFrame, key_cols: list[str], n_buckets: int, valid: str = "true", **aggs: str
-) -> tuple[list[int], dict[str, Any]]:
-    """THE bucket probe, one job (``observe_noop``). Returns the sorted
-    buckets of the rows where ``valid`` (SQL text) holds and
-    ``{"rows": their count, **aggs}`` — ``aggs`` are extra aggregates
-    (SQL text) the caller folds into the same job. Narrow ``df`` to the
-    columns the aggregates read first."""
-    got = observe_noop(
-        df,
-        touched=f"collect_set(CASE WHEN {valid} THEN {bucket_sql(key_cols, n_buckets)} END)",
-        rows=f"count(CASE WHEN {valid} THEN 1 END)",
-        **aggs,
-    )
-    return sorted(got.pop("touched")), got
 
 
 _DIVERGED_MARK = "LAKE_MERGE_BUCKET_OUTSIDE_PROBE"
@@ -521,10 +505,10 @@ class LakeTable(VersionedStore):
         record instead (idempotent retry).
 
         ``probe``: the touched-bucket list from a caller that already
-        ran ``probe_buckets`` itself (the keyed apply flows fold their
-        counters and poison count into that job), with ``probe_rows``
-        the batch rows it counted. Without it, merge runs
-        ``probe_buckets`` over the batch's keys, so the batch plan runs
+        probed the batch (the apply flows' ``probe_tables`` job, which
+        also counts their counters and poison), with ``probe_rows`` the
+        batch rows it counted. Without it, merge probes the batch's
+        keys in one job itself, so the batch plan runs
         once for the probe and once for the write: a caller with an
         expensive plan persists the batch first. A commit guard fails
         loudly if the probe diverges from the batch keys.
@@ -557,10 +541,9 @@ class LakeTable(VersionedStore):
         _t = time.monotonic()
 
         if probe is None:
-            probe, got = probe_buckets(
-                select_sql(batch, list(map(ident, m["key_cols"]))), m["key_cols"], m["n_buckets"]
-            )
-            probe_rows = got["rows"]
+            got = observe_noop(select_sql(batch, list(map(ident, m["key_cols"]))), rows="count(1)",
+                               touched=f"collect_set({bucket_sql(m['key_cols'], m['n_buckets'])})")
+            probe, probe_rows = got["touched"], got["rows"]
         touched = sorted(int(b) for b in probe)
         timings["probe_s"] = round(time.monotonic() - _t, 4)
         if not touched:

@@ -4,17 +4,20 @@ This is the Spark shape of the reference's hot path
 (transfer_thread.rb:53-99):
 
     events → condition filter → no-op suppression → poison flag
-    (flag_dispositions) → valid/poison slices (split_flagged) →
-    [config projection] → one probe job → [dead-letter append, only
-    on poison] ∥ MERGE (epoch fence, schema evolve and LWW inside) →
-    lineage/metrics record
+    (flag_dispositions) → one probe job (probe_tables) →
+    valid/poison slices (split_flagged) → [config projection] →
+    [dead-letter append, only on poison] ∥ MERGE (epoch fence, schema
+    evolve and LWW inside) → lineage/metrics record
 
-One micro-batch = one call. The streaming shells
-(streaming/pipeline.py) persist the flagged batch and run
-``apply_batch_flagged`` (keyed) or ``apply_batch_unkeyed``
-(key_handling='N') from ``foreachBatch``; batch replays call
-``apply_batch``, which dedups (LWW) before the merge and persists the
-deduped rows. Every flow ends in the same tail, ``_apply_tail``.
+One micro-batch = one call per table. The streaming epoch
+(streaming/pipeline.py) flags every table of a micro-batch in one
+projection, persists that frame, probes it once for all of them and
+runs ``apply_batch_flagged`` (keyed) or ``apply_batch_unkeyed``
+(key_handling='N') on each table's slice with its part of the probe;
+called on their own they probe their frame with the same function.
+Batch replays call ``apply_batch``, which dedups (LWW) before the merge
+and persists the deduped rows. Every flow ends in the same tail,
+``_apply_tail``.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from movex_cdc_spark.lake.table import LakeTable, probe_buckets
+from movex_cdc_spark.lake.table import LakeTable, bucket_sql
 from movex_cdc_spark.operators.filters import (
     bad_op_sql,
     condition_keep_sql,
@@ -39,7 +42,7 @@ from movex_cdc_spark.operators.filters import (
 )
 from movex_cdc_spark.operators.lww import lww_dedup_maxby
 from movex_cdc_spark.session import inheriting_local_properties, observe_noop, pinned_now, select_sql
-from movex_cdc_spark.sqltext import cast, ident, literal
+from movex_cdc_spark.sqltext import cast, ident, in_list, literal
 from movex_cdc_spark.sources.events import EVENTS_SCHEMA
 
 REPO_FILES_SCHEMA = T.StructType(
@@ -73,33 +76,48 @@ def flag_dispositions(
     condition_sql: str | None = None,
     table_cfg: "object | None" = None,
     envelope_sink: "object | None" = None,
+    tables: "dict[str, Any] | None" = None,
 ) -> DataFrame:
     """THE disposition pass, one projection over one filter: condition
     filter (or the config's per-op conditions) and no-op suppression
     applied, poison rows FLAGGED (not split). Every apply path slices
     its valid and poison rows off this frame with ``split_flagged``;
-    the streaming shells persist it first, so the JSON parse and the
+    the streaming epoch persists it first, so the JSON parse and the
     cache write each happen exactly once per micro-batch.
+
+    ``tables`` (``{table_name: TableCfg}``, over a frame tagged with
+    ``table_name``) flags every table in the same pass: each row is
+    kept by its own table's rules (``CASE table_name …``), and a row
+    whose tag is NULL or names no table passes through unfiltered.
 
     ``old_content`` is only consumed by the no-op check, and at ~the
     payload's size it is the single biggest column of the batch, so it
-    is dropped here unless a later stage reads it: a ``table_cfg``
-    expression that may read it, or an attached ``envelope_sink``
-    (the envelope carries the old image). Only the presence of the sink
-    matters; the decision is derived from the inputs, not configured.
+    is dropped here unless a later stage reads it: a config expression
+    that may read it, or an attached ``envelope_sink`` (the envelope
+    carries the old image). Only the presence of the sink matters; the
+    decision is derived from the inputs, not configured.
     """
     cols = events.columns
-    if table_cfg is not None:
-        keep = [per_op_keep_sql(table_cfg.conditions, event_shaped="content" in cols)]
+
+    def keep_of(cfg) -> str:
+        if cfg is not None:
+            keep = [per_op_keep_sql(cfg.conditions, event_shaped="content" in cols)]
+        else:
+            keep = [condition_keep_sql(condition_sql or default_exclude_condition(),
+                                       "op" in cols and "content" in cols)]
+        if "old_content" in cols:
+            keep.append(noop_keep_sql())
+        return " AND ".join(k for k in keep if k)
+
+    if tables is None:
+        cfgs, keep = [table_cfg], keep_of(table_cfg)
     else:
-        keep = [condition_keep_sql(condition_sql or default_exclude_condition(),
-                                   "op" in cols and "content" in cols)]
-    if "old_content" in cols:
-        keep.append(noop_keep_sql())
-    keep = [k for k in keep if k]
-    df = events.filter(" AND ".join(keep)) if keep else events
+        cfgs = list(tables.values())
+        cases = " ".join(f"WHEN {literal(n)} THEN {keep_of(c) or 'true'}" for n, c in tables.items())
+        keep = f"CASE table_name {cases} ELSE true END" if cases else ""
+    df = events.filter(keep) if keep else events
     drop = {POISON_FLAG}
-    if envelope_sink is None and not _needs_old_image(table_cfg):
+    if envelope_sink is None and not any(map(_needs_old_image, cfgs)):
         drop.add("old_content")
     return select_sql(df, [*(ident(c) for c in cols if c not in drop),
                            f"{poison_sql()} AS {POISON_FLAG}"])
@@ -231,13 +249,74 @@ def _record_metrics(metrics, lineage, got, n_poison, stream_id, epoch_id, scope)
     lineage["metrics"] = got
 
 
+def stray_sql(tags) -> str:
+    """SQL text true for a row whose ``table_name`` tag is NULL or names
+    none of ``tags``. The NULL tag (a malformed tagged Kafka record
+    parses all-null) needs its own branch: NOT (NULL IN …) is NULL."""
+    return f"table_name IS NULL OR NOT {in_list('table_name', tags)}"
+
+
+def probe_tables(
+    df: DataFrame, tables: "dict[str | None, tuple[Any, Any]]"
+) -> tuple[dict[str | None, dict[str, Any]], int]:
+    """THE epoch probe, ONE job (``observe_noop``) however many tables
+    it serves. ``tables`` maps a ``table_name`` tag to ``(sink,
+    table_cfg)``; the tag None stands for every row of an untagged
+    frame. ``df`` is a ``flag_dispositions`` frame or the batch flow's
+    deduped rows. Per table, over its valid rows: the A1 counters
+    (``events``, ``n_insert``/``n_update``/``n_delete``, ``max_seq``)
+    and, for a keyed sink, the ``touched`` buckets of its keys as the
+    config projects them (a key column a config does not log for an op
+    is nulled); while ``df`` carries the poison flag, its poison count
+    ``n_poison_seen``; and ``started``/``probe_s``, the probe's start
+    and wall. Also returns the count of stray rows, whose tag is NULL
+    or names no table (0 on an untagged frame).
+
+    The observation sits at the top of the probe's plan, where it is
+    delivered even when the optimizer folds the relation below it
+    away. Never observe the counters on a sink's ``ready`` rows: their
+    only action is the sink write, which did not deliver observed
+    metrics inside a micro-batch — obs.get deadlocked the stream."""
+    cols = df.columns
+    flagged = POISON_FLAG in cols
+    need = {"seq", "op", POISON_FLAG}
+    aggs = {}
+    for i, (tag, (sink, cfg)) in enumerate(tables.items()):
+        mine = "true" if tag is None else f"table_name = {literal(tag)}"
+        ok = f"{mine} AND NOT {POISON_FLAG}" if flagged else mine
+        part = {"events": f"count(CASE WHEN {ok} THEN 1 END)",
+                "max_seq": f"max(CASE WHEN {ok} THEN seq END)", **{
+                    f"n_{name}": f"count(CASE WHEN {ok} AND op = '{op}' THEN 1 END)"
+                    for op, name in (("I", "insert"), ("U", "update"), ("D", "delete"))}}
+        if flagged:
+            part["n_poison_seen"] = f"count(CASE WHEN {mine} AND {POISON_FLAG} THEN 1 END)"
+        if isinstance(sink, LakeTable):
+            keys = cfg.projection(cols) if cfg is not None else {c: ident(c) for c in cols}
+            bucket = bucket_sql(sink.key_cols, sink.n_buckets, keys.__getitem__)
+            part["touched"] = f"collect_set(CASE WHEN {ok} THEN {bucket} END)"
+            need.update(sink.key_cols)
+        aggs[f"t{i}"] = "struct(" + ", ".join(f"{sql} AS {n}" for n, sql in part.items()) + ")"
+    if None not in tables:
+        aggs["strays"] = f"count(CASE WHEN {stray_sql(tables)} THEN 1 END)"
+        need.add("table_name")
+    started = time.monotonic()
+    got = observe_noop(select_sql(df, [ident(c) for c in cols if c in need]), **aggs)
+    wall = round(time.monotonic() - started, 4)
+    out = {}
+    for i, tag in enumerate(tables):
+        out[tag] = part = got[f"t{i}"].asDict()
+        if "touched" in part:
+            part["touched"] = sorted(part["touched"])
+        part.update(started=started, probe_s=wall)
+    return out, int(got.get("strays") or 0)
+
+
 def _apply_tail(
     sink: "LakeTable | Any",
     ready: DataFrame,
     poison: "Callable[[], DataFrame]",
-    probe_src: DataFrame,
+    probe: dict[str, Any],
     scope: str,
-    t0: float,
     epoch_id: int | None,
     stream_id: str,
     dead_letter: "DeadLetterTable | None",
@@ -245,14 +324,13 @@ def _apply_tail(
 ) -> dict[str, Any]:
     """The tail every flow shares; they differ only in the sink (a keyed
     ``LakeTable`` or an ``UnkeyedEventLog``), the ``ready`` rows they
-    write and the ``probe_src`` they probe (``poison`` builds the poison
-    slice, only when it is needed):
+    write and the ``probe`` (``probe_tables``) of the frame they sliced
+    them from (``poison`` builds the poison slice, only when it is
+    needed). The tail runs no probe of its own:
 
-    1. ONE probe job over ``probe_src``: the A1 counters, the touched
-       buckets of a keyed sink (``probe_buckets``) and, while
-       ``probe_src`` still carries the poison flag, the poison count
-       (else one ``isEmpty`` over ``poison`` decides, and only when
-       there is a dead-letter log);
+    1. the poison decision: the probe's poison count, or, over a frame
+       that no longer carries the flag, one ``isEmpty`` over ``poison``
+       (only when there is a dead-letter log);
     2. the dead-letter append, ONLY when there is poison, on a pool
        thread that inherits this thread's Spark local properties (so
        query.stop() cancels its jobs) and overlaps the sink's staging
@@ -266,28 +344,14 @@ def _apply_tail(
        ``ready`` plan runs once more, inside the snapshot write, or the
        log's ``append``; a replayed epoch is fenced there and returns
        the fence record;
-    4. the metrics row, its counters in ``scope``."""
-    keyed = isinstance(sink, LakeTable)
-    flagged = POISON_FLAG in probe_src.columns
-    ok = f"NOT {POISON_FLAG}" if flagged else "true"
-    counters = {"max_seq": f"max(CASE WHEN {ok} THEN seq END)", **{
-        f"n_{name}": f"count(CASE WHEN {ok} AND op = '{op}' THEN 1 END)"
-        for op, name in (("I", "insert"), ("U", "update"), ("D", "delete"))
-    }}
-    if flagged:
-        counters["n_poison_seen"] = f"count(CASE WHEN {POISON_FLAG} THEN 1 END)"
-    # Never observe the counters on `ready` itself: its only action is
-    # the sink write, which did not deliver observed metrics inside a
-    # micro-batch — obs.get deadlocked the stream.
-    _t = time.monotonic()
-    if keyed:
-        touched, got = probe_buckets(probe_src, sink.key_cols, sink.n_buckets, ok, **counters)
-    else:
-        got = observe_noop(probe_src, rows=f"count(CASE WHEN {ok} THEN 1 END)", **counters)
-    probe_wall = round(time.monotonic() - _t, 4)
-    got["events"] = got.pop("rows")
-    n_seen = got.pop("n_poison_seen", 0)
-    has_poison = dead_letter is not None and (n_seen > 0 if flagged else not poison().isEmpty())
+    4. the metrics row, its counters in ``scope``. ``merge_latency_s``
+       runs from the probe's start."""
+    got = dict(probe)
+    t0, probe_wall = got.pop("started"), got.pop("probe_s")
+    touched = got.pop("touched", None)
+    n_seen = got.pop("n_poison_seen", None)
+    has_poison = dead_letter is not None and (
+        n_seen > 0 if n_seen is not None else not poison().isEmpty())
 
     def append_timed() -> tuple[int, float]:
         _t = time.monotonic()
@@ -303,7 +367,7 @@ def _apply_tail(
         barrier = dl_future.result if dl_future is not None else None
         if not got["events"]:
             lineage: dict[str, Any] = {"skipped": True, "reason": "empty batch"}
-        elif keyed:
+        elif isinstance(sink, LakeTable):
             lineage = sink.merge(ready, stream_id=stream_id, epoch_id=epoch_id, probe=touched,
                                  probe_rows=got["events"], pre_commit=barrier)
         else:
@@ -316,7 +380,7 @@ def _apply_tail(
     # Phase timings ride the RETURNED lineage record; the copy frozen
     # into the table metadata is taken before the commit finishes.
     timings = lineage.setdefault("timings", {})
-    timings["probe_s"] = probe_wall  # the probe above, not merge's
+    timings["probe_s"] = probe_wall  # the epoch's probe, not merge's
     if dead_letter is not None:
         # the append's own wall; the sink's pre_commit_wait_s is the part
         # of it the staging write did not hide
@@ -335,6 +399,7 @@ def apply_batch_flagged(
     dead_letter: "DeadLetterTable | None" = None,
     metrics: "object | None" = None,
     table_cfg: "object | None" = None,
+    probe: "dict[str, Any] | None" = None,
 ) -> dict[str, Any]:
     """The streaming flow of every keyed table, over a pre-flagged
     (cached) micro-batch; filters already ran in flag_dispositions (with
@@ -342,21 +407,17 @@ def apply_batch_flagged(
     shape the valid slice, as in prepare_batch; poison rows are
     quarantined unprojected.
 
-    The shared tail (``_apply_tail``) probes the cached flagged frame,
-    so one job counts the valid events pre-LWW
-    (``valid_events_pre_dedup``) and the poison rows. The valid slice
-    goes to ``merge`` un-deduped: merge resolves last-writer-wins in the
-    same aggregate that joins it with the stored rows."""
-    t0 = time.monotonic()
-    ready = _slim(flagged, table_cfg, sha=True)
-    # the probe buckets the PROJECTED keys (a key column a config does
-    # not log for an op is nulled)
-    cols = flagged.columns
-    keys = table_cfg.projection(cols) if table_cfg is not None else {c: ident(c) for c in cols}
-    probe_src = select_sql(flagged, [POISON_FLAG, "seq", "op",
-                                     *(f"{keys[k]} AS {ident(k)}" for k in table.key_cols)])
-    return _apply_tail(table, ready, lambda: _poison_slice(flagged), probe_src,
-                        "valid_events_pre_dedup", t0, epoch_id, stream_id, dead_letter, metrics)
+    ``probe`` is this table's part of the epoch's ``probe_tables`` job;
+    without it the frame is probed here, in one job that counts the
+    valid events pre-LWW (``valid_events_pre_dedup``) and the poison
+    rows. The valid slice goes to ``merge`` un-deduped: merge resolves
+    last-writer-wins in the same aggregate that joins it with the
+    stored rows."""
+    if probe is None:
+        probe = probe_tables(flagged, {None: (table, table_cfg)})[0][None]
+    return _apply_tail(table, _slim(flagged, table_cfg, sha=True),
+                       lambda: _poison_slice(flagged), probe, "valid_events_pre_dedup",
+                       epoch_id, stream_id, dead_letter, metrics)
 
 
 def apply_batch(
@@ -373,23 +434,21 @@ def apply_batch(
     batch-replay flow (dead-letter readmission, direct backlog
     replays). prepare_batch dedups (LWW) first, which keeps a
     full-backlog replay's merge input at one row per key; the deduped
-    ``ready`` frame is persisted, so the keyed tail's probe job builds
-    it once and the snapshot write reads it back. The counters count
-    the post-LWW keys merged (``deduped_keys``); dead letters are
-    appended only when the batch holds poison, overlapped with the
-    snapshot write.
+    ``ready`` frame is persisted, so the probe job builds it once and
+    the snapshot write reads it back. The counters count the post-LWW
+    keys merged (``deduped_keys``); dead letters are appended only when
+    the batch holds poison, overlapped with the snapshot write.
 
     ``table_cfg`` compiles capture config (conditions / projection /
     expressions) into the batch plan — see prepare_batch. A config that
     adds expression columns triggers schema evolution on the lake table
     before the merge (ALTER-before-MERGE)."""
-    t0 = time.monotonic()
     ready, poison = prepare_batch(events, condition_sql=condition_sql, table_cfg=table_cfg)
     ready = ready.persist()
     try:
-        probe_src = select_sql(ready, ["seq", "op", *map(ident, table.key_cols)])
-        return _apply_tail(table, ready, lambda: poison, probe_src, "deduped_keys", t0,
-                            epoch_id, stream_id, dead_letter, metrics)
+        probe = probe_tables(ready, {None: (table, None)})[0][None]
+        return _apply_tail(table, ready, lambda: poison, probe, "deduped_keys",
+                           epoch_id, stream_id, dead_letter, metrics)
     finally:
         ready.unpersist()
 
@@ -402,6 +461,7 @@ def apply_batch_unkeyed(
     table_cfg: "object | None" = None,
     dead_letter: "DeadLetterTable | None" = None,
     metrics: "object | None" = None,
+    probe: "dict[str, Any] | None" = None,
 ) -> dict[str, Any]:
     """S5 unkeyed path (key_handling='N') over a ``flag_dispositions``
     frame (built with the same ``table_cfg``): validated, projected
@@ -409,8 +469,10 @@ def apply_batch_unkeyed(
     exactly the reference's keyless produce with relaxed ordering
     (transfer_thread.rb:331-347). ``log`` is a lake.append_log.
     UnkeyedEventLog; the epoch fence lives in its atomic commit. It ends
-    in the shared tail (``_apply_tail``), as the keyed flows do."""
-    t0 = time.monotonic()
+    in the shared tail (``_apply_tail``), as the keyed flows do, with
+    ``probe`` as in ``apply_batch_flagged``."""
+    if probe is None:
+        probe = probe_tables(flagged, {None: (log, table_cfg)})[0][None]
     valid = flagged.filter(f"NOT {POISON_FLAG}")
     if table_cfg is not None:
         valid = table_cfg.apply_projection(valid)
@@ -420,9 +482,8 @@ def apply_batch_unkeyed(
         # NULL for mode 'N' (consumers must not assume per-key order)
         cols["msg_key"] = table_cfg.key_sql()
     valid = select_sql(valid, [f"{sql} AS {ident(n)}" for n, sql in cols.items()])
-    probe_src = select_sql(flagged, [POISON_FLAG, "seq", "op"])
-    return _apply_tail(log, valid, lambda: _poison_slice(flagged), probe_src,
-                       "valid_events_pre_dedup", t0, epoch_id, stream_id, dead_letter, metrics)
+    return _apply_tail(log, valid, lambda: _poison_slice(flagged), probe,
+                       "valid_events_pre_dedup", epoch_id, stream_id, dead_letter, metrics)
 
 
 def envelope_timestamp(

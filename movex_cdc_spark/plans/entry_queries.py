@@ -3050,7 +3050,7 @@ def cdc_kafka_redelivery_eos(spark, sf_dir):
 
       producer — the REAL ``KafkaEnvelopeWriter.kafka_frames`` wire
         bytes (byte-identical to the oracle-gated lake sink by shared
-        ``build_envelopes``), three event-time-contiguous epochs;
+        ``EnvelopeFormat.build``), three event-time-contiguous epochs;
       hostile hop — ``adversarial_deliveries``: every 5th record
         duplicated in-epoch, every previous epoch's final-hour tail
         (its boundary record included) REPLAYED into the next delivery,

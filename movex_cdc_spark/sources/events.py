@@ -141,13 +141,14 @@ def parse_payload_events(df: DataFrame) -> DataFrame:
     field-pruning advantage never applies). All payload fields are
     strings, so the extraction is type-exact. Malformed payloads yield
     null fields -> caught by the poison split downstream, mirroring the
-    reference's parse-validate-or-dead-letter flow."""
+    reference's parse-validate-or-dead-letter flow. A multiplexed
+    queue's ``table_name`` tag is kept, so one parse serves every table."""
     from movex_cdc_spark.session import select_sql
     from movex_cdc_spark.sqltext import ident, literal
 
     fields = [f.name for f in PAYLOAD_STRUCT.fields]
     return select_sql(df, [
-        "seq", "op", "ts", "txid",
+        "seq", "op", "ts", "txid", *(["table_name"] if "table_name" in df.columns else []),
         f"json_tuple(payload, {', '.join(map(literal, fields))}) AS ({', '.join(map(ident, fields))})",
     ])
 

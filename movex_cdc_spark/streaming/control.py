@@ -158,15 +158,15 @@ class PipelineSupervisor:
             processing_time=self.processing_time,
         )
 
-    def _stop(self) -> None:
-        if self.query is not None and self.query.isActive:
-            self.query.stop()
-            self.query.awaitTermination()
+    def stop(self) -> None:
+        """Stop the query (terminate, pause, restart or the end of
+        ``run``) through the pipeline's ``stop``, which flushes its
+        buffered metrics rows."""
+        self.pipeline.stop(self.query)
         self.query = None
 
     def _apply_worker_threads(self, n: int) -> None:
-        if hasattr(self.pipeline, "dispatch_parallelism"):
-            self.pipeline.dispatch_parallelism = n
+        self.pipeline.dispatch_parallelism = n
         # the shuffle width is what extra workers buy in Spark's model;
         # session-conf changes apply to jobs planned AFTER the set, i.e.
         # the next micro-batch
@@ -182,13 +182,13 @@ class PipelineSupervisor:
         applied: list[str] = []
         if rev != self.applied_revision:
             if doc.get("terminate"):
-                self._stop()
+                self.stop()
                 self.terminated = True
                 applied.append("terminate")
             wtc = doc.get("worker_threads_count")
             if not self.terminated and wtc is not None:
                 if wtc == 0 and not self.paused:
-                    self._stop()
+                    self.stop()
                     self.paused = True
                     applied.append("pause (worker_threads_count=0)")
                 elif wtc > 0:
@@ -202,7 +202,7 @@ class PipelineSupervisor:
                 if mft != self.pipeline.max_files_per_trigger:
                     self.pipeline.max_files_per_trigger = mft
                     applied.append(f"max_files_per_trigger={mft} (restart)")
-                    self._stop()  # restart below picks up the new option
+                    self.stop()  # restart below picks up the new option
             if doc.get("log_level"):
                 self.pipeline.spark.sparkContext.setLogLevel(doc["log_level"])
                 applied.append(f"log_level={doc['log_level']}")
@@ -243,5 +243,5 @@ class PipelineSupervisor:
                     time.sleep(poll_s)
             else:
                 time.sleep(poll_s)
-        self._stop()
+        self.stop()
         return self.actions

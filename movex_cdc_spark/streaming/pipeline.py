@@ -22,7 +22,6 @@ from typing import Any
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from movex_cdc_spark.lake.table import LakeTable
 # apply_batch is re-exported next to apply_batch_flagged: perfbench's
@@ -33,10 +32,12 @@ from movex_cdc_spark.operators.apply import (  # noqa: F401
     apply_batch_flagged,
     apply_batch_unkeyed,
     flag_dispositions,
+    probe_tables,
     split_flagged,
+    stray_sql,
 )
 from movex_cdc_spark.session import inheriting_local_properties, observe_noop, select_sql
-from movex_cdc_spark.sqltext import in_list, literal
+from movex_cdc_spark.sqltext import ident, in_list, literal
 from movex_cdc_spark.sources.events import (
     MULTIPLEX_EVENTS_SCHEMA,
     PAYLOAD_EVENTS_SCHEMA,
@@ -56,10 +57,15 @@ EPOCH_HISTORY = 1024
 
 class _StreamShell:
     """What both streaming pipelines share: the checkpointed
-    ``foreachBatch`` query, the quarantine and metrics tables, the
-    bounded lineage window, and the ONE per-table epoch apply
-    (``_apply_table``). Subclasses provide ``_apply``, the foreachBatch
-    function."""
+    ``foreachBatch`` query and its ``stop``, the quarantine and metrics
+    tables, the bounded lineage window, and the ONE epoch (``_epoch``:
+    one flag pass, one cache and one probe per micro-batch, then
+    ``_apply_table`` per table). Subclasses provide ``_apply``, the
+    foreachBatch function; the one-table stream is the epoch's
+    one-table, untagged case."""
+
+    #: concurrent table applies per epoch (None: one per table, ≤ 8)
+    dispatch_parallelism: int | None = None
 
     def __init__(
         self,
@@ -118,64 +124,101 @@ class _StreamShell:
     def _apply_table(
         self,
         sink,
-        events: DataFrame,
+        flagged: DataFrame,
+        probe: dict[str, Any],
         epoch_id: int,
         stream_id: str,
         cfg=None,
-        condition_sql: str | None = None,
         envelope_sink=None,
     ) -> dict[str, Any]:
-        """One table's epoch: flag → persist → (envelope emit from the
-        valid slice, its rejects quarantined at the envelope log's
-        barrier) → ``apply_batch_flagged`` into a LakeTable, or
-        ``apply_batch_unkeyed`` into an append log for
-        key_handling='N' → unpersist.
-
-        The disposition chain (condition filter or the config's per-op
-        conditions, no-op suppression, poison FLAG) runs inside the
-        cache-building projection, so the JSON parse and the cache
-        write happen exactly once; the cache keeps ``old_content`` only
-        for a config expression or the envelope. MEMORY_AND_DISK: an
-        oversized batch spills instead of GC-thrashing (measured +15% on
-        the 4×1M-epoch bench).
+        """One table's part of an epoch, over its slice of the epoch's
+        flagged cache and its part of the epoch's probe: (envelope emit
+        from the valid slice, its rejects quarantined at the envelope
+        log's barrier) → ``apply_batch_flagged`` into a LakeTable, or
+        ``apply_batch_unkeyed`` into an append log for key_handling='N'.
 
         The apply functions are looked up in this module's globals at
         call time, so a tracer that patches ``pipeline.apply_batch_*``
         sees every call."""
-        unkeyed = cfg is not None and cfg.key_handling == "N"
-        if unkeyed and sink is None:
-            raise ValueError("key_handling='N' requires an unkeyed_log sink")
-        flagged = flag_dispositions(events, condition_sql, cfg, envelope_sink).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        if envelope_sink is not None:
+            # every validated event, projected and PRE-LWW, as an
+            # envelope (the reference producer)
+            valid, _poison = split_flagged(flagged)
+            if cfg is not None:
+                valid = cfg.apply_projection(valid)
+            envelope_sink.emit(valid, stream_id=stream_id, epoch_id=epoch_id,
+                               dead_letter=self._side_dead_letter("_envelope"))
+        if cfg is not None and cfg.key_handling == "N":
+            return apply_batch_unkeyed(sink, flagged, epoch_id=epoch_id, stream_id=stream_id,
+                                       table_cfg=cfg, dead_letter=self.dead_letter,
+                                       metrics=self.metrics, probe=probe)
+        return apply_batch_flagged(sink, flagged, epoch_id=epoch_id, stream_id=stream_id,
+                                   dead_letter=self.dead_letter, metrics=self.metrics,
+                                   table_cfg=cfg, probe=probe)
+
+    def _epoch(
+        self,
+        events: DataFrame,
+        epoch_id: int,
+        tables: dict[str | None, tuple[Any, Any, str]],
+        condition_sql: str | None = None,
+        envelope_sink=None,
+        raw: DataFrame | None = None,
+    ) -> tuple[dict[str | None, dict[str, Any]], int]:
+        """THE epoch of every caller: the one-table stream, the mux and
+        ``reprocess_strays``. ``tables`` maps a ``table_name`` tag to
+        ``(sink, cfg, stream_id)``; the tag None is the one table of an
+        untagged frame. The parsed ``events`` are flagged for every table
+        in ONE projection, persisted once (MEMORY_AND_DISK: an oversized
+        batch spills instead of GC-thrashing, +15% on the 4×1M-epoch
+        bench) and probed by ONE job (``probe_tables``), which builds the
+        cache. Strays are then quarantined from the raw tagged batch
+        ``raw``, before any sink commits. Last, each table the probe saw
+        rows for (the untagged one always) applies its slice of the cache
+        with its part of the probe, concurrently when there are several.
+        Returns ({tag: lineage}, the stray count)."""
+        cfgs = {tag: cfg for tag, (_s, cfg, _i) in tables.items()}
+        if None in cfgs:
+            flagged = flag_dispositions(events, condition_sql, cfgs[None], envelope_sink)
+        else:
+            flagged = flag_dispositions(events, tables=cfgs)
+        flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            if envelope_sink is not None:
-                # every validated event, projected and PRE-LWW, as an
-                # envelope (the reference producer)
-                valid, _poison = split_flagged(flagged)
-                if cfg is not None:
-                    valid = cfg.apply_projection(valid)
-                envelope_sink.emit(valid, stream_id=stream_id, epoch_id=epoch_id,
-                                   dead_letter=self._side_dead_letter("_envelope"))
-            if unkeyed:
-                return apply_batch_unkeyed(
-                    sink,
-                    flagged,
-                    epoch_id=epoch_id,
-                    stream_id=stream_id,
-                    table_cfg=cfg,
-                    dead_letter=self.dead_letter,
-                    metrics=self.metrics,
-                )
-            return apply_batch_flagged(
-                sink,
-                flagged,
-                epoch_id=epoch_id,
-                stream_id=stream_id,
-                dead_letter=self.dead_letter,
-                metrics=self.metrics,
-                table_cfg=cfg,
-            )
+            probes, n_strays = probe_tables(
+                flagged, {tag: (sink, cfg) for tag, (sink, cfg, _i) in tables.items()})
+            if n_strays and raw is not None and self.dead_letter is not None:
+                # without a quarantine dir the strays are dropped, and
+                # n_strays still counts them
+                strays = raw.filter(stray_sql(tables))
+                n_strays = self._side_dead_letter("_dispatch").append(
+                    select_sql(strays, ["*", "CASE WHEN table_name IS NULL THEN 'missing table tag'"
+                                             " ELSE 'unconfigured table' END AS error_msg"]),
+                    stream_id=f"{self.stream_id}-dispatch", epoch_id=epoch_id)
+            todo = [tag for tag, p in probes.items()
+                    if tag is None or p["events"] or p["n_poison_seen"]]
+            rest = [ident(c) for c in flagged.columns if c != "table_name"]
+
+            def apply_one(tag) -> dict[str, Any]:
+                sink, cfg, stream_id = tables[tag]
+                part = flagged if tag is None else select_sql(
+                    flagged.filter(f"table_name = {literal(tag)}"), rest)
+                return self._apply_table(sink, part, probes[tag], epoch_id, stream_id, cfg,
+                                         envelope_sink)
+
+            # one table applies on this thread: a pool thread would open
+            # its own py4j connection for it
+            if len(todo) <= 1:
+                return dict(zip(todo, map(apply_one, todo))), n_strays
+            workers = self.dispatch_parallelism or min(len(todo), 8)
+            # table applies keep this batch's job group, so query.stop()
+            # cancels them
+            run = inheriting_local_properties(self.spark, apply_one)
+            with ThreadPoolExecutor(max_workers=workers) as pool:
+                futures = [pool.submit(run, tag) for tag in todo]
+            # deterministic order in the lineage record; the first
+            # failure propagates and fails the epoch (replay re-runs every
+            # table; applied ones fence to no-ops)
+            return {tag: f.result() for tag, f in zip(todo, futures)}, n_strays
         finally:
             flagged.unpersist()
 
@@ -206,13 +249,21 @@ class _StreamShell:
         maxFilesPerTrigger-sized micro-batches)."""
         q = self.start(available_now=True)
         q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
-        if self.metrics is not None:
-            self.metrics.flush()  # drain the buffered lineage window
+        self.stop(q)
         if q.exception():
             raise q.exception()
         return list(self.epochs)
+
+    def stop(self, query) -> None:
+        """Stop ``query`` (when still active) and flush the buffered
+        metrics rows. Every stop path ends here — a drain, a supervisor's
+        terminate, pause or restart, the ``--trigger`` loop's exit — so
+        a clean stop loses no epoch's row."""
+        if query is not None and query.isActive:
+            query.stop()
+            query.awaitTermination()
+        if self.metrics is not None:
+            self.metrics.flush()
 
 
 class CdcStreamPipeline(_StreamShell):
@@ -294,17 +345,12 @@ class CdcStreamPipeline(_StreamShell):
             batch_df = parse_payload_events(batch_df)
         cfg = self._table_cfg()
         unkeyed = cfg is not None and cfg.key_handling == "N"
-        self.epochs.append(
-            self._apply_table(
-                self.unkeyed_log if unkeyed else self.table,
-                batch_df,
-                epoch_id,
-                self.stream_id,
-                cfg,
-                condition_sql=self.condition_sql,
-                envelope_sink=self.envelope_sink,
-            )
-        )
+        sink = self.unkeyed_log if unkeyed else self.table
+        if unkeyed and sink is None:
+            raise ValueError("key_handling='N' requires an unkeyed_log sink")
+        per_table, _ = self._epoch(batch_df, epoch_id, {None: (sink, cfg, self.stream_id)},
+                                   self.condition_sql, self.envelope_sink)
+        self.epochs.append(per_table[None])
 
 
 class MultiplexedCdcPipeline(_StreamShell):
@@ -317,11 +363,12 @@ class MultiplexedCdcPipeline(_StreamShell):
     dispatches inside the batch.
 
     Source shape: MULTIPLEX_EVENTS_SCHEMA — the payload Event_Logs row
-    plus a ``table_name`` tag. Dispatch is a partition-pruning filter
-    per configured table over ONE persisted batch (the parse runs only
-    on that table's slice), then the table's own config chain
-    (conditions / column flags / expressions / key handling) and its
-    own sink:
+    plus a ``table_name`` tag. Each micro-batch is parsed once, flagged
+    for every configured table in one projection (each row by its own
+    table's config chain: conditions, no-op check, poison flag),
+    persisted once and probed once (``_StreamShell._epoch``). Each
+    table then writes its slice of that cache, shaped by its column
+    flags, expressions and key handling, into its own sink:
 
       key_handling != 'N'  → apply_batch_flagged MERGE into its LakeTable
       key_handling == 'N'  → apply_batch_unkeyed append into its log
@@ -335,9 +382,11 @@ class MultiplexedCdcPipeline(_StreamShell):
     (repo, path) key — the reference analog is N configured tables all
     fed by the same trigger machinery; configs may differ arbitrarily.
 
-    Rows tagged with an UNCONFIGURED table go to the dead-letter
-    quarantine (the reference logs-and-skips events whose table config
-    vanished mid-flight) instead of poisoning the stream.
+    Rows tagged with an UNCONFIGURED table, or with none, go to the
+    dispatch quarantine (the reference logs-and-skips events whose
+    table config vanished mid-flight) instead of poisoning the stream:
+    read again from the raw micro-batch, only when the probe counted
+    some, and committed before any sink.
     """
 
     def __init__(
@@ -355,14 +404,11 @@ class MultiplexedCdcPipeline(_StreamShell):
         fs=None,
         source_df: DataFrame | None = None,
     ):
-        missing = [n for n in config.tables if n not in sinks]
-        if missing:
-            raise ValueError(f"no sink for configured tables: {missing}")
         super().__init__(spark, events_dir, checkpoint_dir, stream_id, dead_letter_dir,
                          metrics_dir, max_files_per_trigger, fs, source_df,
                          MULTIPLEX_EVENTS_SCHEMA)
-        self.config = config
         self.sinks = sinks
+        self.set_config(config)
         # concurrent per-table dispatch: each table's apply is a chain
         # of INDEPENDENT Spark jobs plus driver-side metadata IO
         # (listing, commit, fence JSON) against ITS OWN sink; running
@@ -407,121 +453,40 @@ class MultiplexedCdcPipeline(_StreamShell):
         df = dispatch_dl.read(m) if m is not None else None
         if df is None:
             return {"reprocessed": 0, "remaining": 0, "tables": []}
-        # bounded probe: distinct tags <= configured tables + strays
-        present = {
-            r["table_name"] for r in df.select("table_name").distinct().collect()
-        }
-        healable = sorted(t for t in present if t in self.config.tables and t is not None)
-        # one aggregate for all decision counts, taken BEFORE the
-        # rewrite below invalidates this read's lineage (same
-        # count-before-swap rule as RetryWorker.readmit)
-        heal_pred = (
-            F.col("table_name").isin(healable) if healable else F.lit(False)
-        )
-        counts = df.agg(
-            F.sum(F.when(heal_pred, 1).otherwise(0)).alias("heal"),
-            F.sum(F.when(~F.coalesce(heal_pred, F.lit(False)), 1).otherwise(0)).alias("stay"),
-            F.min(F.when(heal_pred, F.col("seq"))).alias("lo"),
-            F.max(F.when(heal_pred, F.col("seq"))).alias("hi"),
-        ).first()
-        n_reprocessed = int(counts["heal"] or 0)
-        n_remaining = int(counts["stay"] or 0)
-        for name in healable:
-            sink, cfg = self.sinks[name], self.config.tables[name]
-            events = parse_payload_events(df.filter(f"table_name = {literal(name)}"))
-            held = sink.read() if cfg.key_handling == "N" else None
-            if held is not None and "seq" in held.columns:
-                # only the sink rows in the healed seq range are read
-                held = held.filter(f"seq BETWEEN {literal(counts['lo'])} AND {literal(counts['hi'])}")
-                events = _missing(events, held, ("seq",))
-            self._apply_table(sink, events, m["version"],
-                              f"{self.stream_id}:{name}:reprocess", cfg)
-        # NULL-tag rows must survive the rewrite: NULL.isin(...) is
-        # NULL, and ~NULL filters the row out — an untagged row would
-        # silently vanish from quarantine
-        remaining = (
-            df.filter(
-                F.col("table_name").isNull()
-                | ~F.col("table_name").isin(healable)
-            )
-            if healable
-            else df
-        )
-        dispatch_dl.replace(remaining, m)
-        return {
-            "reprocessed": n_reprocessed,
-            "remaining": n_remaining,
-            "tables": healable,
-        }
+        # ONE job for every decision, taken BEFORE the rewrite below
+        # invalidates this read's lineage (same count-before-swap rule as
+        # RetryWorker.readmit); distinct tags <= configured tables
+        heal = in_list("table_name", self.config.tables)
+        got = observe_noop(select_sql(df, ["table_name", "seq"]), rows="count(1)",
+                           tags=f"collect_set(CASE WHEN {heal} THEN table_name END)",
+                           heal=f"count(CASE WHEN {heal} THEN 1 END)",
+                           lo=f"min(CASE WHEN {heal} THEN seq END)",
+                           hi=f"max(CASE WHEN {heal} THEN seq END)")
+        healable = sorted(got["tags"])
+        if healable:
+            todo = df.filter(in_list("table_name", healable))
+            for name in healable:
+                sink = self.sinks[name]
+                held = sink.read() if self.config.tables[name].key_handling == "N" else None
+                if held is not None and "seq" in held.columns:
+                    # only the sink rows in the healed seq range are read
+                    held = held.filter(f"seq BETWEEN {literal(got['lo'])} AND {literal(got['hi'])}")
+                    todo = _missing(todo, select_sql(held, ["seq", f"{literal(name)} AS table_name"]),
+                                    ("seq", "table_name"))
+            self._epoch(parse_payload_events(todo), m["version"], {
+                n: (self.sinks[n], self.config.tables[n], f"{self.stream_id}:{n}:reprocess")
+                for n in healable})
+        dispatch_dl.replace(df.filter(stray_sql(healable)), m)
+        return {"reprocessed": got["heal"], "remaining": got["rows"] - got["heal"],
+                "tables": healable}
 
     def _apply(self, batch_df, epoch_id: int) -> None:
-        batch = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            # bounded probe: distinct tags ≤ configured tables + strays,
-            # in ONE job, which also builds the cache the dispatch slices
-            got = observe_noop(
-                select_sql(batch, ["table_name"]),
-                tags="collect_set(table_name)",
-                null_tag="max(table_name IS NULL)",
-            )
-            present = set(got["tags"])
-            # a NULL tag is reachable from the tagged Kafka source (a
-            # malformed wire record parses all-null): it can't be in
-            # sorted() (None < str raises) and isin([None]) is NULL —
-            # matching nothing — so it gets its own predicate branch.
-            has_null_tag = bool(got["null_tag"])
-            strays = sorted(present - set(self.config.tables))
-            stray_pred = in_list("table_name", strays)
-            if has_null_tag:
-                stray_pred = f"({stray_pred} OR table_name IS NULL)"
-            n_strays = 0
-            if strays or has_null_tag:
-                dispatch_dl = self._side_dead_letter("_dispatch")
-                if dispatch_dl is not None:
-                    n_strays = dispatch_dl.append(
-                        batch.filter(stray_pred).withColumn(
-                            "error_msg",
-                            F.when(
-                                F.col("table_name").isNull(),
-                                F.lit("missing table tag"),
-                            ).otherwise(F.lit("unconfigured table")),
-                        ),
-                        stream_id=f"{self.stream_id}-dispatch",
-                        epoch_id=epoch_id,
-                    )
-                else:
-                    # no quarantine dir: the rows are still DROPPED, and
-                    # the epoch lineage must say so — a silent
-                    # n_strays=0 would hide the data loss
-                    n_strays = batch.filter(stray_pred).count()
-
-            def _dispatch_one(name: str, cfg) -> dict[str, Any]:
-                # per-table stream id: the shared dead-letter log and
-                # metrics table fence on (stream_id, epoch_id), so N
-                # tables appending under ONE id would let the first
-                # table with poison fence out every other table's
-                # poison in the same epoch
-                return self._apply_table(
-                    self.sinks[name],
-                    parse_payload_events(batch.filter(f"table_name = {literal(name)}")),
-                    epoch_id,
-                    f"{self.stream_id}:{name}",
-                    cfg,
-                )
-
-            todo = [(n, c) for n, c in self.config.tables.items() if n in present]
-            workers = self.dispatch_parallelism or min(len(todo), 8) or 1
-            # table applies keep this batch's job group, so query.stop()
-            # cancels them
-            dispatch = inheriting_local_properties(self.spark, _dispatch_one)
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                futures = {n: pool.submit(dispatch, n, c) for n, c in todo}
-            # deterministic config order in the lineage record; the first
-            # failure propagates and fails the epoch (replay re-runs every
-            # table; applied ones fence to no-ops)
-            per_table = {n: futures[n].result() for n, _c in todo}
-            self.epochs.append(
-                {"epoch_id": epoch_id, "tables": per_table, "n_strays": n_strays}
-            )
-        finally:
-            batch.unpersist()
+        # per-table stream id: the shared dead-letter log and metrics
+        # table fence on (stream_id, epoch_id), so N tables appending
+        # under ONE id would let the first table with poison fence out
+        # every other table's poison in the same epoch
+        tables = {n: (self.sinks[n], c, f"{self.stream_id}:{n}")
+                  for n, c in self.config.tables.items()}
+        per_table, n_strays = self._epoch(parse_payload_events(batch_df), epoch_id, tables,
+                                          raw=batch_df)
+        self.epochs.append({"epoch_id": epoch_id, "tables": per_table, "n_strays": n_strays})

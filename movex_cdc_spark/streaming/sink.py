@@ -27,6 +27,7 @@ O(keys × epochs), not O(events).
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -66,64 +67,73 @@ _TS_PATTERNS = {
 }
 
 
-def build_envelopes(
-    batch: DataFrame,
-    *,
-    schema_name: str,
-    table_name: str,
-    max_bytes: int,
-    cloudevents: bool,
-    legacy_ts_format: str | None,
-    tz_offset: str,
-):
-    """Shared envelope construction + validity predicates for BOTH
-    product boundaries (lake append log and Kafka writer) — the two
-    must stay byte-identical, which is why this is one function.
+@dataclass(frozen=True)
+class EnvelopeFormat:
+    """The envelope format both product boundaries (lake append log and
+    Kafka writer) share, validated once here: schema and table names,
+    the size cap, CloudEvents headers, the legacy timestamp format
+    (``envelope_timestamp``) and the timestamp's zone offset."""
 
-    Returns ``(env, msg, ok, error_col)``: the enveloped frame, the
-    serialized JSON message column, the row-validity predicate, and the
-    per-row rejection reason (valid only under ``~ok``). All predicates
-    are row-local codegen — no shuffle, no Python."""
-    for opt, typ in (("ts", "timestamp"), ("txid", "long"), ("old_content", "string")):
-        if opt not in batch.columns:
-            batch = batch.withColumn(opt, F.lit(None).cast(typ))
-    env = with_envelope(
-        batch,
-        schema_name=schema_name,
-        table_name=table_name,
-        cloudevents=cloudevents,
-        legacy_ts_format=legacy_ts_format,
-        tz_offset=tz_offset,
-    )
-    cols = ENVELOPE_COLS + (
-        ["ce_id", "ce_source", "ce_specversion", "ce_type", "ce_time"]
-        if cloudevents
-        else []
-    )
-    env = env.select(*cols)
-    msg = F.to_json(F.struct(*[F.col(c) for c in ENVELOPE_COLS]))
-    size_ok = F.octet_length(msg) <= max_bytes
-    # payload validity: the payload strings must parse back as JSON
-    # objects (get_json_object -> null on malformed input)
-    json_ok = F.get_json_object(F.col("new_payload"), "$").isNotNull() | (
-        F.col("operation") == "DELETE"
-    )
-    key_ok = F.col("msg_key").isNotNull()
-    # format-per-mode timestamp validation (KafkaMock analog). A NULL
-    # timestamp is allowed: minimal sources carry no capture ts — and
-    # must stay three-valued-logic-safe: a bare regexp on NULL yields
-    # NULL, which silently drops the row from BOTH slices.
-    ts_ok = F.col("timestamp").isNull() | F.col("timestamp").rlike(
-        _TS_PATTERNS[legacy_ts_format]
-    )
-    ok = size_ok & json_ok & key_ok & ts_ok
-    error_col = (
-        F.when(~size_ok, F.lit("message exceeds size cap"))
-        .when(~json_ok, F.lit("invalid payload json"))
-        .when(~key_ok, F.lit("null message key"))
-        .otherwise(F.lit("malformed envelope timestamp"))
-    )
-    return env, msg, ok, error_col
+    schema_name: str
+    table_name: str
+    max_bytes: int
+    cloudevents: bool
+    legacy_ts_format: str | None
+    tz_offset: str
+
+    def __post_init__(self):
+        if self.legacy_ts_format not in _TS_PATTERNS:
+            raise ValueError(f"Unknown legacy timestamp format {self.legacy_ts_format!r}")
+
+    def build(self, batch: DataFrame):
+        """Envelope construction + validity predicates for BOTH product
+        boundaries — the two must stay byte-identical, which is why
+        this is one method.
+
+        Returns ``(env, msg, ok, error_col)``: the enveloped frame, the
+        serialized JSON message column, the row-validity predicate, and
+        the per-row rejection reason (valid only under ``~ok``). All
+        predicates are row-local codegen — no shuffle, no Python."""
+        for opt, typ in (("ts", "timestamp"), ("txid", "long"), ("old_content", "string")):
+            if opt not in batch.columns:
+                batch = batch.withColumn(opt, F.lit(None).cast(typ))
+        env = with_envelope(
+            batch,
+            schema_name=self.schema_name,
+            table_name=self.table_name,
+            cloudevents=self.cloudevents,
+            legacy_ts_format=self.legacy_ts_format,
+            tz_offset=self.tz_offset,
+        )
+        cols = ENVELOPE_COLS + (
+            ["ce_id", "ce_source", "ce_specversion", "ce_type", "ce_time"]
+            if self.cloudevents
+            else []
+        )
+        env = env.select(*cols)
+        msg = F.to_json(F.struct(*[F.col(c) for c in ENVELOPE_COLS]))
+        size_ok = F.octet_length(msg) <= self.max_bytes
+        # payload validity: the payload strings must parse back as JSON
+        # objects (get_json_object -> null on malformed input)
+        json_ok = F.get_json_object(F.col("new_payload"), "$").isNotNull() | (
+            F.col("operation") == "DELETE"
+        )
+        key_ok = F.col("msg_key").isNotNull()
+        # format-per-mode timestamp validation (KafkaMock analog). A NULL
+        # timestamp is allowed: minimal sources carry no capture ts — and
+        # must stay three-valued-logic-safe: a bare regexp on NULL yields
+        # NULL, which silently drops the row from BOTH slices.
+        ts_ok = F.col("timestamp").isNull() | F.col("timestamp").rlike(
+            _TS_PATTERNS[self.legacy_ts_format]
+        )
+        ok = size_ok & json_ok & key_ok & ts_ok
+        error_col = (
+            F.when(~size_ok, F.lit("message exceeds size cap"))
+            .when(~json_ok, F.lit("invalid payload json"))
+            .when(~key_ok, F.lit("null message key"))
+            .otherwise(F.lit("malformed envelope timestamp"))
+        )
+        return env, msg, ok, error_col
 
 
 class EnvelopeSink:
@@ -139,15 +149,9 @@ class EnvelopeSink:
         tz_offset: str = "+00:00",
         fs=None,
     ):
-        if legacy_ts_format not in _TS_PATTERNS:
-            raise ValueError(f"Unknown legacy timestamp format {legacy_ts_format!r}")
         self.spark = spark
-        self.schema_name = schema_name
-        self.table_name = table_name
-        self.max_bytes = max_bytes
-        self.cloudevents = cloudevents
-        self.legacy_ts_format = legacy_ts_format
-        self.tz_offset = tz_offset
+        self.format = EnvelopeFormat(schema_name, table_name, max_bytes, cloudevents,
+                                     legacy_ts_format, tz_offset)
         self.log = UnkeyedEventLog.open(spark, path, fs=fs)
 
     # ------------------------------------------------------------ emit
@@ -166,15 +170,7 @@ class EnvelopeSink:
         rejected-row count. Rejected rows (oversized / invalid) go to
         ``dead_letter`` (stream ``{stream_id}-sink``) at the log's
         barrier, before the envelopes commit; without one they drop."""
-        env, msg, ok, error_col = build_envelopes(
-            batch,
-            schema_name=self.schema_name,
-            table_name=self.table_name,
-            max_bytes=self.max_bytes,
-            cloudevents=self.cloudevents,
-            legacy_ts_format=self.legacy_ts_format,
-            tz_offset=self.tz_offset,
-        )
+        env, msg, ok, error_col = self.format.build(batch)
         # the reject count rides the append scan as an Observation (the
         # observe sits UPSTREAM of the validity filter, so the one write
         # job counts the rows it drops) — no second action per epoch
@@ -256,7 +252,7 @@ class KafkaEnvelopeWriter:
     the reference's Kafka producer (kafka_java.rb:179-220), emitting
     the SAME envelope bytes ``EnvelopeSink`` appends to the lake. The
     lake sink stays the default and the test double (the KafkaMock
-    role, kafka_mock.rb:37-141) — both go through ``build_envelopes``,
+    role, kafka_mock.rb:37-141) — both go through ``EnvelopeFormat.build``,
     so the wire bytes are identical by construction and asserted
     byte-identical by pytest.
 
@@ -313,17 +309,11 @@ class KafkaEnvelopeWriter:
         n_producer_tasks: int | None = None,
         options: dict[str, str] | None = None,
     ):
-        if legacy_ts_format not in _TS_PATTERNS:
-            raise ValueError(f"Unknown legacy timestamp format {legacy_ts_format!r}")
         self.spark = spark
         self.bootstrap_servers = bootstrap_servers
         self.topic = topic
-        self.schema_name = schema_name
-        self.table_name = table_name
-        self.max_bytes = max_bytes
-        self.cloudevents = cloudevents
-        self.legacy_ts_format = legacy_ts_format
-        self.tz_offset = tz_offset
+        self.format = EnvelopeFormat(schema_name, table_name, max_bytes, cloudevents,
+                                     legacy_ts_format, tz_offset)
         self.n_producer_tasks = n_producer_tasks
         self.options = {**self.PRODUCER_DEFAULTS, **(options or {})}
 
@@ -333,15 +323,7 @@ class KafkaEnvelopeWriter:
         the public Kafka sink consumes, and the invalid rows with their
         rejection reason for dead-lettering. Same validation, same
         envelope bytes as EnvelopeSink.emit — one code path."""
-        env, msg, ok, error_col = build_envelopes(
-            batch,
-            schema_name=self.schema_name,
-            table_name=self.table_name,
-            max_bytes=self.max_bytes,
-            cloudevents=self.cloudevents,
-            legacy_ts_format=self.legacy_ts_format,
-            tz_offset=self.tz_offset,
-        )
+        env, msg, ok, error_col = self.format.build(batch)
         good = env.filter(ok)
         # one producer task per key range, ascending ids inside it (the
         # per-key ordering contract; see class docstring)
@@ -354,7 +336,7 @@ class KafkaEnvelopeWriter:
             F.col("msg_key").cast("binary").alias("key"),
             msg.cast("binary").alias("value"),
         ]
-        if self.cloudevents:
+        if self.format.cloudevents:
             # absent optional attributes (e.g. ce_time when the source
             # carries no capture ts) are OMITTED, not null-valued — the
             # CE binding has no null headers

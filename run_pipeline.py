@@ -231,14 +231,17 @@ def main(argv: list[str] | None = None) -> int:
             sup.poll_once()
             hb.beat()
             time.sleep(5)
-        sup._stop()
+        sup.stop()
     elif args.trigger:
         q = pipe.start(available_now=False, processing_time=args.trigger)
         # keep the single-writer claim alive for the whole run — a
         # one-shot beat would expire after stale_s and let a second
         # instance start mid-stream (the reference heartbeats on a timer)
-        while not q.awaitTermination(30):
-            hb.beat()
+        try:
+            while not q.awaitTermination(30):
+                hb.beat()
+        finally:
+            pipe.stop(q)
     else:
         epochs = pipe.run_available_now(timeout_s=args.timeout_s)
         applied = [e for e in epochs if not e.get("skipped")]

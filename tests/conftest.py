@@ -87,3 +87,37 @@ def py4j_round_trips(spark):
             client.send_command = orig
 
     return block
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs() as n:`` counts in ``n.jobs`` the Spark jobs
+    without a job group that start inside the block (every job a test
+    starts, its pool threads' included), read from the status tracker,
+    and in ``n.persists`` the ``DataFrame.persist`` calls."""
+    from types import SimpleNamespace
+
+    sc = spark.sparkContext
+    tracker, bus = sc.statusTracker(), sc._jsc.sc().listenerBus()
+    df_class = type(spark.range(1))
+    orig = df_class.persist
+
+    @contextmanager
+    def block():
+        n = SimpleNamespace(jobs=0, persists=0)
+
+        def counted(self, *a, **kw):
+            n.persists += 1
+            return orig(self, *a, **kw)
+
+        bus.waitUntilEmpty()
+        before = set(tracker.getJobIdsForGroup(None))
+        df_class.persist = counted
+        try:
+            yield n
+        finally:
+            df_class.persist = orig
+            bus.waitUntilEmpty()
+            n.jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    return block

@@ -17,7 +17,9 @@ batch flow):
     sink's barrier;
   * one epoch's plan building makes the same number of py4j round trips
     at 8 and 64 buckets, within a budget, and an epoch the optimizer
-    can prove empty returns instead of blocking on its observation.
+    can prove empty returns instead of blocking on its observation;
+  * a one-table stream epoch runs 2 Spark jobs, 3 with poison, and
+    persists one frame.
 """
 
 import os
@@ -27,7 +29,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from movex_cdc_spark.config.table_config import ColumnCfg, repo_files_config
+from movex_cdc_spark.config.table_config import ColumnCfg, TableCfg, repo_files_config
 from movex_cdc_spark.datagen import GenParams, generate_events
 from movex_cdc_spark.lake.append_log import UnkeyedEventLog
 from movex_cdc_spark.lake.table import MAX_DELTA_DEPTH, LakeTable, bucket_expr
@@ -471,15 +473,19 @@ def _within(seconds, fn):
 
 
 @pytest.mark.parametrize("shape", ["false_conditions", "empty_batch",
-                                   "unkeyed_false_conditions", "envelope_false_conditions"])
+                                   "unkeyed_false_conditions", "envelope_false_conditions",
+                                   "mux_false_conditions"])
 def test_provably_empty_epoch_returns(spark, tmp_path, shape):
     """An epoch the optimizer can prove empty — every per-op condition
-    ``1 = 0`` (into a keyed table, an unkeyed log, or a keyed table
-    behind an envelope sink), or no rows at all — returns an empty-batch
-    record and writes no row. Each observation read before a commit (the
-    probe's; the envelope log's reject count at its barrier) sits at the
-    top of its plan, so it is delivered even when the relation below it
-    folds away."""
+    ``1 = 0`` (into a keyed table, an unkeyed log, a keyed table behind
+    an envelope sink, or every table of a mux whose batch also holds one
+    stray row), or no rows at all — returns and writes no row to a
+    table: an empty-batch record, or a mux record that applied no table
+    and quarantined the stray once. Each observation read before a
+    commit (the probe's, above the combined filter of every table; the
+    envelope log's reject count at its barrier) sits at the top of its
+    plan, so it is delivered even when the relation below it folds
+    away."""
     t = _mk(spark, tmp_path, "lake")
     dl = DeadLetterTable(spark, str(tmp_path / "dl"))
     ecfg = repo_files_config()
@@ -505,12 +511,55 @@ def test_provably_empty_epoch_returns(spark, tmp_path, shape):
         def run():
             pipe._apply(events, 0)
             return pipe.epochs[-1]
+    elif shape == "mux_false_conditions":
+        from movex_cdc_spark.sources.events import to_multiplex_events
+        from movex_cdc_spark.streaming.pipeline import MultiplexedCdcPipeline
+
+        ecfg.tables["other"] = TableCfg(**{**vars(cfg), "name": "other"})
+        other = _mk(spark, tmp_path, "other")
+        pipe = MultiplexedCdcPipeline(spark, ecfg, {"repo_files": t, "other": other},
+                                      str(tmp_path / "ev"), str(tmp_path / "ck"),
+                                      dead_letter_dir=dl.path)
+        tagged = to_multiplex_events(events, F.when(F.col("seq") == 2, F.lit("gone"))
+                                     .otherwise(F.lit("repo_files")))
+
+        def run():
+            pipe._apply(tagged, 0)
+            return pipe.epochs[-1]
     else:
         def run():
             return apply_batch_flagged(t, flag_dispositions(events, table_cfg=cfg), epoch_id=0,
                                        dead_letter=dl, table_cfg=cfg)
     v0 = t.current_version()
     lin = _within(120, run)
-    assert lin.get("skipped") and lin["reason"] == "empty batch"
     assert t.current_version() == v0 and sink.read().count() == 0
     assert dl.read() is None
+    if shape != "mux_false_conditions":
+        assert lin.get("skipped") and lin["reason"] == "empty batch"
+        return
+    # a table whose config drops every row is not applied
+    assert lin["tables"] == {} and lin["n_strays"] == 1
+    assert other.current_version() == v0
+    strays = pipe._side_dead_letter("_dispatch").read().collect()
+    assert [(r["seq"], r["error_msg"]) for r in strays] == [(2, "unconfigured table")]
+
+
+@pytest.mark.parametrize("unkeyed", [False, True], ids=["keyed", "unkeyed"])
+@pytest.mark.parametrize("p_poison", [0.0, 0.05], ids=["clean", "poison"])
+def test_stream_epoch_job_budget(spark, tmp_path, spark_jobs, unkeyed, p_poison):
+    """The one-table stream is the shared epoch's one-table case: a
+    clean epoch runs the probe (which builds the one cache) and the sink
+    write, an epoch with poison also the dead-letter append."""
+    cfg = repo_files_config()
+    if unkeyed:
+        cfg.tables["repo_files"].key_handling = "N"
+        table, log = None, UnkeyedEventLog.create(spark, str(tmp_path / "log"))
+    else:
+        table, log = _mk(spark, tmp_path, "lake"), None
+    pipe = CdcStreamPipeline(spark, table, str(tmp_path / "ev"), str(tmp_path / "ck"),
+                             dead_letter_dir=str(tmp_path / "dl"), config=cfg, unkeyed_log=log)
+    ev = generate_events(GenParams(n_events=400, seed=6, p_poison=p_poison))
+    with spark_jobs() as got:
+        pipe._apply(spark.createDataFrame(ev.drop(columns=["is_noop"])), 0)
+    assert (pipe.epochs[-1]["n_poison"] > 0) == (p_poison > 0)
+    assert (got.jobs, got.persists) == (3 if p_poison else 2, 1)

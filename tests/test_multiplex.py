@@ -375,3 +375,45 @@ def test_multiplexed_null_table_tag_quarantined(spark, tmp_path):
     )
     epochs2 = pipe2.run_available_now()
     assert sum(e["n_strays"] for e in epochs2) == 3
+
+
+def test_mux_epoch_flags_persists_and_probes_once(spark, tmp_path, spark_jobs):
+    """One cache and one probe per micro-batch: a static 4-table batch
+    with poison in one table runs, on each delta epoch, one probe job,
+    one write per table and one dead-letter append (1 + N + 1 jobs; the
+    per-table flag, cache and probe took 10 jobs and 5 persists), and
+    persists one frame. The compacting epoch adds one job per table."""
+    from movex_cdc_spark.lake.table import MAX_DELTA_DEPTH
+    from movex_cdc_spark.sources.events import MULTIPLEX_EVENTS_SCHEMA
+
+    cfg = repo_files_config()
+    proto = cfg.tables.pop("repo_files")
+    names = [f"t{i}" for i in range(4)]
+    for n in names:
+        cfg.tables[n] = TableCfg(**{**vars(proto), "name": n})
+    d = _stage_interleaved(spark, tmp_path, {
+        n: generate_events(GenParams(n_events=300, seed=50 + i,
+                                     p_poison=0.03 if i == 0 else 0.0))
+        for i, n in enumerate(names)
+    }, n_files=1)
+    sinks = {n: LakeTable.create(spark, str(tmp_path / n), REPO_FILES_SCHEMA, KEY_COLS,
+                                 n_buckets=8) for n in names}
+    pipe = MultiplexedCdcPipeline(spark, cfg, sinks=sinks, events_dir=d,
+                                  checkpoint_dir=str(tmp_path / "ck"),
+                                  dead_letter_dir=str(tmp_path / "dl"))
+    batch = spark.read.schema(MULTIPLEX_EVENTS_SCHEMA).parquet(d)
+    n = len(names)
+    for epoch in range(MAX_DELTA_DEPTH + 1):
+        with spark_jobs() as got:
+            pipe._apply(batch, epoch)
+        lins = pipe.epochs[-1]["tables"]
+        assert list(lins) == names
+        assert lins["t0"]["n_poison"] > 0
+        assert all(lins[t]["n_poison"] == 0 for t in names[1:])
+        modes = {lin["write_mode"] for lin in lins.values()}
+        assert got.persists == 1
+        if modes == {"delta"}:
+            assert got.jobs <= 1 + n + 1, (epoch, got.jobs)
+        else:
+            assert modes == {"cow"} and got.jobs <= 1 + 2 * n + 1, (epoch, got.jobs)
+    assert modes == {"cow"}

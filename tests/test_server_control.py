@@ -124,6 +124,45 @@ def test_supervisor_pause_resume_and_restart_knobs(spark, tmp_path):
     spark.conf.set("spark.sql.shuffle.partitions", "8")
 
 
+def test_supervisor_stops_flush_metrics_rows(spark, tmp_path):
+    """Every stop path of a supervised pipeline flushes its buffered
+    metrics rows: after a drain and a pause, and again after a resumed
+    drain and a terminate, a fresh reader of the metrics dir sees one
+    row per applied epoch. Before, only ``run_available_now`` flushed,
+    and a supervisor's stop dropped up to 15 buffered epochs."""
+    from movex_cdc_spark.streaming.lineage import MetricsTable
+
+    ev = generate_events(GenParams(n_events=900, seed=73))
+    events, metrics = str(tmp_path / "events"), str(tmp_path / "metrics")
+    t = LakeTable.create(spark, str(tmp_path / "lake"), REPO_FILES_SCHEMA, KEY_COLS,
+                         n_buckets=4)
+    pipe = CdcStreamPipeline(spark, t, events_dir=events,
+                             checkpoint_dir=str(tmp_path / "ckpt"), metrics_dir=metrics,
+                             max_files_per_trigger=1)
+    control = ServerControl(str(tmp_path / "control.json"))
+    sup = PipelineSupervisor(pipe, control, available_now=True)
+
+    def rows_on_disk() -> int:
+        df = MetricsTable(spark, metrics).read()
+        return 0 if df is None else df.count()
+
+    write_event_files(ev.iloc[:600], events, n_files=2)
+    sup.poll_once()
+    sup.query.awaitTermination(120)
+    control.set(worker_threads_count=0)
+    sup.poll_once()
+    assert sup.paused and rows_on_disk() == 2
+
+    write_event_files(ev.iloc[600:], events, n_files=1, prefix="late")
+    control.set(worker_threads_count=2)
+    sup.poll_once()
+    sup.query.awaitTermination(120)
+    control.set(terminate=True)
+    sup.poll_once()
+    assert sup.terminated and rows_on_disk() == 3
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+
+
 # ------------------------------------------------- reprocess (single)
 def _poison_events(n=40, seed=5):
     ev = generate_events(GenParams(n_events=n, seed=seed))

@@ -12,9 +12,13 @@ as ``<kind>_<tag>.txt`` under OUTDIR (kinds ``probe``,
 over the same events, cached and flagged with that config: kinds
 ``unkeyed_probe`` (every execution that writes nothing),
 ``unkeyed_dead_letter`` and ``unkeyed_append`` (the writes into the
-dead-letter log and into the event log). Plans are read from the
-session's SQL status store after the run, so AQE-resolved stages are
-shown where the run finished them.
+dead-letter log and into the event log). Last, one
+``MultiplexedCdcPipeline`` epoch over a static batch of 4 tagged
+tables (400 events each, poison in ``t0`` only, 8-bucket tables): every
+SQL execution it started goes into ``mux_epoch_<tag>.txt``, the probe
+jobs first, then each table's write and the dead-letter append. Plans
+are read from the session's SQL status store after the run, so
+AQE-resolved stages are shown where the run finished them.
 
 Usage: python tools/capture_apply_plans.py OUTDIR TAG
 (run it from a parent checkout with TAG=before and from the change with
@@ -23,6 +27,8 @@ TAG=after to produce a before/after pair).
 
 from __future__ import annotations
 
+import dataclasses
+import functools
 import os
 import shutil
 import sys
@@ -30,6 +36,7 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from movex_cdc_spark.config.table_config import repo_files_config
@@ -45,6 +52,8 @@ from movex_cdc_spark.operators.apply import (
     flag_dispositions,
 )
 from movex_cdc_spark.session import get_spark
+from movex_cdc_spark.sources.events import to_multiplex_events
+from movex_cdc_spark.streaming.pipeline import MultiplexedCdcPipeline
 
 
 def main(out: str, tag: str) -> None:
@@ -107,6 +116,42 @@ def main(out: str, tag: str) -> None:
 
         capture("unkeyed", lambda: apply_batch_unkeyed(log, unkeyed, 0, "capture", cfg, dl),
                 unkeyed_kind)
+
+        mux_cfg = repo_files_config()
+        proto = mux_cfg.tables.pop("repo_files")
+        names = [f"t{i}" for i in range(4)]
+        frames = []
+        for i, name in enumerate(names):
+            mux_cfg.tables[name] = dataclasses.replace(proto, name=name)
+            ev = generate_events(GenParams(n_events=400, seed=7 + i,
+                                           p_poison=0.03 if i == 0 else 0.0))
+            frames.append(to_multiplex_events(
+                spark.createDataFrame(ev.drop(columns=["is_noop"])), name))
+        sinks = {n: LakeTable.create(spark, os.path.join(lake, n), REPO_FILES_SCHEMA, KEY_COLS,
+                                     n_buckets=8) for n in names}
+        pipe = MultiplexedCdcPipeline(spark, mux_cfg, sinks, os.path.join(lake, "mux_events"),
+                                      os.path.join(lake, "mux_ckpt"),
+                                      dead_letter_dir=os.path.join(lake, "mux_dl"))
+        seen = {e.executionId() for e in executions()}
+        pipe._apply(functools.reduce(DataFrame.unionByName, frames), 0)
+
+        def mux_label(plan):
+            if "InsertIntoHadoopFsRelationCommand" not in plan:
+                return "probe"
+            return "write " + next(n for n in [*names, "mux_dl"]
+                                   if os.path.join(lake, n) + "/" in plan)
+
+        runs = sorted(((mux_label(e.physicalPlanDescription()), e.executionId(), e)
+                       for e in executions() if e.executionId() not in seen),
+                      key=lambda r: (r[0] != "probe", r[0], r[1]))
+        with open(os.path.join(out, f"mux_epoch_{tag}.txt"), "w") as f:
+            f.write(f"# one 4-table mux epoch: {len(runs)} SQL executions, "
+                    f"{sum(e.jobs().size() for *_l, e in runs)} Spark jobs\n")
+            # per-execution job counts are left out: under concurrent
+            # dispatch the status store does not attribute them reliably
+            for label, _id, e in runs:
+                f.write(f"\n# {label}\n{e.physicalPlanDescription()}\n")
+        print("mux", [label for label, *_r in runs])
     finally:
         shutil.rmtree(lake, ignore_errors=True)
         spark.stop()
