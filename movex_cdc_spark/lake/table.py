@@ -192,7 +192,6 @@ class LakeTable(VersionedStore):
             "buckets": {},  # bucket id (str) -> base file(s), then deltas oldest first
             "epochs": {},  # stream_id -> last applied epoch id
             "lineage": [],
-            "stats": {"rows_live": 0, "rows_total": 0},
         })
         t._layout = (key_cols, n_buckets)
         return t

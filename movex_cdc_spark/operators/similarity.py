@@ -34,6 +34,21 @@ def _dot(a: str, b: str):
     )
 
 
+def _top_k(pairs: DataFrame, k: int, round_to: int) -> DataFrame:
+    """Each query's ``k`` best candidates of ``pairs`` (q_id, q_vec,
+    q_norm, n_id, n_vec, n_norm) by cosine rounded to ``round_to``, ties
+    broken by neighbor id."""
+    scored = pairs.withColumn(
+        "cosine", F.round(_dot("q_vec", "n_vec") / (F.col("q_norm") * F.col("n_norm")), round_to)
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("q_id", F.col("n_id").alias("neighbor_id"), "cosine", "rk")
+    )
+
+
 def with_norm(df: DataFrame, vec_col: str = VEC_COL) -> DataFrame:
     return df.withColumn(
         "norm",
@@ -69,15 +84,7 @@ def cosine_topk_bruteforce(
         F.col(ID_COL).alias("q_id"), F.col(VEC_COL).alias("q_vec"), F.col("norm").alias("q_norm")
     )
     pairs = F.broadcast(q).join(c, F.col("q_id") != F.col("n_id"))
-    scored = pairs.withColumn(
-        "cosine", F.round(_dot("q_vec", "n_vec") / (F.col("q_norm") * F.col("n_norm")), round_to)
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", F.col("n_id").alias("neighbor_id"), "cosine", "rk")
-    )
+    return _top_k(pairs, k, round_to)
 
 
 def sign_lsh_bucket(df: DataFrame, bits: int = 8, vec_col: str = VEC_COL):
@@ -153,15 +160,7 @@ def cosine_topk_lsh(
         F.col("norm").alias("n_norm"), "bucket",
     )
     pairs = q.join(c, ["bucket"]).filter(F.col("q_id") != F.col("n_id"))
-    scored = pairs.withColumn(
-        "cosine", F.round(_dot("q_vec", "n_vec") / (F.col("q_norm") * F.col("n_norm")), round_to)
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", F.col("n_id").alias("neighbor_id"), "cosine", "rk")
-    )
+    return _top_k(pairs, k, round_to)
 
 
 def _centroid_score_sql(
@@ -263,15 +262,7 @@ def ivf_probe_topk(
         F.explode(F.expr(f"transform({probes}, s -> s.c_id)")).alias("cell"),
     )
     pairs = F.broadcast(q).join(c, ["cell"]).filter(F.col("q_id") != F.col("n_id"))
-    scored = pairs.withColumn(
-        "cosine", F.round(_dot("q_vec", "n_vec") / (F.col("q_norm") * F.col("n_norm")), round_to)
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", F.col("n_id").alias("neighbor_id"), "cosine", "rk")
-    )
+    return _top_k(pairs, k, round_to)
 
 
 def embedding_near_dup_pairs(

@@ -15,10 +15,16 @@ summation order can't skew the hash.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # name -> (spark_fn, oracle_sql | None)
 REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], Optional[str]]] = {}
@@ -99,6 +105,119 @@ OP_CASE_SQL = "CASE event_type WHEN 'signup' THEN 'I' WHEN 'error' THEN 'D' ELSE
 
 def _with_op(df: DataFrame) -> DataFrame:
     return df.withColumn("op", F.expr(OP_CASE_SQL))
+
+
+# ------------------------------------- engine-in-the-loop query staging
+# The ENGINE-IN-THE-LOOP queries drive the real LakeTable, pipelines and
+# sinks; what they stage alike lives here.
+
+CONTENT_SQL = "concat_ws(':', event_type, CAST(value AS STRING))"
+
+# the sf `events` file schema, for the file-stream queries
+EVENTS_FILE_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
+
+
+def _change_stream(spark, sf_dir, *extra, content: str = CONTENT_SQL) -> DataFrame:
+    """The events table as a change stream on the (repo, path) lake key:
+    user_id -> repo, path 'state', event_id -> seq, OP_CASE_SQL -> op and
+    the ``content`` SQL (event_type:value by default), then ``extra``."""
+    return load(spark, sf_dir, "events").select(
+        F.col("user_id").cast("string").alias("repo"),
+        F.lit("state").alias("path"),
+        F.col("event_id").alias("seq"),
+        F.expr(OP_CASE_SQL).alias("op"),
+        F.expr(content).alias("content"),
+        *extra,
+    )
+
+
+def _epochs(df: DataFrame, n: int) -> list[DataFrame]:
+    """The ``n`` epoch slices of a change stream, split by seq mod n:
+    each holds an arbitrary part of a key's events, so per-key order
+    across epochs is NOT arrival order."""
+    return [df.filter(F.pmod(F.col("seq"), F.lit(n)) == i) for i in range(n)]
+
+
+def _envelope_cols() -> list:
+    """The payload columns an envelope carries beyond the change stream:
+    no commit, lang or old image, the event time and one transaction id
+    per 100 events."""
+    return [F.lit(None).cast("string").alias(c) for c in ("commit", "lang", "old_content")] + [
+        F.col("ts").cast("timestamp").alias("ts"),
+        (F.col("event_id") / 100).cast("long").alias("txid"),
+    ]
+
+
+@functools.cache
+def _scratch_root() -> str:
+    # removed at interpreter exit, not earlier: a query returns a lazy
+    # frame over the files it staged
+    root = tempfile.mkdtemp(prefix="movex_entry_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh dir for one query's lakes, checkpoints and outputs, under
+    the one scratch root of this process."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
+
+
+def _lake_table(spark, path: str, *payload: str, **typed):
+    """A fresh LakeTable at ``path`` keyed on (repo, path) with 8
+    buckets; its payload is the string columns ``payload``, then the
+    ``typed`` ones (name -> DataType)."""
+    from movex_cdc_spark.lake.table import LakeTable
+
+    fields = [T.StructField(c, T.StringType()) for c in ("repo", "path", *payload)]
+    fields += [T.StructField(c, t) for c, t in typed.items()]
+    return LakeTable.create(spark, path, T.StructType(fields), ["repo", "path"], n_buckets=8)
+
+
+def _time_ordered_thirds(sf_dir: str) -> list:
+    """The events file as three pandas parts in (ts, event_id) order."""
+    import pandas as pd
+
+    pdf = pd.read_parquet(f"{sf_dir}/events.parquet").sort_values(
+        ["ts", "event_id"], ignore_index=True
+    )
+    cuts = [0, len(pdf) // 3, 2 * len(pdf) // 3, len(pdf)]
+    return [pdf.iloc[cuts[i]:cuts[i + 1]] for i in range(3)]
+
+
+def _stage_triggers(d: str, chunks) -> str:
+    """Write each pandas chunk as one parquet file into ``d`` with
+    ascending mtimes: a file stream at maxFilesPerTrigger=1 reads one
+    chunk per trigger, in this order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(d)
+    for i, chunk in enumerate(chunks):
+        p = os.path.join(d, f"ev-{i:03d}.parquet")
+        pq.write_table(
+            pa.Table.from_pandas(chunk, preserve_index=False), p,
+            coerce_timestamps="us", allow_truncated_timestamps=True,
+        )
+        os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
+    return d
+
+
+def _drain(q, what: str) -> None:
+    """Wait for an availableNow query to finish; stop it and fail after
+    600 s."""
+    if not q.awaitTermination(600):
+        q.stop()
+        raise TimeoutError(f"{what} did not finish within 600s")
 
 
 # --------------------------------------------------------------- W3: LWW
@@ -1358,38 +1477,11 @@ def cdc_engine_replay_final_state(spark, sf_dir):
     and the materialized final state is compared against the plain-SQL
     LWW oracle — replay-to-final-state equivalence checked end to end,
     not just expression parity."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from movex_cdc_spark.lake.table import LakeTable
-    from movex_cdc_spark.operators.lww import lww_dedup_maxby
-
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("repo"),
-        F.lit("state").alias("path"),
-        F.col("event_id").alias("seq"),
-        F.expr(OP_CASE_SQL).alias("op"),
-        F.concat_ws(":", "event_type", F.col("value").cast("string")).alias("content"),
-    )
-    schema = T.StructType(
-        [
-            T.StructField("repo", T.StringType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("content", T.StringType()),
-            T.StructField("content_sha", T.StringType()),
-        ]
-    )
-    tdir = tempfile.mkdtemp(prefix="engine_replay_")
-    table = LakeTable.create(spark, f"{tdir}/t", schema, ["repo", "path"], n_buckets=8)
-    # 3 epochs split by seq mod — each epoch holds an arbitrary slice,
-    # so per-key order across epochs is NOT arrival order
-    for i in range(3):
-        chunk = ev.filter(F.pmod(F.col("seq"), F.lit(3)) == i)
-        batch = lww_dedup_maxby(chunk, ["repo", "path"]).withColumn(
-            "content_sha", F.sha2("content", 256)
-        )
-        table.merge(batch, seq_col="seq", op_col="op", epoch_id=i)
+    ev = _change_stream(spark, sf_dir).withColumn("content_sha", F.sha2("content", 256))
+    table = _lake_table(spark, f"{_scratch_dir('engine_replay_')}/t", "content", "content_sha")
+    # merge resolves each slice's in-batch last writer itself
+    for i, batch in enumerate(_epochs(ev, 3)):
+        table.merge(batch, epoch_id=i)
     return table.read().select(
         "repo", F.col("last_seq"), "content", "content_sha"
     )
@@ -1432,35 +1524,10 @@ def cdc_incremental_changes(spark, sf_dir):
     the keys whose LWW winner changed after epoch 0, classified I/U/D,
     matching the plain-SQL two-window reconstruction. Unchanged keys
     and tombstone-to-tombstone advances must NOT appear."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from movex_cdc_spark.lake.table import LakeTable
-    from movex_cdc_spark.operators.lww import lww_dedup_maxby
-
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("repo"),
-        F.lit("state").alias("path"),
-        F.col("event_id").alias("seq"),
-        F.expr(OP_CASE_SQL).alias("op"),
-        F.concat_ws(":", "event_type", F.col("value").cast("string")).alias("content"),
-    )
-    schema = T.StructType(
-        [
-            T.StructField("repo", T.StringType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("content", T.StringType()),
-        ]
-    )
-    tdir = tempfile.mkdtemp(prefix="incr_changes_")
-    table = LakeTable.create(spark, f"{tdir}/t", schema, ["repo", "path"], n_buckets=8)
-    for i in range(3):
-        chunk = ev.filter(F.pmod(F.col("seq"), F.lit(3)) == i)
-        table.merge(
-            lww_dedup_maxby(chunk, ["repo", "path"]),
-            seq_col="seq", op_col="op", epoch_id=i,
-        )
+    ev = _change_stream(spark, sf_dir)
+    table = _lake_table(spark, f"{_scratch_dir('incr_changes_')}/t", "content")
+    for i, batch in enumerate(_epochs(ev, 3)):
+        table.merge(batch, epoch_id=i)
     # version 1 = after epoch 0; current = after all three
     return table.changes(1).select("repo", "content", "last_seq", "change_op")
 
@@ -1543,47 +1610,20 @@ def cdc_schema_evolution(spark, sf_dir):
     the final state must equal the plain-SQL LWW oracle over BOTH shapes
     interleaved — epochs split by seq parity, so per-key order across
     epochs is NOT arrival order."""
-    import tempfile
+    ev = _change_stream(spark, sf_dir, "value", "event_type")
+    table = _lake_table(spark, f"{_scratch_dir('schema_evo_')}/t", "content", rev=T.IntegerType())
 
-    from pyspark.sql import types as T
-
-    from movex_cdc_spark.lake.table import LakeTable
-    from movex_cdc_spark.operators.lww import lww_dedup_maxby
-
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("repo"),
-        F.lit("state").alias("path"),
-        F.col("event_id").alias("seq"),
-        F.expr(OP_CASE_SQL).alias("op"),
-        F.concat_ws(":", "event_type", F.col("value").cast("string")).alias("content"),
-        F.col("value"),
-        F.col("event_type"),
-    )
-    schema_v1 = T.StructType(
-        [
-            T.StructField("repo", T.StringType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("content", T.StringType()),
-            T.StructField("rev", T.IntegerType()),
-        ]
-    )
-    tdir = tempfile.mkdtemp(prefix="schema_evo_")
-    table = LakeTable.create(spark, f"{tdir}/t", schema_v1, ["repo", "path"], n_buckets=8)
-
+    even, odd = _epochs(ev, 2)
     # epoch 0: OLD shape (rev is INT, no etype)
-    b0 = lww_dedup_maxby(
-        ev.filter(F.pmod(F.col("seq"), F.lit(2)) == 0), ["repo", "path"]
-    ).select(
+    b0 = even.select(
         "repo", "path", "content",
         F.floor(F.col("value") * 100).cast("int").alias("rev"),
         "seq", "op",
     )
-    table.merge(b0, seq_col="seq", op_col="op", epoch_id=0)
+    table.merge(b0, epoch_id=0)
 
     # config change: NEW shape (rev widened to LONG, etype added)
-    b1 = lww_dedup_maxby(
-        ev.filter(F.pmod(F.col("seq"), F.lit(2)) == 1), ["repo", "path"]
-    ).select(
+    b1 = odd.select(
         "repo", "path", "content",
         F.floor(F.col("value") * 100).alias("rev"),  # long
         F.col("event_type").alias("etype"),
@@ -1592,7 +1632,7 @@ def cdc_schema_evolution(spark, sf_dir):
     table.evolve_schema(
         T.StructType([f for f in b1.schema.fields if f.name not in ("seq", "op")])
     )
-    table.merge(b1, seq_col="seq", op_col="op", epoch_id=1)
+    table.merge(b1, epoch_id=1)
 
     return table.read().select("repo", F.col("last_seq"), "content", "rev", "etype")
 
@@ -1631,33 +1671,14 @@ def streaming_stateful_sessions(spark, sf_dir):
     operator's contract — a session is emitted exactly once, when its
     closing gap is observed; each user's final session stays open — is
     mirrored by the oracle's 'drop each user's last session' clause."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
     from movex_cdc_spark.streaming.windows import gap_sessionize_stateful
 
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    tdir = tempfile.mkdtemp(prefix="stateful_sessions_")
+    tdir = _scratch_dir("stateful_sessions_")
     ev_dir = f"{tdir}/events"
-    import os as _os
-
-    _os.makedirs(ev_dir)
+    os.makedirs(ev_dir)
     shutil.copy(f"{sf_dir}/events.parquet", f"{ev_dir}/events.parquet")
-    q = gap_sessionize_stateful(spark, ev_dir, f"{tdir}/ckpt", f"{tdir}/out", schema)
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("stateful sessionization did not finish within 600s")
+    _drain(gap_sessionize_stateful(spark, ev_dir, f"{tdir}/ckpt", f"{tdir}/out",
+                                   EVENTS_FILE_SCHEMA), "stateful sessionization")
     return spark.read.parquet(f"{tdir}/out").select(
         "user_id", "session_id", "events_in_session", "first_seq", "last_seq"
     )
@@ -1718,60 +1739,17 @@ def streaming_idle_timeout_sessions(spark, sf_dir):
 
     Reference analog: the worker's max-event-age flush + per-key state
     retirement (transfer_thread.rb:229-328 adaptive window close)."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from movex_cdc_spark.streaming.windows import gap_sessionize_stateful
 
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    import os as _os
-
-    tdir = tempfile.mkdtemp(prefix="idle_sessions_")
-    ev_dir = f"{tdir}/events"
-    _os.makedirs(ev_dir)
-    # three time-ordered trigger files (mtime ascending = source order)
-    pdf = pd.read_parquet(f"{sf_dir}/events.parquet").sort_values(
-        ["ts", "event_id"], ignore_index=True
-    )
-    cuts = [0, len(pdf) // 3, 2 * len(pdf) // 3, len(pdf)]
-    import time as _time
-
-    now = _time.time()
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for i in range(3):
-        p = _os.path.join(ev_dir, f"ev-{i:03d}.parquet")
-        pq.write_table(
-            pa.Table.from_pandas(pdf.iloc[cuts[i]:cuts[i + 1]], preserve_index=False),
-            p,
-            coerce_timestamps="us",
-        )
-        _os.utime(p, (now - 300 + i * 100, now - 300 + i * 100))
-    q = gap_sessionize_stateful(
-        spark, ev_dir, f"{tdir}/ckpt", f"{tdir}/out", schema,
+    tdir = _scratch_dir("idle_sessions_")
+    ev_dir = _stage_triggers(f"{tdir}/events", _time_ordered_thirds(sf_dir))
+    _drain(gap_sessionize_stateful(
+        spark, ev_dir, f"{tdir}/ckpt", f"{tdir}/out", EVENTS_FILE_SCHEMA,
         max_files_per_trigger=1, idle_timeout_s=3600,
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("idle-timeout sessionization did not finish within 600s")
-    out = spark.read.parquet(f"{tdir}/out").select(
+    ), "idle-timeout sessionization")
+    return spark.read.parquet(f"{tdir}/out").select(
         "user_id", "first_seq", "events_in_session", "last_seq"
     )
-    shutil.rmtree(ev_dir, ignore_errors=True)
-    return out
 
 
 @register(
@@ -1793,62 +1771,29 @@ def streaming_watermark_dedup(spark, sf_dir):
     bounded by the watermark window (the 100-TB guard), mirrored here by
     only redelivering within the slack — the at-least-once transport
     contract (reference hazard window transfer_thread.rb:171-177)."""
-    import os as _os
-    import shutil
-    import tempfile
-    import time as _time
-
     import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import types as T
 
     from movex_cdc_spark.streaming.windows import dedup_stream_within_watermark
 
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    tdir = tempfile.mkdtemp(prefix="wm_dedup_")
-    ev_dir = f"{tdir}/events"
-    _os.makedirs(ev_dir)
-    pdf = pd.read_parquet(f"{sf_dir}/events.parquet").sort_values(
-        ["ts", "event_id"], ignore_index=True
-    )
-    cuts = [0, len(pdf) // 3, 2 * len(pdf) // 3, len(pdf)]
-    now = _time.time()
-    for i in range(3):
-        part = pdf.iloc[cuts[i]:cuts[i + 1]]
+    tdir = _scratch_dir("wm_dedup_")
+    parts = _time_ordered_thirds(sf_dir)
+    triggers = []
+    for i, part in enumerate(parts):
         # in-trigger duplicates: every 5th row of this trigger
         chunks = [part, part.iloc[::5]]
         if i > 0:
             # cross-trigger redelivery: the PREVIOUS trigger's final
             # hour, arriving again one trigger later — within the 2h
             # slack, so the dedup state is still live
-            prev = pdf.iloc[cuts[i - 1]:cuts[i]]
+            prev = parts[i - 1]
             tail = prev[prev["ts"] > prev["ts"].max() - pd.Timedelta(hours=1)]
             chunks.append(tail)
-        out = pd.concat(chunks, ignore_index=True)
-        p = _os.path.join(ev_dir, f"ev-{i:03d}.parquet")
-        pq.write_table(pa.Table.from_pandas(out, preserve_index=False), p,
-                       coerce_timestamps="us")
-        _os.utime(p, (now - 300 + i * 100, now - 300 + i * 100))
-    q = dedup_stream_within_watermark(
-        spark, ev_dir, f"{tdir}/ckpt", f"{tdir}/out", schema,
-        within="2 hours", max_files_per_trigger=1,
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("watermark dedup stream did not finish within 600s")
-    out = spark.read.parquet(f"{tdir}/out").select("event_id", "user_id", "event_type")
-    shutil.rmtree(ev_dir, ignore_errors=True)
-    return out
+        triggers.append(pd.concat(chunks, ignore_index=True))
+    _drain(dedup_stream_within_watermark(
+        spark, _stage_triggers(f"{tdir}/events", triggers), f"{tdir}/ckpt", f"{tdir}/out",
+        EVENTS_FILE_SCHEMA, within="2 hours", max_files_per_trigger=1,
+    ), "watermark dedup stream")
+    return spark.read.parquet(f"{tdir}/out").select("event_id", "user_id", "event_type")
 
 
 @register(
@@ -1959,27 +1904,10 @@ def streaming_hourly_stats_rollup(spark, sf_dir):
     emits each (window, event_type) exactly once; the oracle mirrors the
     emission rule — only windows whose end <= max(ts) - 2h are out — and
     the decimal(18,2) value sum (order-independent, exact)."""
-    import os as _os
-    import tempfile
-
     import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from movex_cdc_spark.streaming.windows import streaming_hourly_stats
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
     ev = pd.read_parquet(f"{sf_dir}/events.parquet").sort_values("ts")
     m = ev["ts"].max()
     tail = ev[ev["ts"] > m - pd.Timedelta(hours=4)]
@@ -1988,25 +1916,14 @@ def streaming_hourly_stats_rollup(spark, sf_dir):
     late_mask = (rest["ts"] > t1 - pd.Timedelta(minutes=90)) & (
         rest["ts"] <= t1 - pd.Timedelta(minutes=30)
     )
-    tdir = tempfile.mkdtemp(prefix="hourly_stats_")
-    d = f"{tdir}/events"
-    _os.makedirs(d)
-    # trigger order = mtime order: bulk (already contains rows NEWER
-    # than the withheld strip) -> the late strip -> the 4h tail
-    for i, chunk in enumerate((rest[~late_mask], rest[late_mask], tail)):
-        path = f"{d}/ev-{i:03d}.parquet"
-        pq.write_table(
-            pa.Table.from_pandas(chunk, preserve_index=False), path,
-            coerce_timestamps="us", allow_truncated_timestamps=True,
-        )
-        _os.utime(path, (1_000_000_000 + i, 1_000_000_000 + i))
-    q = streaming_hourly_stats(
-        spark, d, f"{tdir}/ckpt", f"{tdir}/out", schema,
+    tdir = _scratch_dir("hourly_stats_")
+    # trigger order: bulk (already contains rows NEWER than the withheld
+    # strip) -> the late strip -> the 4h tail
+    d = _stage_triggers(f"{tdir}/events", (rest[~late_mask], rest[late_mask], tail))
+    _drain(streaming_hourly_stats(
+        spark, d, f"{tdir}/ckpt", f"{tdir}/out", EVENTS_FILE_SCHEMA,
         watermark="2 hours", window="1 hour", max_files_per_trigger=1,
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("watermarked rollup did not finish within 600s")
+    ), "watermarked rollup")
     return spark.read.parquet(f"{tdir}/out").select(
         "window_start", "event_type", "events", "sum_value", "max_seq"
     )
@@ -2035,33 +1952,10 @@ def cdc_mor_replay_final_state(spark, sf_dir):
     copy-on-write merge, and the 6th lands as a delta on top. The
     read-time fold over base ∪ deltas must equal the same plain-SQL
     oracle the eager COW replay satisfies."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from movex_cdc_spark.lake.table import LakeTable
-
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("repo"),
-        F.lit("state").alias("path"),
-        F.col("event_id").alias("seq"),
-        F.expr(OP_CASE_SQL).alias("op"),
-        F.concat_ws(":", "event_type", F.col("value").cast("string")).alias("content"),
-    )
-    schema = T.StructType(
-        [
-            T.StructField("repo", T.StringType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("content", T.StringType()),
-        ]
-    )
-    tdir = tempfile.mkdtemp(prefix="mor_replay_")
-    table = LakeTable.create(spark, f"{tdir}/lake", schema, ["repo", "path"], n_buckets=8)
-    for i in range(6):
-        table.merge(
-            ev.filter(F.pmod(F.col("seq"), F.lit(6)) == i),
-            seq_col="seq", op_col="op", epoch_id=i,
-        )
+    ev = _change_stream(spark, sf_dir)
+    table = _lake_table(spark, f"{_scratch_dir('mor_replay_')}/lake", "content")
+    for i, batch in enumerate(_epochs(ev, 6)):
+        table.merge(batch, epoch_id=i)
     return table.read().select("repo", F.col("last_seq"), "content")
 
 
@@ -2088,34 +1982,10 @@ def cdc_housekeeping_time_travel(spark, sf_dir):
     TIME-TRAVEL read of version 2 (epochs 0-1 applied) must still
     reconstruct exactly — the oracle is the LWW over the first two
     epoch slices. Expiry must never break a retained snapshot."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from movex_cdc_spark.lake.table import LakeTable
-    from movex_cdc_spark.operators.lww import lww_dedup_maxby
-
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("repo"),
-        F.lit("state").alias("path"),
-        F.col("event_id").alias("seq"),
-        F.expr(OP_CASE_SQL).alias("op"),
-        F.concat_ws(":", "event_type", F.col("value").cast("string")).alias("content"),
-    )
-    schema = T.StructType(
-        [
-            T.StructField("repo", T.StringType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("content", T.StringType()),
-        ]
-    )
-    tdir = tempfile.mkdtemp(prefix="housekeeping_tt_")
-    table = LakeTable.create(spark, f"{tdir}/t", schema, ["repo", "path"], n_buckets=8)
-    for i in range(4):
-        batch = lww_dedup_maxby(
-            ev.filter(F.pmod(F.col("seq"), F.lit(4)) == i), ["repo", "path"]
-        )
-        table.merge(batch, seq_col="seq", op_col="op", epoch_id=i)
+    ev = _change_stream(spark, sf_dir)
+    table = _lake_table(spark, f"{_scratch_dir('housekeeping_tt_')}/t", "content")
+    for i, batch in enumerate(_epochs(ev, 4)):
+        table.merge(batch, epoch_id=i)
     removed = table.expire_snapshots(keep_last=3)
     assert removed >= 0  # versions 0-1's exclusive files are gone
     # time travel to version 2 = state after epochs 0 and 1
@@ -2153,22 +2023,10 @@ def cdc_bootstrap_init_load(spark, sf_dir):
     init-only) stream on top in 2 epochs. Later seqs win over the
     snapshot exactly as changes after the flashback SCN win in the
     reference; snapshot rows survive only for keys with no changes."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
     from movex_cdc_spark.config.table_config import ColumnCfg, TableCfg
-    from movex_cdc_spark.lake.table import LakeTable
     from movex_cdc_spark.operators.bootstrap import snapshot_to_init_events
-    from movex_cdc_spark.operators.lww import lww_dedup_maxby
 
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("repo"),
-        F.lit("state").alias("path"),
-        F.col("event_id").alias("seq"),
-        F.expr(OP_CASE_SQL).alias("op"),
-        F.concat_ws(":", "event_type", F.col("value").cast("string")).alias("content"),
-    )
+    ev = _change_stream(spark, sf_dir)
     base = (
         ev.select("repo").distinct()
         .withColumn("path", F.lit("state"))
@@ -2182,23 +2040,11 @@ def cdc_bootstrap_init_load(spark, sf_dir):
         initialization_filter="cast(repo as bigint) % 3 <> 0",
         initialization_order_by="repo",
     )
-    schema = T.StructType(
-        [
-            T.StructField("repo", T.StringType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("content", T.StringType()),
-        ]
-    )
-    tdir = tempfile.mkdtemp(prefix="bootstrap_")
-    table = LakeTable.create(spark, f"{tdir}/t", schema, ["repo", "path"], n_buckets=8)
-    table.merge(snapshot_to_init_events(base, cfg, snapshot_seq=0),
-                seq_col="seq", op_col="op", epoch_id=0)
+    table = _lake_table(spark, f"{_scratch_dir('bootstrap_')}/t", "content")
+    table.merge(snapshot_to_init_events(base, cfg, snapshot_seq=0), epoch_id=0)
     changes = ev.filter(F.col("repo").cast("long") % 5 != 0)
-    for i in range(2):
-        batch = lww_dedup_maxby(
-            changes.filter(F.pmod(F.col("seq"), F.lit(2)) == i), ["repo", "path"]
-        )
-        table.merge(batch, seq_col="seq", op_col="op", epoch_id=i + 1)
+    for i, batch in enumerate(_epochs(changes, 2)):
+        table.merge(batch, epoch_id=i + 1)
     return table.read().select("repo", F.col("last_seq"), "content")
 
 
@@ -2227,44 +2073,24 @@ def cdc_retry_heal_final_state(spark, sf_dir):
     them through the SAME fenced merge path. The final state must equal
     LWW over the union of clean and healed events: re-admission keeps the
     original seq, so a healed row wins only where it would have won."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from movex_cdc_spark.lake.table import LakeTable
     from movex_cdc_spark.operators.apply import DeadLetterTable, apply_batch
     from movex_cdc_spark.streaming.retry import RetryWorker
 
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("repo"),
-        F.lit("state").alias("path"),
-        F.col("event_id").alias("seq"),
-        F.expr(OP_CASE_SQL).alias("op"),
-        F.when(
-            (F.col("value") < 0.1) & (F.expr(OP_CASE_SQL) != "D"), F.lit(None)
-        ).otherwise(
-            F.concat_ws(":", "event_type", F.col("value").cast("string"))
-        ).alias("content"),
+    ev = _change_stream(
+        spark, sf_dir,
         # non-null old image (as a real U trigger carries): otherwise a
         # poison U row (null content) would no-op-suppress against a
         # null old image instead of reaching the dead letter
         F.lit("prev").alias("old_content"),
+        content=f"CASE WHEN value < 0.1 AND {OP_CASE_SQL} <> 'D' THEN NULL ELSE {CONTENT_SQL} END",
     )
-    schema = T.StructType(
-        [
-            T.StructField("repo", T.StringType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("content", T.StringType()),
-            T.StructField("content_sha", T.StringType()),
-        ]
-    )
-    tdir = tempfile.mkdtemp(prefix="retry_heal_")
-    table = LakeTable.create(spark, f"{tdir}/t", schema, ["repo", "path"], n_buckets=8)
+    tdir = _scratch_dir("retry_heal_")
+    table = _lake_table(spark, f"{tdir}/t", "content", "content_sha")
     dl = DeadLetterTable(spark, f"{tdir}/dl")
-    for i in range(2):
+    for i, batch in enumerate(_epochs(ev, 2)):
         apply_batch(
             table,
-            ev.filter(F.pmod(F.col("seq"), F.lit(2)) == i),
+            batch,
             epoch_id=i,
             condition_sql="1=1",  # no exclusion fixture in this stream
             dead_letter=dl,
@@ -2296,8 +2122,6 @@ def cdc_unkeyed_append(spark, sf_dir):
     key_handling='N' table routes through apply_batch_unkeyed into the
     epoch-fenced UnkeyedEventLog — every valid event appended exactly
     once across 2 epochs, NO LWW collapse, NULL message keys."""
-    import tempfile
-
     from movex_cdc_spark.config.table_config import ColumnCfg, TableCfg
     from movex_cdc_spark.lake.append_log import UnkeyedEventLog
     from movex_cdc_spark.operators.apply import apply_batch_unkeyed, flag_dispositions
@@ -2305,7 +2129,7 @@ def cdc_unkeyed_append(spark, sf_dir):
     ev = load(spark, sf_dir, "events").select(
         F.col("event_id").alias("seq"),
         F.expr(OP_CASE_SQL).alias("op"),
-        F.concat_ws(":", "event_type", F.col("value").cast("string")).alias("content"),
+        F.expr(CONTENT_SQL).alias("content"),
         F.lit(None).cast("string").alias("old_content"),
     )
     cfg = TableCfg(
@@ -2314,14 +2138,10 @@ def cdc_unkeyed_append(spark, sf_dir):
         columns=[ColumnCfg("content")],
         key_handling="N",
     )
-    tdir = tempfile.mkdtemp(prefix="unkeyed_")
-    log = UnkeyedEventLog.create(spark, f"{tdir}/log")
-    for i in range(2):
-        apply_batch_unkeyed(
-            log,
-            flag_dispositions(ev.filter(F.pmod(F.col("seq"), F.lit(2)) == i), table_cfg=cfg),
-            epoch_id=i, table_cfg=cfg,
-        )
+    log = UnkeyedEventLog.create(spark, f"{_scratch_dir('unkeyed_')}/log")
+    for i, batch in enumerate(_epochs(ev, 2)):
+        apply_batch_unkeyed(log, flag_dispositions(batch, table_cfg=cfg), epoch_id=i,
+                            table_cfg=cfg)
     return log.read().select("seq", "op", "content", "msg_key")
 
 
@@ -2352,26 +2172,12 @@ def cdc_envelope_sink_contract(spark, sf_dir):
     message key JSON, transaction id, ISO timestamp, payload content —
     are compared against the plain-SQL reconstruction. Every validated
     event appears exactly once (producer semantics, pre-LWW)."""
-    import tempfile
-
     from movex_cdc_spark.streaming.sink import EnvelopeSink
 
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("repo"),
-        F.lit("state").alias("path"),
-        F.lit(None).cast("string").alias("commit"),
-        F.lit(None).cast("string").alias("lang"),
-        F.concat_ws(":", "event_type", F.col("value").cast("string")).alias("content"),
-        F.lit(None).cast("string").alias("old_content"),
-        F.col("event_id").alias("seq"),
-        F.expr(OP_CASE_SQL).alias("op"),
-        F.col("ts").cast("timestamp").alias("ts"),
-        (F.col("event_id") / 100).cast("long").alias("txid"),
-    )
-    tdir = tempfile.mkdtemp(prefix="envelope_sink_")
-    sink = EnvelopeSink(spark, f"{tdir}/sink", table_name="repo_files")
-    for i in range(2):
-        sink.emit(ev.filter(F.pmod(F.col("seq"), F.lit(2)) == i), epoch_id=i)
+    ev = _change_stream(spark, sf_dir, *_envelope_cols())
+    sink = EnvelopeSink(spark, f"{_scratch_dir('envelope_sink_')}/sink", table_name="repo_files")
+    for i, batch in enumerate(_epochs(ev, 2)):
+        sink.emit(batch, epoch_id=i)
     return sink.read().select(
         "id",
         "operation",
@@ -2405,21 +2211,11 @@ def cdc_envelope_legacy_ts(spark, sf_dir):
     strftime reconstruction. The sink's own per-mode anchored-regex
     validation ran at emit — a format/config mismatch would have
     rejected the row, so 0 rejects is part of what the row counts."""
-    import tempfile
-
     from movex_cdc_spark.streaming.sink import EnvelopeSink
 
-    ev = load(spark, sf_dir, "events").filter(F.col("event_id") % 20 == 0).select(
-        F.col("user_id").cast("string").alias("repo"),
-        F.lit("state").alias("path"),
-        F.lit(None).cast("string").alias("commit"),
-        F.lit(None).cast("string").alias("lang"),
-        F.concat_ws(":", "event_type", F.col("value").cast("string")).alias("content"),
-        F.col("event_id").alias("seq"),
-        F.lit("I").alias("op"),
-        F.col("ts").cast("timestamp").alias("ts"),
-    )
-    tdir = tempfile.mkdtemp(prefix="envelope_legacy_")
+    ev = (_change_stream(spark, sf_dir, *_envelope_cols())
+          .filter(F.col("seq") % 20 == 0).withColumn("op", F.lit("I")))
+    tdir = _scratch_dir("envelope_legacy_")
     outs = []
     for mode in ("TYPE_1", "TYPE_2"):
         sink = EnvelopeSink(
@@ -2619,22 +2415,14 @@ def cdc_multi_table_dispatch(spark, sf_dir):
     of both final states must match the per-partition SQL LWW with
     table_b's condition applied — per-table configs, per-table fences,
     one queue."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
     from movex_cdc_spark.config.table_config import ColumnCfg, EngineConfig, TableCfg
-    from movex_cdc_spark.lake.table import LakeTable
+    from movex_cdc_spark.sources.events import to_multiplex_events
     from movex_cdc_spark.streaming.pipeline import MultiplexedCdcPipeline
 
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("repo"),
-        F.lit("state").alias("path"),
+    ev = _change_stream(
+        spark, sf_dir,
         F.lit("c0").alias("commit"),
         F.lit("x").alias("lang"),
-        F.col("event_id").alias("seq"),
-        F.expr(OP_CASE_SQL).alias("op"),
-        F.concat_ws(":", "event_type", F.col("value").cast("string")).alias("content"),
         F.lit(None).cast("string").alias("old_content"),
         F.lit(None).cast("timestamp").alias("ts"),
         F.lit(None).cast("long").alias("txid"),
@@ -2642,8 +2430,6 @@ def cdc_multi_table_dispatch(spark, sf_dir):
         .otherwise(F.lit("table_b"))
         .alias("__target"),
     )
-    from movex_cdc_spark.sources.events import to_multiplex_events
-
     # the tagged Event_Logs queue shape, serialized by the same helper
     # the pipeline reads with (per-row tag Column)
     queue = to_multiplex_events(ev, F.col("__target"))
@@ -2661,32 +2447,20 @@ def cdc_multi_table_dispatch(spark, sf_dir):
             key_handling="P",
         ),
     })
-    schema = T.StructType([
-        T.StructField("repo", T.StringType()),
-        T.StructField("path", T.StringType()),
-        T.StructField("commit", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("content", T.StringType()),
-        T.StructField("content_sha", T.StringType()),
-    ])
-    tdir = tempfile.mkdtemp(prefix="mux_dispatch_")
-    t_a = LakeTable.create(spark, f"{tdir}/a", schema, ["repo", "path"], n_buckets=8)
-    t_b = LakeTable.create(spark, f"{tdir}/b", schema, ["repo", "path"], n_buckets=8)
+    tdir = _scratch_dir("mux_dispatch_")
+    sinks = {n: _lake_table(spark, f"{tdir}/{n}", "commit", "lang", "content", "content_sha")
+             for n in cfg.tables}
     pipe = MultiplexedCdcPipeline(
-        spark, cfg, sinks={"table_a": t_a, "table_b": t_b},
+        spark, cfg, sinks=sinks,
         events_dir=tdir, checkpoint_dir=f"{tdir}/ck",  # dirs unused: batch drive
     )
     # two interleaved epochs through the REAL dispatch body (the
     # streaming shell around it is pytest-covered)
-    for i in range(2):
-        pipe._apply(queue.filter(F.pmod(F.col("seq"), F.lit(2)) == i), epoch_id=i)
-    out_a = t_a.read().select(
-        F.lit("table_a").alias("target_table"), "repo", "last_seq", "content",
-        "content_sha",
-    )
-    out_b = t_b.read().select(
-        F.lit("table_b").alias("target_table"), "repo", "last_seq", "content",
-        "content_sha",
+    for i, batch in enumerate(_epochs(queue, 2)):
+        pipe._apply(batch, epoch_id=i)
+    out_a, out_b = (
+        t.read().select(F.lit(n).alias("target_table"), "repo", "last_seq", "content", "content_sha")
+        for n, t in sinks.items()
     )
     return out_a.unionByName(out_b)
 
@@ -2715,38 +2489,12 @@ def cdc_changes_chaining(spark, sf_dir):
     state must equal the plain-SQL LWW of the original events — i.e.
     upstream state reproduced hash-exactly through the incremental
     changelog alone."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from movex_cdc_spark.lake.table import LakeTable
-    from movex_cdc_spark.operators.lww import lww_dedup_maxby
-
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("repo"),
-        F.lit("state").alias("path"),
-        F.col("event_id").alias("seq"),
-        F.expr(OP_CASE_SQL).alias("op"),
-        F.concat_ws(":", "event_type", F.col("value").cast("string")).alias("content"),
-    )
-    schema = T.StructType(
-        [
-            T.StructField("repo", T.StringType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("content", T.StringType()),
-            T.StructField("content_sha", T.StringType()),
-        ]
-    )
-    tdir = tempfile.mkdtemp(prefix="changes_chain_")
-    up = LakeTable.create(spark, f"{tdir}/up", schema, ["repo", "path"], n_buckets=8)
-    down = LakeTable.create(spark, f"{tdir}/down", schema, ["repo", "path"], n_buckets=8)
-    for i in range(3):
-        chunk = ev.filter(F.pmod(F.col("seq"), F.lit(3)) == i)
-        batch = lww_dedup_maxby(chunk, ["repo", "path"]).withColumn(
-            "content_sha", F.sha2("content", 256)
-        )
+    ev = _change_stream(spark, sf_dir).withColumn("content_sha", F.sha2("content", 256))
+    tdir = _scratch_dir("changes_chain_")
+    up, down = (_lake_table(spark, f"{tdir}/{t}", "content", "content_sha") for t in ("up", "down"))
+    for i, batch in enumerate(_epochs(ev, 3)):
         v_before = up.current_version()
-        up.merge(batch, seq_col="seq", op_col="op", epoch_id=i)
+        up.merge(batch, epoch_id=i)
         # chain THIS epoch's changelog downstream (cost ∝ churn)
         down.merge(
             up.changes(v_before, up.current_version()),
@@ -3066,30 +2814,13 @@ def cdc_kafka_redelivery_eos(spark, sf_dir):
     the undoctored events table — if any duplicate, replay, or
     reordering leaked through the guard, the LWW winner set, row count,
     or content hash would differ."""
-    import os as _os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
     from movex_cdc_spark.sources.kafka import (
         adversarial_deliveries,
         parse_envelope_wire,
     )
     from movex_cdc_spark.streaming.sink import KafkaEnvelopeWriter
 
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("repo"),
-        F.lit("state").alias("path"),
-        F.lit(None).cast("string").alias("commit"),
-        F.lit(None).cast("string").alias("lang"),
-        F.concat_ws(":", "event_type", F.col("value").cast("string")).alias("content"),
-        F.lit(None).cast("string").alias("old_content"),
-        F.col("event_id").alias("seq"),
-        F.expr(OP_CASE_SQL).alias("op"),
-        F.col("ts").cast("timestamp").alias("ts"),
-        (F.col("event_id") / 100).cast("long").alias("txid"),
-    )
+    ev = _change_stream(spark, sf_dir, *_envelope_cols())
     # three event-time-contiguous epochs (the trigger model: a stream
     # drains in arrival order, so redelivered tails stay inside the
     # consumer's watermark slack — the at-least-once transport contract)
@@ -3117,18 +2848,16 @@ def cdc_kafka_redelivery_eos(spark, sf_dir):
             )
         )
     deliveries = adversarial_deliveries(epochs, dup_mod=5, replay_tail_s=3600)
-    tdir = tempfile.mkdtemp(prefix="kafka_eos_")
+    tdir = _scratch_dir("kafka_eos_")
     topic_dir = f"{tdir}/topic"
-    _os.makedirs(topic_dir)
-    now = __import__("time").time()
+    os.makedirs(topic_dir)
     for i, d in enumerate(deliveries):
         stage = f"{tdir}/stage_{i}"
         d.coalesce(1).write.parquet(stage)
-        part = next(f for f in sorted(_os.listdir(stage)) if f.endswith(".parquet"))
-        dst = _os.path.join(topic_dir, f"d-{i:03d}.parquet")
-        _os.replace(_os.path.join(stage, part), dst)
-        _os.utime(dst, (now - 300 + i * 100, now - 300 + i * 100))
-        shutil.rmtree(stage, ignore_errors=True)
+        part = next(f for f in sorted(os.listdir(stage)) if f.endswith(".parquet"))
+        dst = os.path.join(topic_dir, f"d-{i:03d}.parquet")
+        os.replace(os.path.join(stage, part), dst)
+        os.utime(dst, (1_000_000_000 + i, 1_000_000_000 + i))
     wire_schema = T.StructType(
         [T.StructField("key", T.BinaryType()), T.StructField("value", T.BinaryType())]
     )
@@ -3144,17 +2873,15 @@ def cdc_kafka_redelivery_eos(spark, sf_dir):
         ),
     )
     deduped = env.withWatermark("__ts", "2 hours").dropDuplicatesWithinWatermark(["id"])
-    q = (
+    _drain(
         deduped.writeStream.outputMode("append")
         .format("parquet")
         .option("path", f"{tdir}/out")
         .option("checkpointLocation", f"{tdir}/ckpt")
         .trigger(availableNow=True)
-        .start()
+        .start(),
+        "EOS consumer stream",
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("EOS consumer stream did not finish within 600s")
     out = spark.read.parquet(f"{tdir}/out")
     w = Window.partitionBy("msg_key").orderBy(F.col("id").desc())
     final = (
@@ -3172,7 +2899,6 @@ def cdc_kafka_redelivery_eos(spark, sf_dir):
             ),
         )
     )
-    shutil.rmtree(topic_dir, ignore_errors=True)
     return final
 
 
@@ -3229,46 +2955,23 @@ def cdc_engine_status(spark, sf_dir):
     semantics (rows whose seq exceeds the max APPLIED seq — trailing
     quarantined rows show as lag until a later applied seq passes them,
     which is the honest read of 'pending')."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from movex_cdc_spark.lake.table import LakeTable
     from movex_cdc_spark.operators.apply import DeadLetterTable, apply_batch
     from movex_cdc_spark.streaming.housekeeping import Heartbeat
     from movex_cdc_spark.streaming.lineage import MetricsTable
     from movex_cdc_spark.streaming.status import STATUS_FRAME_COLS, engine_status, status_frame
 
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("repo"),
-        F.lit("state").alias("path"),
-        F.col("event_id").alias("seq"),
-        F.expr(OP_CASE_SQL).alias("op"),
-        F.when(
-            (F.col("event_id") % 97 == 0) & (F.expr(OP_CASE_SQL) != "D"),
-            F.lit(None).cast("string"),
-        )
-        .otherwise(
-            F.concat_ws(":", "event_type", F.col("value").cast("string"))
-        )
-        .alias("content"),
+    ev = _change_stream(
+        spark, sf_dir,
+        content=f"CASE WHEN event_id % 97 = 0 AND {OP_CASE_SQL} <> 'D' THEN NULL ELSE {CONTENT_SQL} END",
     )
-    schema = T.StructType(
-        [
-            T.StructField("repo", T.StringType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("content", T.StringType()),
-            T.StructField("content_sha", T.StringType()),
-        ]
-    )
-    tdir = tempfile.mkdtemp(prefix="engine_status_")
-    table = LakeTable.create(spark, f"{tdir}/t", schema, ["repo", "path"], n_buckets=8)
+    tdir = _scratch_dir("engine_status_")
+    table = _lake_table(spark, f"{tdir}/t", "content", "content_sha")
     metrics = MetricsTable(spark, f"{tdir}/metrics")
     dl = DeadLetterTable(spark, f"{tdir}/dl")
-    for i in range(3):
+    for i, batch in enumerate(_epochs(ev, 3)):
         apply_batch(
             table,
-            ev.filter(F.pmod(F.col("seq"), F.lit(3)) == i),
+            batch,
             epoch_id=i,
             stream_id="status",
             dead_letter=dl,

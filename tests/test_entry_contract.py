@@ -2,8 +2,11 @@
 returns rows at sf0.001, and a representative subset hash-matches the
 DuckDB oracle exactly as tools/check_entry.py (the full gate) does."""
 
+import atexit
+import importlib.util
 import os
 import sys
+import tempfile
 
 import duckdb
 import pytest
@@ -22,6 +25,14 @@ SUBSET = [
     "dedup_minhash_lsh",
     "ann_cosine_topk",
     "text_analysis_battery",
+    # engine-in-the-loop: every query that merges epoch slices as read
+    "cdc_engine_replay_final_state",
+    "cdc_incremental_changes",
+    "cdc_schema_evolution",
+    "cdc_mor_replay_final_state",
+    "cdc_housekeeping_time_travel",
+    "cdc_bootstrap_init_load",
+    "cdc_changes_chaining",
 ]
 
 
@@ -80,3 +91,25 @@ def test_subset_matches_duckdb(spark, name):
     assert len(spdf) == len(opdf)
     assert sorted(spdf.columns) == sorted(opdf.columns)
     assert value_hash(spdf) == value_hash(opdf)
+
+
+def test_engine_queries_stage_under_one_root_removed_at_exit(spark, tmp_path, monkeypatch):
+    """Every engine query stages its lakes, checkpoints and outputs under
+    one scratch root per process, removed at interpreter exit and not
+    before: the returned frames read those files lazily."""
+    from movex_cdc_spark.plans import entry_queries
+
+    spec = importlib.util.spec_from_file_location("fresh_entry_queries", entry_queries.__file__)
+    fresh = importlib.util.module_from_spec(spec)  # no root made yet
+    spec.loader.exec_module(fresh)
+    at_exit = []
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: at_exit.append((fn, a, kw)))
+    frames = [fresh.REGISTRY[name][0](spark, SF_SMALL)
+              for name in ("cdc_mor_replay_final_state", "cdc_unkeyed_append")]
+    assert len(os.listdir(tmp_path)) == 1
+    assert all(df.count() > 0 for df in frames)
+    assert len(at_exit) == 1
+    fn, args, kwargs = at_exit[0]
+    fn(*args, **kwargs)
+    assert os.listdir(tmp_path) == []

@@ -1,6 +1,7 @@
 """LakeTable unit behavior: bucket pruning, schema evolution, time
 travel, commit conflicts, snapshot expiry."""
 
+import json
 import os
 
 import pandas as pd
@@ -79,6 +80,21 @@ def test_time_travel(spark, tmp_lake):
     t.merge(_batch(spark, [(2, "r", "p", "c", "py", "v2", "U")]), epoch_id=1)
     assert t.read().collect()[0]["content"] == "v2"
     assert t.read(version=v1).collect()[0]["content"] == "v1"
+
+
+def test_metadata_with_the_retired_stats_field_still_loads(spark, tmp_lake):
+    """v0 no longer carries the never-read ``stats`` field; a table whose
+    metadata was written with it still loads, merges and reads."""
+    t = _table(spark, tmp_lake)
+    assert "stats" not in t.meta()
+    v0 = os.path.join(t.meta_dir, "v0.json")
+    m = json.loads(open(v0).read())
+    m["stats"] = {"rows_live": 0, "rows_total": 0}
+    with open(v0, "w") as f:
+        f.write(json.dumps(m))
+    old = LakeTable.load(spark, tmp_lake)
+    old.merge(_batch(spark, [(1, "r", "p", "c", "py", "v", "I")]), epoch_id=0)
+    assert [r["content"] for r in LakeTable.load(spark, tmp_lake).read().collect()] == ["v"]
 
 
 def test_commit_conflict(spark, tmp_lake):

@@ -417,3 +417,72 @@ def test_mux_epoch_flags_persists_and_probes_once(spark, tmp_path, spark_jobs):
         else:
             assert modes == {"cow"} and got.jobs <= 1 + 2 * n + 1, (epoch, got.jobs)
     assert modes == {"cow"}
+
+
+def test_mux_table_failing_after_another_committed_replays_once(spark, tmp_path):
+    """Crash point: one mux table fails after another committed. With one
+    dispatch thread the first table (the poisoned one) commits its dead
+    letters and its merge, then the second table's merge raises and fails
+    the epoch. The replay of the same epoch is fenced for the first table
+    and applies the second once: both equal their oracles, every dead
+    letter is in the log once and each table has one metrics row."""
+    from movex_cdc_spark.sources.events import MULTIPLEX_EVENTS_SCHEMA
+    from movex_cdc_spark.streaming.lineage import MetricsTable
+
+    cfg = repo_files_config()
+    # replay_oracle drops EXCLUDE-marked deletes too
+    cfg.tables["repo_files"].conditions["D"] = (
+        "content IS NULL OR NOT contains(content, 'EXCLUDE FILTER')")
+    cfg.tables["second"] = TableCfg(**{**vars(cfg.tables["repo_files"]), "name": "second"})
+    per_table = {
+        "repo_files": generate_events(GenParams(n_events=500, seed=61, p_poison=0.05)),
+        "second": generate_events(GenParams(n_events=500, seed=62, p_poison=0.0)),
+    }
+    d = _stage_interleaved(spark, tmp_path, per_table, n_files=1)
+    sinks = {n: LakeTable.create(spark, str(tmp_path / n), REPO_FILES_SCHEMA, KEY_COLS,
+                                 n_buckets=4) for n in per_table}
+    pipe = MultiplexedCdcPipeline(
+        spark, cfg, sinks=sinks, events_dir=d, checkpoint_dir=str(tmp_path / "ck"),
+        dead_letter_dir=str(tmp_path / "dl"), metrics_dir=str(tmp_path / "metrics"),
+        dispatch_parallelism=1,
+    )
+    batch = spark.read.schema(MULTIPLEX_EVENTS_SCHEMA).parquet(d)
+    first, second = sinks["repo_files"], sinks["second"]
+
+    def crash(*_a, **_k):
+        raise RuntimeError("injected merge failure")
+
+    second.merge = crash
+    try:
+        with pytest.raises(RuntimeError, match="injected merge failure"):
+            pipe._apply(batch, epoch_id=0)
+    finally:
+        del second.merge
+    assert (first.current_version(), second.current_version()) == (1, 0)
+
+    pipe._apply(batch, epoch_id=0)  # the replay
+    assert (first.current_version(), second.current_version()) == (1, 1)
+    lins = pipe.epochs[-1]["tables"]
+    assert lins["repo_files"].get("skipped") and not lins["second"].get("skipped")
+
+    base = pd.DataFrame(columns=["repo", "path", "commit", "lang", "content",
+                                 "last_seq", "deleted"])
+    for name, ev in per_table.items():
+        want = replay_oracle(base, ev)[["repo", "path", "content_sha"]]
+        got = sinks[name].read().select("repo", "path", "content_sha").toPandas()
+        m = got.merge(want, on=["repo", "path"], how="outer", indicator=True,
+                      suffixes=("_e", "_o"))
+        assert (m["_merge"] == "both").all(), name
+        assert (m["content_sha_e"] == m["content_sha_o"]).all(), name
+
+    ev = per_table["repo_files"]
+    n_poison = int((ev["content"].isna() & ev["op"].isin(["I", "U"])).sum())
+    assert n_poison > 0
+    dl = UnkeyedEventLog.load(spark, str(tmp_path / "dl")).read()
+    assert dl.count() == dl.select("seq").distinct().count() == n_poison
+
+    pipe.stop(None)  # flushes the buffered metrics rows
+    rows = MetricsTable(spark, str(tmp_path / "metrics")).read().filter("epoch_id = 0")
+    per_stream = {r["stream_id"]: r["n"]
+                  for r in rows.groupBy("stream_id").agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert per_stream == {"cdc-mux:repo_files": 1, "cdc-mux:second": 1}
